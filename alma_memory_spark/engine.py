@@ -1153,7 +1153,7 @@ class AlmaSpark:
             aps = self.store.read("anti_patterns").filter(
                 F.col("project_id") == project_id
             )
-            allowed, blocked = L.write_guard_filter(
+            _, blocked = L.write_guard_filter(
                 new_df, aps, ["task_description", "strategy_used", "error_message"]
             )
             if blocked.limit(1).count() > 0:
@@ -1161,7 +1161,8 @@ class AlmaSpark:
                     "learn blocked by anti-pattern write guard "
                     "(reference: ScopeViolationError)"
                 )
-            new_df = allowed
+        # no hit: the guard's `allowed` side is exactly new_df, and
+        # appending its plan would only run the guard join again
         self.store.append("outcomes", new_df)
         self._invalidate_cache(agent, project_id)
 

@@ -1,8 +1,8 @@
 """Global connected components over an edge DataFrame.
 
-`blocked_connected_components` (operators/learning.py) handles the
-blocked case — every edge inside one group — with a single shuffle.
-Near-duplicate DEDUP cannot use it: MinHash-LSH candidate pairs cross
+The learning extractors (operators/learning.py) handle the blocked
+case — every edge inside one group — in one grouped Arrow pass per
+block. Near-duplicate DEDUP cannot block: MinHash-LSH candidate pairs cross
 any blocking scheme (that is the point of banding), so turning verified
 pairs into dedup GROUPS needs components over the whole graph.
 
@@ -101,7 +101,7 @@ def connected_components(
     is the MIN node id of its connected component (any orderable node
     type — long ids, string memory ids). Nodes with no edges are their
     own singleton components; callers coalesce absent nodes to
-    themselves, same contract as blocked_connected_components.
+    themselves.
 
     Each round materializes the shrinking edge set exactly once (the
     convergence agg is the action over a lazy checkpoint) and truncates

@@ -7,8 +7,9 @@ groups merge into one memory (LLM merge optional; the deterministic
 fallback keeps the highest-confidence member) with provenance
 `merged_from`; originals are deleted.
 
-Spark shape: blocked similarity self-join -> connected components (the
-deterministic replacement for the reference's order-dependent greedy
+Spark shape: one groupBy(block) Arrow pass finds each block's cosine
+pairs and their connected components (`learning.cluster_by_similarity`,
+the deterministic replacement for the reference's order-dependent greedy
 grouping) -> per-group keep-best aggregation -> anti-join delete +
 append. For very large blocks, substitute the MinHash-LSH candidate
 stage from the dedup family before the exact verify.

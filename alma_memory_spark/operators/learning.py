@@ -9,9 +9,9 @@ Reference semantics (re-expressed as distributed aggregations):
   success_rate = successes / n and
   confidence = success_rate * (0.5 + 0.5 * min(n / 20, 1)).
   The reference's greedy first-match clustering is order-dependent; here
-  clustering is a deterministic similarity self-join + connected
-  components via iterative min-propagation (documented deviation: same
-  clusters on transitive similarity, stable under parallelism).
+  a cluster is a connected component of the similarity graph inside one
+  block, labelled by its minimum id (documented deviation: same clusters
+  on transitive similarity, stable under parallelism).
 
 - Anti-pattern creation (protocols.py:231-279): >= 2 failures with
   similar error (substring containment) -> AntiPattern with
@@ -22,14 +22,18 @@ Reference semantics (re-expressed as distributed aggregations):
   substring containment either way, or token overlap >= 0.45 of the
   pattern's tokens. Implemented as a broadcast join against the (small)
   anti-pattern set — a pre-write filter, not a per-row RPC.
+
+Spark shape: edges never cross a block, so each extractor is ONE
+groupBy(block).applyInArrow pass (`_block_clusters`): the kernel finds
+the block's edges, closes them with a min-id union-find and emits the
+clusters — no self-join, no join back, no second shuffle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from alma_memory_spark.functions.vector import cosine_similarity
+from pyspark.sql import types as T
 
 MIN_OCCURRENCES = 3
 MIN_CONFIDENCE = 0.5
@@ -51,125 +55,153 @@ def _guard_tokens(col: Column) -> Column:
     )
 
 
-def blocked_connected_components(
-    pairs: DataFrame, block_cols: list[str]
+def _content_id(prefix: str, *cols: str) -> Column:
+    """Deterministic id from content: prefix + md5(cols joined by |)[:12]."""
+    return F.concat(F.lit(prefix), F.substring(F.md5(F.concat_ws("|", *cols)), 1, 12))
+
+
+def _block_clusters(
+    df: DataFrame,
+    block_cols: list[str],
+    threshold: float | None,
+    id_col: str = "id",
+    embedding_col: str = "embedding",
+    aggs: list | None = None,
+    agg_schema: str = "",
+    order: list | None = None,
 ) -> DataFrame:
-    """Connected components when every edge lives inside one block
-    (similarity self-joins blocked on key columns guarantee this):
-    groupBy(block) + per-block union-find in an Arrow batch. ONE shuffle,
-    zero iterative jobs — the block is the unit of parallelism, the same
-    bound the blocked similarity join already imposes upstream, so this
-    scales to any number of blocks. `pairs` must have block_cols + (src,
-    dst). Returns (node, cluster_id) as strings for every node that
-    appears in an edge (singletons absent — callers coalesce to own id);
-    cluster_id is the lexicographic min node id of the component."""
-    import pandas as pd
+    """ONE groupBy(block).applyInArrow pass. Per block the kernel links
+    rows of different non-null ids — cosine of `embedding_col` >=
+    threshold, or, when threshold is None, containment either way of the
+    `err` column — and labels each row with the string-min id of its
+    connected component (`cluster_id`; the row's own id without edges,
+    null for a null id). A block with a null key has no edges, as an
+    equi-join on it would match nothing. Without `aggs` the result is
+    df's rows plus `cluster_id`; with them, one row per (block, cluster)
+    of pyarrow hash aggregates (`agg_schema` declares them; rows are
+    sorted by `order` first, for "first").
 
-    p = pairs.select(
-        *block_cols,
-        F.col("src").cast("string").alias("src"),
-        F.col("dst").cast("string").alias("dst"),
+    Timestamps cross the Arrow boundary as epoch micros (unix_micros in,
+    timestamp_micros out for the row form), so no value depends on
+    pandas' datetime64[ns] range or the session time zone. The cosine is
+    functions/vector.py's cosine_similarity done the same way: sequential
+    double folds over the dimensions (never BLAS); 0.0 when a side is
+    null, holds a null element or has zero norm; NULL (no edge) when the
+    dimensions differ; NaN passes, as in Spark's ordering. Rows are
+    compared in chunks, so a block's memory stays bounded."""
+    ts = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampType)]
+    inp = df.select(
+        *[F.unix_micros(c).alias(c) if c in ts else F.col(c) for c in df.columns],
+        F.col(id_col).cast("string").alias("_cid"),
     )
-    block_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in p.schema
-        if f.name in block_cols
+    keys = list(block_cols)
+    if aggs is None:
+        schema = T.StructType(
+            [f for f in inp.schema.fields if f.name != "_cid"]
+            + [T.StructField("cluster_id", T.StringType())]
+        )
+    else:
+        schema = ", ".join(
+            [f"`{k}` {inp.schema[k].dataType.simpleString()}" for k in keys] + [agg_schema]
+        )
+        names = keys + [f.split()[0] for f in agg_schema.split(",")]
+
+    def cosine_pairs(emb, has_id):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        lens = pc.fill_null(pc.list_value_length(emb), -1).to_numpy()
+        flat = pc.list_flatten(emb)
+        vals = pc.fill_null(pc.cast(flat, pa.float64()), 0.0).to_numpy()
+        size = np.maximum(lens, 0)
+        end = np.cumsum(size)
+        start = end - size
+        nulls = np.concatenate([[0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False))])
+        ok = (lens >= 0) & (nulls[end] == nulls[start])
+        norm = np.zeros(len(lens))
+        ii, jj = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+        with np.errstate(all="ignore"):
+            for d in np.unique(lens[ok]):
+                r = np.flatnonzero(ok & (lens == d))
+                V = vals[start[r, None] + np.arange(d)].T  # (dims, rows)
+                acc = np.zeros(len(r))
+                for t in range(d):
+                    acc = acc + V[t] * V[t]
+                norm[r] = np.sqrt(acc)
+                pos = (norm[r] > 0) | np.isnan(norm[r])  # Spark: NaN > 0
+                r, V = r[pos], V[:, pos]
+                step = max(1, (1 << 20) // max(len(r), 1))
+                for c0 in range(0, len(r), step):
+                    c1 = min(c0 + step, len(r))
+                    dot = np.zeros((c1 - c0, len(r)))
+                    for t in range(d):
+                        dot = dot + np.multiply.outer(V[t, c0:c1], V[t])
+                    den = np.multiply.outer(norm[r[c0:c1]], norm[r])
+                    cos = dot / den
+                    hit = (den != 0) & (np.isnan(cos) | (cos >= threshold))
+                    hit &= np.arange(c0, c1)[:, None] < np.arange(len(r))
+                    a, b = np.nonzero(hit)
+                    ii.append(r[a + c0])
+                    jj.append(r[b])
+        zero = np.flatnonzero(~((norm > 0) | np.isnan(norm)) & has_id)
+        if len(zero) and 0.0 >= threshold:  # cos 0.0 links a zero row to all
+            ii.append(np.full(len(lens), zero[0]))
+            jj.append(np.arange(len(lens)))
+        return zip(np.concatenate(ii).tolist(), np.concatenate(jj).tolist())
+
+    def kernel(t):
+        import numpy as np
+        import pyarrow as pa
+
+        cid = t["_cid"].to_pylist()
+        pairs = []
+        if all(t[k][0].is_valid for k in keys):
+            if threshold is None:
+                e = t["err"].to_pylist()
+                pairs = [
+                    (i, j)
+                    for i in range(len(e))
+                    for j in range(i + 1, len(e))
+                    if e[i] is not None and e[j] is not None
+                    and (e[j] in e[i] or e[i] in e[j])
+                ]
+            else:
+                has_id = np.array([c is not None for c in cid])
+                pairs = cosine_pairs(t[embedding_col].combine_chunks(), has_id)
+        # sorted node list: the smaller index is the smaller string id,
+        # so linking the larger root under the smaller keeps root = min id
+        nodes = sorted({c for c in cid if c is not None})
+        ix = {c: i for i, c in enumerate(nodes)}
+        parent = list(range(len(nodes)))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for i, j in pairs:
+            if cid[i] is not None and cid[j] is not None:
+                a, b = find(ix[cid[i]]), find(ix[cid[j]])
+                if a != b:
+                    parent[max(a, b)] = min(a, b)
+        label = [None if c is None else nodes[find(ix[c])] for c in cid]
+        t = t.drop_columns(["_cid"]).append_column("cluster_id", pa.array(label, pa.string()))
+        if aggs is None:
+            return t
+        r = (t.sort_by(order) if order else t).group_by(
+            keys + ["cluster_id"], use_threads=False
+        ).aggregate(aggs)
+        got = [r[f"{c}_{fn}" if c else fn] for c, fn in aggs]  # pyarrow's names
+        return pa.Table.from_arrays([r[k] for k in keys] + got, names)
+
+    out = inp.groupBy(*keys).applyInArrow(kernel, schema)
+    if aggs is not None:
+        return out
+    return out.select(
+        *[F.timestamp_micros(c).alias(c) if c in ts else F.col(c) for c in out.columns]
     )
-    out_schema = (block_schema + ", " if block_schema else "") + (
-        "node string, cluster_id string"
-    )
-    bcols = list(block_cols)
-
-    def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in zip(pdf["src"], pdf["dst"]):
-            if s not in parent:
-                parent[s] = s
-            if d not in parent:
-                parent[d] = d
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                # smaller root wins => component root = min node id
-                lo, hi = (rs, rd) if rs < rd else (rd, rs)
-                parent[hi] = lo
-        nodes = list(parent)
-        out = {c: [pdf[c].iloc[0]] * len(nodes) for c in bcols}
-        out["node"] = nodes
-        out["cluster_id"] = [find(n) for n in nodes]
-        return pd.DataFrame(out)
-
-    return p.groupBy(*bcols).applyInPandas(uf, out_schema)
-
-
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, max_iter: int = 30
-) -> DataFrame:
-    """Connected components by iterative min-id label propagation.
-    `nodes`: one column `node`; `pairs`: columns (src, dst), undirected
-    semantics. Returns (node, cluster_id). Converges in <= diameter
-    iterations — small for near-dup clusters; each iteration is one
-    shuffle on node id.
-
-    Each iteration ends in an eager localCheckpoint: the loop references
-    `labels` twice per pass, so without lineage truncation the logical
-    plan doubles every iteration and the driver OOMs on planning long
-    before the data is large. With truncation, cost per iteration is
-    flat, so the loop scales to 1000-executor edge sets (for truly huge
-    graphs, swap in alternating large-star/small-star for O(log n)
-    rounds — diameter of near-dup clusters is small, so min-label wins
-    here)."""
-    edges = pairs.unionByName(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = nodes.withColumn("cluster_id", F.col("node")).localCheckpoint()
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_cluster"))
-        )
-        stepped = labels.join(nbr_min, labels.node == nbr_min.dst, "left").select(
-            "node",
-            F.least(
-                F.col("cluster_id"), F.coalesce(F.col("nbr_cluster"), F.col("cluster_id"))
-            ).alias("cluster_id"),
-        )
-        # pointer-jump (path halving): node -> label(label(node)); squares
-        # the propagation distance so convergence is O(log diameter)
-        # rounds instead of O(diameter) — round count, not data volume,
-        # dominates iterative jobs.
-        jump = stepped.select(
-            F.col("node").alias("jnode"), F.col("cluster_id").alias("jcluster")
-        )
-        new_labels = (
-            stepped.join(jump, stepped.cluster_id == jump.jnode, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("jcluster"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        ).localCheckpoint()  # eager: truncates lineage AND materializes
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
 
 
 def cluster_by_similarity(
@@ -178,41 +210,13 @@ def cluster_by_similarity(
     id_col: str = "id",
     embedding_col: str = "embedding",
     threshold: float = STRATEGY_SIM_THRESHOLD,
-    max_iter: int = 10,
 ) -> DataFrame:
-    """Deterministic similarity clustering within groups: similarity
-    self-join (cosine >= threshold) -> connected components. Returns df
-    + `cluster_id`.
-
-    The self-join is blocked on key_cols, so cost is O(group^2) not
-    O(n^2); at scale the blocks are the unit of parallelism. Edges never
-    cross blocks, so components are computed per block with a one-shuffle
-    union-find (no iterative jobs)."""
-    a = df.select(*key_cols, F.col(id_col).alias("_ida"), F.col(embedding_col).alias("_ea"))
-    b = df.select(*key_cols, F.col(id_col).alias("_idb"), F.col(embedding_col).alias("_eb"))
-    cond = None
-    for k in key_cols:
-        c = a[k] == b[k]
-        cond = c if cond is None else (cond & c)
-    pairs = (
-        a.join(b, cond)
-        .filter(F.col("_ida") < F.col("_idb"))
-        .filter(cosine_similarity("_ea", "_eb") >= threshold)
-        .select(
-            *[a[k] for k in key_cols],
-            F.col("_ida").alias("src"),
-            F.col("_idb").alias("dst"),
-        )
-    )
-    labels = blocked_connected_components(pairs, key_cols).select("node", "cluster_id")
-    return (
-        df.join(labels, df[id_col].cast("string") == labels.node, "left")
-        .drop("node")
-        .withColumn(
-            "cluster_id",
-            F.coalesce(F.col("cluster_id"), F.col(id_col).cast("string")),
-        )
-    )
+    """Deterministic similarity clustering within key_cols blocks: rows
+    whose cosine >= threshold are linked, and each row's `cluster_id` is
+    the string-min id of its connected component. Returns df +
+    `cluster_id`. Cost is O(block^2) per block, not O(n^2); the blocks
+    are the unit of parallelism."""
+    return _block_clusters(df, key_cols, threshold, id_col, embedding_col)
 
 
 def extract_heuristics(
@@ -224,28 +228,40 @@ def extract_heuristics(
     """Batch heuristic extraction: per (project, agent, task_type,
     strategy-cluster): n, successes, success_rate, confidence; keep
     clusters passing the thresholds. Returns heuristic candidate rows
-    (the reference's update-or-create then applies upsert-by-id)."""
-    clustered = cluster_by_similarity(
-        outcomes.filter(F.col("strategy_used").isNotNull()),
-        ["project_id", "agent", "task_type"],
-        threshold=similarity_threshold,
+    (the reference's update-or-create then applies upsert-by-id).
+    The representative is the lexicographic-min strategy: stable as the
+    cluster grows across incremental learns (a min-row-id would shift)."""
+    block = ["project_id", "agent", "task_type"]
+    stats = _block_clusters(
+        outcomes.filter(F.col("strategy_used").isNotNull()).select(
+            *block, "id", "strategy_used", "timestamp", "embedding",
+            F.when(F.col("success"), 1).otherwise(0).alias("success"),
+        ),
+        block,
+        similarity_threshold,
+        aggs=[
+            ([], "count_all"),
+            ("success", "sum"),
+            ("strategy_used", "min"),
+            ("timestamp", "max"),
+            ("timestamp", "min"),
+        ],
+        agg_schema="occurrence_count long, success_count long, strategy string, "
+        "last_validated long, created_at long",
     )
-    n = F.count("*")
-    succ = F.sum(F.when(F.col("success"), 1).otherwise(0))
-    rate = succ.cast("double") / n
+    n = F.col("occurrence_count")
+    rate = F.col("success_count").cast("double") / n
     conf = rate * (F.lit(0.5) + F.lit(0.5) * F.least(n / F.lit(20.0), F.lit(1.0)))
     return (
-        clustered.groupBy("project_id", "agent", "task_type", "cluster_id")
-        .agg(
-            n.alias("occurrence_count"),
-            succ.cast("int").alias("success_count"),
+        stats.select(
+            *block,
+            n,
+            F.col("success_count").cast("int").alias("success_count"),
             rate.alias("success_rate"),
             conf.alias("confidence"),
-            # lexicographic-min representative: stable as the cluster
-            # grows across incremental learns (a min-row-id would shift)
-            F.min("strategy_used").alias("strategy"),
-            F.max("timestamp").alias("last_validated"),
-            F.min("timestamp").alias("created_at"),
+            "strategy",
+            F.timestamp_micros("last_validated").alias("last_validated"),
+            F.timestamp_micros("created_at").alias("created_at"),
         )
         .filter(
             (F.col("occurrence_count") >= min_occurrences)
@@ -253,22 +269,7 @@ def extract_heuristics(
             & (F.col("success_rate") > 0.5)
         )
         .withColumn("condition", F.concat(F.lit("task type: "), F.col("task_type")))
-        .withColumn(
-            "id",
-            F.concat(
-                F.lit("heur_"),
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|", "project_id", "agent", "task_type", "strategy"
-                        )
-                    ),
-                    1,
-                    12,
-                ),
-            ),
-        )
-        .drop("cluster_id")
+        .withColumn("id", _content_id("heur_", *block, "strategy"))
     )
 
 
@@ -276,72 +277,45 @@ def extract_anti_patterns(outcomes: DataFrame, min_failures: int = 2) -> DataFra
     """Anti-pattern creation: failures whose errors are mutually similar
     (substring containment, protocols.py:424-429) grouped; >= 2 similar
     failures -> candidate. Containment clustering via normalized-prefix
-    grouping would miss mid-string containment, so we self-join on
-    containment within (project, agent) — failure sets are small."""
-    fails = outcomes.filter(
-        (~F.col("success")) & F.col("error_message").isNotNull()
-    ).select(
-        "project_id",
-        "agent",
-        "id",
-        "task_description",
-        "strategy_used",
-        _norm(F.col("error_message")).alias("err"),
-        "timestamp",
+    grouping would miss mid-string containment, so containment is tested
+    pairwise within (project, agent) — failure sets are small — and, as
+    it is not transitive, closed with connected components. The shortest
+    error is the cluster's "core" pattern and stays stable as longer
+    variants join (content-stable identity)."""
+    fails = (
+        outcomes.filter((~F.col("success")) & F.col("error_message").isNotNull())
+        .select("project_id", "agent", "id", "strategy_used",
+                _norm(F.col("error_message")).alias("err"), "timestamp")
+        .withColumn("_len", F.length("err"))
     )
-    a = fails.alias("a")
-    b = fails.alias("b")
-    sim = F.col("a.err").contains(F.col("b.err")) | F.col("b.err").contains(
-        F.col("a.err")
-    )
-    pairs = a.join(
-        b,
-        (F.col("a.project_id") == F.col("b.project_id"))
-        & (F.col("a.agent") == F.col("b.agent"))
-        & (F.col("a.id") < F.col("b.id"))
-        & sim,
-    ).select(
-        F.col("a.project_id").alias("project_id"),
-        F.col("a.agent").alias("agent"),
-        F.col("a.id").alias("src"),
-        F.col("b.id").alias("dst"),
-    )
-    # containment is not transitive -> close it with connected components
-    # (edges stay inside a (project, agent) block -> per-block union-find)
-    labels = blocked_connected_components(pairs, ["project_id", "agent"]).select(
-        "node", "cluster_id"
-    )
-    clustered = (
-        fails.join(labels, fails.id == labels.node, "left")
-        .drop("node")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "id"))
+    stats = _block_clusters(
+        fails,
+        ["project_id", "agent"],
+        None,
+        aggs=[
+            ([], "count_all"),
+            ("strategy_used", "min"),
+            ("err", "first"),
+            ("timestamp", "max"),
+            ("timestamp", "min"),
+        ],
+        agg_schema="occurrence_count long, pattern string, why_bad string, "
+        "last_seen long, created_at long",
+        order=[("_len", "ascending"), ("err", "ascending")],
     )
     return (
-        clustered.groupBy("project_id", "agent", "cluster_id")
-        .agg(
-            F.count("*").alias("occurrence_count"),
-            # shortest error is the cluster's "core" pattern and stays
-            # stable as longer variants join (content-stable identity)
-            F.min("strategy_used").alias("pattern"),
-            F.min(F.struct(F.length("err").alias("l"), F.col("err").alias("e")))
-            .getField("e")
-            .alias("why_bad"),
-            F.max("timestamp").alias("last_seen"),
-            F.min("timestamp").alias("created_at"),
+        stats.filter(F.col("occurrence_count") >= min_failures)
+        .select(
+            "project_id",
+            "agent",
+            F.col("occurrence_count").cast("int").alias("occurrence_count"),
+            "pattern",
+            "why_bad",
+            F.timestamp_micros("last_seen").alias("last_seen"),
+            F.timestamp_micros("created_at").alias("created_at"),
+            _content_id("anti_", "project_id", "agent", "why_bad").alias("id"),
+            F.lit(None).cast("string").alias("better_alternative"),
         )
-        .filter(F.col("occurrence_count") >= min_failures)
-        .withColumn(
-            "id",
-            F.concat(
-                F.lit("anti_"),
-                F.substring(
-                    F.md5(F.concat_ws("|", "project_id", "agent", "why_bad")), 1, 12
-                ),
-            ),
-        )
-        .withColumn("occurrence_count", F.col("occurrence_count").cast("int"))
-        .withColumn("better_alternative", F.lit(None).cast("string"))
-        .drop("cluster_id")
     )
 
 
@@ -354,18 +328,18 @@ def write_guard_filter(
     """Split candidate rows into (allowed, blocked) against stored
     anti-patterns (write_guard.py semantics: normalized substring
     containment either way, or token overlap >= 0.45 of pattern tokens).
-    Anti-join against a broadcast pattern set: O(n * |patterns|) map-side,
-    no shuffle of the candidate side."""
-    pats = anti_patterns.select(
-        F.col("id").alias("_ap_id"),
-        _norm(F.col(pattern_col)).alias("_ap_text"),
-        _guard_tokens(F.col(pattern_col)).alias("_ap_toks"),
+    Semi/anti joins on the hit condition against the broadcast pattern
+    set: O(n * |patterns|) map-side, no shuffle of the candidate side."""
+    pats = F.broadcast(
+        anti_patterns.select(
+            _norm(F.col(pattern_col)).alias("_ap_text"),
+            _guard_tokens(F.col(pattern_col)).alias("_ap_toks"),
+        )
     )
-    blob = _norm(F.concat_ws("  ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols]))
+    blob = _norm(F.concat_ws("  ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols]))
     cand = candidates.withColumn("_blob", blob).withColumn(
         "_toks", _guard_tokens(F.col("_blob"))
     )
-    joined = cand.crossJoin(F.broadcast(pats))
     overlap = F.size(F.array_intersect("_toks", "_ap_toks")).cast("double") / F.greatest(
         F.size("_ap_toks").cast("double"), F.lit(1.0)
     )
@@ -374,7 +348,6 @@ def write_guard_filter(
         | F.col("_ap_text").contains(F.col("_blob"))
         | (overlap >= GUARD_TOKEN_OVERLAP)
     )
-    blocked_ids = joined.filter(hit).select(F.col("id"), F.col("_ap_id")).distinct()
-    blocked = candidates.join(blocked_ids.select("id").distinct(), "id", "left_semi")
-    allowed = candidates.join(blocked_ids.select("id").distinct(), "id", "left_anti")
+    blocked = cand.join(pats, hit, "left_semi").select(*candidates.columns)
+    allowed = cand.join(pats, hit, "left_anti").select(*candidates.columns)
     return allowed, blocked

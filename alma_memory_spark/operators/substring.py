@@ -279,11 +279,20 @@ def dedup_token_windows(
     return out
 
 
+def _parse_keep(raw: str | None) -> int:
+    """At least 1 (0 would unpersist the triple just persisted, before
+    its plan runs); 2 when the value is not an integer."""
+    try:
+        return max(1, int(raw))
+    except (TypeError, ValueError):
+        return 2
+
+
 #: newest-N persisted fingerprint triples per session (keyed by
 #: applicationId so a stopped session's entries are never touched);
 #: N=2 covers every realistic concurrent-use shape (one pipeline
 #: stage + one index add) while bounding a soak loop's storage.
-_TRIPLE_CACHE_KEEP = int(os.environ.get("ALMA_SUBSTRING_TRIPLE_KEEP", "2"))
+_TRIPLE_CACHE_KEEP = _parse_keep(os.environ.get("ALMA_SUBSTRING_TRIPLE_KEEP"))
 _TRIPLE_CACHE: dict[str, list[DataFrame]] = {}
 
 

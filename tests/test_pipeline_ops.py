@@ -1,5 +1,7 @@
 """PII redaction, benchmark decontamination, repetition signals."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -409,6 +411,57 @@ def test_substring_dedup_chained_caller_keeps_cache(spark):
         "chained caller lost the persisted fingerprint triple — the "
         "shared pass is running twice again"
     )
+    spark.catalog.clearCache()
+    S._TRIPLE_CACHE.clear()
+
+
+@pytest.mark.parametrize(
+    "raw,keep", [("0", 1), ("-3", 1), ("abc", 2), ("2.5", 2), ("", 2), ("5", 5)]
+)
+def test_substring_triple_keep_env_is_clamped(raw, keep):
+    """ALMA_SUBSTRING_TRIPLE_KEEP is read at import: a non-integer must
+    not raise there (it falls back to 2), and a value <= 0 must clamp
+    to 1 — 0 would unpersist the just-persisted triple before its plan
+    runs."""
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from alma_memory_spark.operators import substring as S; "
+         "print(S._TRIPLE_CACHE_KEEP)"],
+        env={**os.environ, "ALMA_SUBSTRING_TRIPLE_KEEP": raw},
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, check=True,
+    )
+    assert int(out.stdout.split()[-1]) == keep
+
+
+def test_substring_triple_keep_floor_keeps_newest_triple(spark, monkeypatch):
+    """Both directions of the retention floor: with the smallest legal
+    KEEP (1, what 0 clamps to) the newest triple stays persisted and in
+    the plan of its caller, and an older one is still released."""
+    from alma_memory_spark.operators import substring as S
+
+    spark.catalog.clearCache()
+    S._TRIPLE_CACHE.clear()
+    monkeypatch.setattr(S, "_TRIPLE_CACHE_KEEP", S._parse_keep("0"))
+    older, df = (
+        spark.createDataFrame(
+            [(i, f"{word} boiler span tokens " * 6 + f"tail {i}") for i in range(8)],
+            "doc_id long, text string",
+        )
+        for word in ("older", "newer")
+    )
+    S.dedup_token_windows(older, w=4)
+    first = S._TRIPLE_CACHE[spark.sparkContext.applicationId][0]
+    newest = S.dedup_token_windows(df, w=4).select("doc_id", "text_dedup")
+    plan = newest._jdf.queryExecution().executedPlan().toString()
+    kept = S._TRIPLE_CACHE[spark.sparkContext.applicationId]
+    assert "InMemoryTableScan" in plan and len(kept) == 1
+    assert kept[0].storageLevel.useMemory or kept[0].storageLevel.useDisk
+    assert first is not kept[0]
+    assert not (first.storageLevel.useMemory or first.storageLevel.useDisk)
     spark.catalog.clearCache()
     S._TRIPLE_CACHE.clear()
 
