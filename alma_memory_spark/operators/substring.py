@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -294,6 +295,9 @@ def _parse_keep(raw: str | None) -> int:
 #: stage + one index add) while bounding a soak loop's storage.
 _TRIPLE_CACHE_KEEP = _parse_keep(os.environ.get("ALMA_SUBSTRING_TRIPLE_KEEP"))
 _TRIPLE_CACHE: dict[str, list[DataFrame]] = {}
+#: concurrent driver threads retain at once: unlocked, two could pass
+#: the size check for one surplus entry and both evict
+_TRIPLE_LOCK = threading.Lock()
 
 
 def _triple_cache_retain(cached: DataFrame) -> None:
@@ -301,17 +305,18 @@ def _triple_cache_retain(cached: DataFrame) -> None:
         key = cached.sparkSession.sparkContext.applicationId
     except Exception:
         return
-    kept = _TRIPLE_CACHE.setdefault(key, [])
-    kept.append(cached)
-    # drop other sessions' stale entries (their JVM is gone or going)
-    for k in [k for k in _TRIPLE_CACHE if k != key]:
-        _TRIPLE_CACHE.pop(k, None)
-    while len(kept) > _TRIPLE_CACHE_KEEP:
-        old = kept.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # best-effort: the session may be stopping
+    with _TRIPLE_LOCK:
+        kept = _TRIPLE_CACHE.setdefault(key, [])
+        kept.append(cached)
+        # drop other sessions' stale entries (their JVM is gone or going)
+        for k in [k for k in _TRIPLE_CACHE if k != key]:
+            _TRIPLE_CACHE.pop(k, None)
+        while len(kept) > _TRIPLE_CACHE_KEEP:
+            old = kept.pop(0)
+            try:
+                old.unpersist(blocking=False)
+            except Exception:
+                pass  # best-effort: the session may be stopping
 
 
 def drop_docs_with_dup_windows(

@@ -20,21 +20,15 @@ from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from alma_memory_spark.session import get_spark  # noqa: E402
 from scripts.time_op import pgroup_cpu_seconds  # noqa: E402
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 6
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("measure_batch_serving")
-        .getOrCreate()
-    )
+    spark = get_spark("measure_batch_serving", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from alma_memory_spark import engine as E

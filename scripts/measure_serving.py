@@ -18,19 +18,14 @@ from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from alma_memory_spark.session import get_spark
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("measure_serving")
-        .getOrCreate()
-    )
+    spark = get_spark("measure_serving", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from alma_memory_spark.engine import AlmaSpark

@@ -466,6 +466,57 @@ def test_substring_triple_keep_floor_keeps_newest_triple(spark, monkeypatch):
     S._TRIPLE_CACHE.clear()
 
 
+def test_triple_cache_retain_is_thread_safe(spark, monkeypatch):
+    """Concurrent driver threads retaining triples at once must leave
+    exactly the newest _TRIPLE_CACHE_KEEP entries for the session, each
+    still persisted, and no other triple persisted. Unlocked, two
+    threads could both pass the size check for one surplus entry and
+    both evict (a live triple dropped, or a pop from an empty list)."""
+    import threading
+    import time
+
+    from alma_memory_spark.operators import substring as S
+
+    class YieldingKeep(int):
+        # the size check yields the GIL, widening the check-then-evict
+        # window so an unlocked interleaving shows up on every run
+        def __lt__(self, other):
+            time.sleep(0.02)
+            return int(self) < other
+
+    spark.catalog.clearCache()
+    S._TRIPLE_CACHE.clear()
+    monkeypatch.setattr(S, "_TRIPLE_CACHE_KEEP", YieldingKeep(S._TRIPLE_CACHE_KEEP))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    base = len(persisted())
+    n = 16
+    triples = [spark.range(i + 1).persist() for i in range(n)]
+    for t in triples:
+        t.count()
+    go = threading.Barrier(n)
+    errs = []
+
+    def retain(t):
+        try:
+            go.wait()
+            S._triple_cache_retain(t)
+        except Exception as e:  # pragma: no cover - failure path
+            errs.append(e)
+
+    threads = [threading.Thread(target=retain, args=(t,)) for t in triples]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert not errs, errs
+    kept = S._TRIPLE_CACHE[spark.sparkContext.applicationId]
+    assert len(kept) == S._TRIPLE_CACHE_KEEP
+    assert all(t.storageLevel.useMemory or t.storageLevel.useDisk for t in kept)
+    assert len(persisted()) - base == S._TRIPLE_CACHE_KEEP
+    spark.catalog.clearCache()
+    S._TRIPLE_CACHE.clear()
+
+
 def test_url_signals_and_pass_bits(spark):
     """r9 (VERDICT r8 #6): URL quality rules — host/domain extraction,
     registrable-domain blocklist, scheme/depth/tracker bits, and the

@@ -66,3 +66,60 @@ def test_table_cache_eviction_is_thread_safe(spark, sf_dir):
     # the LIVE app's entry survived the evictions
     app = spark.sparkContext.applicationId
     assert (sf_dir, "region") in S._TABLE_CACHE.get(app, {})
+
+
+def _compiled_classes(spark) -> int:
+    """Whole-stage-codegen classes this JVM has compiled so far."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_retrieve_after_learn_reuses_generated_code(spark, tmp_path):
+    """An agent loop alternates learn and retrieve. With Spark's default
+    100-entry codegen cache each call evicts the other's classes, so
+    every retrieve after a learn recompiled its plan (about 100 classes
+    per learn/retrieve cycle). get_spark sizes the cache to the engine's
+    working set: once one cycle has run, repeating the same call shapes
+    compiles nothing."""
+    from datetime import datetime, timezone
+
+    from alma_memory_spark.engine import AlmaSpark
+
+    eng = AlmaSpark(spark, str(tmp_path / "store"),
+                    clock=lambda: datetime(2024, 2, 15, tzinfo=timezone.utc))
+    for i in range(4):
+        eng.add_knowledge("a", "p", "forms", f"form fact {i} about submit buttons")
+    steps = iter(range(100))
+
+    def succeed():
+        return eng.learn("a", f"form job {next(steps)}", True, "p",
+                         strategy_used="fill fields wait visible assert submit",
+                         task_type="form")
+
+    def fail():
+        k = next(steps)
+        # strategy tokens unique per failure, so the write guard never
+        # blocks a later learn on an earlier failure's anti-pattern
+        return eng.learn("a", f"form job {k}", False, "p",
+                         strategy_used=" ".join(f"fx{k}{c}" for c in "abcdefghij"),
+                         task_type="form", error_message="upstream timeout waiting")
+
+    def retrieve():
+        eng.retrieve(f"submit form question {next(steps)}", agent="a", project_id="p")
+
+    # form the scope's heuristic (third success) and anti-pattern
+    # (second failure) first: the call that creates a table plans
+    # differently from the upserts that follow
+    for call in (succeed, succeed, fail, succeed, fail, retrieve):
+        call()
+
+    def cycle():
+        assert succeed()["heuristics"]  # re-forms the heuristic
+        assert fail()["anti_patterns"]  # re-forms the anti-pattern
+        retrieve()
+
+    cycle()  # warm-up: every shape compiled once
+    before = _compiled_classes(spark)
+    cycle()
+    assert _compiled_classes(spark) - before == 0
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
