@@ -22,6 +22,7 @@ import threading
 import time
 import uuid
 from collections import OrderedDict
+from dataclasses import astuple
 from datetime import datetime, timezone
 from typing import Any
 
@@ -36,7 +37,6 @@ from alma_memory_spark.operators import workflow as WF
 from alma_memory_spark.operators.consolidation import consolidate as _consolidate
 from alma_memory_spark.operators.feedback import apply_feedback_blend, feedback_summary
 from alma_memory_spark.operators.mmr import mmr_rerank
-from alma_memory_spark.operators import retrieval as RT
 from alma_memory_spark.operators.retrieval import (
     MODES,
     ModeConfig,
@@ -53,8 +53,8 @@ CACHE_TTL_SECONDS = 300.0
 #: text (construction ~20x cheaper than the py4j frame + temp view);
 #: larger batches keep the arrow kernel, whose per-batch BLAS matmul
 #: wins once the scored-pair count amortizes the Python-worker hop
-#: (measured crossover between batch 8 and 32 on this host).
-_ANN_BATCH_SQL_MAX = int(os.environ.get("ALMA_ANN_BATCH_SQL_MAX", "16"))
+#: (measured crossover between batch 8 and 32 on a 4-CPU host).
+_ANN_BATCH_SQL_MAX = 16
 CACHE_MAX_ENTRIES = 1000
 
 
@@ -273,135 +273,179 @@ class AlmaSpark:
         path — results are bit-identical either way).
 
         `use_ann=True` (r12, VERDICT r11 #1): a type with a scope-
-        expressible IVF index keeps its probe on the index path —
-        IVFIndex.search builds its pruned nprobe-cell scan (the same
-        deterministic kernel the DataFrame path broadcast-joins) and
-        the LAZY probe frame registers as a per-call temp view the
-        statement joins, so the probe executes INSIDE the one serving
-        job: no separate candidate-collect job, one spark.sql() round
-        trip total. View names are per-call unique (concurrent
-        retrieves on one engine must not stomp each other's
-        candidates) and dropped after the run."""
+        expressible IVF index keeps its probe on the index path. Since
+        r13 (VERDICT r12 #4) the probe is spliced into the statement as
+        SQL TEXT over the index's stable lists view, so it executes
+        INSIDE the one serving job with no per-call py4j frame
+        construction (~145 ms) and no temp-view churn."""
         from alma_memory_spark.operators import serving_sql as SS
 
-        cand_refs: dict[str, str] = {}
-        try:
-            return self._sql_serving_rows_inner(
-                SS, type_list, fetch_k, k, min_score, weights, cfg,
-                project_id, agents, user_id, use_feedback, qvec, now,
-                use_ann, nprobe, cand_refs,
+        def probe(t, idx, want):
+            return idx.search_sql_subquery(
+                qvec, k=2 * fetch_k, nprobe=nprobe, filters=want
             )
-        finally:
-            # drop on EVERY exit — including compile-time refusals that
-            # raise after a candidate view was already registered
-            self._drop_cand_views(cand_refs)
-
-    def _sql_serving_rows_inner(
-        self, SS, type_list, fetch_k, k, min_score, weights, cfg,
-        project_id, agents, user_id, use_feedback, qvec, now,
-        use_ann, nprobe, cand_refs,
-    ):
-        branches: list = []
-        stamps: list[tuple] = []
-        for t in type_list:
-            if not self.store.exists(t):
-                continue
-            view, df, stamp = self._serving_view(t)
-            ann = False
-            if use_ann and self._has_ivf_index(t):
-                idx = self._load_ivf(t)
-                # same scope rule as every other ANN path: a scope the
-                # index cannot express keeps the exact scan
-                want = self._ann_scope_filters(df, idx, project_id, agents)
-                if want is not None:
-                    ann = True
-                    # r13 (VERDICT r12 #4): the probe is spliced into
-                    # the statement as SQL TEXT over the index's stable
-                    # lists view — no per-call py4j frame construction
-                    # (~145 ms) and no temp-view register/drop churn;
-                    # _drop_cand_views skips subquery refs
-                    cand_refs[t] = idx.search_sql_subquery(
-                        qvec, k=2 * fetch_k, nprobe=nprobe, filters=want
-                    )
-            branches.append(
-                SS.BranchInput(
-                    t,
-                    view,
-                    tuple(df.columns),
-                    tuple((f.name, f.dataType.simpleString()) for f in df.schema.fields),
-                    ann=ann,
-                )
-            )
-            stamps.append((t, stamp))
-        prefs = None
-        if user_id is not None:
-            view, pdf, stamp = self._serving_view("preferences")
-            prefs = SS.PrefsInput(
-                view,
-                tuple(pdf.columns),
-                tuple((f.name, f.dataType.simpleString()) for f in pdf.schema.fields),
-                user_id,
-                k,
-            )
-            stamps.append(("preferences", stamp))
-        fb_view = None
-        if use_feedback:
-            fb_view, _, stamp = self._serving_view(
-                "retrieval_feedback", declared_schema=True
-            )
-            stamps.append(("retrieval_feedback", stamp))
-        if not branches and prefs is None:
-            return [], {}
 
         cfg_key = (
             (cfg.prioritize_failures, cfg.exact_match_boost)
             if cfg is not None
             else None
         )
-        key = (
-            tuple(stamps),
-            fetch_k,
-            k,
-            min_score,
-            (weights.similarity, weights.recency, weights.success_rate, weights.confidence),
-            cfg_key,
-            project_id,
-            tuple(agents),
-            user_id,
-            use_feedback,
-            self.feedback_weight,
+        return self._srv_serve(
+            type_list, project_id, agents, user_id, k, use_feedback,
+            probe if use_ann else None,
+            (
+                fetch_k, k, min_score, astuple(weights), cfg_key,
+                project_id, tuple(agents), user_id, use_feedback,
+                self.feedback_weight,
+            ),
+            lambda branches, prefs, fb_view: SS.compile_serving_template(
+                branches, fetch_k, min_score, weights, cfg, project_id,
+                tuple(agents), prefs=prefs, feedback_view=fb_view,
+                feedback_weight=self.feedback_weight,
+            ),
+            lambda tmpl, cand_refs: tmpl.bind(qvec, now, cand_refs=cand_refs),
+        )
+
+    def _sql_batch_rows(
+        self,
+        type_list: list[str],
+        fetch_k: int,
+        min_score: float,
+        weights: ScoringWeights,
+        project_id: str | None,
+        agent: str,
+        user_id: str | None,
+        qids: list[str],
+        qvecs: list,
+        now,
+        use_ann: bool = False,
+        nprobe: int = 8,
+    ):
+        """retrieve_batch's fast path: the qid-dimension union plan as
+        one compiled-SQL statement; (qid, qvec) bind per call as an
+        inline VALUES table. Returns (rows, colsets) or raises
+        ServingSQLUnsupported. `use_ann=True` joins each indexed type's
+        per-qid IVFIndex probe as its (qid, id, similarity) candidate
+        table — same contract as _sql_serving_rows (r12)."""
+        from alma_memory_spark.operators import serving_sql as SS
+
+        def probe(t, idx, want):
+            pairs = list(zip(qids, qvecs))
+            # r14 (VERDICT r13 #3): small batches splice the probe as
+            # SQL TEXT — standalone probe A/B: 66-109 ms/task vs the
+            # arrow view path's 113-243 at batch 4-8, construction ~20x
+            # cheaper (the py4j frame + temp-view churn WAS the floor);
+            # engine end-to-end (measure_batch_serving.py): 954->642
+            # ms/task at batch 2, 24.4->20.1 at 32 on the gate-sized
+            # corpus. Large batches keep the arrow kernel: its BLAS
+            # matmul amortizes the Python hop and beats the JVM per-pair
+            # fold once per-cell occupancy x batch multiplies the scored
+            # pairs (standalone crossover between batch 8 and 32 at 4k
+            # vectors). The fork reads only the batch length; both forms
+            # are row-identical on the pinned corpora
+            # (test_batch_sql_subquery_matches).
+            if len(qids) <= _ANN_BATCH_SQL_MAX:
+                try:
+                    return idx.search_batch_sql_subquery(
+                        pairs, k=2 * fetch_k, nprobe=nprobe, filters=want
+                    )
+                except SS.ServingSQLUnsupported:
+                    pass  # legacy parser mode: view path
+            return self._register_cand_view(
+                t,
+                idx.search_batch(pairs, k=2 * fetch_k, nprobe=nprobe, filters=want),
+            )
+
+        return self._srv_serve(
+            type_list, project_id, [agent], user_id, fetch_k, False,
+            probe if use_ann else None,
+            (
+                "batch", fetch_k, min_score, astuple(weights),
+                project_id, agent, user_id,
+            ),
+            lambda branches, prefs, _fb: SS.compile_batch_template(
+                branches, fetch_k, min_score, weights, project_id, agent,
+                prefs=prefs,
+            ),
+            lambda tmpl, cand_refs: SS.bind_batch(
+                tmpl, qids, qvecs, now, cand_refs=cand_refs
+            ),
+        )
+
+    def _srv_serve(
+        self, type_list, project_id, agents, user_id, limit, use_feedback,
+        probe, config, compile_template, bind,
+    ):
+        """The body both SQL serving entry points share: register the
+        stamp-pinned views, route indexed types through `probe` (which
+        returns the candidate table reference), fetch or compile the
+        template for (config, store stamps, ann-served types), bind it
+        and run it. Returns (rows, colsets)."""
+        from alma_memory_spark.operators import serving_sql as SS
+
+        def dtypes(df):
+            return tuple((f.name, f.dataType.simpleString()) for f in df.schema.fields)
+
+        cand_refs: dict[str, str] = {}
+        try:
+            branches: list = []
+            stamps: list[tuple] = []
+            for t in type_list:
+                if not self.store.exists(t):
+                    continue
+                view, df, stamp = self._serving_view(t)
+                if probe is not None and self._has_ivf_index(t):
+                    idx = self._load_ivf(t)
+                    # same scope rule as every other ANN path: a scope
+                    # the index cannot express keeps the exact scan
+                    want = self._ann_scope_filters(df, idx, project_id, agents)
+                    if want is not None:
+                        cand_refs[t] = probe(t, idx, want)
+                branches.append(
+                    SS.BranchInput(
+                        t, view, tuple(df.columns), dtypes(df), ann=t in cand_refs
+                    )
+                )
+                stamps.append((t, stamp))
+            prefs = None
+            if user_id is not None:
+                view, pdf, stamp = self._serving_view("preferences")
+                prefs = SS.PrefsInput(
+                    view, tuple(pdf.columns), dtypes(pdf), user_id, limit
+                )
+                stamps.append(("preferences", stamp))
+            fb_view = None
+            if use_feedback:
+                fb_view, _, stamp = self._serving_view(
+                    "retrieval_feedback", declared_schema=True
+                )
+                stamps.append(("retrieval_feedback", stamp))
+            if not branches and prefs is None:
+                return [], {}
+
             # the ann-served type set changes the branch SHAPE (an index
             # created or dropped between calls leaves store stamps
             # untouched, so it must key the template directly)
-            tuple(sorted(t for t in cand_refs)),
-        )
-        with self._srv_lock:
-            tmpl = self._srv_templates.get(key)
-            # a None stamp means staleness is undetectable: never reuse
-            if tmpl is not None and not any(s is None for _, s in stamps):
-                self._srv_templates.move_to_end(key)
-            else:
-                tmpl = None
-        if tmpl is None:
-            SS.check_parser_mode(self.spark)
-            tmpl = SS.compile_serving_template(
-                branches,
-                fetch_k,
-                min_score,
-                weights,
-                cfg,
-                project_id,
-                tuple(agents),
-                prefs=prefs,
-                feedback_view=fb_view,
-                feedback_weight=self.feedback_weight,
-            )
+            key = (config, tuple(stamps), tuple(sorted(cand_refs)))
             with self._srv_lock:
-                self._srv_templates[key] = tmpl
-                while len(self._srv_templates) > 64:
-                    self._srv_templates.popitem(last=False)
-        rows = self._srv_run(tmpl.bind(qvec, now, cand_refs=cand_refs))
-        return rows, dict(tmpl.colsets)
+                tmpl = self._srv_templates.get(key)
+                # a None stamp means staleness is undetectable: never reuse
+                if tmpl is not None and not any(s is None for _, s in stamps):
+                    self._srv_templates.move_to_end(key)
+                else:
+                    tmpl = None
+            if tmpl is None:
+                SS.check_parser_mode(self.spark)
+                tmpl = compile_template(branches, prefs, fb_view)
+                with self._srv_lock:
+                    self._srv_templates[key] = tmpl
+                    while len(self._srv_templates) > 64:
+                        self._srv_templates.popitem(last=False)
+            return self._srv_run(bind(tmpl, cand_refs)), dict(tmpl.colsets)
+        finally:
+            # drop on EVERY exit — including compile-time refusals that
+            # raise after a candidate view was already registered
+            self._drop_cand_views(cand_refs)
 
     def _srv_run(self, text: str) -> list:
         """Execute a compiled serving statement; an AnalysisException
@@ -430,145 +474,6 @@ class AlmaSpark:
         with self._srv_lock:
             self._srv_hits += 1
         return rows
-
-    def _sql_batch_rows(
-        self,
-        type_list: list[str],
-        fetch_k: int,
-        min_score: float,
-        weights: ScoringWeights,
-        project_id: str | None,
-        agent: str,
-        user_id: str | None,
-        qids: list[str],
-        qvecs: list,
-        now,
-        use_ann: bool = False,
-        nprobe: int = 8,
-    ):
-        """retrieve_batch's fast path: the qid-dimension union plan as
-        one compiled-SQL statement; (qid, qvec) bind per call as an
-        inline VALUES table. Returns (rows, colsets) or raises
-        ServingSQLUnsupported. `use_ann=True` registers each indexed
-        type's IVFIndex.search_batch frame as a per-call (qid, id,
-        similarity) candidate view — same contract as
-        _sql_serving_rows (r12)."""
-        from alma_memory_spark.operators import serving_sql as SS
-
-        cand_refs: dict[str, str] = {}
-        try:
-            return self._sql_batch_rows_inner(
-                SS, type_list, fetch_k, min_score, weights, project_id,
-                agent, user_id, qids, qvecs, now, use_ann, nprobe,
-                cand_refs,
-            )
-        finally:
-            self._drop_cand_views(cand_refs)
-
-    def _sql_batch_rows_inner(
-        self, SS, type_list, fetch_k, min_score, weights, project_id,
-        agent, user_id, qids, qvecs, now, use_ann, nprobe, cand_refs,
-    ):
-        k = fetch_k  # batch serves default mode: fetch_k == top_k
-        branches: list = []
-        stamps: list[tuple] = []
-        for t in type_list:
-            if not self.store.exists(t):
-                continue
-            view, df, stamp = self._serving_view(t)
-            ann = False
-            if use_ann and self._has_ivf_index(t):
-                idx = self._load_ivf(t)
-                want = self._ann_scope_filters(df, idx, project_id, agent)
-                if want is not None:
-                    ann = True
-                    ref = None
-                    # r14 (VERDICT r13 #3): small batches splice the
-                    # probe as SQL TEXT — standalone probe A/B: 66-109
-                    # ms/task vs the arrow view path's 113-243 at
-                    # batch 4-8, construction ~20x cheaper (the py4j
-                    # frame + temp-view churn WAS the floor); engine
-                    # end-to-end (measure_batch_serving.py): 954->642
-                    # ms/task at batch 2, 24.4->20.1 at 32 on the
-                    # gate-sized corpus. Large batches keep the arrow
-                    # kernel: its BLAS matmul amortizes the Python hop
-                    # and beats the JVM per-pair fold once per-cell
-                    # occupancy x batch multiplies the scored pairs
-                    # (standalone crossover between batch 8 and 32 at
-                    # 4k vectors). Threshold env-tunable; both forms
-                    # are row-identical on the pinned corpora
-                    # (test_batch_sql_subquery_matches).
-                    if len(qids) <= _ANN_BATCH_SQL_MAX:
-                        try:
-                            ref = idx.search_batch_sql_subquery(
-                                list(zip(qids, qvecs)), k=2 * fetch_k,
-                                nprobe=nprobe, filters=want,
-                            )
-                        except SS.ServingSQLUnsupported:
-                            ref = None  # legacy parser mode: view path
-                    if ref is None:
-                        ref = self._register_cand_view(
-                            t,
-                            idx.search_batch(
-                                list(zip(qids, qvecs)), k=2 * fetch_k,
-                                nprobe=nprobe, filters=want,
-                            ),
-                        )
-                    cand_refs[t] = ref
-            branches.append(
-                SS.BranchInput(
-                    t,
-                    view,
-                    tuple(df.columns),
-                    tuple((f.name, f.dataType.simpleString()) for f in df.schema.fields),
-                    ann=ann,
-                )
-            )
-            stamps.append((t, stamp))
-        prefs = None
-        if user_id is not None:
-            view, pdf, stamp = self._serving_view("preferences")
-            prefs = SS.PrefsInput(
-                view,
-                tuple(pdf.columns),
-                tuple((f.name, f.dataType.simpleString()) for f in pdf.schema.fields),
-                user_id,
-                k,
-            )
-            stamps.append(("preferences", stamp))
-        if not branches and prefs is None:
-            return [], {}
-        key = (
-            "batch",
-            tuple(stamps),
-            fetch_k,
-            min_score,
-            (weights.similarity, weights.recency, weights.success_rate, weights.confidence),
-            project_id,
-            agent,
-            user_id,
-            tuple(sorted(t for t in cand_refs)),  # ann branch shape (see above)
-        )
-        with self._srv_lock:
-            tmpl = self._srv_templates.get(key)
-            if tmpl is not None and not any(s is None for _, s in stamps):
-                self._srv_templates.move_to_end(key)
-            else:
-                tmpl = None
-        if tmpl is None:
-            SS.check_parser_mode(self.spark)
-            tmpl = SS.compile_batch_template(
-                branches, fetch_k, min_score, weights, project_id, agent,
-                prefs=prefs,
-            )
-            with self._srv_lock:
-                self._srv_templates[key] = tmpl
-                while len(self._srv_templates) > 64:
-                    self._srv_templates.popitem(last=False)
-        rows = self._srv_run(
-            SS.bind_batch(tmpl, qids, qvecs, now, cand_refs=cand_refs)
-        )
-        return rows, dict(tmpl.colsets)
 
     # ------------------------------------------------------------------
     # retrieval (the hot path; reference core.py:246-307)
@@ -705,10 +610,6 @@ class AlmaSpark:
         # driver-side.
         frames: list[DataFrame] = []
         colsets: dict[str, list[str]] = {}
-        # built once per retrieve, shared by every type branch
-        qv_lit = (
-            None if sql_served is not None else F.lit([float(x) for x in qvec])
-        )
         for t in [] if sql_served is not None else type_list:
             # a memory type that has never been written contributes an
             # empty result either way — skipping it drops its window +
@@ -716,16 +617,7 @@ class AlmaSpark:
             # for fresh/sparse stores: only domain_knowledge populated)
             if not self.store.exists(t):
                 continue
-            # cached-expression serving path (VERDICT r8 #8): the
-            # query vector + now anchor ride as two projected literal
-            # columns (Catalyst constant-folds them), so retrieve_type
-            # serves its heavy expression trees — cosine, recency,
-            # composite — from the per-process cache instead of
-            # rebuilding them over py4j on every retrieve (profiled:
-            # ~0.8 s of a ~1.0 s warm retrieve was tree construction)
-            df = self.store.read(t).withColumns(
-                {RT.PARAM_QV: qv_lit, RT.PARAM_NOW: F.lit(now)}
-            )
+            df = self.store.read(t)
             candidates = None
             if use_ann and self._has_ivf_index(t):
                 idx = self._load_ivf(t)
@@ -752,7 +644,6 @@ class AlmaSpark:
                 weights=weights,
                 mode=cfg,
                 candidates=candidates,
-                params=True,
             )
             # feedback blending happens ONCE after the union (each
             # branch is already cut to fetch_k rows by its own
@@ -1038,11 +929,11 @@ class AlmaSpark:
         scan crossJoined with the broadcast query frame, per-qid
         top-2k — the batch form of operators/retrieval.py:
         vector_candidates (same ordering, same ann_rank)."""
-        from alma_memory_spark.functions.vector import cosine_similarity
+        from alma_memory_spark.operators.serving_sql import cosine_sql
 
         return (
             df.crossJoin(F.broadcast(qdf))
-            .withColumn("similarity", cosine_similarity("embedding", F.col("qvec")))
+            .withColumn("similarity", F.expr(cosine_sql("embedding", "`qvec`")))
             .drop("qvec")
             .withColumn("_rk", F.row_number().over(rank_w))
             .filter(F.col("_rk") <= 2 * fetch_k)

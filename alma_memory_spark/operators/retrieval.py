@@ -28,21 +28,25 @@ The correctness heart of the engine. Reference semantics:
 Spark shape: one declarative plan — filter (partition-pruned) -> cosine
 column -> window top-2k per type -> score columns -> threshold -> top-k.
 All JVM-side column expressions; nothing collects until the final k rows.
+
+This is the DataFrame serving path. Its cosine, score-component,
+composite and boost columns are `F.expr` over the SQL fragments in
+operators/serving_sql.py — the single scoring definition, shared with
+the compiled serving statements — with `now` and the query vector
+entering as the same folded literals the compiled statement binds.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime
-from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from alma_memory_spark.functions.temporal import recency_score
-from alma_memory_spark.functions.vector import cosine_similarity
 from alma_memory_spark.functions.window import bounded_rank_w
+from alma_memory_spark.operators import serving_sql as SS
 
 
 @dataclass
@@ -116,159 +120,28 @@ def infer_mode(query: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# per-type scoring conventions
+# scoring — columns parsed from the serving SQL fragments
 # ---------------------------------------------------------------------------
-
-def success_expr(memory_type: str) -> Column:
-    if memory_type == "heuristics":
-        return F.when(
-            F.col("occurrence_count") > 0,
-            F.col("success_count").cast("double") / F.col("occurrence_count"),
-        ).otherwise(F.lit(0.0))
-    if memory_type == "outcomes":
-        return F.when(F.col("success"), F.lit(1.0)).otherwise(F.lit(0.3))
-    if memory_type == "domain_knowledge":
-        return F.lit(1.0)
-    if memory_type == "anti_patterns":
-        return F.least(F.col("occurrence_count").cast("double") / F.lit(10.0), F.lit(1.0))
-    return F.lit(1.0)
-
-
-def confidence_expr(memory_type: str) -> Column:
-    if memory_type in ("heuristics", "domain_knowledge"):
-        return F.col("confidence")
-    return F.lit(1.0)
-
-
-_RECENCY_TS = {
-    "heuristics": "last_validated",
-    "outcomes": "timestamp",
-    "domain_knowledge": "last_verified",
-    "anti_patterns": "last_seen",
-}
-
-
-def composite_score(
-    sim: Column, rec: Column, succ: Column, conf: Column, w: ScoringWeights
-) -> Column:
-    return (
-        F.lit(w.similarity) * sim
-        + F.lit(w.recency) * rec
-        + F.lit(w.success_rate) * succ
-        + F.lit(w.confidence) * conf
-    )
-
-
-#: params-column names for the cached-expression serving path (r9,
-#: VERDICT r8 #8): the per-call values (query vector, now anchor) enter
-#: the plan as two lit()-backed projected columns under these fixed
-#: names, so every OTHER expression tree — cosine, recency, success,
-#: confidence, composite — is a pure function of (type, weights,
-#: half-life) and builds ONCE per process instead of per retrieve.
-#: Profiled: ~0.8 s of a ~1.0 s warm retrieve was py4j round trips
-#: constructing these trees. Values are identical by construction
-#: (same arithmetic over the same literals; Catalyst constant-folds
-#: the projected literals), hash-gate-verified.
-PARAM_QV = "_qv"
-PARAM_NOW = "_now_ts"
-
-
-def _ctx_id() -> tuple:
-    """Cache key component: cached Columns wrap JVM expression objects,
-    which die with the SparkContext — a restarted context must never
-    serve another context's trees. The key is a MONOTONE identity
-    ((applicationId, startTime), unique per context lifetime) — id()
-    of the context object is not safe: after a stop/restart CPython
-    can re-allocate the new context at the same address and the cache
-    would serve trees bound to the dead JVM gateway."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return (None, None)
-    return (sc.applicationId, sc.startTime)
-
-
-@lru_cache(maxsize=32)
-def _cosine_expr_cached(ctx: tuple, embedding_col: str) -> Column:
-    return cosine_similarity(embedding_col, F.col(PARAM_QV))
-
-
-@lru_cache(maxsize=512)
-def _score_exprs_cached(
-    ctx: tuple, memory_type: str, w_key: tuple, half_life: float, has_sim: bool
-):
-    """(sim, rec, succ, conf, score) Columns with the now anchor read
-    from the PARAM_NOW column — every tree here is per-process, not
-    per-call. w_key is the POST-normalization weight tuple."""
-    sim = (F.col("similarity") if has_sim else F.lit(1.0)).cast("double")
-    rec = recency_score(_RECENCY_TS[memory_type], F.col(PARAM_NOW), half_life)
-    succ = success_expr(memory_type).cast("double")
-    conf = confidence_expr(memory_type).cast("double")
-    w = ScoringWeights(*w_key)
-    # the composite references the component EXPRS (not the projected
-    # columns) so everything lands in ONE withColumns projection
-    score = composite_score(sim, rec, succ, conf, w)
-    return sim, rec, succ, conf, score
-
 
 def score_memories(
     df: DataFrame,
     memory_type: str,
-    now: datetime | None,
+    now: datetime,
     weights: ScoringWeights | None = None,
     half_life_days: float = 30.0,
     sim_col: str | None = "similarity",
-    params: bool = False,
 ) -> DataFrame:
     """Attach similarity/recency/success/confidence components and the
     composite `score` column. `sim_col=None` means no embedding was given
-    -> sim defaults to 1.0 for every row (reference: scoring.py:98).
-    `params=True` is the cached-expression serving path: `df` must carry
-    the PARAM_NOW column (and `now` is ignored); `sim_col` must be the
-    standard name."""
-    w = weights or ScoringWeights()
-    if params:
-        if sim_col not in (None, "similarity"):
-            raise ValueError("params path requires the standard sim column")
-        sim, rec, succ, conf, score = _score_exprs_cached(
-            _ctx_id(),
-            memory_type,
-            (w.similarity, w.recency, w.success_rate, w.confidence),
-            half_life_days,
-            sim_col is not None,
-        )
-    else:
-        sim = (F.col(sim_col) if sim_col else F.lit(1.0)).cast("double")
-        rec = recency_score(_RECENCY_TS[memory_type], now, half_life_days)
-        succ = success_expr(memory_type).cast("double")
-        conf = confidence_expr(memory_type).cast("double")
-        score = composite_score(
-            F.col("sim_score"),
-            F.col("recency_score"),
-            F.col("success_score"),
-            F.col("confidence_score"),
-            w,
-        )
-        return (
-            df.withColumn("sim_score", sim)
-            .withColumn("recency_score", rec)
-            .withColumn("success_score", succ)
-            .withColumn("confidence_score", conf)
-            .withColumn("score", score)
-        )
-    # ONE withColumns call (4 ms/py4j round trip x 5 saved on the hot
-    # path); the composite references the component EXPRS directly —
-    # none of the new columns reference each other, and Catalyst's
-    # project-collapse produces the same plan either way
-    return df.withColumns(
-        {
-            "sim_score": sim,
-            "recency_score": rec,
-            "success_score": succ,
-            "confidence_score": conf,
-            "score": score,
-        }
+    -> sim defaults to 1.0 for every row (reference: scoring.py:98)."""
+    comps = SS.score_components_sql(
+        memory_type,
+        sim_col,
+        SS.double_literal(SS.now_epoch_seconds(now)),
+        half_life_days,
+    )
+    return df.withColumns({n: F.expr(e) for n, e in comps.items()}).withColumn(
+        "score", F.expr(SS.score_sql(weights or ScoringWeights()))
     )
 
 
@@ -278,11 +151,10 @@ def score_memories(
 
 def vector_candidates(
     df: DataFrame,
-    query_vec: list[float] | None,
+    query_vec: list[float],
     k: int,
     embedding_col: str = "embedding",
     id_col: str = "id",
-    params: bool = False,
 ) -> DataFrame:
     """Exact brute-force cosine top-k candidate stage.
 
@@ -292,16 +164,13 @@ def vector_candidates(
     per-partition top-k partials — this is the plan that survives 100x
     scale-up. Adds `similarity` and an explicit `ann_rank` tiebreaker.
     """
-    if params:
-        # cached-expression path: the query vector is the PARAM_QV
-        # column `df` already carries; the whole cosine tree is
-        # per-process (see PARAM_QV)
-        sim = _cosine_expr_cached(_ctx_id(), embedding_col)
-    else:
-        # one py4j call instead of ~130 (lit-per-dim + array): the
-        # retrieve hot path is driver-bound on expression construction
-        qlit = F.lit([float(x) for x in query_vec])
-        sim = cosine_similarity(embedding_col, qlit)
+    sim = F.expr(
+        SS.cosine_sql(
+            embedding_col,
+            SS.qv_array_sql(query_vec),
+            SS.double_literal(SS.qv_norm(query_vec)),
+        )
+    )
     scored = df.withColumn("similarity", sim)
     # Global top-k: orderBy+limit compiles to TakeOrderedAndProject.
     top = scored.orderBy(F.desc("similarity"), F.asc(id_col)).limit(k)
@@ -348,24 +217,9 @@ def apply_mode_boosts(scored: DataFrame, mode: ModeConfig) -> DataFrame:
     """Mode-dependent score multipliers (reference: engine.py:717-802):
     DIAGNOSTIC: failed outcomes x1.5; exact-match boost: sim > 0.9 -> xB,
     sim > 0.8 -> x(1 + (B-1)/2)."""
-    out = scored
-    if mode.prioritize_failures and "success" in out.columns:
-        out = out.withColumn(
-            "score",
-            F.when(~F.col("success"), F.col("score") * F.lit(1.5)).otherwise(
-                F.col("score")
-            ),
-        )
-    if mode.exact_match_boost != 1.0 and "sim_score" in out.columns:
-        b = mode.exact_match_boost
-        half = 1.0 + (b - 1.0) / 2.0
-        out = out.withColumn(
-            "score",
-            F.when(F.col("sim_score") > 0.9, F.col("score") * F.lit(b))
-            .when(F.col("sim_score") > 0.8, F.col("score") * F.lit(half))
-            .otherwise(F.col("score")),
-        )
-    return out
+    for expr in SS.mode_boosts_sql(mode, scored.columns):
+        scored = scored.withColumn("score", F.expr(expr))
+    return scored
 
 
 def retrieve_type(
@@ -381,7 +235,6 @@ def retrieve_type(
     weights: ScoringWeights | None = None,
     mode: ModeConfig | None = None,
     candidates: DataFrame | None = None,
-    params: bool = False,
 ) -> DataFrame:
     """End-to-end single-type retrieval (reference: engine.py:275-374).
 
@@ -396,11 +249,6 @@ def retrieve_type(
     join bounded by the candidate count), keep the index's similarity,
     and gain the same explicit ann_rank tiebreaker; scoring, boosts
     and threshold are unchanged.
-
-    `params=True` is the cached-expression serving path (VERDICT r8
-    #8): `df` carries the PARAM_QV/PARAM_NOW projected literals, the
-    heavy expression trees come from the per-process cache, and the
-    params columns are dropped from the result.
     """
     out = df
     if project_id is not None:
@@ -423,23 +271,14 @@ def retrieve_type(
                 F.row_number().over(bounded_rank_w("id", F.desc("similarity"), F.asc("id"))),
             )
         )
-        scored = score_memories(
-            out, memory_type, now, weights, sim_col="similarity",
-            params=params,
-        )
-    elif query_vec is not None or (params and PARAM_QV in out.columns):
-        out = vector_candidates(out, query_vec, 2 * top_k, params=params)
-        scored = score_memories(
-            out, memory_type, now, weights, sim_col="similarity",
-            params=params,
-        )
+    elif query_vec is not None:
+        out = vector_candidates(out, query_vec, 2 * top_k)
     else:
         out = fallback_order(out, memory_type, 2 * top_k)
-        scored = score_memories(
-            out, memory_type, now, weights, sim_col=None, params=params
-        )
+    scored = score_memories(
+        out, memory_type, now, weights,
+        sim_col="similarity" if query_vec is not None else None,
+    )
     if mode is not None:
         scored = apply_mode_boosts(scored, mode)
-    if params:
-        scored = scored.drop(PARAM_QV, PARAM_NOW)
     return threshold_topk(scored, top_k, min_score)

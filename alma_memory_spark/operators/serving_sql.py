@@ -1,32 +1,33 @@
-"""SQL-compiled serving plan: whole-subtree memoization (VERDICT r10 #1).
+"""Serving scoring as SQL fragments, and the compiled serving statements.
 
-Warm `retrieve()`'s remaining latency floor was driver-side plan
-construction: even with per-process cached Column trees
-(operators/retrieval.py PARAM_QV) the per-call DataFrame chain costs
-~550 py4j round trips (~0.15 s) because the query vector and clock are
-plan literals rebuilt every call. This module compiles the WHOLE
-per-retrieve serving subtree — scope filters -> cosine top-2k ->
-ann_rank -> composite scoring -> mode boosts -> threshold/top-k per
-type -> union -> feedback blend — into ONE SQL statement template,
-cached per (store version stamps, serving config), and binds the
-per-call query vector / clock by token substitution. A warm retrieve
-then costs ONE `spark.sql()` round trip (JVM-side parse + analyze,
-measured ~25 ms per branch) plus the collect, instead of rebuilding
-the tree through py4j.
+The fragments in this module are the ONE definition of serving scoring:
+cosine similarity, the per-type recency column, success and confidence
+conventions, the composite score and the mode boosts (semantics in
+operators/retrieval.py's module docstring). Two paths consume them:
 
-Bit-identity contract: every generated fragment mirrors the exact
-Catalyst expression tree the DataFrame path builds (operator order,
-literal types, null semantics, sort null-ordering defaults), so
-results are BIT-identical to `retrieve_type(params=True)` — asserted
-at full precision in tests/test_serving_sql.py and pinned by the
-engine_retrieve_serving oracle gates. Two deliberate pre-folds, both
-IEEE-754-identical to what Catalyst constant-folds in the DataFrame
-plan:
+- the compiled path: the WHOLE per-retrieve serving subtree — scope
+  filters -> cosine top-2k -> ann_rank -> composite scoring -> mode
+  boosts -> threshold/top-k per type -> union -> feedback blend —
+  becomes ONE SQL statement template, cached per (store version
+  stamps, serving config), with the per-call query vector and clock
+  bound by token substitution. A warm retrieve then costs ONE
+  `spark.sql()` round trip (JVM-side parse + analyze) plus the collect,
+  instead of rebuilding the plan through py4j. `retrieve_batch` compiles
+  the same branches over a qid dimension;
+- the DataFrame path (operators/retrieval.py, and the engine's fallback
+  for shapes this compiler refuses) builds its score columns with
+  `F.expr(fragment)`, passing the per-call values as the same literals
+  bind() substitutes: `qv_array_sql`, `qv_norm` and `now_epoch_seconds`.
+
+Both paths parse the same text into the same Catalyst expressions, so
+their results are bit-identical by construction; tests/test_serving_sql.py
+checks it at full precision and the engine_retrieve_serving oracle gates
+pin the values. The two per-call literals are pre-folded in Python:
 
 - the query vector's L2 norm (`sqrt(aggregate(qv, 0.0, acc+x*x))` over
-  an array literal) is folded in Python with the same left-to-right
-  double fold — CPython floats ARE IEEE-754 doubles, so the value is
-  the literal Catalyst would produce;
+  an array literal) is folded with the same left-to-right double fold
+  Catalyst would run — CPython floats ARE IEEE-754 doubles, so the value
+  is the literal Catalyst would produce;
 - the `now` anchor enters as its epoch-seconds double (what
   `Cast(TimestampType -> double)` yields: micros / 1e6, computed here
   with exact integer micros). Naive datetimes are interpreted in the
@@ -35,8 +36,7 @@ plan:
   `spark.sql.session.timeZone` should pass tz-aware clocks.
 
 Reference: serving semantics alma/retrieval/engine.py:275-374 +
-scoring.py + modes.py — see operators/retrieval.py for the per-type
-conventions this compiles.
+scoring.py + modes.py.
 """
 
 from __future__ import annotations
@@ -44,17 +44,17 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from typing import TYPE_CHECKING
 
-from alma_memory_spark.operators.retrieval import (
-    _RECENCY_TS,
-    ModeConfig,
-    ScoringWeights,
-)
+if TYPE_CHECKING:
+    from alma_memory_spark.operators.retrieval import ModeConfig, ScoringWeights
 
 #: per-call substitution tokens; chosen to never collide with SQL text
 TOKEN_QV = "@QV@"
 TOKEN_QNORM = "@QNORM@"
 TOKEN_NOW = "@NOWD@"
+#: per-call token for the batch form's inline (qid, qvec) VALUES rows
+TOKEN_QVALUES = "@QVALUES@"
 #: per-type ANN candidate tables (r12) — full token is "@CANDS_<type>@"
 TOKEN_CANDS_PREFIX = "@CANDS_"
 
@@ -94,7 +94,8 @@ def check_parser_mode(spark) -> None:
     """string_literal's backslash escaping assumes the DEFAULT parser
     mode; under spark.sql.parser.escapedStringLiterals=true a doubled
     backslash is two literal backslashes. Refuse to compile there —
-    the DataFrame path (plan literals, no SQL text) is always safe."""
+    the DataFrame path (no string literals in its fragments) is always
+    safe."""
     if (
         str(spark.conf.get("spark.sql.parser.escapedStringLiterals", "false"))
         .lower()
@@ -108,7 +109,7 @@ def check_parser_mode(spark) -> None:
 
 #: every substitution token (the CANDS entry is a prefix — any
 #: occurrence means a candidate-table token)
-_ALL_TOKENS = (TOKEN_QV, TOKEN_QNORM, TOKEN_NOW, TOKEN_CANDS_PREFIX, "@QVALUES@")
+_ALL_TOKENS = (TOKEN_QV, TOKEN_QNORM, TOKEN_NOW, TOKEN_CANDS_PREFIX, TOKEN_QVALUES)
 
 
 def _check_token_safe(*values) -> None:
@@ -161,28 +162,40 @@ def _q(name: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# expression fragments — each mirrors the retrieval.py Column tree
+# scoring fragments — the single definition both serving paths parse
 # ---------------------------------------------------------------------------
 
-def _cosine_sql(emb_col: str) -> str:
-    """functions/vector.py cosine_similarity over (embedding, @QV@):
-    the qv-side norm is the pre-folded @QNORM@ literal (see module
-    docstring); the doc-side norm and the dot product keep the exact
-    fold shape (zip_with + sequential aggregate in double)."""
+#: the timestamp column each memory type's recency decays from
+_RECENCY_TS = {
+    "heuristics": "last_validated",
+    "outcomes": "timestamp",
+    "domain_knowledge": "last_verified",
+    "anti_patterns": "last_seen",
+}
+
+
+def cosine_sql(emb_col: str, qv: str, qnorm: str | None = None) -> str:
+    """cos(embedding, qv) as dot / (|e| * |q|), 0.0 on a zero norm, with
+    sequential left-to-right folds in double (functions/vector.py's
+    numeric convention). `qv` is SQL for the query array; `qnorm` is its
+    norm as SQL — a pre-folded literal or token for one query — or None
+    to evaluate the norm per row (the batch form, where the query vector
+    is a column)."""
     te = f"transform({_q(emb_col)}, x -> CAST(x AS DOUBLE))"
-    tq = f"transform({TOKEN_QV}, x -> CAST(x AS DOUBLE))"
+    tq = f"transform({qv}, x -> CAST(x AS DOUBLE))"
     dot = f"aggregate(zip_with({te}, {tq}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
     na = f"sqrt(aggregate({te}, 0.0D, (acc, x) -> acc + x * x))"
+    nb = qnorm or f"sqrt(aggregate({tq}, 0.0D, (acc, x) -> acc + x * x))"
     return (
-        f"CASE WHEN ({na} > 0 AND {TOKEN_QNORM} > 0) "
-        f"THEN {dot} / ({na} * {TOKEN_QNORM}) ELSE 0.0D END"
+        f"CASE WHEN ({na} > 0 AND {nb} > 0) "
+        f"THEN {dot} / ({na} * {nb}) ELSE 0.0D END"
     )
 
 
-def _recency_sql(ts_col: str, half_life_days: float) -> str:
-    """functions/temporal.py recency_score with the now anchor already
-    a folded epoch-seconds double."""
-    d = f"({TOKEN_NOW} - CAST({_q(ts_col)} AS DOUBLE)) / 86400.0D"
+def _recency_sql(ts_col: str, now: str, half_life_days: float) -> str:
+    """0.5 ** (age_days / half_life) over fractional days, clamped to 1.0
+    for future-dated rows; `now` is SQL for the epoch-seconds anchor."""
+    d = f"({now} - CAST({_q(ts_col)} AS DOUBLE)) / 86400.0D"
     return (
         f"least(1.0D, pow(0.5D, greatest({d}, 0.0D) / "
         f"{double_literal(half_life_days)}))"
@@ -209,6 +222,52 @@ def _confidence_sql(memory_type: str) -> str:
     return "1.0D"
 
 
+def score_components_sql(
+    memory_type: str, sim_col: str | None, now: str, half_life_days: float = 30.0
+) -> dict[str, str]:
+    """The four score components, by output column name. `sim_col=None`
+    means no query embedding: similarity is 1.0 for every row."""
+    return {
+        "sim_score": f"CAST({_q(sim_col)} AS DOUBLE)" if sim_col else "1.0D",
+        "recency_score": _recency_sql(
+            _RECENCY_TS[memory_type], now, half_life_days
+        ),
+        "success_score": f"CAST({_success_sql(memory_type)} AS DOUBLE)",
+        "confidence_score": f"CAST({_confidence_sql(memory_type)} AS DOUBLE)",
+    }
+
+
+def score_sql(w: ScoringWeights) -> str:
+    """The composite score over the component columns."""
+    return (
+        f"{double_literal(w.similarity)} * `sim_score` "
+        f"+ {double_literal(w.recency)} * `recency_score` "
+        f"+ {double_literal(w.success_rate)} * `success_score` "
+        f"+ {double_literal(w.confidence)} * `confidence_score`"
+    )
+
+
+def mode_boosts_sql(mode: ModeConfig | None, columns) -> list[str]:
+    """The mode's sequential `score` rewrites, in order: failed outcomes
+    x1.5 (prioritize_failures), then the exact-match boost — sim > 0.9
+    -> xB, sim > 0.8 -> x(1 + (B-1)/2). A rewrite whose input column is
+    absent is skipped."""
+    out = []
+    if mode is None:
+        return out
+    if mode.prioritize_failures and "success" in columns:
+        out.append("CASE WHEN NOT `success` THEN `score` * 1.5D ELSE `score` END")
+    if mode.exact_match_boost != 1.0 and "sim_score" in columns:
+        b = mode.exact_match_boost
+        half = 1.0 + (b - 1.0) / 2.0
+        out.append(
+            f"CASE WHEN `sim_score` > 0.9D THEN `score` * {double_literal(b)} "
+            f"WHEN `sim_score` > 0.8D THEN `score` * {double_literal(half)} "
+            "ELSE `score` END"
+        )
+    return out
+
+
 _SCORE_COMPONENTS = (
     "sim_score",
     "recency_score",
@@ -216,28 +275,28 @@ _SCORE_COMPONENTS = (
     "confidence_score",
 )
 
+#: dtypes of the columns the serving pipeline ADDS (union null-fill)
+_ADDED = {
+    "shared_from": "string",
+    "qid": "string",
+    "similarity": "double",
+    "ann_rank": "int",
+    **{c: "double" for c in _SCORE_COMPONENTS},
+    "score": "double",
+}
 
-#: columns the serving pipeline ADDS; a base table already exposing one
-#: would make the generated SELECT ambiguous where the DataFrame path's
-#: withColumn would silently REPLACE it — refuse to compile and let the
-#: engine fall back (observed in the wild via StructType.add's
+#: a base table already exposing an added column would make the
+#: generated SELECT ambiguous where the DataFrame path's withColumn
+#: would silently REPLACE it — refuse to compile and let the engine
+#: fall back (observed in the wild via StructType.add's
 #: in-place-mutation footgun polluting shared schemas with a NULL
 #: `similarity` column)
-_RESERVED = frozenset(
-    [
-        "shared_from", "similarity", "ann_rank", "qid", "memory_type",
-        "feedback_score", *_SCORE_COMPONENTS, "score",
-    ]
-)
+_RESERVED = frozenset([*_ADDED, "memory_type", "feedback_score"])
 
 
-def _check_reserved(b: BranchInput) -> None:
-    clash = sorted(_RESERVED.intersection(b.columns))
-    if clash:
-        raise ServingSQLUnsupported(
-            f"{b.memory_type}: base table exposes reserved serving "
-            f"column(s) {clash} (the DataFrame path replaces them)"
-        )
+# ---------------------------------------------------------------------------
+# compiled statements
+# ---------------------------------------------------------------------------
 
 
 @dataclass(frozen=True)
@@ -246,8 +305,8 @@ class BranchInput:
     (column order and simpleString dtypes, used for union null-fill).
     `ann=True` compiles the branch's vector stage as a broadcast join
     against a per-call candidate TABLE (token "@CANDS_<type>@",
-    substituted with a temp-view reference over the IVF probe's lazy
-    frame) instead of the exact cosine scan — the SQL form of the
+    substituted with a temp-view reference or subquery over the IVF
+    probe) instead of the exact cosine scan — the SQL form of the
     IVF-index serving path (r12, VERDICT r11 #1)."""
 
     memory_type: str
@@ -272,14 +331,13 @@ class PrefsInput:
 
 @dataclass
 class ServingTemplate:
-    """Compiled statement with @QV@/@QNORM@/@NOWD@ (and per-type
-    @CANDS_<type>@) tokens plus the per-type output column sets the
-    driver splits rows by. `ann_types` lists the ann-served types;
-    bind() substitutes each @CANDS_<type>@ with the caller's per-call
-    candidate TABLE REFERENCE — a temp view registered over the
-    IVFIndex.search/search_batch DataFrame, so the probe executes
-    INSIDE the one serving job (no driver-side candidate collect) and
-    the join sees the exact frame the DataFrame path broadcasts."""
+    """Compiled statement with @QV@/@QNORM@/@NOWD@ (single query) or
+    @QVALUES@/@NOWD@ (batch) tokens, per-type @CANDS_<type>@ tokens,
+    and the per-type output column sets the driver splits rows by.
+    `ann_types` lists the ann-served types; binding substitutes each
+    @CANDS_<type>@ with the caller's per-call candidate table reference
+    (a temp view or inline subquery over the IVF probe), so the probe
+    executes INSIDE the one serving job."""
 
     text: str
     colsets: dict[str, list[str]]
@@ -288,17 +346,79 @@ class ServingTemplate:
     def bind(
         self, qvec, now: datetime, cand_refs: dict[str, str] | None = None
     ) -> str:
-        out = (
-            self.text.replace(TOKEN_QNORM, double_literal(qv_norm(qvec)))
-            .replace(TOKEN_QV, qv_array_sql(qvec))
-            .replace(TOKEN_NOW, double_literal(now_epoch_seconds(now)))
+        return self._bind(
+            {TOKEN_QNORM: double_literal(qv_norm(qvec)), TOKEN_QV: qv_array_sql(qvec)},
+            now,
+            cand_refs,
         )
+
+    def _bind(self, subs: dict[str, str], now: datetime, cand_refs) -> str:
+        out = self.text
+        for tok, v in subs.items():
+            out = out.replace(tok, v)
+        out = out.replace(TOKEN_NOW, double_literal(now_epoch_seconds(now)))
         for t in self.ann_types:
             out = out.replace(cand_token(t), (cand_refs or {})[t])
         return out
 
 
-def _branch_layers(
+def _ranked_candidates(
+    b: BranchInput, base: str, cols: list[str], fetch_k: int, batch: bool
+) -> tuple[str, list[str]]:
+    """The vector stage over `base` (whose columns are `cols`): top-2k
+    candidates by similarity plus the explicit `ann_rank` tiebreaker.
+    Returns (sql, output_columns).
+
+    Single query: global top-2k (operators/retrieval.py
+    vector_candidates, or the ANN broadcast join of retrieve_type), then
+    ann_rank over the bounded frame (pmod(xxhash64(id), 1) constant
+    partition — functions/window.py bounded_rank_w). Batch: per-qid
+    top-2k over a broadcast cross join with the VALUES query frame (or
+    the (qid, id, similarity) ANN candidates) — the engine's
+    `_batch_exact_candidates`."""
+    cands = cand_token(b.memory_type)
+    order = "ORDER BY `similarity` DESC, `id` ASC"
+    if not batch:
+        if b.ann:
+            top = (
+                f"SELECT /*+ BROADCAST(c) */ b.*, c.`similarity` "
+                f"FROM ({base}) b JOIN {cands} c ON b.`id` = c.`id` "
+                f"{order} LIMIT {2 * fetch_k}"
+            )
+        else:
+            sim = cosine_sql("embedding", TOKEN_QV, TOKEN_QNORM)
+            top = (
+                f"SELECT *, {sim} AS `similarity` FROM ({base}) "
+                f"{order} LIMIT {2 * fetch_k}"
+            )
+        ranked = (
+            f"SELECT *, row_number() OVER (PARTITION BY pmod(xxhash64(`id`), 1) "
+            f"{order}) AS `ann_rank` FROM ({top})"
+        )
+        return ranked, cols + ["similarity", "ann_rank"]
+    if b.ann:
+        joined = (
+            f"SELECT /*+ BROADCAST(c) */ b.*, c.`qid`, c.`similarity` "
+            f"FROM ({base}) b JOIN {cands} c ON b.`id` = c.`id`"
+        )
+    else:
+        sim = cosine_sql("embedding", "q.`qvec`")
+        joined = (
+            f"SELECT /*+ BROADCAST(q) */ b.*, q.`qid`, {sim} AS `similarity` "
+            f"FROM ({base}) b CROSS JOIN {TOKEN_QVALUES}"
+        )
+    cols = cols + ["qid", "similarity"]
+    w_rank = f"PARTITION BY `qid` {order}"
+    rk = f"SELECT *, row_number() OVER ({w_rank}) AS `_rk` FROM ({joined})"
+    cut = (
+        f"SELECT {', '.join(_q(c) for c in cols)} FROM ({rk}) "
+        f"WHERE `_rk` <= {2 * fetch_k}"
+    )
+    ranked = f"SELECT *, row_number() OVER ({w_rank}) AS `ann_rank` FROM ({cut})"
+    return ranked, cols + ["ann_rank"]
+
+
+def _branch_sql(
     b: BranchInput,
     fetch_k: int,
     min_score: float,
@@ -306,17 +426,23 @@ def _branch_layers(
     mode: ModeConfig | None,
     project_id: str | None,
     agents: tuple[str, ...],
+    batch: bool,
 ) -> tuple[str, list[str]]:
-    """SQL for one memory-type branch, mirroring retrieve_type's layer
-    order exactly; returns (subquery_sql, output_columns)."""
+    """SQL for one memory-type branch, in retrieve_type's layer order:
+    scope -> vector stage -> scoring -> mode boosts -> threshold/top-k
+    (per qid in the batch form). Returns (subquery_sql, output_columns)."""
     if "id" not in b.columns or "embedding" not in b.columns:
         raise ServingSQLUnsupported(f"{b.memory_type}: missing id/embedding")
-    _check_reserved(b)
+    clash = sorted(_RESERVED.intersection(b.columns))
+    if clash:
+        raise ServingSQLUnsupported(
+            f"{b.memory_type}: base table exposes reserved serving "
+            f"column(s) {clash} (the DataFrame path replaces them)"
+        )
     ts_col = _RECENCY_TS.get(b.memory_type)
     if ts_col is None or ts_col not in b.columns:
         raise ServingSQLUnsupported(f"{b.memory_type}: missing recency column")
 
-    cols = [_q(c) for c in b.columns]
     filters = []
     if project_id is not None:
         filters.append(f"`project_id` = {string_literal(project_id)}")
@@ -330,90 +456,115 @@ def _branch_layers(
             f", CASE WHEN `agent` != {me} THEN `agent` END AS `shared_from`"
         )
     where = (" WHERE " + " AND ".join(filters)) if filters else ""
-    base = f"SELECT {', '.join(cols)}{select_extra} FROM {b.view}{where}"
-    out_cols = list(b.columns) + (["shared_from"] if agents else [])
-
-    if b.ann:
-        # ANN-index serving (r12): the scoped base inner-joins the
-        # per-call candidate view (the IVF probe's lazy DataFrame —
-        # the probe scan runs inside THIS job) on id, keeping the
-        # index's similarity — the SQL form of retrieve_type's
-        # `join(broadcast(candidates), "id") -> orderBy -> limit`
-        # (operators/retrieval.py:416-425); same 2k cut, same explicit
-        # ann_rank over the bounded frame
-        top = (
-            f"SELECT /*+ BROADCAST(c) */ b.*, c.`similarity` "
-            f"FROM ({base}) b JOIN {cand_token(b.memory_type)} c "
-            f"ON b.`id` = c.`id` "
-            f"ORDER BY `similarity` DESC, `id` ASC LIMIT {2 * fetch_k}"
-        )
-    else:
-        # vector_candidates: cosine column -> global top-2k -> explicit
-        # ann_rank over the bounded frame (pmod(xxhash64(id), 1) constant
-        # partition — functions/window.py bounded_rank_w)
-        sim = _cosine_sql("embedding")
-        top = (
-            f"SELECT *, {sim} AS `similarity` FROM ({base}) "
-            f"ORDER BY `similarity` DESC, `id` ASC LIMIT {2 * fetch_k}"
-        )
-    ranked = (
-        "SELECT *, row_number() OVER (PARTITION BY pmod(xxhash64(`id`), 1) "
-        "ORDER BY `similarity` DESC, `id` ASC) AS `ann_rank` "
-        f"FROM ({top})"
+    cols = ", ".join(_q(c) for c in b.columns)
+    base = f"SELECT {cols}{select_extra} FROM {b.view}{where}"
+    ranked, out_cols = _ranked_candidates(
+        b, base, list(b.columns) + (["shared_from"] if agents else []),
+        fetch_k, batch,
     )
-    out_cols += ["similarity", "ann_rank"]
 
-    # score_memories(params=True): component columns + composite in one
-    # projection
-    comp = {
-        "sim_score": "CAST(`similarity` AS DOUBLE)",
-        "recency_score": _recency_sql(ts_col, 30.0),
-        "success_score": f"CAST({_success_sql(b.memory_type)} AS DOUBLE)",
-        "confidence_score": f"CAST({_confidence_sql(b.memory_type)} AS DOUBLE)",
-    }
+    comp = score_components_sql(b.memory_type, "similarity", TOKEN_NOW)
     scored = (
         "SELECT *, "
         + ", ".join(f"{e} AS {_q(n)}" for n, e in comp.items())
         + f" FROM ({ranked})"
     )
-    w = weights
-    score = (
-        f"{double_literal(w.similarity)} * `sim_score` "
-        f"+ {double_literal(w.recency)} * `recency_score` "
-        f"+ {double_literal(w.success_rate)} * `success_score` "
-        f"+ {double_literal(w.confidence)} * `confidence_score`"
-    )
-    cur = f"SELECT *, ({score}) AS `score` FROM ({scored})"
+    cur = f"SELECT *, ({score_sql(weights)}) AS `score` FROM ({scored})"
     out_cols += [*_SCORE_COMPONENTS, "score"]
+    keep = ", ".join(_q(c) for c in out_cols if c != "score")
+    for expr in mode_boosts_sql(mode, out_cols):
+        cur = f"SELECT {keep}, {expr} AS `score` FROM ({cur})"
 
-    def _replace_score(expr: str, inner: str) -> str:
-        keep = ", ".join(_q(c) for c in out_cols if c != "score")
-        return f"SELECT {keep}, {expr} AS `score` FROM ({inner})"
-
-    # apply_mode_boosts: prioritize_failures first, exact-match second —
-    # two sequential score rewrites, as in the DataFrame path
-    if mode is not None:
-        if mode.prioritize_failures and "success" in b.columns:
-            cur = _replace_score(
-                "CASE WHEN NOT `success` THEN `score` * 1.5D ELSE `score` END",
-                cur,
-            )
-        if mode.exact_match_boost != 1.0:
-            bst = mode.exact_match_boost
-            half = 1.0 + (bst - 1.0) / 2.0
-            cur = _replace_score(
-                f"CASE WHEN `sim_score` > 0.9D THEN `score` * {double_literal(bst)} "
-                f"WHEN `sim_score` > 0.8D THEN `score` * {double_literal(half)} "
-                "ELSE `score` END",
-                cur,
-            )
-
-    # threshold_topk: filter, then top-k with the ann_rank tiebreak
+    fil = f"SELECT * FROM ({cur}) WHERE `score` >= {double_literal(min_score)}"
+    if not batch:
+        return f"{fil} ORDER BY `score` DESC, `ann_rank` ASC LIMIT {fetch_k}", out_cols
+    w_top = "PARTITION BY `qid` ORDER BY `score` DESC, `ann_rank` ASC"
+    win = f"SELECT *, row_number() OVER ({w_top}) AS `_rk` FROM ({fil})"
     final = (
-        f"SELECT * FROM ({cur}) WHERE `score` >= {double_literal(min_score)} "
-        f"ORDER BY `score` DESC, `ann_rank` ASC LIMIT {fetch_k}"
+        f"SELECT {', '.join(_q(c) for c in out_cols)} FROM ({win}) "
+        f"WHERE `_rk` <= {fetch_k}"
     )
     return final, out_cols
+
+
+def _compile_union(
+    branches: list[BranchInput],
+    fetch_k: int,
+    min_score: float,
+    weights: ScoringWeights,
+    mode: ModeConfig | None,
+    project_id: str | None,
+    agents: tuple[str, ...],
+    prefs: PrefsInput | None,
+    feedback_view: str | None,
+    batch: bool,
+) -> tuple[str, list[str], dict[str, list[str]]]:
+    """The per-type branches (plus the preferences branch) null-filled
+    to one column superset, in unionByName accretion order, each tagged
+    with its `memory_type`. Returns (union_sql, union_columns, colsets);
+    colsets exclude `qid` — the driver splits batch rows by (qid, type)."""
+    if not branches and prefs is None:
+        raise ServingSQLUnsupported("nothing to serve")
+    _check_token_safe(
+        project_id,
+        *agents,
+        *(b.view for b in branches),
+        *(c for b in branches for c in b.columns),
+        *((prefs.view, prefs.user_id, *prefs.columns) if prefs else ()),
+        feedback_view,
+    )
+
+    branch_sqls: list[tuple[str, str, list[str]]] = []  # (type, sql, cols)
+    dtype_of: dict[str, str] = {}
+
+    def _note_types(dtypes, extra: dict[str, str]) -> None:
+        for name, dt in list(dtypes) + list(extra.items()):
+            prev = dtype_of.get(name)
+            if prev is not None and prev != dt:
+                raise ServingSQLUnsupported(
+                    f"conflicting union dtypes for {name}: {prev} vs {dt}"
+                )
+            dtype_of[name] = dt
+
+    for b in branches:
+        sql, out_cols = _branch_sql(
+            b, fetch_k, min_score, weights, mode, project_id, agents, batch
+        )
+        _note_types(b.dtypes, {c: t for c, t in _ADDED.items() if c in out_cols})
+        branch_sqls.append((b.memory_type, sql, out_cols))
+
+    if prefs is not None:
+        if "user_id" not in prefs.columns or "confidence" not in prefs.columns:
+            raise ServingSQLUnsupported("preferences: missing user_id/confidence")
+        qid = ", CAST(NULL AS string) AS `qid`" if batch else ""
+        psql = (
+            f"SELECT {', '.join(_q(c) for c in prefs.columns)}{qid} "
+            f"FROM {prefs.view} "
+            f"WHERE `user_id` = {string_literal(prefs.user_id)} "
+            f"ORDER BY `confidence` DESC, `id` ASC LIMIT {prefs.limit}"
+        )
+        _note_types(prefs.dtypes, {"qid": "string"} if batch else {})
+        branch_sqls.append(
+            ("preferences", psql, list(prefs.columns) + (["qid"] if batch else []))
+        )
+
+    union_cols: list[str] = []
+    for _, _, out_cols in branch_sqls:
+        for c in out_cols:
+            if c not in union_cols:
+                union_cols.append(c)
+    parts = []
+    for t, sql, out_cols in branch_sqls:
+        have = set(out_cols)
+        proj = ", ".join(
+            _q(c) if c in have else f"CAST(NULL AS {dtype_of[c]}) AS {_q(c)}"
+            for c in union_cols
+        )
+        parts.append(
+            f"SELECT {proj}, {string_literal(t)} AS `memory_type` FROM ({sql})"
+        )
+    colsets = {t: [c for c in cols if c != "qid"] for t, _, cols in branch_sqls}
+    return "\nUNION ALL\n".join(parts), union_cols, colsets
 
 
 def compile_serving_template(
@@ -429,84 +580,14 @@ def compile_serving_template(
     feedback_weight: float = 0.15,
 ) -> ServingTemplate:
     """Compile the one-job union serving statement for the given store
-    shape + config. Raises ServingSQLUnsupported for shapes this
-    compiler cannot prove bit-identical (the engine then uses the
-    DataFrame path)."""
-    if not branches and prefs is None:
-        raise ServingSQLUnsupported("nothing to serve")
-    _check_token_safe(
-        project_id,
-        *agents,
-        *(b.view for b in branches),
-        *(c for b in branches for c in b.columns),
-        *((prefs.view, prefs.user_id, *prefs.columns) if prefs else ()),
-        feedback_view,
+    shape + config; bind with ServingTemplate.bind(). Raises
+    ServingSQLUnsupported for shapes this compiler cannot serve (the
+    engine then uses the DataFrame path)."""
+    union, union_cols, colsets = _compile_union(
+        branches, fetch_k, min_score, weights, mode, project_id, agents,
+        prefs, feedback_view, batch=False,
     )
-
-    colsets: dict[str, list[str]] = {}
-    branch_sqls: list[tuple[str, str, list[str]]] = []  # (type, sql, cols)
-    dtype_of: dict[str, str] = {}
-
-    def _note_types(dtypes, extra: dict[str, str]) -> None:
-        for name, dt in list(dtypes) + list(extra.items()):
-            prev = dtype_of.get(name)
-            if prev is not None and prev != dt:
-                raise ServingSQLUnsupported(
-                    f"conflicting union dtypes for {name}: {prev} vs {dt}"
-                )
-            dtype_of[name] = dt
-
-    added = {
-        "shared_from": "string",
-        "similarity": "double",
-        "ann_rank": "int",
-        "sim_score": "double",
-        "recency_score": "double",
-        "success_score": "double",
-        "confidence_score": "double",
-        "score": "double",
-    }
-    for b in branches:
-        sql, out_cols = _branch_layers(
-            b, fetch_k, min_score, weights, mode, project_id, agents
-        )
-        _note_types(b.dtypes, {c: added[c] for c in added if c in out_cols})
-        branch_sqls.append((b.memory_type, sql, out_cols))
-        colsets[b.memory_type] = list(out_cols)
-
-    if prefs is not None:
-        if "user_id" not in prefs.columns or "confidence" not in prefs.columns:
-            raise ServingSQLUnsupported("preferences: missing user_id/confidence")
-        psql = (
-            f"SELECT {', '.join(_q(c) for c in prefs.columns)} FROM {prefs.view} "
-            f"WHERE `user_id` = {string_literal(prefs.user_id)} "
-            f"ORDER BY `confidence` DESC, `id` ASC LIMIT {prefs.limit}"
-        )
-        _note_types(prefs.dtypes, {})
-        branch_sqls.append(("preferences", psql, list(prefs.columns)))
-        colsets["preferences"] = list(prefs.columns)
-
-    # union column superset in unionByName accretion order
-    union_cols: list[str] = []
-    for _, _, out_cols in branch_sqls:
-        for c in out_cols:
-            if c not in union_cols:
-                union_cols.append(c)
-
-    parts = []
-    for t, sql, out_cols in branch_sqls:
-        have = set(out_cols)
-        proj = ", ".join(
-            _q(c) if c in have else f"CAST(NULL AS {dtype_of[c]}) AS {_q(c)}"
-            for c in union_cols
-        )
-        parts.append(
-            f"SELECT {proj}, {string_literal(t)} AS `memory_type` FROM ({sql})"
-        )
-    union = "\nUNION ALL\n".join(parts)
-
-    has_score = any(t != "preferences" for t, _, _ in branch_sqls)
-    if feedback_view is not None and has_score:
+    if feedback_view is not None and branches:
         # operators/feedback.py feedback_summary + apply_feedback_blend
         # (type_col form): broadcast left join on (id, memory_type),
         # blended score replaces score, feedback_score column kept
@@ -533,7 +614,7 @@ def compile_serving_template(
             f"+ {double_literal(feedback_weight)} * (fbs.`feedback_score` + 1.0D) / 2.0D "
             "ELSE u.`score` END"
         )
-        text = (
+        union = (
             f"SELECT /*+ BROADCAST(fbs) */ {keep}, fbs.`feedback_score`, "
             f"{blended} AS `score` "
             f"FROM (\n{union}\n) u LEFT JOIN ({summary}) fbs "
@@ -542,38 +623,10 @@ def compile_serving_template(
         for t in colsets:
             if t != "preferences":
                 colsets[t] = colsets[t] + ["feedback_score"]
-    else:
-        text = union
-
     return ServingTemplate(
-        text=text,
+        text=union,
         colsets=colsets,
         ann_types=tuple(b.memory_type for b in branches if b.ann),
-    )
-
-
-# ---------------------------------------------------------------------------
-# batch serving (retrieve_batch) — the qid-dimension form (r11)
-# ---------------------------------------------------------------------------
-
-#: per-call token for the inline (qid, qvec) VALUES rows
-TOKEN_QVALUES = "@QVALUES@"
-
-
-def _cosine_sql_col(emb_col: str, qv_expr: str) -> str:
-    """cosine_similarity(embedding, <column>) — the batch form: the
-    query vector is a real column (one row per qid in the broadcast
-    VALUES frame), so BOTH norms evaluate per row, exactly the
-    DataFrame tree `cosine_similarity("embedding", F.col("qvec"))`
-    builds."""
-    te = f"transform({_q(emb_col)}, x -> CAST(x AS DOUBLE))"
-    tq = f"transform({qv_expr}, x -> CAST(x AS DOUBLE))"
-    dot = f"aggregate(zip_with({te}, {tq}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    na = f"sqrt(aggregate({te}, 0.0D, (acc, x) -> acc + x * x))"
-    nb = f"sqrt(aggregate({tq}, 0.0D, (acc, x) -> acc + x * x))"
-    return (
-        f"CASE WHEN ({na} > 0 AND {nb} > 0) "
-        f"THEN {dot} / ({na} * {nb}) ELSE 0.0D END"
     )
 
 
@@ -588,92 +641,6 @@ def qvalues_sql(qids, qvecs) -> str:
     return f"(VALUES {rows}) AS q(`qid`, `qvec`)"
 
 
-def _batch_branch_layers(
-    b: BranchInput,
-    fetch_k: int,
-    min_score: float,
-    weights: ScoringWeights,
-    project_id: str | None,
-    agent: str,
-) -> tuple[str, list[str]]:
-    """One memory-type branch of the BATCH plan, mirroring
-    engine._batch_exact_candidates + score_memories(params=False) +
-    threshold_topk(partition_cols=['qid']) layer by layer."""
-    if "id" not in b.columns or "embedding" not in b.columns:
-        raise ServingSQLUnsupported(f"{b.memory_type}: missing id/embedding")
-    _check_reserved(b)
-    ts_col = _RECENCY_TS.get(b.memory_type)
-    if ts_col is None or ts_col not in b.columns:
-        raise ServingSQLUnsupported(f"{b.memory_type}: missing recency column")
-
-    cols = [_q(c) for c in b.columns]
-    filters = [f"`agent` IN ({string_literal(agent)})"]
-    if project_id is not None:
-        filters.insert(0, f"`project_id` = {string_literal(project_id)}")
-    base = (
-        f"SELECT {', '.join(cols)}, "
-        f"CASE WHEN `agent` != {string_literal(agent)} THEN `agent` END "
-        f"AS `shared_from` FROM {b.view} WHERE {' AND '.join(filters)}"
-    )
-    out_cols = list(b.columns) + ["shared_from", "qid", "similarity"]
-
-    if b.ann:
-        # ANN batch serving (r12): the candidate view carries
-        # (qid, id, similarity) — IVFIndex.search_batch's lazy frame,
-        # registered per call — and replaces the exact crossJoin
-        # stage, mirroring engine.retrieve_batch's
-        # `df.join(broadcast(cands), "id")` (engine.py:801-808)
-        joined = (
-            f"SELECT /*+ BROADCAST(c) */ b.*, c.`qid`, c.`similarity` "
-            f"FROM ({base}) b JOIN {cand_token(b.memory_type)} c "
-            f"ON b.`id` = c.`id`"
-        )
-    else:
-        sim = _cosine_sql_col("embedding", "q.`qvec`")
-        joined = (
-            f"SELECT /*+ BROADCAST(q) */ b.*, q.`qid`, {sim} AS `similarity` "
-            f"FROM ({base}) b CROSS JOIN {TOKEN_QVALUES}"
-        )
-    w_rank = "PARTITION BY `qid` ORDER BY `similarity` DESC, `id` ASC"
-    rk = f"SELECT *, row_number() OVER ({w_rank}) AS `_rk` FROM ({joined})"
-    cut = (
-        f"SELECT {', '.join(_q(c) for c in out_cols)} FROM ({rk}) "
-        f"WHERE `_rk` <= {2 * fetch_k}"
-    )
-    ranked = f"SELECT *, row_number() OVER ({w_rank}) AS `ann_rank` FROM ({cut})"
-    out_cols += ["ann_rank"]
-
-    comp = {
-        "sim_score": "CAST(`similarity` AS DOUBLE)",
-        "recency_score": _recency_sql(ts_col, 30.0),
-        "success_score": f"CAST({_success_sql(b.memory_type)} AS DOUBLE)",
-        "confidence_score": f"CAST({_confidence_sql(b.memory_type)} AS DOUBLE)",
-    }
-    scored = (
-        "SELECT *, "
-        + ", ".join(f"{e} AS {_q(n)}" for n, e in comp.items())
-        + f" FROM ({ranked})"
-    )
-    w = weights
-    score = (
-        f"{double_literal(w.similarity)} * `sim_score` "
-        f"+ {double_literal(w.recency)} * `recency_score` "
-        f"+ {double_literal(w.success_rate)} * `success_score` "
-        f"+ {double_literal(w.confidence)} * `confidence_score`"
-    )
-    scored2 = f"SELECT *, ({score}) AS `score` FROM ({scored})"
-    out_cols += [*_SCORE_COMPONENTS, "score"]
-
-    fil = f"SELECT * FROM ({scored2}) WHERE `score` >= {double_literal(min_score)}"
-    w_top = "PARTITION BY `qid` ORDER BY `score` DESC, `ann_rank` ASC"
-    win = f"SELECT *, row_number() OVER ({w_top}) AS `_rk` FROM ({fil})"
-    final = (
-        f"SELECT {', '.join(_q(c) for c in out_cols)} FROM ({win}) "
-        f"WHERE `_rk` <= {fetch_k}"
-    )
-    return final, out_cols
-
-
 def compile_batch_template(
     branches: list[BranchInput],
     fetch_k: int,
@@ -683,84 +650,15 @@ def compile_batch_template(
     agent: str,
     prefs: PrefsInput | None = None,
 ) -> ServingTemplate:
-    """The retrieve_batch union statement with @QVALUES@/@NOWD@ tokens;
-    bind with bind_batch(). Same compile/staleness contract as
-    compile_serving_template."""
-    if not branches and prefs is None:
-        raise ServingSQLUnsupported("nothing to serve")
-    _check_token_safe(
-        project_id,
-        agent,
-        *(b.view for b in branches),
-        *(c for b in branches for c in b.columns),
-        *((prefs.view, prefs.user_id, *prefs.columns) if prefs else ()),
+    """The retrieve_batch union statement (default mode, no feedback)
+    with @QVALUES@/@NOWD@ tokens; bind with bind_batch(). Same
+    compile/staleness contract as compile_serving_template."""
+    union, _, colsets = _compile_union(
+        branches, fetch_k, min_score, weights, None, project_id, (agent,),
+        prefs, None, batch=True,
     )
-    colsets: dict[str, list[str]] = {}
-    branch_sqls: list[tuple[str, str, list[str]]] = []
-    dtype_of: dict[str, str] = {"qid": "string"}
-
-    def _note_types(dtypes, extra: dict[str, str]) -> None:
-        for name, dt in list(dtypes) + list(extra.items()):
-            prev = dtype_of.get(name)
-            if prev is not None and prev != dt:
-                raise ServingSQLUnsupported(
-                    f"conflicting union dtypes for {name}: {prev} vs {dt}"
-                )
-            dtype_of[name] = dt
-
-    added = {
-        "shared_from": "string",
-        "similarity": "double",
-        "ann_rank": "int",
-        "sim_score": "double",
-        "recency_score": "double",
-        "success_score": "double",
-        "confidence_score": "double",
-        "score": "double",
-    }
-    for b in branches:
-        sql, out_cols = _batch_branch_layers(
-            b, fetch_k, min_score, weights, project_id, agent
-        )
-        _note_types(b.dtypes, {c: added[c] for c in added if c in out_cols})
-        branch_sqls.append((b.memory_type, sql, out_cols))
-        # the driver splits rows by (qid, type); colsets exclude qid —
-        # same convention as the DataFrame path
-        colsets[b.memory_type] = [c for c in out_cols if c != "qid"]
-
-    if prefs is not None:
-        if "user_id" not in prefs.columns or "confidence" not in prefs.columns:
-            raise ServingSQLUnsupported("preferences: missing user_id/confidence")
-        psql = (
-            f"SELECT {', '.join(_q(c) for c in prefs.columns)}, "
-            "CAST(NULL AS string) AS `qid` "
-            f"FROM {prefs.view} "
-            f"WHERE `user_id` = {string_literal(prefs.user_id)} "
-            f"ORDER BY `confidence` DESC, `id` ASC LIMIT {prefs.limit}"
-        )
-        _note_types(prefs.dtypes, {})
-        branch_sqls.append(
-            ("preferences", psql, list(prefs.columns) + ["qid"])
-        )
-        colsets["preferences"] = list(prefs.columns)
-
-    union_cols: list[str] = []
-    for _, _, out_cols in branch_sqls:
-        for c in out_cols:
-            if c not in union_cols:
-                union_cols.append(c)
-    parts = []
-    for t, sql, out_cols in branch_sqls:
-        have = set(out_cols)
-        proj = ", ".join(
-            _q(c) if c in have else f"CAST(NULL AS {dtype_of[c]}) AS {_q(c)}"
-            for c in union_cols
-        )
-        parts.append(
-            f"SELECT {proj}, {string_literal(t)} AS `memory_type` FROM ({sql})"
-        )
     return ServingTemplate(
-        text="\nUNION ALL\n".join(parts),
+        text=union,
         colsets=colsets,
         ann_types=tuple(b.memory_type for b in branches if b.ann),
     )
@@ -773,9 +671,4 @@ def bind_batch(
     now: datetime,
     cand_refs: dict[str, str] | None = None,
 ) -> str:
-    out = tmpl.text.replace(
-        TOKEN_QVALUES, qvalues_sql(qids, qvecs)
-    ).replace(TOKEN_NOW, double_literal(now_epoch_seconds(now)))
-    for t in tmpl.ann_types:
-        out = out.replace(cand_token(t), (cand_refs or {})[t])
-    return out
+    return tmpl._bind({TOKEN_QVALUES: qvalues_sql(qids, qvecs)}, now, cand_refs)

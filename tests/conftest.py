@@ -82,13 +82,11 @@ _SLOW_TESTS = {
     "test_compact_folds_replay_debris",  # 16.4
     "test_streaming_neardup_maintenance_matches_batch",  # 15.6
     "test_url_signals_authority_and_psl",  # 15.0
-    "test_sql_path_bitwise_equals_df_path",  # 15.0
     "test_streaming_into_scoped_text_index",  # 14.9
     "test_streaming_maintenance_with_in_stream_compaction",  # 14.4
     "test_replay_does_not_shift_band_cap_counts",  # 14.0
     "test_training_data_pipeline_end_to_end",  # 13.7
     "test_streaming_dedup_matches_batch_distinct",  # 13.7
-    "test_salted_topk_equals_direct_window",  # 13.4
     "test_cc_random_graphs_match_union_find",  # 13.1
     "test_window_index_xxhash64_build_matches_md5",  # 13.1
     "test_search_vectors_batch_matches_singles",  # 13.1

@@ -299,35 +299,3 @@ def test_winnowing_shared_substring_guarantee(spark):
     fa, fb, fc = winnow(rows["a"]), winnow(rows["b"]), winnow(rows["c"])
     assert fa & fb, "docs sharing a long substring must share a fingerprint"
     assert not (fa & fc) or len(fa & fc) < len(fa & fb)
-
-
-def test_salted_topk_equals_direct_window(spark):
-    """Skew-safe two-phase top-k must return EXACTLY the rows of the
-    direct window ranking, including on a pathologically hot key."""
-    from pyspark.sql import Window as W
-
-    from alma_memory_spark.operators.skew import salted_topk
-
-    hot = spark.range(5000).select(
-        F.lit("hot").alias("k"), F.col("id"), (F.col("id") % 97).alias("v")
-    )
-    cold = spark.range(50).select(
-        F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("k"),
-        (F.col("id") + 100000).alias("id"),
-        (F.col("id") * 3 % 31).alias("v"),
-    )
-    df = hot.unionByName(cold)
-    order = [F.desc("v"), F.asc("id")]
-    direct = (
-        df.withColumn(
-            "rn", F.row_number().over(W.partitionBy("k").orderBy(*order))
-        )
-        .filter(F.col("rn") <= 5)
-        .drop("rn")
-    )
-    salted = salted_topk(df, ["k"], order, k=5, salt_from="id", n_salts=8)
-    want = sorted(tuple(r) for r in direct.collect())
-    got = sorted(tuple(r) for r in salted.collect())
-    assert got == want
-    # phase 1 must actually bound the hot key's final-pass input
-    assert salted.count() == direct.count()

@@ -121,6 +121,60 @@ def test_heuristic_and_antipattern_conventions(spark):
     assert abs(ap["score"] - 1.0) < 1e-9
 
 
+def test_domain_knowledge_conventions_literal(spark):
+    rows = [
+        {
+            "id": "dk1", "agent": "a", "project_id": "p", "domain": "d",
+            "fact": "f", "source": "user_stated", "confidence": 0.25,
+            "last_verified": _days_ago(30), "verification_status": None,
+            "embedding": [1.0], "metadata": {}, "similarity": 0.5,
+        }
+    ]
+    df = spark.createDataFrame(rows, _with_similarity(schemas.DOMAIN_KNOWLEDGE))
+    r = score_memories(df, "domain_knowledge", NOW).collect()[0]
+    # success is 1.0 for every fact; confidence comes from the column
+    assert r["success_score"] == 1.0
+    assert r["confidence_score"] == 0.25
+    assert abs(r["recency_score"] - 0.5) < 1e-9
+    # 0.4*0.5 + 0.3*0.5 + 0.2*1.0 + 0.1*0.25 = 0.575
+    assert abs(r["score"] - 0.575) < 1e-9
+
+
+def test_heuristic_without_occurrences_has_zero_success(spark):
+    rows = [
+        {
+            "id": "h0", "agent": "a", "project_id": "p",
+            "condition": "c", "strategy": "s", "confidence": 0.5,
+            "occurrence_count": 0, "success_count": 0,
+            "last_validated": _days_ago(0), "created_at": _days_ago(10),
+            "verification_status": None, "embedding": [1.0], "metadata": {},
+            "similarity": 1.0,
+        }
+    ]
+    df = spark.createDataFrame(rows, _with_similarity(schemas.HEURISTICS))
+    r = score_memories(df, "heuristics", NOW).collect()[0]
+    assert r["success_score"] == 0.0
+    # 0.4*1 + 0.3*1 + 0.2*0 + 0.1*0.5 = 0.75
+    assert abs(r["score"] - 0.75) < 1e-9
+
+
+def test_future_dated_row_recency_clamps_to_one(spark):
+    rows = [
+        {
+            "id": "o_future", "agent": "a", "project_id": "p", "task_type": "t",
+            "task_description": "x", "success": True, "strategy_used": "s",
+            "duration_ms": 1, "error_message": None, "user_feedback": None,
+            "timestamp": NOW + timedelta(days=10), "verification_status": None,
+            "embedding": [1.0, 0.0], "metadata": {}, "similarity": 0.5,
+        }
+    ]
+    df = spark.createDataFrame(rows, _with_similarity(schemas.OUTCOMES))
+    r = score_memories(df, "outcomes", NOW).collect()[0]
+    assert r["recency_score"] == 1.0
+    # 0.4*0.5 + 0.3*1 + 0.2*1 + 0.1*1 = 0.8
+    assert abs(r["score"] - 0.8) < 1e-9
+
+
 def test_vector_candidates_order_and_rank(spark):
     q = hash_embed("target text about spark joins", 16)
     texts = ["target text about spark joins", "unrelated words entirely", "spark joins"]
