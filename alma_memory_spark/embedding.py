@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from alma_memory_spark.cache import LRU
+
 DEFAULT_DIM = 64
 
 
@@ -117,12 +119,11 @@ class CachedEmbedder:
 
     def __init__(self, inner=None, max_size: int = 10000):
         import hashlib
-        from collections import OrderedDict
 
         self.inner = inner or HashEmbedder()
         self.dim = self.inner.dim
         self.max_size = max_size
-        self._od: "OrderedDict[str, list[float]]" = OrderedDict()
+        self._vecs = LRU(max_size)
         self._hash = lambda t: hashlib.md5(t.encode("utf-8")).hexdigest()
         self.hits = 0
         self.misses = 0
@@ -135,9 +136,8 @@ class CachedEmbedder:
         out: list = [None] * len(texts)
         miss_idx: dict[str, list[int]] = {}
         for i, k in enumerate(keys):
-            got = self._od.get(k)
+            got = self._vecs.get(k)
             if got is not None:
-                self._od.move_to_end(k)
                 self.hits += 1
                 out[i] = got
             elif k in miss_idx:
@@ -156,15 +156,13 @@ class CachedEmbedder:
             for k, vec in zip(uniq, encoded):
                 for i in miss_idx[k]:
                     out[i] = vec
-                self._od[k] = vec
-                if len(self._od) > self.max_size:
-                    self._od.popitem(last=False)
+                self._vecs.put(k, vec)
         return out
 
     def get_stats(self) -> dict[str, int]:
         total = self.hits + self.misses
         return {
-            "size": len(self._od),
+            "size": len(self._vecs),
             "max_size": self.max_size,
             "hits": self.hits,
             "misses": self.misses,
@@ -172,7 +170,7 @@ class CachedEmbedder:
         }
 
     def clear(self) -> None:
-        self._od.clear()
+        self._vecs.clear()
         self.hits = 0
         self.misses = 0
 

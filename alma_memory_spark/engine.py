@@ -21,7 +21,6 @@ import os
 import threading
 import time
 import uuid
-from collections import OrderedDict
 from dataclasses import astuple
 from datetime import datetime, timezone
 from typing import Any
@@ -30,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alma_memory_spark import schemas
+from alma_memory_spark.cache import LRU
 from alma_memory_spark.embedding import HashEmbedder
 from alma_memory_spark.operators import learning as L
 from alma_memory_spark.operators import lifecycle as LC
@@ -84,12 +84,13 @@ class AlmaSpark:
         self.store = make_store(spark, root, backend)
         self.embedder = embedder or HashEmbedder()
         self.feedback_weight = feedback_weight
-        self._cache: OrderedDict[tuple, tuple[float, int, MemorySlice]] = OrderedDict()
+        #: slice cache: key -> (stored at, epoch snapshot, MemorySlice);
+        #: see _cached_slice
+        self._cache = LRU(CACHE_MAX_ENTRIES)
         # retrieve() is a pure read and safe to call from several
-        # threads (concurrent Spark jobs); the cache bookkeeping is the
-        # one shared mutable structure, guarded like the reference's
-        # thread-safe cache (alma/retrieval/cache.py uses an RLock)
-        self._cache_lock = threading.RLock()
+        # threads (concurrent Spark jobs); the epochs below are read
+        # and bumped under this lock
+        self._cache_lock = threading.Lock()
         # SCOPED cache epochs (reference: RetrievalCache.invalidate
         # keys entries per (agent, project) and flushes only that
         # scope's slices on write, alma/retrieval/cache.py:564-625). A
@@ -125,7 +126,7 @@ class AlmaSpark:
         self._srv_ns = uuid.uuid4().hex[:8]
         self._srv_lock = threading.Lock()
         self._srv_views: dict[tuple, tuple] = {}
-        self._srv_templates: OrderedDict[tuple, Any] = OrderedDict()
+        self._srv_templates = LRU(64)
         #: fast-path observability: sql-served calls vs analysis-error
         #: fallbacks (the last error + statement are kept for
         #: diagnosis; a fallback is always safe — the DataFrame path
@@ -186,8 +187,8 @@ class AlmaSpark:
         project_id: str | None,
         user_id: str | None,
     ) -> tuple:
-        """Every epoch key this read depends on, as a value tuple. The
-        caller holds _cache_lock (snapshot must be atomic vs bumps)."""
+        """Every epoch key this read depends on, as a value tuple,
+        read atomically with respect to bumps."""
         keys: list[tuple] = [("*",)]
         if project_id is not None:
             keys.append(("proj", project_id))
@@ -199,7 +200,18 @@ class AlmaSpark:
             keys.extend(("agentany", a) for a in agents)
         if user_id is not None:
             keys.append(("user", user_id))
-        return tuple(self._epochs.get(k, 0) for k in keys)
+        with self._cache_lock:
+            return tuple(self._epochs.get(k, 0) for k in keys)
+
+    def _cached_slice(self, key: tuple, epoch: tuple) -> MemorySlice | None:
+        """The slice cached under `key` if it was stamped with this
+        epoch snapshot within the TTL; a stale entry is dropped."""
+        hit = self._cache.get(
+            key,
+            valid=lambda e: e[1] == epoch
+            and time.perf_counter() - e[0] < CACHE_TTL_SECONDS,
+        )
+        return hit[2] if hit is not None else None
 
     # ------------------------------------------------------------------
     # SQL-compiled serving plan (operators/serving_sql.py, VERDICT r10 #1)
@@ -427,20 +439,16 @@ class AlmaSpark:
             # created or dropped between calls leaves store stamps
             # untouched, so it must key the template directly)
             key = (config, tuple(stamps), tuple(sorted(cand_refs)))
-            with self._srv_lock:
-                tmpl = self._srv_templates.get(key)
-                # a None stamp means staleness is undetectable: never reuse
-                if tmpl is not None and not any(s is None for _, s in stamps):
-                    self._srv_templates.move_to_end(key)
-                else:
-                    tmpl = None
+            # a None stamp means staleness is undetectable: never reuse
+            tmpl = (
+                None
+                if any(s is None for _, s in stamps)
+                else self._srv_templates.get(key)
+            )
             if tmpl is None:
                 SS.check_parser_mode(self.spark)
                 tmpl = compile_template(branches, prefs, fb_view)
-                with self._srv_lock:
-                    self._srv_templates[key] = tmpl
-                    while len(self._srv_templates) > 64:
-                        self._srv_templates.popitem(last=False)
+                self._srv_templates.put(key, tmpl)
             return self._srv_run(bind(tmpl, cand_refs)), dict(tmpl.colsets)
         finally:
             # drop on EVERY exit — including compile-time refusals that
@@ -524,20 +532,14 @@ class AlmaSpark:
             use_ann and nprobe,  # False for exact; nprobe changes ANN results
         )
         agents_for_epoch = [agent] + [a for a in (inherit_from or ()) if a != agent]
-        with self._cache_lock:
-            hit = self._cache.get(key)
-            current = self._epoch_snapshot(agents_for_epoch, project_id, user_id)
-            if hit is not None:
-                ts, epoch, sl = hit
-                if epoch == current and time.perf_counter() - ts < CACHE_TTL_SECONDS:
-                    self._cache.move_to_end(key)
-                    return sl
-                del self._cache[key]
-            # capture the epoch snapshot BEFORE any store read: a write
-            # landing mid-retrieve bumps its scope keys, and stamping
-            # the post-write snapshot on pre-write data would undo its
-            # invalidation and serve the stale slice for the full TTL
-            epoch_at_read = current
+        # capture the epoch snapshot BEFORE any store read: a write
+        # landing mid-retrieve bumps its scope keys, and stamping the
+        # post-write snapshot on pre-write data would undo its
+        # invalidation and serve the stale slice for the full TTL
+        epoch_at_read = self._epoch_snapshot(agents_for_epoch, project_id, user_id)
+        cached = self._cached_slice(key, epoch_at_read)
+        if cached is not None:
+            return cached
         cfg: ModeConfig | None = MODES.get(mode_name) if mode_name else None
         weights = cfg.weights if cfg else ScoringWeights()
         # caller top_k OVERRIDES the mode default (reference core.py:
@@ -717,10 +719,7 @@ class AlmaSpark:
             retrieval_time_ms=(time.perf_counter() - t0) * 1000.0,
             mode=mode_name,
         )
-        with self._cache_lock:
-            self._cache[key] = (time.perf_counter(), epoch_at_read, sl)
-            while len(self._cache) > CACHE_MAX_ENTRIES:
-                self._cache.popitem(last=False)
+        self._cache.put(key, (time.perf_counter(), epoch_at_read, sl))
         return sl
 
     def retrieve_batch(
@@ -770,18 +769,12 @@ class AlmaSpark:
                 False, use_ann and nprobe,
             )
 
+        epoch_at_read = self._epoch_snapshot([agent], project_id, user_id)
         slices: dict[str, MemorySlice] = {}
-        with self._cache_lock:
-            epoch_at_read = self._epoch_snapshot([agent], project_id, user_id)
-            for task in all_tasks:
-                hit = self._cache.get(_key(queries_all[task]))
-                if hit is not None:
-                    ts, epoch, sl = hit
-                    if (
-                        epoch == epoch_at_read
-                        and time.perf_counter() - ts < CACHE_TTL_SECONDS
-                    ):
-                        slices[task] = sl
+        for task in all_tasks:
+            cached = self._cached_slice(_key(queries_all[task]), epoch_at_read)
+            if cached is not None:
+                slices[task] = cached
         tasks = [t for t in all_tasks if t not in slices]
         if not tasks:
             return {t: slices[t] for t in all_tasks}
@@ -915,12 +908,7 @@ class AlmaSpark:
             slices[task] = sl
             # seed the single-task cache: a follow-up retrieve(task)
             # with the same params is a hit (same key shape as retrieve)
-            with self._cache_lock:
-                self._cache[_key(query)] = (
-                    time.perf_counter(), epoch_at_read, sl,
-                )
-                while len(self._cache) > CACHE_MAX_ENTRIES:
-                    self._cache.popitem(last=False)
+            self._cache.put(_key(query), (time.perf_counter(), epoch_at_read, sl))
         return {t: slices[t] for t in all_tasks}
 
     @staticmethod

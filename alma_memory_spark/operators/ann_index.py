@@ -67,11 +67,11 @@ search() bit-for-bit (the unit-test contract).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alma_memory_spark.cache import LRU
 from alma_memory_spark.operators._index_version import (
     begin_version,
     commit_version,
@@ -162,8 +162,9 @@ class IVFIndex:
         #: joining the corpus table (the per-query live-id semi-join
         #: would shuffle the scoped id set at 100 TB)
         self.extra_cols = extra_cols or []
-        #: guards the _lists_plan memo (concurrent probes; ADVICE r12)
-        self._plan_lock = threading.Lock()
+        #: name -> (staleness key, plan or view name): the lists plan
+        #: and the SQL probe's temp views, shared by concurrent probes
+        self._plans = LRU()
 
     # ------------------------------------------------------------------
 
@@ -766,14 +767,13 @@ class IVFIndex:
         (relpath, size, mtime_ns) listing rather than the dir mtime
         alone, so a compact landing within the same second as a prior
         probe still invalidates (Spark part files carry fresh UUID
-        names; ADVICE r12). The memo write is lock-guarded — concurrent
-        probes on one index object race benignly otherwise, but the
-        lock makes the last-wins explicit."""
+        names; ADVICE r12). Concurrent probes on one index object
+        share the memo; two that both miss race benignly (last write
+        wins)."""
         key = self._lists_key()
-        with self._plan_lock:
-            cached = getattr(self, "_lists_plan", None)
-            if cached is not None and cached[0] == key:
-                return cached[1]
+        cached = self._plans.get("lists", valid=lambda e: e[0] == key)
+        if cached is not None:
+            return cached[1]
         df = self.spark.read.parquet(os.path.join(self.vroot, "lists"))
         for e in key[1]:
             df = df.unionByName(
@@ -781,8 +781,7 @@ class IVFIndex:
                     os.path.join(self._segments_root(), str(e), "lists")
                 )
             )
-        with self._plan_lock:
-            self._lists_plan = (key, df)
+        self._plans.put("lists", (key, df))
         return df
 
     def _lists_key(self):
@@ -1094,17 +1093,15 @@ class IVFIndex:
         import hashlib
 
         key = self._lists_key()
-        with self._plan_lock:
-            cached = getattr(self, "_lists_view", None)
-            if cached is not None and cached[0] == key:
-                return cached[1]
+        cached = self._plans.get("lists_view", valid=lambda e: e[0] == key)
+        if cached is not None:
+            return cached[1]
         name = (
             "alma_ivf_lists_"
             + hashlib.md5(self.vroot.encode()).hexdigest()[:12]
         )
         self._lists_df().createOrReplaceTempView(name)
-        with self._plan_lock:
-            self._lists_view = (key, name)
+        self._plans.put("lists_view", (key, name))
         return name
 
     def _sql_tombstones_view(self) -> str | None:
@@ -1125,17 +1122,15 @@ class IVFIndex:
                 continue
             sig.append((fn, st.st_size, st.st_mtime_ns))
         key = (self.vroot, tuple(sorted(sig)))
-        with self._plan_lock:
-            cached = getattr(self, "_tomb_view", None)
-            if cached is not None and cached[0] == key:
-                return cached[1]
+        cached = self._plans.get("tomb_view", valid=lambda e: e[0] == key)
+        if cached is not None:
+            return cached[1]
         name = (
             "alma_ivf_tomb_"
             + hashlib.md5(self.vroot.encode()).hexdigest()[:12]
         )
         self.tombstones().createOrReplaceTempView(name)
-        with self._plan_lock:
-            self._tomb_view = (key, name)
+        self._plans.put("tomb_view", (key, name))
         return name
 
     @staticmethod

@@ -49,13 +49,14 @@ surface, taken here to the granularity the paper actually ships.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alma_memory_spark.cache import LRU, session_key
 from alma_memory_spark.functions.text import WS_RE
 
 __all__ = [
@@ -175,7 +176,13 @@ def dedup_token_windows(
     wins) and re-splice each document from its surviving token units
     in original order — byte-faithful w.r.t. the sanitized input on
     the kept spans. Returns (id, text_dedup, n_units, n_kept) for
-    EVERY input doc."""
+    EVERY input doc.
+
+    The result is lazy and reads a persisted fingerprint pass, and the
+    session keeps only the two newest such passes persisted. Building
+    more than 2 results before running any of them unpersists the
+    oldest one's pass, so that result recomputes it (correct, but the
+    fingerprint pass then runs twice for it)."""
     base = df.select(F.col(id_col), token_units(text_col).alias("units"))
     # materialize the (fp, id, start) triple ONCE (r14, guide §2.3/§5):
     # `wins` feeds BOTH the winners aggregate and the losers join probe
@@ -269,7 +276,7 @@ def dedup_token_windows(
     # (reproduced: zero cached RDDs + no InMemoryTableScan in the
     # executed plan of a chained call after gc.collect()). A Python
     # wrapper's lifetime says nothing about the JVM plan's. Instead:
-    # a per-session FIFO keeps the newest _TRIPLE_CACHE_KEEP triples
+    # a session-scoped LRU keeps the newest two triples (_TRIPLES)
     # and unpersists the oldest on overflow — a session's live
     # pipelines use the most recent invocations; an evicted older
     # triple only means that plan recomputes (correctness unaffected).
@@ -280,43 +287,28 @@ def dedup_token_windows(
     return out
 
 
-def _parse_keep(raw: str | None) -> int:
-    """At least 1 (0 would unpersist the triple just persisted, before
-    its plan runs); 2 when the value is not an integer."""
+def _unpersist(df: DataFrame) -> None:
     try:
-        return max(1, int(raw))
-    except (TypeError, ValueError):
-        return 2
+        df.unpersist(blocking=False)
+    except Exception:
+        pass  # best-effort: the session may be stopping
 
 
-#: newest-N persisted fingerprint triples per session (keyed by
-#: applicationId so a stopped session's entries are never touched);
-#: N=2 covers every realistic concurrent-use shape (one pipeline
-#: stage + one index add) while bounding a soak loop's storage.
-_TRIPLE_CACHE_KEEP = _parse_keep(os.environ.get("ALMA_SUBSTRING_TRIPLE_KEEP"))
-_TRIPLE_CACHE: dict[str, list[DataFrame]] = {}
-#: concurrent driver threads retain at once: unlocked, two could pass
-#: the size check for one surplus entry and both evict
-_TRIPLE_LOCK = threading.Lock()
+#: the newest persisted fingerprint triples of the live session; 2
+#: covers every realistic concurrent-use shape (one pipeline stage +
+#: one index add) while bounding a soak loop's storage. Every triple
+#: that leaves — past the bound, or because its session is gone — is
+#: unpersisted.
+_TRIPLES = LRU(max_entries=2, on_evict=_unpersist, session_scoped=True)
+_TRIPLE_SEQ = itertools.count()
 
 
 def _triple_cache_retain(cached: DataFrame) -> None:
     try:
-        key = cached.sparkSession.sparkContext.applicationId
+        key = session_key(cached.sparkSession, next(_TRIPLE_SEQ))
     except Exception:
         return
-    with _TRIPLE_LOCK:
-        kept = _TRIPLE_CACHE.setdefault(key, [])
-        kept.append(cached)
-        # drop other sessions' stale entries (their JVM is gone or going)
-        for k in [k for k in _TRIPLE_CACHE if k != key]:
-            _TRIPLE_CACHE.pop(k, None)
-        while len(kept) > _TRIPLE_CACHE_KEEP:
-            old = kept.pop(0)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass  # best-effort: the session may be stopping
+    _TRIPLES.put(key, cached)
 
 
 def drop_docs_with_dup_windows(

@@ -270,16 +270,11 @@ _BLEND_SQL = f"""
     """
 
 
-#: (context id, sf_dir) -> built plan. blend_scoring is pure-declarative
-#: (no writes, fixed NOW anchor), but its plan construction — three
-#: crossJoin+window sub-plans, the ConfidenceEngine assembly, the
-#: progress pivot — costs ~2.3 s of driver-side analysis per build,
-#: an order of magnitude more than executing it. Serving systems
-#: prepare such statements once; this memo is that, per session.
-_BLEND_PLAN_CACHE: dict[tuple, DataFrame] = {}  # {(appId, sf_dir): plan}
-
-
-@register("blend_scoring", _BLEND_SQL)
+# memo: the gate is pure-declarative (no writes, fixed NOW anchor), and
+# its plan construction (three crossJoin+window sub-plans, the
+# ConfidenceEngine assembly, the progress pivot) costs ~2.3 s of
+# driver-side analysis, an order of magnitude more than executing it
+@register("blend_scoring", _BLEND_SQL, memo=True)
 def blend_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite gate: the three score-blending joins in one checked
     frame (merged r3 from feedback_blend + trust_blend +
@@ -319,16 +314,6 @@ def blend_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the priority-strategy next-item selection (actionable filter +
     TakeOrderedAndProject top-1), hash-checked against the SQL
     re-derivation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BLEND_PLAN_CACHE.get(key)
-    if hit is None:
-        if any(k[0] != key[0] for k in list(_BLEND_PLAN_CACHE)):
-            _BLEND_PLAN_CACHE.clear()  # plans of stopped sessions
-        hit = _BLEND_PLAN_CACHE[key] = _blend_scoring_build(spark, sf_dir)
-    return hit
-
-
-def _blend_scoring_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     past = ev.filter(F.col("ts") <= _now())
     age = (_now().cast("double") - F.col("ts").cast("double")) / 86400.0

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from alma_memory_spark.cache import LRU, session_key
 from alma_memory_spark.embedding import hash_embed
 from alma_memory_spark.functions.vector import cosine_similarity
 from alma_memory_spark.session import load_table
@@ -46,12 +47,10 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 
-#: {(query name, applicationId, sf_dir): DataFrame} for memo=True gates.
-#: Gates run from concurrent harness threads; every read/evict/insert
-#: holds the lock (the session.py _TABLE_CACHE lesson — an unguarded
-#: dict.fromkeys iteration races concurrent inserts).
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-_PLAN_MEMO_LOCK = __import__("threading").Lock()
+#: {(applicationId, query name, sf_dir): DataFrame} for memo=True
+#: gates. Gates run from concurrent harness threads; each key builds
+#: once, and different gates build at the same time.
+_PLAN_MEMO = LRU(session_scoped=True)
 
 #: per-stage wall attribution for EAGER composite gates (r11, VERDICT
 #: r10 #6): gates whose expensive stages run driver-side inside fn()
@@ -122,28 +121,9 @@ def register(name: str, oracle: str | None, memo: bool = False):
 
             @functools.wraps(fn)
             def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = (name, spark.sparkContext.applicationId, sf_dir)
-                with _PLAN_MEMO_LOCK:
-                    hit = _PLAN_MEMO.get(key)
-                if hit is not None:
-                    return hit
-                # build OUTSIDE the lock (plan construction can run
-                # Spark jobs; serializing it would stall concurrent
-                # gates) — a rare double-build loses the race benignly
-                built = fn(spark, sf_dir)
-                with _PLAN_MEMO_LOCK:
-                    hit = _PLAN_MEMO.get(key)
-                    if hit is None:
-                        # bound growth per-app, never blanket-clear:
-                        # two LIVE sessions would evict each other on
-                        # every alternation — drop the oldest-inserted
-                        # app's entries only once several accumulated
-                        apps = list(dict.fromkeys(k[1] for k in _PLAN_MEMO))
-                        if key[1] not in apps and len(apps) >= 4:
-                            for k in [k for k in _PLAN_MEMO if k[1] == apps[0]]:
-                                _PLAN_MEMO.pop(k, None)
-                        hit = _PLAN_MEMO[key] = built
-                return hit
+                return _PLAN_MEMO.get_or_build(
+                    session_key(spark, name, sf_dir), lambda: fn(spark, sf_dir)
+                )
 
             QUERIES[name] = QuerySpec(wrapped, oracle, fn.__doc__ or "")
             return wrapped

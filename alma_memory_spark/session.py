@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from alma_memory_spark.cache import LRU, session_key
+
 
 def get_spark(app_name: str = "alma_memory_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -68,16 +70,11 @@ _NANO_TS_COLS = {
 }
 
 
-#: applicationIds already shipped — NOT id(sparkContext): a stopped
-#: context's id can be reused by a new allocation, which would skip
-#: the ship for a fresh JVM that never received the zip
-_SHIPPED_SESSIONS: set[str] = set()
-# created eagerly: a lazy `if None: Lock()` is itself a check-then-act
-# race between two first-callers (each could end up holding a
-# different lock object)
-import threading as _threading  # noqa: E402
-
-_SHIP_LOCK = _threading.Lock()
+#: the shipped zip per session: keyed by applicationId, not
+#: id(sparkContext) — a stopped context's id can be reused by a new
+#: allocation, which would skip the ship for a fresh JVM that never
+#: received the zip
+_SHIPPED = LRU(session_scoped=True)
 
 
 def build_package_zip(zpath: str) -> str:
@@ -115,26 +112,23 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     process runs from outside the repo (as the harness driver does),
     sys.path tweaks on the driver do NOT propagate — a zipped copy of
     the package shipped through Spark's file distribution does."""
-    key = spark.sparkContext.applicationId
-    if key in _SHIPPED_SESSIONS:
-        return
     # gates run concurrent Spark jobs from threads (e.g. the four
-    # store roundtrips) — without the lock two threads race on the
-    # check-then-ship, one addPyFile-ing a zip the other is still
-    # writing (observed as an intermittent executor import failure)
-    with _SHIP_LOCK:
-        if key in _SHIPPED_SESSIONS:
-            return
-        import tempfile
+    # store roundtrips): the per-key build lock keeps a second thread
+    # from addPyFile-ing a zip the first is still writing (observed as
+    # an intermittent executor import failure)
+    _SHIPPED.get_or_build(session_key(spark), lambda: _ship_package(spark))
 
-        zpath = build_package_zip(
-            os.path.join(
-                tempfile.gettempdir(),
-                f"alma_memory_spark_pkg_{os.getpid()}.zip",
-            )
+
+def _ship_package(spark: SparkSession) -> str:
+    import tempfile
+
+    zpath = build_package_zip(
+        os.path.join(
+            tempfile.gettempdir(), f"alma_memory_spark_pkg_{os.getpid()}.zip"
         )
-        spark.sparkContext.addPyFile(zpath)
-        _SHIPPED_SESSIONS.add(key)
+    )
+    spark.sparkContext.addPyFile(zpath)
+    return zpath
 
 
 def _schema_field_names(schema: str) -> list[str]:
@@ -195,41 +189,21 @@ def tiny_df(spark: SparkSession, rows, schema: str):
         return spark.createDataFrame(rows, schema)
 
 
-#: {applicationId: {(sf_dir, name): DataFrame}}. A DataFrame is an
+#: {(applicationId, sf_dir, name): DataFrame}. A DataFrame is an
 #: immutable logical plan, so handing the same object out again is
 #: semantically identical to rebuilding it — but rebuilding costs a
 #: parquet footer read + conf RPCs (~0.1 s per call), which across
 #: 50 gates x 2 tables x 2 bench runs is tens of seconds of pure
 #: plan-construction overhead. The synthetic tables never change
-#: within a session. Keyed by applicationId, NOT id(sparkContext):
-#: a stopped context's id can be reused by a new allocation, which
-#: would hand out plans bound to a dead JVM. A small app cap bounds
-#: growth without making two LIVE sessions evict each other.
-_TABLE_CACHE: dict[str, dict[tuple, object]] = {}
-# gates call load_table from concurrent threads; unguarded eviction
-# (pop(next(iter(...)))) can race into KeyError once 4+ apps cached
-_TABLE_CACHE_LOCK = _threading.Lock()
+#: within a session; session scope drops a stopped context's plans.
+_TABLES = LRU(session_scoped=True)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
-    app = spark.sparkContext.applicationId
-    with _TABLE_CACHE_LOCK:
-        per_app = _TABLE_CACHE.get(app)
-        if per_app is None:
-            # bound growth without thrashing CONCURRENT sessions: keep
-            # a few apps' entries and drop the oldest-inserted beyond
-            # that (a blanket clear() made two live sessions evict
-            # each other on every alternation)
-            while len(_TABLE_CACHE) >= 4:
-                _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)), None)
-            per_app = _TABLE_CACHE[app] = {}
-        hit = per_app.get((sf_dir, name))
-    if hit is not None:
-        return hit
-    df = _load_table_uncached(spark, sf_dir, name)
-    with _TABLE_CACHE_LOCK:
-        per_app[(sf_dir, name)] = df
-    return df
+    return _TABLES.get_or_build(
+        session_key(spark, sf_dir, name),
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str):

@@ -35,6 +35,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from alma_memory_spark import schemas
+from alma_memory_spark.cache import LRU
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -99,22 +100,15 @@ def _decode_part(dirname: str):
 
 class ParquetStore:
     def __init__(self, spark: SparkSession, root: str):
-        import threading
-        from collections import OrderedDict
-
         self.spark = spark
         self.root = root
         self._held_locks: set[tuple] = set()
         # version-pinned read-plan cache (r10, VERDICT r9 #4): reads
         # pin the plan to the table's on-disk write-version stamp and
         # serve the SAME DataFrame until any writer (this handle,
-        # another handle, another process) bumps it — see read()
-        self._read_cache: OrderedDict[tuple, tuple[str, DataFrame]] = (
-            OrderedDict()
-        )
-        self._read_cache_lock = threading.Lock()
-        #: escape hatch: set False to force a fresh listing every read
-        self.plan_cache_enabled = True
+        # another handle, another process) bumps it — see read().
+        # Entries: key -> (stamp, DataFrame)
+        self._read_cache = LRU(_READ_CACHE_MAX)
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -416,15 +410,10 @@ class ParquetStore:
         via the stamp. Crash residue bypasses the cache (_dirty) so
         recovery still runs before a fresh listing."""
         key = (table, declared_schema)
-        stamp = (
-            self._version_stamp(table) if self.plan_cache_enabled else None
-        )
+        stamp = self._version_stamp(table)
         if stamp is not None:
-            with self._read_cache_lock:
-                ent = self._read_cache.get(key)
-            if ent is not None and ent[0] == stamp and not self._dirty(table):
-                with self._read_cache_lock:
-                    self._read_cache.move_to_end(key)
+            ent = self._read_cache.get(key, valid=lambda e: e[0] == stamp)
+            if ent is not None and not self._dirty(table):
                 return ent[1]
         if not self.exists(table):
             schema = schemas.ALL_TABLES[table]
@@ -443,10 +432,7 @@ class ParquetStore:
             and self._version_stamp(table) == stamp
             and not self._dirty(table)
         ):
-            with self._read_cache_lock:
-                self._read_cache[key] = (stamp, df)
-                while len(self._read_cache) > _READ_CACHE_MAX:
-                    self._read_cache.popitem(last=False)
+            self._read_cache.put(key, (stamp, df))
         return df
 
     #: per-table event-time column, used to lay rows out time-sorted

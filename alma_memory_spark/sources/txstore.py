@@ -354,22 +354,15 @@ class TxLogStore(ParquetStore):
         # conflict anchor for read-modify-write transactions).
         v, live = self._snapshot(table)
         key = (table, "txread")
-        if self.plan_cache_enabled:
-            with self._read_cache_lock:
-                ent = self._read_cache.get(key)
-                if ent is not None and ent[0] == v:
-                    self._read_cache.move_to_end(key)
-                    return ent[1]
+        ent = self._read_cache.get(key, valid=lambda e: e[0] == v)
+        if ent is not None:
+            return ent[1]
         if not live:
             schema = schemas.ALL_TABLES[table]
             df = self.spark.createDataFrame([], schema)
         else:
             df = self._group_read(table, live)
-        if self.plan_cache_enabled:
-            with self._read_cache_lock:
-                self._read_cache[key] = (v, df)
-                while len(self._read_cache) > 64:
-                    self._read_cache.popitem(last=False)
+        self._read_cache.put(key, (v, df))
         return df
 
     def _read_for_pairs(self, table: str, pairs: list[tuple]) -> DataFrame:

@@ -352,10 +352,10 @@ def test_substring_dedup_token_windows(spark):
 def test_substring_dedup_releases_cached_triple(spark):
     """VERDICT r14 #4 (second attempt): the (fp, id, start) triple
     dedup_token_windows persists for within-call reuse must not
-    accumulate in a long-lived session. The bounded FIFO keeps the
-    newest ALMA_SUBSTRING_TRIPLE_KEEP (default 2) triples and
-    unpersists the oldest on overflow — so a soak loop's cached-RDD
-    count stays flat instead of growing per invocation."""
+    accumulate in a long-lived session. The bounded LRU keeps the
+    newest two triples and unpersists the oldest on overflow — so a
+    soak loop's cached-RDD count stays flat instead of growing per
+    invocation."""
     import time
 
     from alma_memory_spark.operators import substring as S
@@ -364,7 +364,7 @@ def test_substring_dedup_releases_cached_triple(spark):
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
+    S._TRIPLES.clear()
     base = n_cached()
     df = spark.createDataFrame(
         [(i, "shared boiler span tokens " * 6 + f"tail {i}") for i in range(8)],
@@ -374,15 +374,15 @@ def test_substring_dedup_releases_cached_triple(spark):
         S.dedup_token_windows(df, w=4).select("doc_id").collect()
     # unpersist(blocking=False) + ContextCleaner are async; poll briefly
     deadline = time.time() + 30
-    while n_cached() - base > S._TRIPLE_CACHE_KEEP and time.time() < deadline:
+    keep = S._TRIPLES.max_entries
+    while n_cached() - base > keep and time.time() < deadline:
         time.sleep(0.2)
     extra = n_cached() - base
-    assert extra <= S._TRIPLE_CACHE_KEEP, (
-        f"{extra} triples retained after 5 invocations; FIFO cap is "
-        f"{S._TRIPLE_CACHE_KEEP}"
+    assert extra <= keep, (
+        f"{extra} triples retained after 5 invocations; LRU cap is {keep}"
     )
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
+    S._TRIPLES.clear()
 
 
 def test_substring_dedup_chained_caller_keeps_cache(spark):
@@ -399,7 +399,7 @@ def test_substring_dedup_chained_caller_keeps_cache(spark):
     from alma_memory_spark.operators import substring as S
 
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
+    S._TRIPLES.clear()
     df = spark.createDataFrame(
         [(i, "shared boiler span tokens " * 6 + f"tail {i}") for i in range(8)],
         "doc_id long, text string",
@@ -412,40 +412,18 @@ def test_substring_dedup_chained_caller_keeps_cache(spark):
         "shared pass is running twice again"
     )
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
-
-
-@pytest.mark.parametrize(
-    "raw,keep", [("0", 1), ("-3", 1), ("abc", 2), ("2.5", 2), ("", 2), ("5", 5)]
-)
-def test_substring_triple_keep_env_is_clamped(raw, keep):
-    """ALMA_SUBSTRING_TRIPLE_KEEP is read at import: a non-integer must
-    not raise there (it falls back to 2), and a value <= 0 must clamp
-    to 1 — 0 would unpersist the just-persisted triple before its plan
-    runs."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "-c",
-         "from alma_memory_spark.operators import substring as S; "
-         "print(S._TRIPLE_CACHE_KEEP)"],
-        env={**os.environ, "ALMA_SUBSTRING_TRIPLE_KEEP": raw},
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        capture_output=True, text=True, check=True,
-    )
-    assert int(out.stdout.split()[-1]) == keep
+    S._TRIPLES.clear()
 
 
 def test_substring_triple_keep_floor_keeps_newest_triple(spark, monkeypatch):
-    """Both directions of the retention floor: with the smallest legal
-    KEEP (1, what 0 clamps to) the newest triple stays persisted and in
-    the plan of its caller, and an older one is still released."""
+    """Both directions of the retention floor: with a bound of 1 the
+    newest triple stays persisted and in the plan of its caller, and an
+    older one is still released."""
     from alma_memory_spark.operators import substring as S
 
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
-    monkeypatch.setattr(S, "_TRIPLE_CACHE_KEEP", S._parse_keep("0"))
+    S._TRIPLES.clear()
+    monkeypatch.setattr(S._TRIPLES, "max_entries", 1)
     older, df = (
         spark.createDataFrame(
             [(i, f"{word} boiler span tokens " * 6 + f"tail {i}") for i in range(8)],
@@ -454,21 +432,21 @@ def test_substring_triple_keep_floor_keeps_newest_triple(spark, monkeypatch):
         for word in ("older", "newer")
     )
     S.dedup_token_windows(older, w=4)
-    first = S._TRIPLE_CACHE[spark.sparkContext.applicationId][0]
+    (first,) = S._TRIPLES.values()
     newest = S.dedup_token_windows(df, w=4).select("doc_id", "text_dedup")
     plan = newest._jdf.queryExecution().executedPlan().toString()
-    kept = S._TRIPLE_CACHE[spark.sparkContext.applicationId]
+    kept = S._TRIPLES.values()
     assert "InMemoryTableScan" in plan and len(kept) == 1
     assert kept[0].storageLevel.useMemory or kept[0].storageLevel.useDisk
     assert first is not kept[0]
     assert not (first.storageLevel.useMemory or first.storageLevel.useDisk)
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
+    S._TRIPLES.clear()
 
 
 def test_triple_cache_retain_is_thread_safe(spark, monkeypatch):
     """Concurrent driver threads retaining triples at once must leave
-    exactly the newest _TRIPLE_CACHE_KEEP entries for the session, each
+    exactly the cache's bound of entries for the session, each
     still persisted, and no other triple persisted. Unlocked, two
     threads could both pass the size check for one surplus entry and
     both evict (a live triple dropped, or a pop from an empty list)."""
@@ -485,8 +463,9 @@ def test_triple_cache_retain_is_thread_safe(spark, monkeypatch):
             return int(self) < other
 
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
-    monkeypatch.setattr(S, "_TRIPLE_CACHE_KEEP", YieldingKeep(S._TRIPLE_CACHE_KEEP))
+    S._TRIPLES.clear()
+    keep = S._TRIPLES.max_entries
+    monkeypatch.setattr(S._TRIPLES, "max_entries", YieldingKeep(keep))
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     base = len(persisted())
     n = 16
@@ -509,12 +488,45 @@ def test_triple_cache_retain_is_thread_safe(spark, monkeypatch):
     for th in threads:
         th.join()
     assert not errs, errs
-    kept = S._TRIPLE_CACHE[spark.sparkContext.applicationId]
-    assert len(kept) == S._TRIPLE_CACHE_KEEP
+    kept = S._TRIPLES.values()
+    assert len(kept) == keep
     assert all(t.storageLevel.useMemory or t.storageLevel.useDisk for t in kept)
-    assert len(persisted()) - base == S._TRIPLE_CACHE_KEEP
+    assert len(persisted()) - base == keep
     spark.catalog.clearCache()
-    S._TRIPLE_CACHE.clear()
+    S._TRIPLES.clear()
+
+
+def test_foreign_session_triple_is_unpersisted(spark):
+    """ADVICE #1, both directions: a triple held under another
+    applicationId (a stopped session's) is unpersisted, not just
+    dropped, when the live session retains; the live session's newest
+    triples stay persisted."""
+    import time
+
+    from alma_memory_spark.operators import substring as S
+
+    spark.catalog.clearCache()
+    S._TRIPLES.clear()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    base = len(persisted())
+    foreign = spark.range(5).persist()
+    foreign.count()
+    S._TRIPLES.put(("fake-app", 0), foreign)
+    bound = S._TRIPLES.max_entries
+    mine = [spark.range(i + 10).persist() for i in range(bound)]
+    for t in mine:
+        t.count()
+        S._triple_cache_retain(t)
+    # unpersist(blocking=False) is async; poll briefly
+    deadline = time.time() + 10
+    while len(persisted()) - base > bound and time.time() < deadline:
+        time.sleep(0.2)
+    assert len(persisted()) - base == bound
+    assert not (foreign.storageLevel.useMemory or foreign.storageLevel.useDisk)
+    assert all(t.storageLevel.useMemory or t.storageLevel.useDisk for t in mine)
+    assert S._TRIPLES.values() == mine
+    spark.catalog.clearCache()
+    S._TRIPLES.clear()
 
 
 def test_url_signals_and_pass_bits(spark):

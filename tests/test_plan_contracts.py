@@ -344,8 +344,8 @@ def test_qfilter_rows_are_scan_speed(spark):
 
 def test_plan_memo_concurrent_access_is_safe(spark):
     """Pinned (ADVICE r6): gates run from concurrent harness threads;
-    the memo's get/evict-iteration/insert must hold a lock or a racing
-    insert can blow up the dict.fromkeys eviction scan."""
+    the memo's get/evict/insert must be safe against each other and
+    settle on one plan per key."""
     from concurrent.futures import ThreadPoolExecutor
 
     from alma_memory_spark.plans import registry as R
@@ -355,9 +355,9 @@ def test_plan_memo_concurrent_access_is_safe(spark):
         return s.range(3)
 
     try:
-        # seed 4 fake apps so every insert walks the eviction scan
+        # seed 4 fake apps so the live session's first call evicts
         for i in range(4):
-            R._PLAN_MEMO[(f"___q{i}", f"___app{i}", "sf")] = None
+            R._PLAN_MEMO.put((f"___app{i}", f"___q{i}", "sf"), object())
         with ThreadPoolExecutor(16) as pool:
             dfs = list(
                 pool.map(lambda _: R.QUERIES["___memo_probe"].fn(spark, "x"), range(64))
@@ -367,5 +367,3 @@ def test_plan_memo_concurrent_access_is_safe(spark):
         assert len({id(d) for d in dfs[32:]}) == 1
     finally:
         R.QUERIES.pop("___memo_probe", None)
-        for k in [k for k in R._PLAN_MEMO if str(k[0]).startswith("___")]:
-            R._PLAN_MEMO.pop(k, None)

@@ -4,6 +4,7 @@ fast path, and the concurrent table-cache guard (ADVICE r5)."""
 import threading
 
 from alma_memory_spark import session as S
+from alma_memory_spark.cache import session_key
 
 
 def test_schema_field_names_nesting():
@@ -41,12 +42,11 @@ def test_tiny_df_tuple_rows_still_work(spark):
 
 
 def test_table_cache_eviction_is_thread_safe(spark, sf_dir):
-    """Pre-fill the cache past the app cap with fake app entries, then
-    hammer load_table from threads: every call must return a usable
-    plan and no eviction may raise (the unlocked pop(next(iter(..)))
-    raced into KeyError)."""
+    """Pre-fill the cache with fake app entries, then hammer load_table
+    from threads: every call must return a usable plan and no eviction
+    may raise (the unlocked pop(next(iter(..))) raced into KeyError)."""
     for i in range(6):
-        S._TABLE_CACHE[f"fake-app-{i}"] = {("d", "t"): object()}
+        S._TABLES.put((f"fake-app-{i}", "d", "t"), object())
     errs = []
 
     def worker():
@@ -64,8 +64,7 @@ def test_table_cache_eviction_is_thread_safe(spark, sf_dir):
         t.join()
     assert not errs, errs
     # the LIVE app's entry survived the evictions
-    app = spark.sparkContext.applicationId
-    assert (sf_dir, "region") in S._TABLE_CACHE.get(app, {})
+    assert S._TABLES.get(session_key(spark, sf_dir, "region")) is not None
 
 
 def _compiled_classes(spark) -> int:
