@@ -8,11 +8,12 @@ confidence / quota, with audit), stats, health, checkpoint / resume /
 merge_states, save_handoff / get_latest_handoff, graph as-of queries.
 
 Execution model: writes append to partitioned Parquet (upsert-by-id via
-window-dedup); reads are declarative DataFrame plans (partition-pruned
-filter -> vector top-2k -> composite score -> threshold/top-k) that
-collect only the final k rows per type. A driver-side TTL+LRU query
-cache mirrors the reference's RetrievalCache (alma/retrieval/cache.py)
-with epoch-based invalidation on writes.
+window-dedup); serving reads are one compiled SQL statement per call
+(partition-pruned filter -> vector top-2k -> composite score ->
+threshold/top-k, every memory type in one union) that collects only
+the final k rows per type. A driver-side TTL+LRU query cache mirrors
+the reference's RetrievalCache (alma/retrieval/cache.py) with
+epoch-based invalidation on writes.
 """
 
 from __future__ import annotations
@@ -35,14 +36,12 @@ from alma_memory_spark.operators import learning as L
 from alma_memory_spark.operators import lifecycle as LC
 from alma_memory_spark.operators import workflow as WF
 from alma_memory_spark.operators.consolidation import consolidate as _consolidate
-from alma_memory_spark.operators.feedback import apply_feedback_blend, feedback_summary
 from alma_memory_spark.operators.mmr import mmr_rerank
 from alma_memory_spark.operators.retrieval import (
     MODES,
     ModeConfig,
     ScoringWeights,
     infer_mode,
-    retrieve_type,
 )
 from alma_memory_spark.slice import MemorySlice, sanitize_query
 
@@ -117,23 +116,16 @@ class AlmaSpark:
 
         self.events = EventEmitter()
         # SQL-compiled serving plan (operators/serving_sql.py, VERDICT
-        # r10 #1): whole-subtree template cache keyed on (store version
-        # stamps, serving config); per-call cost is one spark.sql()
-        # round trip instead of rebuilding the plan through py4j. Temp
-        # views are namespaced per engine instance and re-registered
-        # only when a table's stamp changes.
-        self.serving_sql_enabled = True
+        # r10 #1), the one serving path of retrieve/retrieve_batch:
+        # whole-subtree template cache keyed on (store version stamps,
+        # serving config); per-call cost is one spark.sql() round trip
+        # instead of rebuilding the plan through py4j. Temp views are
+        # namespaced per engine instance and re-registered only when a
+        # table's stamp changes.
         self._srv_ns = uuid.uuid4().hex[:8]
         self._srv_lock = threading.Lock()
         self._srv_views: dict[tuple, tuple] = {}
         self._srv_templates = LRU(64)
-        #: fast-path observability: sql-served calls vs analysis-error
-        #: fallbacks (the last error + statement are kept for
-        #: diagnosis; a fallback is always safe — the DataFrame path
-        #: is bit-identical)
-        self._srv_hits = 0
-        self._srv_fallbacks = 0
-        self._srv_last_error: tuple[str, str] | None = None
 
     # ------------------------------------------------------------------
     # helpers
@@ -225,7 +217,7 @@ class AlmaSpark:
         cache; a no-stamp table re-registers every call (cheap, one
         py4j call) since its staleness is undetectable."""
         # txlog's read() has no declared_schema param — pass it only
-        # when set (the same way the DataFrame path calls read)
+        # when set
         df = (
             self.store.read(table, declared_schema=True)
             if declared_schema
@@ -279,10 +271,8 @@ class AlmaSpark:
         use_ann: bool = False,
         nprobe: int = 8,
     ):
-        """The serving fast path: one compiled-SQL statement for the
-        whole union plan. Returns (rows, colsets) or raises
-        ServingSQLUnsupported (caller falls back to the DataFrame
-        path — results are bit-identical either way).
+        """retrieve's serving path: one compiled-SQL statement for the
+        whole union plan. Returns (rows, colsets).
 
         `use_ann=True` (r12, VERDICT r11 #1): a type with a scope-
         expressible IVF index keeps its probe on the index path. Since
@@ -333,12 +323,12 @@ class AlmaSpark:
         use_ann: bool = False,
         nprobe: int = 8,
     ):
-        """retrieve_batch's fast path: the qid-dimension union plan as
-        one compiled-SQL statement; (qid, qvec) bind per call as an
-        inline VALUES table. Returns (rows, colsets) or raises
-        ServingSQLUnsupported. `use_ann=True` joins each indexed type's
-        per-qid IVFIndex probe as its (qid, id, similarity) candidate
-        table — same contract as _sql_serving_rows (r12)."""
+        """retrieve_batch's serving path: the qid-dimension union plan
+        as one compiled-SQL statement; (qid, qvec) bind per call as an
+        inline VALUES table. Returns (rows, colsets). `use_ann=True`
+        joins each indexed type's per-qid IVFIndex probe as its (qid,
+        id, similarity) candidate table — same contract as
+        _sql_serving_rows (r12)."""
         from alma_memory_spark.operators import serving_sql as SS
 
         def probe(t, idx, want):
@@ -347,22 +337,20 @@ class AlmaSpark:
             # SQL TEXT — standalone probe A/B: 66-109 ms/task vs the
             # arrow view path's 113-243 at batch 4-8, construction ~20x
             # cheaper (the py4j frame + temp-view churn WAS the floor);
-            # engine end-to-end (measure_batch_serving.py): 954->642
-            # ms/task at batch 2, 24.4->20.1 at 32 on the gate-sized
-            # corpus. Large batches keep the arrow kernel: its BLAS
-            # matmul amortizes the Python hop and beats the JVM per-pair
-            # fold once per-cell occupancy x batch multiplies the scored
-            # pairs (standalone crossover between batch 8 and 32 at 4k
-            # vectors). The fork reads only the batch length; both forms
-            # are row-identical on the pinned corpora
-            # (test_batch_sql_subquery_matches).
+            # engine end-to-end when the fork landed: 954->642 ms/task
+            # at batch 2, 24.4->20.1 at 32 on the gate-sized corpus (the
+            # perfbench `serve` workload runs a batch of 8 and one of 32,
+            # one each side of the fork). Large batches keep the arrow
+            # kernel: its BLAS matmul amortizes the Python hop and beats
+            # the JVM per-pair fold once per-cell occupancy x batch
+            # multiplies the scored pairs (standalone crossover between
+            # batch 8 and 32 at 4k vectors). The fork reads only the
+            # batch length; both forms are row-identical on the pinned
+            # corpora (test_batch_sql_subquery_matches).
             if len(qids) <= _ANN_BATCH_SQL_MAX:
-                try:
-                    return idx.search_batch_sql_subquery(
-                        pairs, k=2 * fetch_k, nprobe=nprobe, filters=want
-                    )
-                except SS.ServingSQLUnsupported:
-                    pass  # legacy parser mode: view path
+                return idx.search_batch_sql_subquery(
+                    pairs, k=2 * fetch_k, nprobe=nprobe, filters=want
+                )
             return self._register_cand_view(
                 t,
                 idx.search_batch(pairs, k=2 * fetch_k, nprobe=nprobe, filters=want),
@@ -446,7 +434,6 @@ class AlmaSpark:
                 else self._srv_templates.get(key)
             )
             if tmpl is None:
-                SS.check_parser_mode(self.spark)
                 tmpl = compile_template(branches, prefs, fb_view)
                 self._srv_templates.put(key, tmpl)
             return self._srv_run(bind(tmpl, cand_refs)), dict(tmpl.colsets)
@@ -456,32 +443,11 @@ class AlmaSpark:
             self._drop_cand_views(cand_refs)
 
     def _srv_run(self, text: str) -> list:
-        """Execute a compiled serving statement; an AnalysisException
-        downgrades to the DataFrame path (bit-identical) instead of
-        failing the retrieve — the statement + error are kept on the
-        engine for diagnosis and the fallback is counted.
-
-        The parser-mode refusal re-runs here on EVERY execution, not
-        just at compile time: a cached template's literals were escaped
-        under the default mode, so a session that flips
-        escapedStringLiterals=true after caching must fall back too
-        (ADVICE r12 — the conf read is ~free vs the collect)."""
-        from pyspark.errors import AnalysisException
-
-        from alma_memory_spark.operators import serving_sql as SS
-        from alma_memory_spark.operators.serving_sql import ServingSQLUnsupported
-
-        SS.check_parser_mode(self.spark)
-        try:
-            rows = self.spark.sql(text).collect()
-        except AnalysisException as e:
-            with self._srv_lock:
-                self._srv_fallbacks += 1
-                self._srv_last_error = (str(e)[:2000], text)
-            raise ServingSQLUnsupported(f"analysis failed: {e}") from e
-        with self._srv_lock:
-            self._srv_hits += 1
-        return rows
+        """Execute a bound serving statement. Its string literals read
+        back the same under either parser mode, so a template cached
+        before a spark.sql.parser.escapedStringLiterals flip stays
+        valid; an analysis error propagates to the caller."""
+        return self.spark.sql(text).collect()
 
     # ------------------------------------------------------------------
     # retrieval (the hot path; reference core.py:246-307)
@@ -500,7 +466,14 @@ class AlmaSpark:
         use_ann: bool = False,
         nprobe: int = 8,
     ) -> MemorySlice:
-        """`use_ann=True` serves the vector candidate stage of any
+        """Top-k memories of every type for `task`, served by ONE
+        compiled-SQL statement (operators/serving_sql.py) and cached
+        per scope. A store shape no serving path can serve (a table
+        without `embedding` or its recency column, an unquotable column
+        name) raises ServingSQLUnsupported; an analysis error of the
+        statement propagates.
+
+        `use_ann=True` serves the vector candidate stage of any
         memory type that has a persisted scope-aware IVF index
         (index_vectors) from that index — a partition-pruned probe of
         `nprobe` cells instead of a corpus scan, the reference's
@@ -556,134 +529,34 @@ class AlmaSpark:
         now = self._now()
         agents = [agent] + [a for a in (inherit_from or []) if a != agent]
 
-        # ONE Spark job for all memory types (SURVEY §3.1) either way.
-        # Fast path (VERDICT r10 #1): the whole union plan as one
-        # compiled-SQL statement — bit-identical results, one
+        # ONE Spark job for all memory types (SURVEY §3.1): the whole
+        # union plan as one compiled-SQL statement (VERDICT r10 #1), one
         # spark.sql() round trip instead of rebuilding the plan through
-        # py4j. Falls back to the DataFrame path for shapes the
-        # compiler rejects. ANN-index serving (r12, VERDICT r11 #1)
-        # also compiles: the per-call IVF probe stays on the index path
-        # and its lazy candidate frame joins in as a per-call temp view
-        # (the probe executes inside the one serving job).
+        # py4j. ANN-index serving (r12, VERDICT r11 #1) compiles too:
+        # the per-call IVF probe is spliced in as its candidate table and
+        # executes inside the one serving job.
         type_list = ["heuristics", "outcomes", "domain_knowledge"]
         if cfg is None or cfg.include_anti_patterns:
             type_list.append("anti_patterns")
-        sql_served = None
-        if self.serving_sql_enabled:
-            from alma_memory_spark.operators.serving_sql import ServingSQLUnsupported
-
-            try:
-                sql_served = self._sql_serving_rows(
-                    type_list,
-                    fetch_k,
-                    k,
-                    min_score,
-                    weights,
-                    cfg,
-                    project_id,
-                    agents,
-                    user_id,
-                    use_feedback,
-                    qvec,
-                    now,
-                    use_ann=use_ann,
-                    nprobe=nprobe,
-                )
-            except ServingSQLUnsupported:
-                sql_served = None
-
-        fb = None
-        if use_feedback and sql_served is None:
-            # declared schema: the feedback summary sits on the
-            # retrieve hot path, and inference's footer-sampling jobs
-            # are pure serving latency (the table is always written
-            # through this exact schema)
-            fb_df = self.store.read("retrieval_feedback", declared_schema=True)
-            # ONE blend joins the summary AFTER the type union (below),
-            # so this subtree plans and runs once — not once per type
-            # branch (measured ~1s of pure per-retrieve overhead on a
-            # near-empty store from 4 duplicated scan+agg+broadcast
-            # subtrees, r8)
-            fb = feedback_summary(fb_df)
-
-        # DataFrame path: per-type candidate frames (each already cut
-        # to fetch_k by TakeOrderedAndProject) union into a single plan
-        # with a memory_type column and ONE collect; rows split back
-        # driver-side.
-        frames: list[DataFrame] = []
-        colsets: dict[str, list[str]] = {}
-        for t in [] if sql_served is not None else type_list:
-            # a memory type that has never been written contributes an
-            # empty result either way — skipping it drops its window +
-            # sort + union stages from the one-job plan (the common case
-            # for fresh/sparse stores: only domain_knowledge populated)
-            if not self.store.exists(t):
-                continue
-            df = self.store.read(t)
-            candidates = None
-            if use_ann and self._has_ivf_index(t):
-                idx = self._load_ivf(t)
-                # the scope the READ applies (df columns decide, the
-                # same way retrieve_type filters); the index must carry
-                # every one of them or its candidates would be ranked
-                # globally and burn the 2k budget on out-of-scope rows
-                want = self._ann_scope_filters(df, idx, project_id, agents)
-                if want is not None:
-                    candidates = idx.search(
-                        qvec, k=2 * fetch_k, nprobe=nprobe, filters=want
-                    )
-                # else: exact scan (candidates=None) — a scope the
-                # index cannot express must not degrade recall
-            scored = retrieve_type(
-                df,
-                t,
-                now,
-                qvec,
-                top_k=fetch_k,
-                project_id=project_id,
-                agents=agents,
-                min_score=min_score,
-                weights=weights,
-                mode=cfg,
-                candidates=candidates,
-            )
-            # feedback blending happens ONCE after the union (each
-            # branch is already cut to fetch_k rows by its own
-            # TakeOrderedAndProject, so a per-branch re-sort + re-limit
-            # after blending changed no memberships — and the driver
-            # re-sorts every branch's rows below anyway); the blend
-            # appends a feedback_score column to every branch
-            colsets[t] = list(scored.columns) + (
-                ["feedback_score"] if fb is not None else []
-            )
-            frames.append(scored.withColumn("memory_type", F.lit(t)))
-        if user_id is not None and sql_served is None:
-            pdf = (
-                self.store.read("preferences")
-                .filter(F.col("user_id") == user_id)
-                .orderBy(F.desc("confidence"), F.asc("id"))
-                .limit(k)
-            )
-            colsets["preferences"] = list(pdf.columns)
-            frames.append(pdf.withColumn("memory_type", F.lit("preferences")))
-
-        rows_iter: list = []
-        if sql_served is not None:
-            rows_iter, colsets = sql_served
+        rows_iter, colsets = self._sql_serving_rows(
+            type_list,
+            fetch_k,
+            k,
+            min_score,
+            weights,
+            cfg,
+            project_id,
+            agents,
+            user_id,
+            use_feedback,
+            qvec,
+            now,
+            use_ann=use_ann,
+            nprobe=nprobe,
+        )
+        # rows split back driver-side by their memory_type tag
         by_type: dict[str, list[dict]] = {t: [] for t in type_list}
         by_type.update({t: [] for t in colsets})
-        if frames:
-            unioned = frames[0]
-            for f in frames[1:]:
-                unioned = unioned.unionByName(f, allowMissingColumns=True)
-            # the blend references the score column — a preferences-only
-            # union (no scored type table written yet) has none, and
-            # the preferences branch is never feedback-blended anyway
-            if fb is not None and "score" in unioned.columns:
-                unioned = apply_feedback_blend(
-                    unioned, fb, self.feedback_weight, type_col="memory_type"
-                )
-            rows_iter = unioned.collect()
         for r in rows_iter:
             d = r.asDict(recursive=True)
             t = d.pop("memory_type")
@@ -735,24 +608,16 @@ class AlmaSpark:
         """Default-mode retrieve() for N tasks in ONE Spark job — the
         serving-throughput form (the reference's benchmark harness
         ranks all its questions per job for the same reason;
-        benchmarks/longmem.py is the measurement twin). Per-task slices
-        are identical to retrieve(task): same candidate stage (exact
-        per-qid top-2k, or IVFIndex.search_batch when indexed and
-        use_ann=True), same composite scoring, threshold, and
-        tiebreaks — the scoring expressions are row-local, so they
-        vectorize over the qid dimension unchanged. Modes, feedback
-        blending, and inherit_from stay single-query concerns
-        (retrieve() serves them); each returned slice ALSO lands in the
-        retrieval cache under its single-task key, so follow-up
-        retrieve() calls hit."""
-        from pyspark.sql.window import Window as PW
-
-        from alma_memory_spark.operators.retrieval import (
-            score_memories,
-            threshold_topk,
-        )
-        from alma_memory_spark.session import tiny_df
-
+        benchmarks/longmem.py is the measurement twin). It compiles the
+        same branches as retrieve() over a qid dimension, so per-task
+        slices are identical to retrieve(task): same candidate stage
+        (exact per-qid top-2k, or the IVF probe when indexed and
+        use_ann=True), same composite scoring, threshold, and tiebreaks
+        — the scoring expressions are row-local, so they vectorize over
+        the qid dimension unchanged. Modes, feedback blending, and
+        inherit_from stay single-query concerns (retrieve() serves
+        them); each returned slice ALSO lands in the retrieval cache
+        under its single-task key, so follow-up retrieve() calls hit."""
         if not tasks:
             return {}
         t0 = time.perf_counter()
@@ -783,95 +648,16 @@ class AlmaSpark:
         qvecs = [self.embedder.encode(q) for q in queries]
         type_list = ["heuristics", "outcomes", "domain_knowledge", "anti_patterns"]
 
-        # batch serving fast path (r11, extends VERDICT r10 #1 to the
-        # throughput form): the whole qid-dimension union plan as one
-        # compiled-SQL statement — the (qid, qvec) frame rides as an
-        # inline VALUES table, bit-identical results, one spark.sql()
-        # round trip. ANN-index batch serving compiles too (r12): the
-        # search_batch probe runs on the index path and its (qid, id,
-        # similarity) frame joins in as a per-call temp view.
-        sql_served = None
-        if self.serving_sql_enabled:
-            from alma_memory_spark.operators.serving_sql import ServingSQLUnsupported
-
-            try:
-                sql_served = self._sql_batch_rows(
-                    type_list, fetch_k, min_score, weights,
-                    project_id, agent, user_id, qids, qvecs, now,
-                    use_ann=use_ann, nprobe=nprobe,
-                )
-            except ServingSQLUnsupported:
-                sql_served = None
-
-        qdf = None
-        if sql_served is None:
-            qdf = tiny_df(
-                self.spark,
-                [(q, [float(x) for x in v]) for q, v in zip(qids, qvecs)],
-                "qid string, qvec array<double>",
-            )
-        frames: list[DataFrame] = []
-        colsets: dict[str, list[str]] = {}
-        for t in [] if sql_served is not None else type_list:
-            if not self.store.exists(t):
-                continue
-            df = self.store.read(t)
-            if project_id is not None:
-                df = df.filter(F.col("project_id") == project_id)
-            df = df.filter(F.col("agent").isin([agent])).withColumn(
-                "shared_from",
-                F.when(F.col("agent") != agent, F.col("agent")),
-            )
-            rank_w = PW.partitionBy("qid").orderBy(F.desc("similarity"), F.asc("id"))
-            if use_ann and self._has_ivf_index(t):
-                idx = self._load_ivf(t)
-                want = self._ann_scope_filters(df, idx, project_id, agent)
-                if want is None:
-                    # a scope the index can't express must not degrade
-                    # recall — same rule as retrieve(): exact scan
-                    cands = None
-                else:
-                    cands = idx.search_batch(
-                        list(zip(qids, qvecs)), k=2 * fetch_k, nprobe=nprobe,
-                        filters=want,
-                    )
-                if cands is not None:
-                    out = (
-                        df.join(F.broadcast(cands), "id")
-                        .withColumn("_rk", F.row_number().over(rank_w))
-                        .filter(F.col("_rk") <= 2 * fetch_k)
-                        .drop("_rk")
-                        .withColumn("ann_rank", F.row_number().over(rank_w))
-                    )
-                else:
-                    out = self._batch_exact_candidates(df, qdf, fetch_k, rank_w)
-            else:
-                out = self._batch_exact_candidates(df, qdf, fetch_k, rank_w)
-            scored = score_memories(out, t, now, weights, sim_col="similarity")
-            scored = threshold_topk(
-                scored, fetch_k, min_score, partition_cols=["qid"]
-            )
-            colsets[t] = [c for c in scored.columns if c != "qid"]
-            frames.append(scored.withColumn("memory_type", F.lit(t)))
-        if user_id is not None and sql_served is None:
-            pdf = (
-                self.store.read("preferences")
-                .filter(F.col("user_id") == user_id)
-                .orderBy(F.desc("confidence"), F.asc("id"))
-                .limit(k)
-                .withColumn("qid", F.lit(None).cast("string"))
-            )
-            colsets["preferences"] = [c for c in pdf.columns if c != "qid"]
-            frames.append(pdf.withColumn("memory_type", F.lit("preferences")))
-
-        rows_iter: list = []
-        if sql_served is not None:
-            rows_iter, colsets = sql_served
-        elif frames:
-            unioned = frames[0]
-            for f in frames[1:]:
-                unioned = unioned.unionByName(f, allowMissingColumns=True)
-            rows_iter = unioned.collect()
+        # the whole qid-dimension union plan as one compiled-SQL
+        # statement (r11): the (qid, qvec) frame rides as an inline
+        # VALUES table, one spark.sql() round trip. ANN-index batch
+        # serving compiles too (r12): the batch probe joins in as each
+        # indexed type's (qid, id, similarity) candidate table.
+        rows_iter, colsets = self._sql_batch_rows(
+            type_list, fetch_k, min_score, weights,
+            project_id, agent, user_id, qids, qvecs, now,
+            use_ann=use_ann, nprobe=nprobe,
+        )
         by_key: dict[tuple, list[dict]] = {}
         for r in rows_iter:
             d = r.asDict(recursive=True)
@@ -910,24 +696,6 @@ class AlmaSpark:
             # with the same params is a hit (same key shape as retrieve)
             self._cache.put(_key(query), (time.perf_counter(), epoch_at_read, sl))
         return {t: slices[t] for t in all_tasks}
-
-    @staticmethod
-    def _batch_exact_candidates(df, qdf, fetch_k, rank_w):
-        """Exact cosine candidate stage over the qid dimension: one
-        scan crossJoined with the broadcast query frame, per-qid
-        top-2k — the batch form of operators/retrieval.py:
-        vector_candidates (same ordering, same ann_rank)."""
-        from alma_memory_spark.operators.serving_sql import cosine_sql
-
-        return (
-            df.crossJoin(F.broadcast(qdf))
-            .withColumn("similarity", F.expr(cosine_sql("embedding", "`qvec`")))
-            .drop("qvec")
-            .withColumn("_rk", F.row_number().over(rank_w))
-            .filter(F.col("_rk") <= 2 * fetch_k)
-            .drop("_rk")
-            .withColumn("ann_rank", F.row_number().over(rank_w))
-        )
 
     def retrieve_with_budget(
         self,

@@ -1014,34 +1014,19 @@ class IVFIndex:
             # the fold expressions through the Column API costs
             # ~145 ms/call of py4j round trips; the SQL text parses
             # JVM-side in ~10-25 ms. Identical plan and results
-            # (contract-tested vs both other forms). live_ids is a
-            # DataFrame — that shape keeps the Column path below.
-            # Parser-mode guard (ADVICE r13 #1): string filter values
-            # in the SQL text are escaped for the DEFAULT parser mode;
-            # under spark.sql.parser.escapedStringLiterals=true a
-            # backslash-carrying value would silently mis-match, so the
-            # probe drops to the Column-expression jvm kernel below —
-            # plan literals, parser-mode safe, value-identical.
-            from alma_memory_spark.operators.serving_sql import (
-                ServingSQLUnsupported,
-                check_parser_mode,
+            # (contract-tested vs both other forms), and string filter
+            # values read back the same under either parser mode.
+            # live_ids is a DataFrame — that shape keeps the Column
+            # path below.
+            sub = self.search_sql_subquery(
+                query_vec, k=k, nprobe=nprobe, filters=filters
             )
-
-            try:
-                check_parser_mode(self.spark)
-            except ServingSQLUnsupported:
-                pass
-            else:
-                sub = self.search_sql_subquery(
-                    query_vec, k=k, nprobe=nprobe, filters=filters
-                )
-                # the subquery already orders + limits; re-sorting the
-                # tiny k-row result keeps the ordering a DataFrame-API
-                # contract rather than relying on subquery-order
-                # preservation
-                return self.spark.sql(f"SELECT * FROM {sub} AS c").orderBy(
-                    F.desc("similarity"), F.asc("id")
-                )
+            # the subquery already orders + limits; re-sorting the tiny
+            # k-row result keeps the ordering a DataFrame-API contract
+            # rather than relying on subquery-order preservation
+            return self.spark.sql(f"SELECT * FROM {sub} AS c").orderBy(
+                F.desc("similarity"), F.asc("id")
+            )
         probed, qn = self.probe_cells(query_vec, nprobe)
         pruned = self._guarded_lists(probed, filters, live_ids)
         if kernel == "jvm":
@@ -1157,8 +1142,9 @@ class IVFIndex:
     def _sql_filter_conds(self, filters: dict | None) -> list[str]:
         """Equality/IN predicates on indexed extra_cols as SQL text —
         shared by the single-query and batch subquery emitters.
-        Raises ValueError on a non-indexed column; string values were
-        parser-mode-guarded by the caller."""
+        Raises ValueError on a non-indexed column; string values go
+        through serving_sql.string_literal (exact under either parser
+        mode)."""
         from alma_memory_spark.operators.serving_sql import (
             double_literal,
             string_literal,
@@ -1209,30 +1195,8 @@ class IVFIndex:
         (same casts, same fold order, same 6dp round; pinned by
         test_sql_subquery_matches_search). Scope filters must name
         indexed extra_cols, as in search(). live_ids is not supported
-        here (serving uses indexed scope filters instead).
-
-        Raises ServingSQLUnsupported when a STRING filter value would
-        be emitted under spark.sql.parser.escapedStringLiterals=true
-        (ADVICE r13 #1): string_literal's backslash doubling is wrong
-        under the legacy parser mode, so the caller must take a
-        plan-literal path instead (search() does this automatically;
-        the engine's compile sites already catch and fall back)."""
-        from alma_memory_spark.operators.serving_sql import (
-            check_parser_mode,
-            double_literal,
-        )
-
-        if any(
-            isinstance(v, str)
-            or (
-                isinstance(v, (list, tuple, set, frozenset))
-                and any(isinstance(x, str) for x in v)
-            )
-            for v in (filters or {}).values()
-        ):
-            # only string literals depend on the parser mode; numeric
-            # probes skip the conf read on the serving hot path
-            check_parser_mode(self.spark)
+        here (serving uses indexed scope filters instead)."""
+        from alma_memory_spark.operators.serving_sql import double_literal
 
         probed, qn = self.probe_cells(query_vec, nprobe)
         if not probed:
@@ -1300,20 +1264,13 @@ class IVFIndex:
         tiebreaks; pinned by test_batch_sql_subquery_matches). Parity
         with kernel='arrow' is empirical at the 6dp round (see
         _jvm_sim). live_ids is not supported (serving uses indexed
-        scope filters). Raises ServingSQLUnsupported under
-        spark.sql.parser.escapedStringLiterals=true — qids are string
-        literals, so the legacy parser mode cannot be served from text
-        (callers fall back to the DataFrame path)."""
+        scope filters)."""
         import numpy as np
 
         from alma_memory_spark.operators.serving_sql import (
-            check_parser_mode,
             double_literal,
             string_literal,
         )
-
-        # qids always land as string literals -> unconditional guard
-        check_parser_mode(self.spark)
 
         queries = list(queries)
         empty = (

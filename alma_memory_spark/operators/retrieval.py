@@ -29,11 +29,13 @@ Spark shape: one declarative plan — filter (partition-pruned) -> cosine
 column -> window top-2k per type -> score columns -> threshold -> top-k.
 All JVM-side column expressions; nothing collects until the final k rows.
 
-This is the DataFrame serving path. Its cosine, score-component,
-composite and boost columns are `F.expr` over the SQL fragments in
-operators/serving_sql.py — the single scoring definition, shared with
-the compiled serving statements — with `now` and the query vector
-entering as the same folded literals the compiled statement binds.
+These are the DataFrame serving operators: the reference the engine's
+compiled serving statement (operators/serving_sql.py, the one path
+AlmaSpark.retrieve takes) is tested against. Their cosine,
+score-component, composite and boost columns are `F.expr` over that
+module's SQL fragments — the single scoring definition — with `now` and
+the query vector entering as the same folded literals the compiled
+statement binds.
 """
 
 from __future__ import annotations

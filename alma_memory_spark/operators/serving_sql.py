@@ -3,24 +3,28 @@
 The fragments in this module are the ONE definition of serving scoring:
 cosine similarity, the per-type recency column, success and confidence
 conventions, the composite score and the mode boosts (semantics in
-operators/retrieval.py's module docstring). Two paths consume them:
+operators/retrieval.py's module docstring). Two consumers parse them:
 
-- the compiled path: the WHOLE per-retrieve serving subtree — scope
-  filters -> cosine top-2k -> ann_rank -> composite scoring -> mode
-  boosts -> threshold/top-k per type -> union -> feedback blend —
-  becomes ONE SQL statement template, cached per (store version
-  stamps, serving config), with the per-call query vector and clock
-  bound by token substitution. A warm retrieve then costs ONE
-  `spark.sql()` round trip (JVM-side parse + analyze) plus the collect,
-  instead of rebuilding the plan through py4j. `retrieve_batch` compiles
-  the same branches over a qid dimension;
-- the DataFrame path (operators/retrieval.py, and the engine's fallback
-  for shapes this compiler refuses) builds its score columns with
-  `F.expr(fragment)`, passing the per-call values as the same literals
-  bind() substitutes: `qv_array_sql`, `qv_norm` and `now_epoch_seconds`.
+- the compiled statements, the engine's one serving path: the WHOLE
+  per-retrieve serving subtree — scope filters -> cosine top-2k ->
+  ann_rank -> composite scoring -> mode boosts -> threshold/top-k per
+  type -> union -> feedback blend — becomes ONE SQL statement template,
+  cached per (store version stamps, serving config), with the per-call
+  query vector and clock bound by token substitution. A warm
+  `AlmaSpark.retrieve` costs ONE `spark.sql()` round trip (JVM-side
+  parse + analyze) plus the collect, instead of rebuilding the plan
+  through py4j. `retrieve_batch` compiles the same branches over a qid
+  dimension. String values enter through `string_literal`, which reads
+  back exactly under either parser mode, so every store shape the
+  engine accepts compiles;
+- the DataFrame operators (operators/retrieval.py) build their score
+  columns with `F.expr(fragment)`, passing the per-call values as the
+  same literals bind() substitutes: `qv_array_sql`, `qv_norm` and
+  `now_epoch_seconds`. They are the reference the engine's results are
+  tested against.
 
-Both paths parse the same text into the same Catalyst expressions, so
-their results are bit-identical by construction; tests/test_serving_sql.py
+Both parse the same text into the same Catalyst expressions, so their
+results are bit-identical by construction; tests/test_serving_sql.py
 checks it at full precision and the engine_retrieve_serving oracle gates
 pin the values. The two per-call literals are pre-folded in Python:
 
@@ -62,9 +66,10 @@ _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 class ServingSQLUnsupported(Exception):
-    """Raised at compile time when the requested serving shape cannot
-    be expressed by this compiler (the engine falls back to the
-    DataFrame path; semantics are identical either way)."""
+    """Raised at compile time for a store shape no serving path can
+    serve: a branch without `id`, `embedding` or its recency column, or
+    a column or view name that is unquotable or carries a substitution
+    token. The engine passes it to the caller."""
 
 
 def double_literal(x: float) -> str:
@@ -80,31 +85,17 @@ def double_literal(x: float) -> str:
 
 
 def string_literal(s: str) -> str:
-    """Quote a string for the serving statement. Quotes are escaped by
-    DOUBLING ('' is accepted by Spark's parser in BOTH
-    spark.sql.parser.escapedStringLiterals modes, unlike \\' which is a
-    literal backslash under the legacy setting — ADVICE r11); the
-    backslash doubling is only meaningful under the default mode, and
-    the engine refuses to compile under the legacy mode (see
-    check_parser_mode), where it would corrupt embedded backslashes."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
-def check_parser_mode(spark) -> None:
-    """string_literal's backslash escaping assumes the DEFAULT parser
-    mode; under spark.sql.parser.escapedStringLiterals=true a doubled
-    backslash is two literal backslashes. Refuse to compile there —
-    the DataFrame path (no string literals in its fragments) is always
-    safe."""
-    if (
-        str(spark.conf.get("spark.sql.parser.escapedStringLiterals", "false"))
-        .lower()
-        == "true"
-    ):
-        raise ServingSQLUnsupported(
-            "spark.sql.parser.escapedStringLiterals=true changes string "
-            "escape semantics; serving SQL refuses to compile"
-        )
+    """Quote a string for the serving statement, readable back exactly
+    under either spark.sql.parser.escapedStringLiterals setting. A value
+    with no backslash, quote or `@` is emitted as plain `'...'` text,
+    which both parser modes read unchanged. Any other value becomes
+    `CAST(X'<utf-8 hex>' AS STRING)`: the hex binary literal has no
+    escape rules, and its text holds no substitution token, so bind()
+    can never rewrite inside it. Both forms constant-fold, so scope
+    predicates still land in the scan's pushed filters."""
+    if not any(c in s for c in "\\'@"):
+        return "'" + s + "'"
+    return "CAST(X'" + s.encode("utf-8").hex().upper() + "' AS STRING)"
 
 
 #: every substitution token (the CANDS entry is a prefix — any
@@ -112,20 +103,19 @@ def check_parser_mode(spark) -> None:
 _ALL_TOKENS = (TOKEN_QV, TOKEN_QNORM, TOKEN_NOW, TOKEN_CANDS_PREFIX, TOKEN_QVALUES)
 
 
-def _check_token_safe(*values) -> None:
+def _check_token_safe(*names) -> None:
     """bind()/bind_batch() do global token substitution over the whole
-    statement — an embedded config string or column name CONTAINING a
-    token would be silently rewritten inside its literal, diverging
-    from the DataFrame path with no signal (ADVICE r11). Refuse to
-    compile instead; the engine falls back."""
-    for v in values:
+    statement. String values are safe (string_literal hex-encodes any
+    value with an `@`), but a column or view name is spliced as is, so
+    one CONTAINING a token would be rewritten inside the identifier.
+    Refuse to compile instead."""
+    for v in names:
         if v is None:
             continue
-        s = str(v)
         for tok in _ALL_TOKENS:
-            if tok in s:
+            if tok in v:
                 raise ServingSQLUnsupported(
-                    f"input contains substitution token {tok!r}: {s[:80]!r}"
+                    f"identifier contains substitution token {tok!r}: {v[:80]!r}"
                 )
 
 
@@ -285,13 +275,20 @@ _ADDED = {
     "score": "double",
 }
 
-#: a base table already exposing an added column would make the
-#: generated SELECT ambiguous where the DataFrame path's withColumn
-#: would silently REPLACE it — refuse to compile and let the engine
-#: fall back (observed in the wild via StructType.add's
-#: in-place-mutation footgun polluting shared schemas with a NULL
-#: `similarity` column)
+#: a stored column named like one the serving pipeline adds is left
+#: out of every branch's projection (preferences included), so the
+#: added column replaces it — what the DataFrame operators' withColumn
+#: does (seen in the wild via StructType.add's in-place-mutation
+#: footgun polluting shared schemas with a NULL `similarity` column)
 _RESERVED = frozenset([*_ADDED, "memory_type", "feedback_score"])
+
+
+def _stored(columns, dtypes) -> tuple[list[str], list[tuple[str, str]]]:
+    """The stored columns a branch projects: all but the reserved ones."""
+    return (
+        [c for c in columns if c not in _RESERVED],
+        [(c, t) for c, t in dtypes if c not in _RESERVED],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -374,8 +371,8 @@ def _ranked_candidates(
     ann_rank over the bounded frame (pmod(xxhash64(id), 1) constant
     partition — functions/window.py bounded_rank_w). Batch: per-qid
     top-2k over a broadcast cross join with the VALUES query frame (or
-    the (qid, id, similarity) ANN candidates) — the engine's
-    `_batch_exact_candidates`."""
+    the (qid, id, similarity) ANN candidates), ranked as
+    vector_candidates ranks one query."""
     cands = cand_token(b.memory_type)
     order = "ORDER BY `similarity` DESC, `id` ASC"
     if not batch:
@@ -433,12 +430,6 @@ def _branch_sql(
     (per qid in the batch form). Returns (subquery_sql, output_columns)."""
     if "id" not in b.columns or "embedding" not in b.columns:
         raise ServingSQLUnsupported(f"{b.memory_type}: missing id/embedding")
-    clash = sorted(_RESERVED.intersection(b.columns))
-    if clash:
-        raise ServingSQLUnsupported(
-            f"{b.memory_type}: base table exposes reserved serving "
-            f"column(s) {clash} (the DataFrame path replaces them)"
-        )
     ts_col = _RECENCY_TS.get(b.memory_type)
     if ts_col is None or ts_col not in b.columns:
         raise ServingSQLUnsupported(f"{b.memory_type}: missing recency column")
@@ -456,11 +447,11 @@ def _branch_sql(
             f", CASE WHEN `agent` != {me} THEN `agent` END AS `shared_from`"
         )
     where = (" WHERE " + " AND ".join(filters)) if filters else ""
-    cols = ", ".join(_q(c) for c in b.columns)
+    stored, _ = _stored(b.columns, b.dtypes)
+    cols = ", ".join(_q(c) for c in stored)
     base = f"SELECT {cols}{select_extra} FROM {b.view}{where}"
     ranked, out_cols = _ranked_candidates(
-        b, base, list(b.columns) + (["shared_from"] if agents else []),
-        fetch_k, batch,
+        b, base, stored + (["shared_from"] if agents else []), fetch_k, batch
     )
 
     comp = score_components_sql(b.memory_type, "similarity", TOKEN_NOW)
@@ -506,47 +497,44 @@ def _compile_union(
     if not branches and prefs is None:
         raise ServingSQLUnsupported("nothing to serve")
     _check_token_safe(
-        project_id,
-        *agents,
         *(b.view for b in branches),
         *(c for b in branches for c in b.columns),
-        *((prefs.view, prefs.user_id, *prefs.columns) if prefs else ()),
+        *((prefs.view, *prefs.columns) if prefs else ()),
         feedback_view,
     )
 
     branch_sqls: list[tuple[str, str, list[str]]] = []  # (type, sql, cols)
+    #: the null-fill dtype of each union column: the first branch's;
+    #: UNION ALL widens differing branch types as unionByName does
     dtype_of: dict[str, str] = {}
 
     def _note_types(dtypes, extra: dict[str, str]) -> None:
         for name, dt in list(dtypes) + list(extra.items()):
-            prev = dtype_of.get(name)
-            if prev is not None and prev != dt:
-                raise ServingSQLUnsupported(
-                    f"conflicting union dtypes for {name}: {prev} vs {dt}"
-                )
-            dtype_of[name] = dt
+            dtype_of.setdefault(name, dt)
 
     for b in branches:
         sql, out_cols = _branch_sql(
             b, fetch_k, min_score, weights, mode, project_id, agents, batch
         )
-        _note_types(b.dtypes, {c: t for c, t in _ADDED.items() if c in out_cols})
+        _note_types(
+            _stored(b.columns, b.dtypes)[1],
+            {c: t for c, t in _ADDED.items() if c in out_cols},
+        )
         branch_sqls.append((b.memory_type, sql, out_cols))
 
     if prefs is not None:
         if "user_id" not in prefs.columns or "confidence" not in prefs.columns:
             raise ServingSQLUnsupported("preferences: missing user_id/confidence")
+        pcols, pdtypes = _stored(prefs.columns, prefs.dtypes)
         qid = ", CAST(NULL AS string) AS `qid`" if batch else ""
         psql = (
-            f"SELECT {', '.join(_q(c) for c in prefs.columns)}{qid} "
+            f"SELECT {', '.join(_q(c) for c in pcols)}{qid} "
             f"FROM {prefs.view} "
             f"WHERE `user_id` = {string_literal(prefs.user_id)} "
             f"ORDER BY `confidence` DESC, `id` ASC LIMIT {prefs.limit}"
         )
-        _note_types(prefs.dtypes, {"qid": "string"} if batch else {})
-        branch_sqls.append(
-            ("preferences", psql, list(prefs.columns) + (["qid"] if batch else []))
-        )
+        _note_types(pdtypes, {"qid": "string"} if batch else {})
+        branch_sqls.append(("preferences", psql, pcols + (["qid"] if batch else [])))
 
     union_cols: list[str] = []
     for _, _, out_cols in branch_sqls:
@@ -581,8 +569,7 @@ def compile_serving_template(
 ) -> ServingTemplate:
     """Compile the one-job union serving statement for the given store
     shape + config; bind with ServingTemplate.bind(). Raises
-    ServingSQLUnsupported for shapes this compiler cannot serve (the
-    engine then uses the DataFrame path)."""
+    ServingSQLUnsupported for shapes no serving path can serve."""
     union, union_cols, colsets = _compile_union(
         branches, fetch_k, min_score, weights, mode, project_id, agents,
         prefs, feedback_view, batch=False,
@@ -632,8 +619,7 @@ def compile_serving_template(
 
 def qvalues_sql(qids, qvecs) -> str:
     """The inline broadcast query frame: VALUES ('<qid>', array(...)),
-    one row per pending task — the SQL form of the tiny_df the
-    DataFrame path crossJoins."""
+    one row per pending task."""
     rows = ", ".join(
         f"({string_literal(q)}, {qv_array_sql(v)})"
         for q, v in zip(qids, qvecs)

@@ -795,17 +795,12 @@ def test_sql_subquery_matches_search(spark, tmp_path):
 
 
 def test_search_jvm_parser_mode_safe_fallback(spark, tmp_path):
-    """ADVICE r13 #1: search(kernel='jvm') routes through SQL TEXT by
-    default, but string filter literals are escaped for the DEFAULT
-    parser mode only. Under spark.sql.parser.escapedStringLiterals=true
-    the probe must drop to the Column-expression kernel (plan literals)
-    and keep returning the RIGHT rows — pinned with a backslash-
-    carrying scope value, the exact case the text form would silently
-    mis-match."""
-    import pytest as _pytest
-
-    from alma_memory_spark.operators.serving_sql import ServingSQLUnsupported
-
+    """ADVICE r13 #1: search(kernel='jvm') routes through SQL TEXT, so
+    its string filter literals must read back the same under
+    spark.sql.parser.escapedStringLiterals=true — pinned with a
+    backslash-carrying scope value, the case an escape-based literal
+    would silently mis-match: both the subquery form and search()
+    return the default mode's rows."""
     emb = load_table(spark, SF_DIR, "embeddings").limit(300)
     docs = emb.selectExpr(
         "vec_id",
@@ -825,10 +820,11 @@ def test_search_jvm_parser_mode_safe_fallback(spark, tmp_path):
 
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
-        # the subquery form refuses outright (string literal present)
-        with _pytest.raises(ServingSQLUnsupported):
-            idx.search_sql_subquery(QUERY_VEC, k=8, nprobe=4, filters=flt)
-        # search() silently takes the Column kernel: identical results
+        sub = idx.search_sql_subquery(QUERY_VEC, k=8, nprobe=4, filters=flt)
+        assert [
+            (r["id"], r["similarity"])
+            for r in spark.sql(f"SELECT * FROM {sub} x").collect()
+        ] == want
         got = [
             (r["id"], r["similarity"])
             for r in idx.search(
@@ -836,8 +832,7 @@ def test_search_jvm_parser_mode_safe_fallback(spark, tmp_path):
             ).collect()
         ]
         assert got == want
-        # filterless probes carry no string literal — still served
-        # (via either path), same rows as default mode
+        # filterless probes carry no string literal: same rows too
         base_legacy = [
             (r["id"], r["similarity"])
             for r in idx.search(QUERY_VEC, k=8, nprobe=4).collect()
@@ -857,11 +852,9 @@ def test_batch_sql_subquery_matches(spark, tmp_path):
     tiebreaks — including under scope filters, after forget()
     tombstones, and on a multi-assign index (the DISTINCT dedup path);
     cross-kernel (jvm/arrow) identity on this corpus is part of the
-    pinned contract. The legacy parser mode must refuse (qids are
-    string literals)."""
+    pinned contract. The legacy parser mode serves the same rows (qids
+    are string literals)."""
     import pytest as _pytest
-
-    from alma_memory_spark.operators.serving_sql import ServingSQLUnsupported
 
     emb = load_table(spark, SF_DIR, "embeddings")
     docs = emb.selectExpr(
@@ -944,10 +937,11 @@ def test_batch_sql_subquery_matches(spark, tmp_path):
     for q, ids in per_q.items():
         assert len(ids) == len(set(ids)), f"duplicate id for qid {q}"
 
-    # legacy parser mode refuses outright (string qid literals)
+    # legacy parser mode: string qid and filter literals read back the
+    # same, so the rows equal the default mode's
+    want_default = sql_rows(k=5, nprobe=4, filters=flt)
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
-        with _pytest.raises(ServingSQLUnsupported):
-            idx.search_batch_sql_subquery(queries, k=8, nprobe=3)
+        assert sql_rows(k=5, nprobe=4, filters=flt) == want_default
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")

@@ -355,7 +355,11 @@ def test_substring_dedup_releases_cached_triple(spark):
     accumulate in a long-lived session. The bounded LRU keeps the
     newest two triples and unpersists the oldest on overflow — so a
     soak loop's cached-RDD count stays flat instead of growing per
-    invocation."""
+    invocation.
+
+    Each call dedups a distinct corpus and collects `text_dedup`: a
+    `doc_id`-only select lets Catalyst prune the cached join (nothing
+    is ever cached), and identical inputs share one cache entry."""
     import time
 
     from alma_memory_spark.operators import substring as S
@@ -363,15 +367,17 @@ def test_substring_dedup_releases_cached_triple(spark):
     def n_cached():
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
+    def docs(k):
+        return spark.createDataFrame(
+            [(i, "shared boiler span tokens " * 6 + f"tail {i} {k}") for i in range(8)],
+            "doc_id long, text string",
+        )
+
     spark.catalog.clearCache()
     S._TRIPLES.clear()
     base = n_cached()
-    df = spark.createDataFrame(
-        [(i, "shared boiler span tokens " * 6 + f"tail {i}") for i in range(8)],
-        "doc_id long, text string",
-    )
-    for i in range(5):
-        S.dedup_token_windows(df, w=4).select("doc_id").collect()
+    for k in range(5):
+        S.dedup_token_windows(docs(k), w=4).select("doc_id", "text_dedup").collect()
     # unpersist(blocking=False) + ContextCleaner are async; poll briefly
     deadline = time.time() + 30
     keep = S._TRIPLES.max_entries
@@ -381,6 +387,7 @@ def test_substring_dedup_releases_cached_triple(spark):
     assert extra <= keep, (
         f"{extra} triples retained after 5 invocations; LRU cap is {keep}"
     )
+    assert extra >= 1, "nothing was cached: the bound would hold vacuously"
     spark.catalog.clearCache()
     S._TRIPLES.clear()
 

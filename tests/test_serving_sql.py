@@ -1,20 +1,31 @@
 """SQL-compiled serving plan (operators/serving_sql.py, VERDICT r10 #1).
 
-The contract under test: the compiled-SQL fast path is BIT-identical
-to the DataFrame serving path for every retrieve() variant it serves —
-full-precision float equality, not rounded — and falls back safely for
-shapes it does not compile. Staleness: templates/views are keyed on
-the store version stamp, so a write is visible to the very next
-retrieve."""
+The contract under test: the compiled statement, the engine's one
+serving path, is BIT-identical to a reference built from the DataFrame
+operators (retrieval.retrieve_type, feedback.apply_feedback_blend and
+the preferences read) for every retrieve() variant — full-precision
+float equality, not rounded — under either parser mode and for scope
+strings carrying quotes, backslashes or substitution tokens.
+Staleness: templates/views are keyed on the store version stamp, so a
+write is visible to the very next retrieve."""
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
+from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import functions as F
 
 from alma_memory_spark import schemas
 from alma_memory_spark.engine import AlmaSpark
+from alma_memory_spark.operators import retrieval as R
+from alma_memory_spark.operators.feedback import (
+    apply_feedback_blend,
+    feedback_summary,
+)
+from alma_memory_spark.operators.mmr import mmr_rerank
+from alma_memory_spark.slice import sanitize_query
 from alma_memory_spark.testing import fixtures as FX
 
 ANCHOR = datetime(2024, 6, 2, tzinfo=timezone.utc)
@@ -76,6 +87,122 @@ def _slices_equal(a, b):
                 assert va == vb, (attr, k, va, vb)
 
 
+_SCORED_TYPES = ["heuristics", "outcomes", "domain_knowledge", "anti_patterns"]
+
+
+def _reference_type_rows(eng, t, qvec, fetch_k, min_score, weights, cfg,
+                         project_id, agents, candidates, use_feedback):
+    """One memory type's candidate rows from the DataFrame operators."""
+    scored = R.retrieve_type(
+        eng.store.read(t), t, eng._now(), qvec, top_k=fetch_k,
+        project_id=project_id, agents=agents, min_score=min_score,
+        weights=weights, mode=cfg, candidates=candidates,
+    )
+    if use_feedback:
+        fb = feedback_summary(
+            eng.store.read("retrieval_feedback", declared_schema=True)
+        )
+        scored = apply_feedback_blend(
+            scored.withColumn("memory_type", F.lit(t)), fb,
+            eng.feedback_weight, type_col="memory_type",
+        ).drop("memory_type")
+    rows = [r.asDict(recursive=True) for r in scored.collect()]
+    rows.sort(key=lambda d: (-d["score"], d["ann_rank"]))
+    return rows
+
+
+def _reference_prefs(eng, user_id, k):
+    if user_id is None:
+        return []
+    pdf = (
+        eng.store.read("preferences")
+        .filter(F.col("user_id") == user_id)
+        .orderBy(F.desc("confidence"), F.asc("id"))
+        .limit(k)
+    )
+    return [r.asDict(recursive=True) for r in pdf.collect()]
+
+
+def _ann_candidates(eng, t, qvec, k, nprobe, project_id, agents):
+    """The IVF probe the engine serves `t` from, or None (exact scan)."""
+    if not eng._has_ivf_index(t):
+        return None
+    idx = eng._load_ivf(t)
+    want = eng._ann_scope_filters(eng.store.read(t), idx, project_id, agents)
+    if want is None:
+        return None
+    return idx.search(qvec, k=k, nprobe=nprobe, filters=want)
+
+
+def _reference_slice(eng, task, agent, project_id=None, user_id=None,
+                     top_k=None, mode=None, inherit_from=None,
+                     use_feedback=False, use_ann=False, nprobe=8):
+    """What retrieve() must return, from the DataFrame operators."""
+    cfg = R.MODES.get(mode) if mode else None
+    weights = cfg.weights if cfg else R.ScoringWeights()
+    k = top_k if top_k is not None else (cfg.top_k if cfg else 5)
+    min_score = 0.2 if cfg is None else (cfg.min_confidence or 0.0)
+    diversity = cfg.diversity_factor if cfg else 0.0
+    fetch_k = 3 * k if diversity > 0 else k
+    qvec = eng.embedder.encode(sanitize_query(task))
+    agents = [agent] + [a for a in (inherit_from or []) if a != agent]
+    out = {t: [] for t in _SCORED_TYPES}
+    for t in _SCORED_TYPES:
+        if t == "anti_patterns" and cfg is not None and not cfg.include_anti_patterns:
+            continue
+        if not eng.store.exists(t):
+            continue
+        cands = (
+            _ann_candidates(eng, t, qvec, 2 * fetch_k, nprobe, project_id, agents)
+            if use_ann else None
+        )
+        rows = _reference_type_rows(
+            eng, t, qvec, fetch_k, min_score, weights, cfg, project_id,
+            agents, cands, use_feedback,
+        )
+        if diversity > 0:
+            rows = mmr_rerank(rows, diversity, k)
+        out[t] = rows[:k]
+    return SimpleNamespace(preferences=_reference_prefs(eng, user_id, k), **out)
+
+
+def _reference_batch(eng, tasks, agent, project_id=None, user_id=None,
+                     top_k=None, use_ann=False, nprobe=8):
+    """What retrieve_batch() must return per task: the default-mode
+    reference slice, with ANN candidates from one IVFIndex.search_batch
+    probe over all tasks (the batch probe the engine serves from)."""
+    k = top_k if top_k is not None else 5
+    qvecs = [eng.embedder.encode(sanitize_query(t)) for t in tasks]
+    probes = {}
+    for t in _SCORED_TYPES if use_ann else []:
+        if eng.store.exists(t) and eng._has_ivf_index(t):
+            idx = eng._load_ivf(t)
+            want = eng._ann_scope_filters(eng.store.read(t), idx, project_id, agent)
+            if want is not None:
+                probes[t] = idx.search_batch(
+                    [(str(i), v) for i, v in enumerate(qvecs)],
+                    k=2 * k, nprobe=nprobe, filters=want,
+                )
+    prefs = _reference_prefs(eng, user_id, k)
+    out = {}
+    for i, (task, qvec) in enumerate(zip(tasks, qvecs)):
+        rows = {}
+        for t in _SCORED_TYPES:
+            if not eng.store.exists(t):
+                rows[t] = []
+                continue
+            cands = (
+                probes[t].filter(F.col("qid") == str(i)).select("id", "similarity")
+                if t in probes else None
+            )
+            rows[t] = _reference_type_rows(
+                eng, t, qvec, k, 0.2, R.ScoringWeights(), None, project_id,
+                [agent], cands, False,
+            )[:k]
+        out[task] = SimpleNamespace(preferences=prefs, **rows)
+    return out
+
+
 VARIANTS = [
     dict(task="validate schema before writing", agent="helena", project_id="proj-a"),
     dict(
@@ -120,26 +247,13 @@ VARIANTS = [
 
 
 def test_sql_path_bitwise_equals_df_path(seeded):
+    """Every VARIANTS shape: the compiled statement's slice equals the
+    DataFrame-operator reference at full precision, one template per
+    shape."""
     for kw in VARIANTS:
-        # same task both passes; flush the slice cache between them so
-        # the second call cannot be served the first call's slice
-        seeded.serving_sql_enabled = True
         seeded._cache.clear()
-        a = seeded.retrieve(**kw)
-        seeded.serving_sql_enabled = False
-        seeded._cache.clear()
-        b = seeded.retrieve(**kw)
-        _slices_equal(a, b)
-    seeded.serving_sql_enabled = True
-    # the comparisons above must have exercised the REAL fast path —
-    # an analysis-error fallback would compare DF against DF; dump the
-    # failing statement for diagnosis if one happened
-    if seeded._srv_fallbacks:
-        err, text = seeded._srv_last_error
-        with open("/tmp/srv_sql_fail.txt", "w") as fh:
-            fh.write(err + "\n\n" + text)
-    assert seeded._srv_fallbacks == 0, seeded._srv_last_error and seeded._srv_last_error[0]
-    assert seeded._srv_hits >= len(VARIANTS)
+        _slices_equal(seeded.retrieve(**kw), _reference_slice(seeded, **kw))
+    assert len(seeded._srv_templates) == len(VARIANTS)
 
 
 def test_sql_path_sees_fresh_writes(seeded, spark):
@@ -177,9 +291,10 @@ def test_compiler_literals_roundtrip():
 
     assert SS.double_literal(0.1) == "0.1D"
     assert SS.double_literal(1e-07) == "1e-07D"
-    # quotes escape by DOUBLING — valid in both
-    # spark.sql.parser.escapedStringLiterals modes (ADVICE r11)
-    assert SS.string_literal("o'brien") == "'o''brien'"
+    # plain values keep plain text; a quote, backslash or `@` moves the
+    # value to a hex binary literal, exact under either parser mode
+    assert SS.string_literal("proj-a") == "'proj-a'"
+    assert SS.string_literal("o'brien") == "CAST(X'6F27627269656E' AS STRING)"
     # the python fold must equal the JVM's left-to-right double fold
     import math
 
@@ -188,6 +303,27 @@ def test_compiler_literals_roundtrip():
     for v in qv:
         acc += v * v
     assert SS.qv_norm(qv) == math.sqrt(acc)
+
+
+@pytest.mark.parametrize("mode", ["false", "true"])
+def test_string_literal_reads_back_exactly_in_both_parser_modes(spark, mode):
+    """Every string the compiled statement embeds must read back as the
+    same value under either spark.sql.parser.escapedStringLiterals
+    setting: quotes, backslashes (a trailing one too), a substitution
+    token, non-ASCII text and control characters."""
+    from alma_memory_spark.operators import serving_sql as SS
+
+    values = [
+        "o'brien", "a\\b", "trailing\\", "x'y\\'z", "@QV@",
+        "héllo wörld 日本", "\n\t", "plain-scope_1",
+    ]
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", mode)
+    try:
+        for v in values:
+            got = spark.sql("SELECT " + SS.string_literal(v)).collect()[0][0]
+            assert got == v, (mode, v, got)
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
 
 
 def test_now_epoch_matches_spark_cast(spark):
@@ -208,47 +344,29 @@ def test_now_epoch_matches_spark_cast(spark):
 
 
 def test_unsupported_shapes_fall_back(seeded):
+    """A shape no serving path can serve is refused at compile time."""
     from alma_memory_spark.operators import serving_sql as SS
 
     with pytest.raises(SS.ServingSQLUnsupported):
         SS.compile_serving_template(
             [], 5, 0.2, None, None, None, ("a",), prefs=None
         )
-    # engine-level: a compiler rejection must not break retrieve
-    import alma_memory_spark.engine as EM
-
-    orig = EM.AlmaSpark._sql_serving_rows
-
-    def boom(self, *a, **kw):
-        raise SS.ServingSQLUnsupported("forced")
-
-    EM.AlmaSpark._sql_serving_rows = boom
-    try:
-        seeded._cache.clear()
-        sl = seeded.retrieve("fallback path works", agent="helena", project_id="proj-a")
-        assert sl is not None
-    finally:
-        EM.AlmaSpark._sql_serving_rows = orig
 
 
 def test_batch_sql_path_bitwise_equals_df_path(seeded):
-    """r11: retrieve_batch's compiled-SQL path (qid-dimension VALUES
-    bind) is bit-identical to the DataFrame batch path at full
+    """r11: retrieve_batch's compiled statement (qid-dimension VALUES
+    bind) is bit-identical to the DataFrame-operator reference at full
     precision, including the preferences branch."""
     tasks = [
         "validate schema before writing rows",
         "mock the api layer and assert contracts",
         "remember the deployment switchover",
     ]
-    seeded.serving_sql_enabled = True
     seeded._cache.clear()
     a = seeded.retrieve_batch(tasks, agent="helena", project_id="proj-a",
                               user_id="u1", top_k=7)
-    seeded.serving_sql_enabled = False
-    seeded._cache.clear()
-    b = seeded.retrieve_batch(tasks, agent="helena", project_id="proj-a",
-                              user_id="u1", top_k=7)
-    seeded.serving_sql_enabled = True
+    b = _reference_batch(seeded, tasks, agent="helena", project_id="proj-a",
+                         user_id="u1", top_k=7)
     assert set(a) == set(b) == set(tasks)
     for t in tasks:
         _slices_equal(a[t], b[t])
@@ -258,9 +376,9 @@ def test_reserved_column_collision_falls_back(spark, tmp_path):
     """r11: a store table already exposing a pipeline-added column
     (e.g. `similarity` — seen in the wild via StructType.add's
     in-place-mutation footgun) must NOT produce an ambiguous compiled
-    statement: the compiler refuses, the engine falls back to the
-    DataFrame path (whose withColumn REPLACES the column), and the
-    retrieve still serves."""
+    statement: the stored column stays out of the branch's projection
+    and the computed one replaces it, as the DataFrame operators'
+    withColumn does."""
     from pyspark.sql import types as T
 
     from alma_memory_spark.embedding import HashEmbedder, hash_embed
@@ -286,10 +404,12 @@ def test_reserved_column_collision_falls_back(spark, tmp_path):
     )
     eng.store.append("domain_knowledge", spark.createDataFrame(rows, schema))
     sl = eng.retrieve("fact number 3", agent="helena", project_id="p")
-    assert sl.domain_knowledge, "retrieve must still serve via fallback"
-    # the compiler refused (no analysis error, no sql hit for dk)
-    assert eng._srv_fallbacks == 0 and eng._srv_last_error is None
-    assert eng._srv_hits == 0
+    assert sl.domain_knowledge
+    assert len(eng._srv_templates) == 1
+    assert all(r["similarity"] != 0.123 for r in sl.domain_knowledge)
+    _slices_equal(
+        sl, _reference_slice(eng, "fact number 3", agent="helena", project_id="p")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -300,83 +420,56 @@ def test_reserved_column_collision_falls_back(spark, tmp_path):
 def test_ann_sql_path_bitwise_equals_df_path(seeded):
     """retrieve(use_ann=True) with a scope-expressible IVF index now
     compiles: the probe stays on the index path and its candidate set
-    binds as a VALUES table. Mixed branch shapes (only domain_knowledge
-    indexed; heuristics/outcomes/anti_patterns keep the exact cosine
-    scan) must still be bit-identical to the DataFrame ANN path, with
-    the fast path actually taken (hit counters, zero fallbacks)."""
+    binds as its candidate table. Mixed branch shapes (only
+    domain_knowledge indexed; heuristics/outcomes/anti_patterns keep the
+    exact cosine scan) must still be bit-identical to the DataFrame
+    reference over the same probe, from one template (nprobe is bound
+    per call)."""
     rep = seeded.index_vectors("domain_knowledge", cent_every=7)
     assert rep["indexed"]
+    seeded._srv_templates.clear()
     for nprobe in (rep["n_cells"], 1):
-        seeded.serving_sql_enabled = True
-        seeded._cache.clear()
-        h0, f0 = seeded._srv_hits, seeded._srv_fallbacks
-        a = seeded.retrieve(
-            "validate schema before writing", agent="helena",
+        kw = dict(
+            task="validate schema before writing", agent="helena",
             project_id="proj-a", top_k=6, use_ann=True, nprobe=nprobe,
         )
-        assert seeded._srv_hits == h0 + 1, seeded._srv_last_error
-        assert seeded._srv_fallbacks == f0
-        seeded.serving_sql_enabled = False
         seeded._cache.clear()
-        b = seeded.retrieve(
-            "validate schema before writing", agent="helena",
-            project_id="proj-a", top_k=6, use_ann=True, nprobe=nprobe,
-        )
-        _slices_equal(a, b)
-    seeded.serving_sql_enabled = True
+        _slices_equal(seeded.retrieve(**kw), _reference_slice(seeded, **kw))
+    assert len(seeded._srv_templates) == 1
 
 
 def test_ann_sql_empty_candidates_matches_df(seeded):
     """A scoped ANN probe that returns NO candidates binds as the
-    all-NULL VALUES row — the inner join matches nothing, exactly the
-    DataFrame path's empty-join branch. No fallback, no analysis
-    error."""
+    empty candidate table — the inner join matches nothing, exactly
+    the DataFrame reference's empty-join branch."""
     seeded.index_vectors("domain_knowledge", cent_every=7)
-    seeded.serving_sql_enabled = True
-    seeded._cache.clear()
-    h0 = seeded._srv_hits
-    a = seeded.retrieve(
-        "anything at all", agent="ghost_agent", project_id="proj-a",
+    kw = dict(
+        task="anything at all", agent="ghost_agent", project_id="proj-a",
         use_ann=True, nprobe=2,
     )
-    assert seeded._srv_hits == h0 + 1, seeded._srv_last_error
+    seeded._cache.clear()
+    a = seeded.retrieve(**kw)
     assert a.domain_knowledge == []
-    seeded.serving_sql_enabled = False
-    seeded._cache.clear()
-    b = seeded.retrieve(
-        "anything at all", agent="ghost_agent", project_id="proj-a",
-        use_ann=True, nprobe=2,
-    )
-    seeded.serving_sql_enabled = True
-    _slices_equal(a, b)
+    _slices_equal(a, _reference_slice(seeded, **kw))
 
 
 def test_ann_batch_sql_path_bitwise_equals_df_path(seeded):
-    """retrieve_batch(use_ann=True): search_batch's (qid, id,
-    similarity) candidates bind as one VALUES table; per-task slices
-    bit-identical to the DataFrame batch ANN path."""
+    """retrieve_batch(use_ann=True): the batch probe's (qid, id,
+    similarity) candidates join in as one table; per-task slices
+    bit-identical to the DataFrame reference over search_batch."""
     rep = seeded.index_vectors("domain_knowledge", cent_every=7)
     tasks = [
         "validate schema before writing rows",
         "mock the api layer and assert contracts",
         "remember the deployment switchover",
     ]
-    seeded.serving_sql_enabled = True
     seeded._cache.clear()
-    h0, f0 = seeded._srv_hits, seeded._srv_fallbacks
-    a = seeded.retrieve_batch(
-        tasks, agent="helena", project_id="proj-a", top_k=6,
-        use_ann=True, nprobe=rep["n_cells"],
-    )
-    assert seeded._srv_hits == h0 + 1, seeded._srv_last_error
-    assert seeded._srv_fallbacks == f0
-    seeded.serving_sql_enabled = False
-    seeded._cache.clear()
-    b = seeded.retrieve_batch(
-        tasks, agent="helena", project_id="proj-a", top_k=6,
-        use_ann=True, nprobe=rep["n_cells"],
-    )
-    seeded.serving_sql_enabled = True
+    seeded._srv_templates.clear()
+    kw = dict(agent="helena", project_id="proj-a", top_k=6, use_ann=True,
+              nprobe=rep["n_cells"])
+    a = seeded.retrieve_batch(tasks, **kw)
+    assert len(seeded._srv_templates) == 1
+    b = _reference_batch(seeded, tasks, **kw)
     for t in tasks:
         _slices_equal(a[t], b[t])
 
@@ -394,19 +487,18 @@ def test_ann_batch_small_routes_to_sql_text_probe(seeded, monkeypatch):
 
     rep = seeded.index_vectors("domain_knowledge", cent_every=7)
     tasks = ["probe text routing one", "probe text routing two"]
-    seeded.serving_sql_enabled = True
     seeded._cache.clear()
+    seeded._srv_templates.clear()
 
     def boom(self, *a, **kw):
         raise AssertionError("search_batch frame built for a small batch")
 
     monkeypatch.setattr(IVFIndex, "search_batch", boom)
-    h0 = seeded._srv_hits
     out = seeded.retrieve_batch(
         tasks, agent="helena", project_id="proj-a", top_k=6,
         use_ann=True, nprobe=rep["n_cells"],
     )
-    assert seeded._srv_hits == h0 + 1, seeded._srv_last_error
+    assert len(seeded._srv_templates) == 1
     assert out[tasks[0]] is not None
     monkeypatch.undo()
 
@@ -431,104 +523,108 @@ def test_ann_batch_small_routes_to_sql_text_probe(seeded, monkeypatch):
         _slices_equal(out[t], out2[t])
 
 
+def _dk_row(rid, agent, project_id, fact):
+    from alma_memory_spark.embedding import hash_embed
+
+    return {
+        "id": rid, "agent": agent, "project_id": project_id,
+        "domain": "d", "fact": fact, "source": "user_stated",
+        "confidence": 0.9, "last_verified": ANCHOR,
+        "verification_status": None, "embedding": hash_embed(fact, 16),
+        "metadata": {},
+    }
+
+
+def _append_dk(eng, *rows):
+    eng.store.append(
+        "domain_knowledge",
+        eng.spark.createDataFrame(list(rows), schemas.DOMAIN_KNOWLEDGE),
+    )
+
+
+#: scope strings that stress the literal encoder: a quote, backslashes
+#: (one trailing) and a quote-backslash pair
+_AWKWARD_AGENT, _AWKWARD_PROJECT = "o'brien\\", "proj\\'x"
+
+
 def test_token_collision_refuses_to_compile(seeded):
-    """ADVICE r11: bind() does global token substitution, so a config
-    string CONTAINING a token (here a project id with @NOWD@) must
-    refuse at compile time and fall back to the DataFrame path —
-    never silently rewrite the literal."""
+    """ADVICE r11: bind() does global token substitution, so a string
+    value CONTAINING a token (here a project id with @NOWD@) must reach
+    the statement untouched — string_literal hex-encodes any value with
+    an `@` — and be served with the right rows. An identifier carrying
+    a token is still refused at compile time."""
     from alma_memory_spark.operators import serving_sql as SS
 
     with pytest.raises(SS.ServingSQLUnsupported):
         SS.compile_serving_template(
-            [SS.BranchInput("domain_knowledge", "v", ("id", "embedding"), (("id", "string"), ("embedding", "array<float>")))],
-            5, 0.2, None, None, "proj@NOWD@x", ("a",),
+            [SS.BranchInput("domain_knowledge", "v", ("id", "embedding", "x@NOWD@"), (("id", "string"), ("embedding", "array<float>"), ("x@NOWD@", "string")))],
+            5, 0.2, None, None, "proj", ("a",),
         )
-    # engine-level: the retrieve still serves (DF fallback), 0 sql hits
+    _append_dk(seeded, _dk_row("tok1", "helena", "proj@NOWD@x", "token safety fact"))
     seeded._cache.clear()
-    h0 = seeded._srv_hits
+    seeded._srv_templates.clear()
     sl = seeded.retrieve(
-        "token safety", agent="helena", project_id="proj@NOWD@x",
+        "token safety fact", agent="helena", project_id="proj@NOWD@x",
     )
-    assert sl is not None
-    assert seeded._srv_hits == h0
-    assert seeded._srv_fallbacks == 0 and (
-        seeded._srv_last_error is None
-    ), "compiler must refuse BEFORE any analysis error"
+    assert len(seeded._srv_templates) == 1
+    assert [r["id"] for r in sl.domain_knowledge] == ["tok1"]
+    assert sl.heuristics == [] and sl.outcomes == []
 
 
 def test_legacy_parser_mode_refuses_to_compile(seeded, spark):
     """ADVICE r11: under spark.sql.parser.escapedStringLiterals=true
-    the \\' escaping rules change — the engine must refuse to compile
-    (DataFrame fallback) rather than risk splicing text into the
-    statement."""
+    backslash escapes are not processed. The statement is still served
+    (one template compiled) and its slices equal the default mode's,
+    for an agent and project carrying quotes and backslashes."""
+    _append_dk(seeded, _dk_row("awk1", _AWKWARD_AGENT, _AWKWARD_PROJECT, "legacy parser mode"))
+    kw = dict(task="legacy parser mode", agent=_AWKWARD_AGENT,
+              project_id=_AWKWARD_PROJECT)
+    seeded._cache.clear()
+    seeded._srv_templates.clear()
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
-        seeded._cache.clear()
-        seeded._srv_templates.clear()
-        h0 = seeded._srv_hits
-        sl = seeded.retrieve(
-            "legacy parser mode", agent="helena", project_id="proj-a"
-        )
-        assert sl is not None
-        assert seeded._srv_hits == h0
+        legacy = seeded.retrieve(**kw)
+        assert len(seeded._srv_templates) == 1
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     seeded._cache.clear()
-    sl2 = seeded.retrieve(
-        "legacy parser mode again", agent="helena", project_id="proj-a"
-    )
-    assert seeded._srv_hits == h0 + 1, "default mode compiles again"
-    assert sl2 is not None
+    seeded._srv_templates.clear()
+    default = seeded.retrieve(**kw)
+    assert [r["id"] for r in default.domain_knowledge] == ["awk1"]
+    _slices_equal(legacy, default)
 
 
 def test_parser_mode_flip_after_template_cached(seeded, spark):
-    """ADVICE r12: a template cached under the default parser mode
-    must NOT execute after escapedStringLiterals flips to true — its
-    literals were escaped for the default mode. The per-run check in
-    _srv_run forces the DataFrame fallback even on a cache hit."""
+    """ADVICE r12: a template cached under the default parser mode and
+    run after escapedStringLiterals flips to true must serve the same
+    slice: its literals read back the same under either mode."""
+    _append_dk(seeded, _dk_row("awk2", _AWKWARD_AGENT, _AWKWARD_PROJECT, "flip check"))
+    kw = dict(task="flip check", agent=_AWKWARD_AGENT, project_id=_AWKWARD_PROJECT)
     seeded._cache.clear()
-    sl = seeded.retrieve("flip check", agent="helena", project_id="proj-a")
-    assert sl is not None
-    h0 = seeded._srv_hits
-    assert h0 > 0, "template cached under default mode"
+    seeded._srv_templates.clear()
+    sl = seeded.retrieve(**kw)
+    assert [r["id"] for r in sl.domain_knowledge] == ["awk2"]
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
         seeded._cache.clear()
-        sl2 = seeded.retrieve("flip check", agent="helena", project_id="proj-a")
-        assert sl2 is not None
-        assert seeded._srv_hits == h0, (
-            "cached template must not execute under the legacy parser mode"
-        )
+        sl2 = seeded.retrieve(**kw)
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    assert len(seeded._srv_templates) == 1, "the cached template served"
+    _slices_equal(sl2, sl)
 
 
 def test_quote_in_scope_string_served_correctly(seeded, spark):
     """A single quote inside an agent/project id must survive the
-    doubled-quote literal in BOTH parser modes' default (the compiled
-    statement analyzes and the scoped read returns the right rows)."""
-    from alma_memory_spark.embedding import hash_embed
-
-    rows = [
-        {
-            "id": "q1", "agent": "o'brien", "project_id": "proj'x",
-            "domain": "d", "fact": "quoted scope fact",
-            "source": "user_stated", "confidence": 0.9,
-            "last_verified": ANCHOR, "verification_status": None,
-            "embedding": hash_embed("quoted scope fact", 16),
-            "metadata": {},
-        }
-    ]
-    seeded.store.append(
-        "domain_knowledge",
-        seeded.spark.createDataFrame(rows, schemas.DOMAIN_KNOWLEDGE),
-    )
+    literal encoder (the compiled statement analyzes and the scoped
+    read returns the right rows)."""
+    _append_dk(seeded, _dk_row("q1", "o'brien", "proj'x", "quoted scope fact"))
     seeded._cache.clear()
-    h0 = seeded._srv_hits
+    seeded._srv_templates.clear()
     sl = seeded.retrieve(
         "quoted scope fact", agent="o'brien", project_id="proj'x"
     )
-    assert seeded._srv_hits == h0 + 1, seeded._srv_last_error
+    assert len(seeded._srv_templates) == 1
     assert [r["id"] for r in sl.domain_knowledge] == ["q1"]
 
 
@@ -610,7 +706,6 @@ def test_concurrent_ann_retrieves_do_not_cross_talk(seeded):
             f2 = ex.submit(seeded.retrieve, **q2)
             _slices_equal(f1.result(), want1)
             _slices_equal(f2.result(), want2)
-    assert seeded._srv_fallbacks == 0, seeded._srv_last_error
     leftover = [
         t.name for t in seeded.spark.catalog.listTables()
         if t.name.startswith("alma_cand_")
