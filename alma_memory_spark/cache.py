@@ -1,9 +1,9 @@
 """The package's one cache primitive: a bounded, locked LRU.
 
-Every in-process cache is an `LRU`: the engine's slice and serving
-template caches, the store read plans, embeddings, the per-session
-table/plan/ship memos, the persisted substring triples and the
-build-once gate indexes. A TTL, like the reference's retrieval cache
+Every in-process cache is an `LRU`: the engine's slice, serving
+template and IVF handle caches, the store read plans, embeddings, the
+per-session table/plan/ship memos, the persisted substring triples and
+the build-once gate indexes. A TTL, like the reference's retrieval cache
 (alma/retrieval/cache.py), is a `valid` predicate.
 
 Session scope: a session-scoped cache keys entries by
@@ -31,9 +31,9 @@ class LRU:
 
     `max_entries=None` is unbounded. `on_evict(value)` runs, outside
     the lock, for every value that leaves the cache: past the bound,
-    on `clear()`, by the session rule, when `get` rejects it, or when
-    `put` replaces it. `None` is not a storable value: `get` returns
-    it for a miss."""
+    on `clear()` or `discard()`, by the session rule, when `get`
+    rejects it, or when `put` replaces it. `None` is not a storable
+    value: `get` returns it for a miss."""
 
     def __init__(
         self,
@@ -98,6 +98,12 @@ class LRU:
             bound = self.max_entries
             while bound is not None and len(self._entries) > bound:
                 gone.append(self._entries.popitem(last=False)[1])
+        self._evicted(gone)
+
+    def discard(self, key: Hashable) -> None:
+        """Drop the entry under `key`, if any, through `on_evict`."""
+        with self._lock:
+            gone = [self._entries.pop(key)] if key in self._entries else []
         self._evicted(gone)
 
     def get_or_build(self, key: Hashable, build: Callable[[], Any]):

@@ -126,6 +126,8 @@ class AlmaSpark:
         self._srv_lock = threading.Lock()
         self._srv_views: dict[tuple, tuple] = {}
         self._srv_templates = LRU(64)
+        #: table -> (_CURRENT mtime, IVFIndex); see _load_ivf
+        self._ivf_handles = LRU()
 
     # ------------------------------------------------------------------
     # helpers
@@ -1373,14 +1375,11 @@ class AlmaSpark:
                 mtime = os.path.getmtime(os.path.join(path, "centroids"))
             except OSError:
                 mtime = -1.0
-        cache = getattr(self, "_ivf_handles", None)
-        if cache is None:
-            cache = self._ivf_handles = {}
-        hit = cache.get(table)
-        if hit is not None and hit[0] == mtime:
+        hit = self._ivf_handles.get(table, valid=lambda e: e[0] == mtime)
+        if hit is not None:
             return hit[1]
         idx = IVFIndex.load(self.spark, path)
-        cache[table] = (mtime, idx)
+        self._ivf_handles.put(table, (mtime, idx))
         return idx
 
     #: index_vectors(pq_m=_PQ_PRESERVE) keeps the existing index's PQ
@@ -1449,8 +1448,7 @@ class AlmaSpark:
             # pq_m -= 1` (ADVICE r5), and this path sits on the tool
             # surface holding the table lock
             raise ValueError(f"pq_m must be a positive int (got {pq_m!r})")
-        self._ivf_handles = getattr(self, "_ivf_handles", {})
-        self._ivf_handles.pop(table, None)  # rebuild invalidates the handle
+        self._ivf_handles.discard(table)  # rebuild invalidates the handle
         if not self.store.exists(table):
             return {"table": table, "n_vectors": 0, "indexed": False}
         full = self.store.read(table).filter(F.col("embedding").isNotNull())

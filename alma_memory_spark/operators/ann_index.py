@@ -898,6 +898,13 @@ class IVFIndex:
             return None
         return self.spark.read.schema(f"id {self.id_type}").parquet(ts)
 
+    def _nearest_cells(self, sims, nprobe: int) -> list:
+        """The nprobe best cells of one row of 6dp-rounded centroid
+        cosines: cosine DESC, cell DESC on ties."""
+        import numpy as np
+
+        return self.cells[np.lexsort((-self.cells, -sims))[:nprobe]].tolist()
+
     def probe_cells(self, query_vec, nprobe: int = 3):
         """Driver-side quantizer probe: nprobe nearest centroids
         (cosine DESC, cell DESC on 6dp ties) — a ~us-scale matmul."""
@@ -905,9 +912,40 @@ class IVFIndex:
 
         q = np.array(query_vec, dtype=np.float64)
         qn = q / max(np.linalg.norm(q), 1e-300)
-        qsims = np.round(self.Cn @ qn, 6)
-        order = np.lexsort((-self.cells, -qsims))
-        return self.cells[order[:nprobe]].tolist(), qn
+        return self._nearest_cells(np.round(self.Cn @ qn, 6), nprobe), qn
+
+    def _probe_batch(self, queries: list, nprobe: int):
+        """The batch probe shared by search_batch and its subquery
+        form: (qids, Qn, probed cell set per query). qids fold through
+        str() and must stay unique; Qn holds the L2-normalized queries;
+        one matmul probes them all with probe_cells' tie rule."""
+        import numpy as np
+
+        qids = [str(q) for q, _v in queries]
+        if len(set(qids)) != len(qids):
+            raise ValueError("duplicate qid in batch (after str() folding)")
+        Qn = np.array([np.array(v, dtype=np.float64) for _q, v in queries])
+        Qn = Qn / np.maximum(np.linalg.norm(Qn, axis=1, keepdims=True), 1e-300)
+        if not len(self.cells):
+            return qids, Qn, [set() for _q in qids]
+        qsims = np.round(Qn @ self.Cn.T, 6)  # |Q| x n_cells
+        return qids, Qn, [set(self._nearest_cells(r, nprobe)) for r in qsims]
+
+    def _filter_values(self, filters: dict | None) -> list[tuple[str, list]]:
+        """(column, allowed values) per scope filter. A filter value is
+        one value or a list/tuple/set of them; every column must be an
+        indexed extra_col, else ValueError."""
+        indexed = [n for n, _t in self.extra_cols]
+        out = []
+        for col, val in (filters or {}).items():
+            if col not in indexed:
+                raise ValueError(
+                    f"filter column '{col}' was not indexed "
+                    f"(extra_cols={indexed})"
+                )
+            many = isinstance(val, (list, tuple, set, frozenset))
+            out.append((col, list(val) if many else [val]))
+        return out
 
     def _guarded_lists(
         self,
@@ -915,49 +953,20 @@ class IVFIndex:
         filters: dict | None,
         live_ids: "DataFrame | None",
     ) -> DataFrame:
-        """The shared candidate scan of search()/search_batch(): lists
-        pruned to `cells` (PartitionFilters), scope-filter validation +
-        pushdown, tombstone anti-join, optional live-id semi-join —
-        one implementation so the single and batch paths can never
-        diverge on a staleness or scoping rule."""
+        """The candidate scan of the DataFrame probes (search_batch,
+        search_pq, SemDedupIndex): lists pruned to `cells`
+        (PartitionFilters), scope-filter pushdown, tombstone anti-join,
+        optional live-id semi-join — the guards of the SQL probes'
+        _sql_scan and _sql_filter_conds, in the same order."""
         pruned = self._lists_df().filter(F.col("cell").isin(cells))
-        for col, val in (filters or {}).items():
-            if col not in {n for n, _t in self.extra_cols}:
-                raise ValueError(
-                    f"filter column '{col}' was not indexed "
-                    f"(extra_cols={[n for n, _t in self.extra_cols]})"
-                )
-            if isinstance(val, (list, tuple, set, frozenset)):
-                pruned = pruned.filter(F.col(col).isin(list(val)))
-            else:
-                pruned = pruned.filter(F.col(col) == val)
+        for col, vals in self._filter_values(filters):
+            pruned = pruned.filter(F.col(col).isin(vals))
         dead = self.tombstones()
         if dead is not None:
             pruned = pruned.join(F.broadcast(dead), "id", "left_anti")
         if live_ids is not None:
             pruned = pruned.join(live_ids.toDF("id"), "id", "left_semi")
         return pruned
-
-    @staticmethod
-    def _jvm_sim(qvec_lit) -> "F.Column":
-        """round(dot(embedding, qn) / max(|embedding|, 1e-300), 6) as a
-        pure column expression — the JVM scoring kernel (r13, VERDICT
-        r12 #4). Parity with the Arrow/numpy kernel at the 6dp round
-        is EMPIRICAL, not guaranteed (ADVICE r13 #3): this kernel is a
-        sequential left-to-right double fold rounded by Spark's
-        BigDecimal HALF_UP, while numpy uses pairwise/BLAS summation
-        rounded half-to-even — a dot product landing within one ulp of
-        a 6dp rounding boundary can flip the last digit and hence a
-        top-k tiebreak. Contract tests pin identity on the test
-        corpora (test_ann_kernel_identity); callers needing strict
-        bit-identity across kernels must pin ONE kernel."""
-        from alma_memory_spark.functions.vector import dot_product, l2_norm
-
-        return F.round(
-            dot_product(F.col("embedding"), qvec_lit)
-            / F.greatest(l2_norm(F.col("embedding")), F.lit(1e-300)),
-            6,
-        )
 
     def search(
         self,
@@ -966,30 +975,16 @@ class IVFIndex:
         nprobe: int = 3,
         live_ids: DataFrame | None = None,
         filters: dict | None = None,
-        kernel: str = "jvm",
     ) -> DataFrame:
-        """Exact cosine top-k inside the nprobe probed cells only.
+        """Exact cosine top-k inside the nprobe probed cells only: one
+        spark.sql() over search_sql_subquery's text.
 
-        The `cell isin probed` predicate lands in the scan's
+        The `cell IN (probed)` predicate lands in the scan's
         PartitionFilters (cell is a partition column), so the job reads
         nprobe directories out of n_cells — the plan shape is a pruned
-        narrow scan -> scoring kernel -> TakeOrderedAndProject.
-        Returns (id, similarity) sorted DESC with id ASC tiebreak.
-
-        `kernel` (r13, VERDICT r12 #4): 'jvm' (default) scores with a
-        column expression (sequential-fold dot / norm, 6dp round) — the
-        whole probe stays JVM-side, which removes the Python-worker
-        round trip (~0.15 s of fixed serving latency in local mode)
-        that dominated warm ANN retrieves; the compiled-SQL serving
-        statement becomes a single pure-SQL job. 'arrow' keeps the
-        fused numpy kernel — per-element interpreted fold costs more
-        per ROW, so prefer it when a single probe must scan very large
-        candidate sets (≳10^5 rows: huge per-cell occupancy, or
-        nprobe ~ n_cells); pruned index reads are occupancy-bounded,
-        so 'jvm' wins for serving. Cross-kernel parity at the 6dp
-        rounding is EMPIRICAL — contract-tested on these corpora, not
-        guaranteed (see _jvm_sim: fold order and rounding mode differ);
-        pin one kernel where strict bit-identity is a contract.
+        narrow scan -> scoring expression -> TakeOrderedAndProject,
+        with no Python node. Returns (id, similarity) sorted DESC with
+        id ASC tiebreak.
 
         Staleness guards, both applied BEFORE the top-k cut:
         - persisted tombstones (forget()) are anti-joined out, so a
@@ -1004,22 +999,18 @@ class IVFIndex:
           the attribute columns stored in the lists (extra_cols at
           build) — they land in the pruned scan's PushedFilters, so a
           scoped search stays an index-only read."""
-        import numpy as np
-        import pandas as pd
+        import uuid
 
-        from alma_memory_spark.session import ensure_package_shipped
-
-        if kernel == "jvm" and live_ids is None:
-            # the whole probe as ONE spark.sql() call (r13): building
-            # the fold expressions through the Column API costs
-            # ~145 ms/call of py4j round trips; the SQL text parses
-            # JVM-side in ~10-25 ms. Identical plan and results
-            # (contract-tested vs both other forms), and string filter
-            # values read back the same under either parser mode.
-            # live_ids is a DataFrame — that shape keeps the Column
-            # path below.
+        live_view = None
+        if live_ids is not None:
+            # a per-call name: concurrent searches on one handle must
+            # not serve each other's live sets
+            live_view = f"alma_live_{uuid.uuid4().hex[:12]}"
+            live_ids.toDF("id").createOrReplaceTempView(live_view)
+        try:
             sub = self.search_sql_subquery(
-                query_vec, k=k, nprobe=nprobe, filters=filters
+                query_vec, k=k, nprobe=nprobe, filters=filters,
+                live_view=live_view,
             )
             # the subquery already orders + limits; re-sorting the tiny
             # k-row result keeps the ordering a DataFrame-API contract
@@ -1027,44 +1018,11 @@ class IVFIndex:
             return self.spark.sql(f"SELECT * FROM {sub} AS c").orderBy(
                 F.desc("similarity"), F.asc("id")
             )
-        probed, qn = self.probe_cells(query_vec, nprobe)
-        pruned = self._guarded_lists(probed, filters, live_ids)
-        if kernel == "jvm":
-            qlit = F.array(*[F.lit(float(x)) for x in qn])
-            hits = pruned.select(
-                "id", self._jvm_sim(qlit).alias("similarity")
-            )
-        else:
-            ensure_package_shipped(self.spark)
-            # the query vector rides the task closure (tiny,
-            # auto-serialized); a per-query sparkContext.broadcast would
-            # leak one live broadcast per search() in a long-lived
-            # serving process (the returned DataFrame is lazy, so there
-            # is no safe destroy point)
-            qn_ = qn
-
-            def score(it):
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                    Vn = V / np.maximum(
-                        np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "id": pdf["id"].to_numpy(),
-                            "similarity": np.round(Vn @ qn_, 6),
-                        }
-                    )
-
-            hits = pruned.select("id", "embedding").mapInPandas(
-                score, f"id {self.id_type}, similarity double"
-            )
-        if self.n_assign > 1:
-            # multi-membership copies score identically — keep one
-            hits = hits.dropDuplicates(["id"])
-        return hits.orderBy(F.desc("similarity"), F.asc("id")).limit(k)
+        finally:
+            # spark.sql() has analysed the statement, so the frame
+            # holds the view's plan and no longer needs its name
+            if live_view is not None:
+                self.spark.catalog.dropTempView(live_view)
 
     def _sql_lists_view(self) -> str:
         """Register (or refresh) the memoized lists plan as a STABLE
@@ -1120,13 +1078,18 @@ class IVFIndex:
 
     @staticmethod
     def _sql_sim_text(qv_expr: str) -> str:
-        """The _jvm_sim scoring kernel as SQL TEXT over a lists-row
-        alias `l` — round(dot(l.embedding, qv) / max(|l.embedding|,
-        1e-300), 6) with the same casts and sequential fold order the
-        Column kernel compiles to (pinned by
-        test_sql_subquery_matches_search). `qv_expr` is either a
-        driver-normalized array literal (single-query probe) or a
-        column reference into an inline VALUES probe table (batch)."""
+        """The exact scoring expression as SQL TEXT over a lists-row
+        alias `l`: round(dot(l.embedding, qv) / max(|l.embedding|,
+        1e-300), 6), a sequential left-to-right double fold rounded
+        HALF_UP. `qv_expr` is either a driver-normalized array literal
+        (single-query probe) or a column reference into an inline
+        VALUES probe table (batch).
+
+        Parity with search_batch's numpy kernel at the 6dp round is
+        EMPIRICAL, not guaranteed: numpy sums pairwise/BLAS-blocked and
+        rounds half-to-even, so a dot product within one ulp of a 6dp
+        boundary can flip the last digit and hence a top-k tiebreak.
+        Tests pin identity on their corpora against a numpy oracle."""
         cast = "x -> CAST(x AS DOUBLE)"
         dot = (
             "aggregate(zip_with("
@@ -1141,34 +1104,44 @@ class IVFIndex:
 
     def _sql_filter_conds(self, filters: dict | None) -> list[str]:
         """Equality/IN predicates on indexed extra_cols as SQL text —
-        shared by the single-query and batch subquery emitters.
-        Raises ValueError on a non-indexed column; string values go
-        through serving_sql.string_literal (exact under either parser
-        mode)."""
+        shared by the single-query and batch subquery emitters. Each
+        value keeps its type: strings go through
+        serving_sql.string_literal (exact under either parser mode),
+        bools read TRUE/FALSE, integers stay integral (a double
+        literal would merge bigints past 2^53) and only floats are
+        double literals."""
+        import numbers
+
         from alma_memory_spark.operators.serving_sql import (
             double_literal,
             string_literal,
         )
 
-        conds: list[str] = []
-        indexed = {n for n, _t in self.extra_cols}
-        for col, val in (filters or {}).items():
-            if col not in indexed:
-                raise ValueError(
-                    f"filter column '{col}' was not indexed "
-                    f"(extra_cols={sorted(indexed)})"
-                )
-            vals = (
-                list(val)
-                if isinstance(val, (list, tuple, set, frozenset))
-                else [val]
-            )
-            lits = [
-                string_literal(v) if isinstance(v, str) else double_literal(float(v))
-                for v in vals
-            ]
-            conds.append(f"l.`{col}` IN ({','.join(lits)})")
-        return conds
+        def lit(v) -> str:
+            if isinstance(v, str):
+                return string_literal(v)
+            if isinstance(v, bool):
+                return "TRUE" if v else "FALSE"
+            if isinstance(v, numbers.Integral):
+                return str(int(v))
+            return double_literal(float(v))
+
+        return [
+            f"l.`{col}` IN ({','.join(lit(v) for v in vals)})"
+            for col, vals in self._filter_values(filters)
+        ]
+
+    def _sql_scan(self, live_view: str | None = None) -> str:
+        """The guarded lists relation of the SQL probes, as FROM text
+        over the stable views: lists `l`, the tombstone anti-join and,
+        when `live_view` names a one-column (id) view, its semi-join."""
+        tomb_view = self._sql_tombstones_view()
+        scan = f"`{self._sql_lists_view()}` l"
+        if tomb_view is not None:
+            scan += f" LEFT ANTI JOIN `{tomb_view}` d ON l.`id` = d.`id`"
+        if live_view is not None:
+            scan += f" LEFT SEMI JOIN `{live_view}` v ON l.`id` = v.`id`"
+        return scan
 
     def search_sql_subquery(
         self,
@@ -1176,9 +1149,10 @@ class IVFIndex:
         k: int = 10,
         nprobe: int = 3,
         filters: dict | None = None,
+        live_view: str | None = None,
     ) -> str:
-        """search(kernel='jvm') as a parenthesized SQL SUBQUERY string
-        — `(SELECT id, similarity FROM ... ORDER BY ... LIMIT k)` —
+        """search() as a parenthesized SQL SUBQUERY string —
+        `(SELECT id, similarity FROM ... ORDER BY ... LIMIT k)` —
         over the stable lists/tombstones views (r13, VERDICT r12 #4).
 
         Why TEXT and not a DataFrame: the serving hot path measured
@@ -1190,12 +1164,10 @@ class IVFIndex:
         serving statement in place of a candidate-view reference —
         zero per-call py4j, zero temp-view register/drop churn.
 
-        Contract: bit-identical to search(kernel='jvm') — the SQL
-        parses to the same Catalyst expressions as the Column kernel
-        (same casts, same fold order, same 6dp round; pinned by
-        test_sql_subquery_matches_search). Scope filters must name
-        indexed extra_cols, as in search(). live_ids is not supported
-        here (serving uses indexed scope filters instead)."""
+        Scope filters must name indexed extra_cols. `live_view` names
+        a registered one-column (id) view that is semi-joined in after
+        the tombstone anti-join, before the top-k cut (search()'s
+        live_ids; serving uses indexed scope filters instead)."""
         from alma_memory_spark.operators.serving_sql import double_literal
 
         probed, qn = self.probe_cells(query_vec, nprobe)
@@ -1206,28 +1178,20 @@ class IVFIndex:
                 f"(SELECT CAST(NULL AS {self.id_type}) AS `id`, "
                 "CAST(NULL AS DOUBLE) AS `similarity` WHERE FALSE)"
             )
-        lists_view = self._sql_lists_view()
-        tomb_view = self._sql_tombstones_view()
-
+        scan = self._sql_scan(live_view)
         qarr = "array(" + ",".join(double_literal(float(x)) for x in qn) + ")"
         sim = self._sql_sim_text(qarr)
 
         conds = [
             "l.`cell` IN (" + ",".join(str(int(c)) for c in probed) + ")"
         ] + self._sql_filter_conds(filters)
-        anti = (
-            f" LEFT ANTI JOIN `{tomb_view}` d ON l.`id` = d.`id`"
-            if tomb_view is not None
-            else ""
-        )
         inner = (
             f"SELECT l.`id` AS `id`, {sim} AS `similarity` "
-            f"FROM `{lists_view}` l{anti} WHERE " + " AND ".join(conds)
+            f"FROM {scan} WHERE " + " AND ".join(conds)
         )
         if self.n_assign > 1:
             # multi-membership copies carry identical similarity (same
-            # row, same expression) — DISTINCT keeps one, mirroring
-            # search()'s dropDuplicates(["id"])
+            # row, same expression) — DISTINCT keeps one
             inner = f"SELECT DISTINCT `id`, `similarity` FROM ({inner})"
         return (
             f"(SELECT `id`, `similarity` FROM ({inner}) "
@@ -1255,18 +1219,14 @@ class IVFIndex:
         one string: probes run driver-side (one numpy matmul), the
         (qid, cell) membership and (qid, qvec) query rows ride inline
         VALUES tables joined to the pruned lists scan, scoring uses
-        the same _sql_sim_text kernel, and the per-qid top-k is one
-        window. Zero per-call py4j, zero temp views, no Python node in
-        the executed plan.
+        the same _sql_sim_text expression, and the per-qid top-k is
+        one window. Zero per-call py4j, zero temp views, no Python
+        node in the executed plan.
 
-        Contract: row-identical to search_batch(kernel='jvm') (same
-        probe ties, same DISTINCT-on-multi-assign, same rounding/
-        tiebreaks; pinned by test_batch_sql_subquery_matches). Parity
-        with kernel='arrow' is empirical at the 6dp round (see
-        _jvm_sim). live_ids is not supported (serving uses indexed
-        scope filters)."""
-        import numpy as np
-
+        Same probe ties, DISTINCT-on-multi-assign and tiebreaks as
+        search_batch; parity with its numpy scores is empirical at the
+        6dp round (see _sql_sim_text). live_ids is not supported
+        (serving uses indexed scope filters)."""
         from alma_memory_spark.operators.serving_sql import (
             double_literal,
             string_literal,
@@ -1280,23 +1240,11 @@ class IVFIndex:
         )
         if not queries:
             return empty
-        qids = [str(q) for q, _v in queries]
-        if len(set(qids)) != len(qids):
-            raise ValueError("duplicate qid in batch (after str() folding)")
-        Qn = np.array([np.array(v, dtype=np.float64) for _q, v in queries])
-        Qn = Qn / np.maximum(np.linalg.norm(Qn, axis=1, keepdims=True), 1e-300)
-        if not len(self.cells):
-            return empty
-        # same probe (and probe-tie order) as search_batch
-        qsims = np.round(Qn @ self.Cn.T, 6)
-        probed_per_q = []
-        for row in qsims:
-            order = np.lexsort((-self.cells, -row))
-            probed_per_q.append(set(self.cells[order[:nprobe]].tolist()))
+        qids, Qn, probed_per_q = self._probe_batch(queries, nprobe)
         union_cells = sorted(set().union(*probed_per_q))
-
-        lists_view = self._sql_lists_view()
-        tomb_view = self._sql_tombstones_view()
+        if not union_cells:
+            return empty
+        scan = self._sql_scan()
 
         qrows = ", ".join(
             f"({string_literal(qid)}, array("
@@ -1313,15 +1261,10 @@ class IVFIndex:
         conds = [
             "l.`cell` IN (" + ",".join(str(int(c)) for c in union_cells) + ")"
         ] + self._sql_filter_conds(filters)
-        anti = (
-            f" LEFT ANTI JOIN `{tomb_view}` d ON l.`id` = d.`id`"
-            if tomb_view is not None
-            else ""
-        )
         inner = (
             f"SELECT q.`qid` AS `qid`, l.`id` AS `id`, "
             f"{sim} AS `similarity` "
-            f"FROM `{lists_view}` l{anti} "
+            f"FROM {scan} "
             f"JOIN (VALUES {mrows}) AS m(`qid`, `cell`) "
             "ON l.`cell` = m.`cell` "
             f"JOIN (VALUES {qrows}) AS q(`qid`, `qvec`) "
@@ -1352,7 +1295,6 @@ class IVFIndex:
         nprobe: int = 3,
         live_ids: DataFrame | None = None,
         filters: dict | None = None,
-        kernel: str = "arrow",
     ) -> DataFrame:
         """Multi-query ANN in ONE job — the serving-throughput shape.
 
@@ -1361,128 +1303,87 @@ class IVFIndex:
         pruned scan (FAISS exposes exactly this as the batch dimension
         of Index.search). `queries` is a list of (qid, query_vec);
         returns (qid, id, similarity): each query's exact cosine top-k
-        over ITS nprobe probed cells, per-query results identical to
-        search() — same 6dp rounding, same DESC/id-ASC tiebreaks.
+        over ITS nprobe probed cells — same 6dp rounding, same
+        DESC/id-ASC tiebreaks as search().
 
         Plan shape: all queries probe the quantizer driver-side (one
         vectorized matmul); the scan prunes to the UNION of probed
         cells (still PartitionFilters — reads max nprobe x |queries|
-        directories, typically far fewer due to overlap); the scoring
-        kernel scores each list row against exactly the queries that
-        probed its cell; one shuffle on qid for the per-query window
-        top-k. Tombstone / live-id / scope-filter guards are identical
-        to search().
+        directories, typically far fewer due to overlap); a fused
+        numpy kernel over Arrow batches scores each list row against
+        exactly the queries that probed its cell (one BLAS matmul per
+        batch, then a per-cell mask); one shuffle on qid for the
+        per-query window top-k. Tombstone / live-id / scope-filter
+        guards are the same as search()'s.
 
-        `kernel` (r13, VERDICT r12 #4): 'arrow' (default) is the fused
-        numpy kernel — per-batch BLAS matmul + mask; the batch
-        dimension amortizes the fixed Python-worker hop to ~5 ms/task
-        at batch 32, and BLAS beats the interpreted pair fold once the
-        batch multiplies the scored-pair count (measured: jvm batch
-        21-24 ms/task vs arrow 15-18 at batch 32 — the OPPOSITE of the
-        single-query trade, where 'jvm' wins because nothing amortizes
-        the hop). 'jvm' broadcast-joins the tiny exploded (qid, cell,
-        qvec) probe table on cell and scores pairs with the
-        column-expression kernel — pure-JVM job, useful when Python
-        workers are unavailable or the batch is tiny. Cross-kernel
-        parity at the 6dp round is empirical (see _jvm_sim), pinned by
-        contract tests on these corpora rather than guaranteed."""
+        The batch dimension amortizes the Python-worker hop: at batch
+        32 this kernel measured 15-18 ms/task against 21-24 for a
+        JVM per-pair fold. Small batches, where nothing amortizes the
+        hop, serve through search_batch_sql_subquery instead (the
+        engine forks on batch length)."""
         import numpy as np
         import pandas as pd
         from pyspark.sql.window import Window as W
 
-        from alma_memory_spark.session import ensure_package_shipped, tiny_df
+        from alma_memory_spark.session import ensure_package_shipped
 
         queries = list(queries)
         if not queries:
             return self.spark.createDataFrame(
                 [], f"qid string, id {self.id_type}, similarity double"
             )
-        qids = [str(q) for q, _v in queries]
-        if len(set(qids)) != len(qids):
-            raise ValueError("duplicate qid in batch (after str() folding)")
-        Qn = np.array(
-            [np.array(v, dtype=np.float64) for _q, v in queries]
-        )
-        Qn = Qn / np.maximum(np.linalg.norm(Qn, axis=1, keepdims=True), 1e-300)
-        # one matmul probes every query; per-query nprobe cut with the
-        # same (sim DESC, cell DESC) tie order as probe_cells
-        qsims = np.round(Qn @ self.Cn.T, 6)  # |Q| x n_cells
-        probed_per_q = []
-        for row in qsims:
-            order = np.lexsort((-self.cells, -row))
-            probed_per_q.append(set(self.cells[order[:nprobe]].tolist()))
+        qids, Qn, probed_per_q = self._probe_batch(queries, nprobe)
         union_cells = sorted(set().union(*probed_per_q))
 
         pruned = self._guarded_lists(union_cells, filters, live_ids)
 
-        if kernel == "jvm":
-            probe_rows = [
-                (qid, [float(x) for x in Qn[i]], int(c))
-                for i, qid in enumerate(qids)
-                for c in sorted(probed_per_q[i])
-            ]
-            probe_df = tiny_df(
-                self.spark,
-                probe_rows,
-                "qid string, _qvec array<double>, cell bigint",
-            )
-            hits = (
-                pruned.select("id", "embedding", "cell")
-                .join(F.broadcast(probe_df), "cell")
-                .select(
-                    "qid",
-                    "id",
-                    self._jvm_sim(F.col("_qvec")).alias("similarity"),
+        ensure_package_shipped(self.spark)
+        # per-cell boolean mask over queries: list row in cell c
+        # scores only against queries that probed c
+        cell_qmask = {
+            c: np.array([c in p for p in probed_per_q])
+            for c in union_cells
+        }
+        qids_, Qn_, mask_ = qids, Qn, cell_qmask
+
+        def score(it):
+            qarr = np.array(qids_, dtype=object)
+            for pdf in it:
+                if not len(pdf):
+                    continue
+                V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+                Vn = V / np.maximum(
+                    np.linalg.norm(V, axis=1, keepdims=True), 1e-300
                 )
-            )
-        else:
-            ensure_package_shipped(self.spark)
-            # per-cell boolean mask over queries: list row in cell c
-            # scores only against queries that probed c
-            cell_qmask = {
-                c: np.array([c in p for p in probed_per_q])
-                for c in union_cells
-            }
-            qids_, Qn_, mask_ = qids, Qn, cell_qmask
-
-            def score(it):
-                qarr = np.array(qids_, dtype=object)
-                for pdf in it:
-                    if not len(pdf):
+                S = np.round(Vn @ Qn_.T, 6)  # rows x |Q|
+                cells_col = pdf["cell"].to_numpy()
+                ids_col = pdf["id"].to_numpy()
+                out_q, out_id, out_s = [], [], []
+                for c in np.unique(cells_col):
+                    qm = mask_.get(int(c))
+                    if qm is None or not qm.any():
                         continue
-                    V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                    Vn = V / np.maximum(
-                        np.linalg.norm(V, axis=1, keepdims=True), 1e-300
+                    rm = cells_col == c
+                    sub = S[np.ix_(rm, qm)]
+                    n_r, n_q = sub.shape
+                    out_q.append(
+                        np.repeat(qarr[qm][None, :], n_r, 0).ravel()
                     )
-                    S = np.round(Vn @ Qn_.T, 6)  # rows x |Q|
-                    cells_col = pdf["cell"].to_numpy()
-                    ids_col = pdf["id"].to_numpy()
-                    out_q, out_id, out_s = [], [], []
-                    for c in np.unique(cells_col):
-                        qm = mask_.get(int(c))
-                        if qm is None or not qm.any():
-                            continue
-                        rm = cells_col == c
-                        sub = S[np.ix_(rm, qm)]
-                        n_r, n_q = sub.shape
-                        out_q.append(
-                            np.repeat(qarr[qm][None, :], n_r, 0).ravel()
-                        )
-                        out_id.append(np.repeat(ids_col[rm], n_q))
-                        out_s.append(sub.ravel())
-                    if not out_q:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.concatenate(out_q),
-                            "id": np.concatenate(out_id),
-                            "similarity": np.concatenate(out_s),
-                        }
-                    )
+                    out_id.append(np.repeat(ids_col[rm], n_q))
+                    out_s.append(sub.ravel())
+                if not out_q:
+                    continue
+                yield pd.DataFrame(
+                    {
+                        "qid": np.concatenate(out_q),
+                        "id": np.concatenate(out_id),
+                        "similarity": np.concatenate(out_s),
+                    }
+                )
 
-            hits = pruned.select("id", "embedding", "cell").mapInPandas(
-                score, f"qid string, id {self.id_type}, similarity double"
-            )
+        hits = pruned.select("id", "embedding", "cell").mapInPandas(
+            score, f"qid string, id {self.id_type}, similarity double"
+        )
         if self.n_assign > 1:
             # a query probing 2+ of an id's membership cells scores the
             # same (qid, id) twice with identical similarity — keep one

@@ -31,6 +31,36 @@ def _brute_force(emb_rows, probed, qn, k):
     return out[:k]
 
 
+def _numpy_probe(idx, query_vec, k, nprobe, filters=None, live_ids=None):
+    """Reference for every probe form: one query's exact cosine top-k
+    over its probed cells, scored by numpy on the driver from the
+    guarded lists. [(id, similarity)] at the 6dp contract, DESC with
+    id ASC ties; multi-membership copies score identically, so one is
+    kept."""
+    probed, qn = idx.probe_cells(query_vec, nprobe)
+    rows = (
+        idx._guarded_lists(probed, filters, live_ids)
+        .select("id", "embedding")
+        .collect()
+    )
+    if not rows:
+        return []
+    V = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
+    best = dict(zip((r["id"] for r in rows), np.round(Vn @ qn, 6).tolist()))
+    return sorted(best.items(), key=lambda t: (-t[1], t[0]))[:k]
+
+
+def _numpy_batch(idx, queries, k, nprobe, filters=None):
+    """_numpy_probe per query, as (qid, id, similarity) in the batch
+    forms' (qid, similarity DESC, id ASC) order."""
+    return [
+        (str(q), i, s)
+        for q, v in sorted(queries, key=lambda t: str(t[0]))
+        for i, s in _numpy_probe(idx, v, k, nprobe, filters)
+    ]
+
+
 def test_ivf_build_search_roundtrip(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "ivf")
@@ -264,6 +294,35 @@ def test_ivf_scope_columns_filter_inside_pruned_scan(spark, tmp_path):
     assert "agent" in plan.split("PushedFilters", 1)[1][:400]
     with _pytest.raises(ValueError, match="not indexed"):
         idx.search(QUERY_VEC, filters={"nope": 1})
+
+
+def test_integer_and_bool_scope_filters_compare_exactly(spark, tmp_path):
+    """Integer scope values reach the SQL probe as integral literals:
+    the bigint tenants 2^53 and 2^53+1 are one double, so a double
+    literal would serve the other tenant's rows. Bool values read back
+    as TRUE/FALSE. Pinned over search() and the batch subquery with
+    every cell probed."""
+    big = 2**53
+    docs = load_table(spark, SF_DIR, "embeddings").selectExpr(
+        "vec_id",
+        "embedding",
+        f"CAST({big} + vec_id % 2 AS BIGINT) AS tenant",
+        "vec_id % 2 = 0 AS even",
+    ).filter("vec_id < 200")
+    idx = IVFIndex.build(
+        spark, docs, str(tmp_path / "ivf_int"), cent_every=7,
+        extra_cols=["tenant", "even"],
+    )
+    every = len(idx.cells)
+    odd = set(range(1, 200, 2))
+    for flt in ({"tenant": big + 1}, {"tenant": [big + 1]}, {"even": False}):
+        got = idx.search(QUERY_VEC, k=200, nprobe=every, filters=flt).collect()
+        assert {r["id"] for r in got} == odd, flt
+        sub = idx.search_batch_sql_subquery(
+            [("q", QUERY_VEC)], k=200, nprobe=every, filters=flt
+        )
+        got = spark.sql(f"SELECT * FROM {sub} c").collect()
+        assert {r["id"] for r in got} == odd, flt
 
 
 def test_forget_tombstones_publish_only_after_store_commit(spark, tmp_path):
@@ -721,39 +780,83 @@ def test_lists_plan_memo_invalidates_on_same_mtime_rewrite(spark, tmp_path):
     assert idx._lists_df() is p2, "and the fresh plan memoizes again"
 
 
-def test_jvm_and_arrow_kernels_identical(spark, tmp_path):
-    """r13 (VERDICT r12 #4): the JVM column-expression scoring kernel
-    (serving default — no Python worker in the job) must be
-    VALUE-IDENTICAL to the fused Arrow/numpy kernel (the oracle, kept
-    for very large candidate scans) for single AND batch search, at
-    full precision of the 6dp contract."""
+def test_probe_forms_match_numpy_oracle(spark, tmp_path):
+    """search(), search_batch() and both SQL subquery texts return the
+    numpy oracle's rows over the probed cells, at full precision of
+    the 6dp contract; the single-query probe's plan has no Python
+    node."""
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "ivf_kern")
     idx = IVFIndex.build(spark, emb, path, cent_every=50)
 
-    a = idx.search(QUERY_VEC, k=15, nprobe=3, kernel="jvm").collect()
-    b = idx.search(QUERY_VEC, k=15, nprobe=3, kernel="arrow").collect()
-    assert [(r["id"], r["similarity"]) for r in a] == [
-        (r["id"], r["similarity"]) for r in b
-    ]
-    # and the plan of the jvm path carries no Python evaluation node
-    plan = idx.search(QUERY_VEC, k=15, nprobe=3)._jdf.queryExecution().executedPlan().toString()
+    want = _numpy_probe(idx, QUERY_VEC, 15, 3)
+    assert len(want) == 15
+    single = idx.search(QUERY_VEC, k=15, nprobe=3)
+    assert [(r["id"], r["similarity"]) for r in single.collect()] == want
+    plan = single._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan
+    sub = idx.search_sql_subquery(QUERY_VEC, k=15, nprobe=3)
+    assert [
+        (r["id"], r["similarity"])
+        for r in spark.sql(
+            f"SELECT * FROM {sub} c ORDER BY `similarity` DESC, `id` ASC"
+        ).collect()
+    ] == want
 
     qs = [
         (r["vec_id"], r["embedding"])
         for r in emb.filter("vec_id in (3, 17, 29)").collect()
     ]
-    ba = idx.search_batch(qs, k=10, nprobe=3, kernel="jvm").collect()
-    bb = idx.search_batch(qs, k=10, nprobe=3, kernel="arrow").collect()
-    assert [(r["qid"], r["id"], r["similarity"]) for r in ba] == [
-        (r["qid"], r["id"], r["similarity"]) for r in bb
-    ]
+    want_b = _numpy_batch(idx, qs, 10, 3)
+    assert [
+        (r["qid"], r["id"], r["similarity"])
+        for r in idx.search_batch(qs, k=10, nprobe=3).collect()
+    ] == want_b
+    sub = idx.search_batch_sql_subquery(qs, k=10, nprobe=3)
+    assert [
+        (r["qid"], r["id"], r["similarity"])
+        for r in spark.sql(
+            f"SELECT * FROM {sub} c "
+            "ORDER BY `qid`, `similarity` DESC, `id` ASC"
+        ).collect()
+    ] == want_b
+
+
+def test_search_live_ids_runs_sql_probe_and_drops_its_view(spark, tmp_path):
+    """search(live_ids=...) is the SQL probe plus a semi-join on a
+    per-call temp view, after the tombstone anti-join and before the
+    top-k cut: no Python node in the executed plan, the numpy oracle's
+    rows, and no alma_live_* view left in the catalog."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "ivf_live")
+    idx = IVFIndex.build(spark, emb, path, cent_every=50)
+    live = emb.filter("vec_id % 3 = 0").select("vec_id")
+
+    def leftover():
+        return [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("alma_live_")
+        ]
+
+    first = idx.search(QUERY_VEC, k=10, nprobe=3, live_ids=live).collect()
+    assert len(first) == 10 and all(r["id"] % 3 == 0 for r in first)
+    idx.forget([first[0]["id"]])
+
+    res = idx.search(QUERY_VEC, k=10, nprobe=3, live_ids=live)
+    assert leftover() == []
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "Arrow" not in plan
+    got = [(r["id"], r["similarity"]) for r in res.collect()]
+    assert got == _numpy_probe(idx, QUERY_VEC, 10, 3, live_ids=live)
+    assert first[0]["id"] not in {i for i, _s in got}
+    assert got[:9] == [(r["id"], r["similarity"]) for r in first[1:]]
+    assert leftover() == []
 
 
 def test_sql_subquery_matches_search(spark, tmp_path):
     """r13 (VERDICT r12 #4): search_sql_subquery's text form must be
-    BIT-identical to search(kernel='jvm') — same ids, same
+    BIT-identical to search() — same ids, same
     full-precision similarities — including under scope filters and
     after forget() tombstones (read-your-deletes through the SQL
     probe) and add() (stable view refresh)."""
@@ -795,7 +898,7 @@ def test_sql_subquery_matches_search(spark, tmp_path):
 
 
 def test_search_jvm_parser_mode_safe_fallback(spark, tmp_path):
-    """ADVICE r13 #1: search(kernel='jvm') routes through SQL TEXT, so
+    """ADVICE r13 #1: search() routes through SQL TEXT, so
     its string filter literals must read back the same under
     spark.sql.parser.escapedStringLiterals=true — pinned with a
     backslash-carrying scope value, the case an escape-based literal
@@ -851,9 +954,8 @@ def test_batch_sql_subquery_matches(spark, tmp_path):
     be row-identical to search_batch — per-qid rows, similarities,
     tiebreaks — including under scope filters, after forget()
     tombstones, and on a multi-assign index (the DISTINCT dedup path);
-    cross-kernel (jvm/arrow) identity on this corpus is part of the
-    pinned contract. The legacy parser mode serves the same rows (qids
-    are string literals)."""
+    both forms also equal the numpy oracle on this corpus. The legacy
+    parser mode serves the same rows (qids are string literals)."""
     import pytest as _pytest
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -881,23 +983,24 @@ def test_batch_sql_subquery_matches(spark, tmp_path):
             ).collect()
         ]
 
-    def df_rows(kernel, k=8, nprobe=3, filters=None):
+    def df_rows(k=8, nprobe=3, filters=None):
         return [
             (r["qid"], r["id"], r["similarity"])
             for r in idx.search_batch(
-                queries, k=k, nprobe=nprobe, filters=filters, kernel=kernel
+                queries, k=k, nprobe=nprobe, filters=filters
             ).collect()
         ]
 
     got = sql_rows()
-    assert got == df_rows("jvm")
-    assert got == df_rows("arrow")
+    assert got == df_rows() == _numpy_batch(idx, queries, 8, 3)
     assert {q for q, _i, _s in got} == {"3", "17", "29"}
 
     # scoped: filter lands in the pruned scan on both forms
     flt = {"agent": "agent1"}
-    assert sql_rows(k=5, nprobe=4, filters=flt) == df_rows(
-        "jvm", k=5, nprobe=4, filters=flt
+    assert (
+        sql_rows(k=5, nprobe=4, filters=flt)
+        == df_rows(k=5, nprobe=4, filters=flt)
+        == _numpy_batch(idx, queries, 5, 4, filters=flt)
     )
 
     # tombstones exclude immediately through the text form
@@ -905,7 +1008,7 @@ def test_batch_sql_subquery_matches(spark, tmp_path):
     idx.forget([victim])
     after = sql_rows()
     assert victim not in {i for _q, i, _s in after}
-    assert after == df_rows("jvm")
+    assert after == df_rows() == _numpy_batch(idx, queries, 8, 3)
 
     # unindexed filter refuses like search_batch
     with _pytest.raises(ValueError, match="not indexed"):
@@ -928,9 +1031,9 @@ def test_batch_sql_subquery_matches(spark, tmp_path):
     ]
     want2 = [
         (r["qid"], r["id"], r["similarity"])
-        for r in idx2.search_batch(queries, k=8, nprobe=3, kernel="jvm").collect()
+        for r in idx2.search_batch(queries, k=8, nprobe=3).collect()
     ]
-    assert got2 == want2
+    assert got2 == want2 == _numpy_batch(idx2, queries, 8, 3)
     per_q = {}
     for q, i, _s in got2:
         per_q.setdefault(q, []).append(i)

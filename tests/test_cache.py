@@ -80,6 +80,18 @@ def test_on_evict_runs_for_rejected_and_replaced_values():
     assert gone == ["old", "new"]
 
 
+def test_discard_drops_one_entry_through_on_evict():
+    gone = []
+    c = LRU(on_evict=gone.append)
+    c.put("a", 1)
+    c.put("b", 2)
+    c.discard("a")
+    assert gone == [1]
+    assert (c.get("a"), c.get("b")) == (None, 2)
+    c.discard("a")  # absent: nothing leaves
+    assert gone == [1]
+
+
 def test_session_rule_evicts_other_applications_once():
     gone = []
     c = LRU(on_evict=gone.append, session_scoped=True)
