@@ -22,7 +22,7 @@ import os
 import threading
 import time
 import uuid
-from dataclasses import astuple
+from dataclasses import astuple, replace
 from datetime import datetime, timezone
 from typing import Any
 
@@ -43,6 +43,7 @@ from alma_memory_spark.operators.retrieval import (
     ScoringWeights,
     infer_mode,
 )
+from alma_memory_spark.session import tiny_df
 from alma_memory_spark.slice import MemorySlice, sanitize_query
 
 CACHE_TTL_SECONDS = 300.0
@@ -104,9 +105,11 @@ class AlmaSpark:
         #   ("anyproject",)         project-wide writes as seen by
         #                            project_id=None reads
         #   ("user", u)              preference writes for user u
+        #   ("feedback",)            retrieval_feedback writes (read
+        #                            only by use_feedback=True reads)
         # A read snapshots every key it depends on; a write bumps the
-        # narrowest keys that cover it. Values only grow, so a changed
-        # snapshot can never be confused with an unchanged one.
+        # narrowest keys that cover it (_wrote). Values only grow, so a
+        # changed snapshot can never be confused with an unchanged one.
         self._epochs: dict[tuple, int] = {}
         self._clock = clock
         # memory event system (reference alma/events/): write paths
@@ -140,46 +143,78 @@ class AlmaSpark:
     def _new_id(prefix: str) -> str:
         return f"{prefix}_{uuid.uuid4().hex[:12]}"
 
-    def _rows_df(self, table: str, rows: list[dict[str, Any]]) -> DataFrame:
-        from alma_memory_spark.session import tiny_df
+    def _write(
+        self,
+        table: str,
+        data,
+        verb: str = "append",
+        *,
+        agent: str | None = None,
+        project_id: str | None = None,
+        user_id: str | None = None,
+        **store_kw: Any,
+    ):
+        """The engine's one store-write seam: `store.<verb>(table, data,
+        **store_kw)`, then _wrote. Row dicts become a driver-side Arrow
+        LocalRelation (the python-RDD path costs seconds per tiny job);
+        a DataFrame or a delete predicate passes through. _wrote runs
+        even if the store call raises: the write may have committed
+        first, and a spurious cache miss is only a re-read."""
+        if isinstance(data, list):
+            data = tiny_df(self.spark, data, schemas.ALL_TABLES[table])
+        try:
+            return getattr(self.store, verb)(table, data, **store_kw)
+        finally:
+            self._wrote(table, agent, project_id, user_id)
 
-        # driver-side Arrow LocalRelation: these literal rows feed store
-        # WRITES, where the python-RDD path costs seconds per tiny job
-        return tiny_df(self.spark, rows, schemas.ALL_TABLES[table])
-
-    def _bump(self, *keys: tuple) -> None:
+    def _wrote(self, table: str, agent, project_id, user_id) -> None:
+        """The one place a write meets the slice cache: bump the epoch
+        channels of the cached slices that read `table` in the written
+        scope. retrieval_feedback is keyed by memory_id, not scope, so
+        it bumps the channel every use_feedback read depends on; other
+        tables retrieve does not read bump nothing. A memory-table
+        write bumps its narrowest covering scope: user -> that user's
+        preference-bearing entries; (agent, project) -> that agent's
+        entries there plus its cross-project ones; project only ->
+        every agent's entries there; no scope -> global flush (the
+        safe fallback, e.g. compaction)."""
+        if table == "retrieval_feedback":
+            keys: tuple = (("feedback",),)
+        elif table not in schemas.MEMORY_TABLES:
+            return
+        elif user_id is not None:
+            keys = (("user", user_id),)
+        elif agent is not None and project_id is not None:
+            keys = (("agent", agent, project_id), ("agentany", agent))
+        elif project_id is not None:
+            keys = (("proj", project_id), ("anyproject",))
+        else:
+            keys = (("*",),)
         with self._cache_lock:
             for k in keys:
                 self._epochs[k] = self._epochs.get(k, 0) + 1
 
-    def _invalidate_cache(
-        self,
-        agent: str | None = None,
-        project_id: str | None = None,
-        user_id: str | None = None,
-    ) -> None:
-        """Invalidate cached slices for the write's scope only.
-
-        (agent, project) write -> that agent's entries in that project
-        plus the agent's cross-project entries; project-only write ->
-        every agent's entries in that project; user write -> that
-        user's preference-bearing entries; no scope -> global flush
-        (the safe fallback for writes whose blast radius is unknown,
-        e.g. compaction or cross-project batch extraction)."""
-        if user_id is not None:
-            self._bump(("user", user_id))
-        elif agent is not None and project_id is not None:
-            self._bump(("agent", agent, project_id), ("agentany", agent))
-        elif project_id is not None:
-            self._bump(("proj", project_id), ("anyproject",))
-        else:
-            self._bump(("*",))
+    def _retry_conflicts(self, table: str, fn):
+        """Run the read-modify-write `fn` under `table`'s lock and re-run
+        it WHOLE on a commit conflict. On the commit-log backend the
+        flock does not span hosts; re-running recomputes the write from
+        fresh state, where a store-level retry would re-apply the stale
+        rows and clobber the other host's change."""
+        for _attempt in range(10):
+            with self.store._table_lock(table):
+                try:
+                    return fn()
+                except Exception as e:
+                    if type(e).__name__ != "CommitConflict":
+                        raise
+        raise RuntimeError(f"{table}: persistent commit conflicts")
 
     def _epoch_snapshot(
         self,
         agents: list[str],
         project_id: str | None,
         user_id: str | None,
+        use_feedback: bool = False,
     ) -> tuple:
         """Every epoch key this read depends on, as a value tuple,
         read atomically with respect to bumps."""
@@ -194,6 +229,8 @@ class AlmaSpark:
             keys.extend(("agentany", a) for a in agents)
         if user_id is not None:
             keys.append(("user", user_id))
+        if use_feedback:
+            keys.append(("feedback",))
         with self._cache_lock:
             return tuple(self._epochs.get(k, 0) for k in keys)
 
@@ -482,7 +519,14 @@ class AlmaSpark:
         FAISS-IVF serving shape (sqlite_local.py:555-640). Approximate
         by construction (recall grows with nprobe); types without an
         index keep the exact scan. Default False preserves exact
-        serving and the oracle-pinned scores."""
+        serving and the oracle-pinned scores.
+
+        A cache hit returns the cached slice object itself. The cache
+        sees only THIS engine instance's writes (each write invalidates
+        the scopes it touched, _wrote); a write through another
+        AlmaSpark instance or process on the same root becomes visible
+        once the entry's CACHE_TTL_SECONDS (300 s) lapse, as in the
+        reference's per-process RetrievalCache."""
         t0 = time.perf_counter()
         # key on the SANITIZED query (reference normalizes before keying,
         # alma/retrieval/cache.py:34-189 — raw and sanitized forms of the
@@ -511,7 +555,9 @@ class AlmaSpark:
         # landing mid-retrieve bumps its scope keys, and stamping the
         # post-write snapshot on pre-write data would undo its
         # invalidation and serve the stale slice for the full TTL
-        epoch_at_read = self._epoch_snapshot(agents_for_epoch, project_id, user_id)
+        epoch_at_read = self._epoch_snapshot(
+            agents_for_epoch, project_id, user_id, use_feedback
+        )
         cached = self._cached_slice(key, epoch_at_read)
         if cached is not None:
             return cached
@@ -797,7 +843,7 @@ class AlmaSpark:
             "embedding": self.embedder.encode(f"{task} {strategy_used or ''}"),
             "metadata": {},
         }
-        new_df = self._rows_df("outcomes", [row])
+        new_df = tiny_df(self.spark, [row], schemas.OUTCOMES)
         if enforce_write_guard:
             aps = self.store.read("anti_patterns").filter(
                 F.col("project_id") == project_id
@@ -812,8 +858,7 @@ class AlmaSpark:
                 )
         # no hit: the guard's `allowed` side is exactly new_df, and
         # appending its plan would only run the guard join again
-        self.store.append("outcomes", new_df)
-        self._invalidate_cache(agent, project_id)
+        self._write("outcomes", new_df, agent=agent, project_id=project_id)
 
         # inline heuristic / anti-pattern checks = incremental special
         # case of the batch extractors, scoped to this (agent, task_type)
@@ -847,8 +892,8 @@ class AlmaSpark:
             # (the reference emits at create time, storage_mixin.py)
             known = _existing_ids("heuristics", ids)
             new_heur = [i for i in ids if i not in known]
-            hdf = self._heuristic_rows(hrows)
-            self.store.upsert("heuristics", hdf)
+            self._write("heuristics", self._heuristic_rows(hrows), "upsert",
+                        agent=agent, project_id=project_id)
             result["heuristics"] = ids
         new_aps: list[str] = []
         if not outcome and error_message:
@@ -858,8 +903,8 @@ class AlmaSpark:
                 ids = [r["id"] for r in arows]
                 known = _existing_ids("anti_patterns", ids)
                 new_aps = [i for i in ids if i not in known]
-                adf = self._anti_pattern_rows(arows)
-                self.store.upsert("anti_patterns", adf)
+                self._write("anti_patterns", self._anti_pattern_rows(arows),
+                            "upsert", agent=agent, project_id=project_id)
                 result["anti_patterns"] = ids
         self._emit("OUTCOME_RECORDED", agent, project_id, "outcomes", row["id"],
                    {"success": outcome, "task_type": row["task_type"]})
@@ -897,7 +942,7 @@ class AlmaSpark:
             )
         )
 
-    def _heuristic_rows(self, rows) -> DataFrame:
+    def _heuristic_rows(self, rows) -> list[dict[str, Any]]:
         now = self._now()
         out = []
         for r in rows:
@@ -921,9 +966,9 @@ class AlmaSpark:
                     "metadata": {},
                 }
             )
-        return self._rows_df("heuristics", out)
+        return out
 
-    def _anti_pattern_rows(self, rows) -> DataFrame:
+    def _anti_pattern_rows(self, rows) -> list[dict[str, Any]]:
         now = self._now()
         out = []
         for r in rows:
@@ -946,7 +991,7 @@ class AlmaSpark:
                     "metadata": {},
                 }
             )
-        return self._rows_df("anti_patterns", out)
+        return out
 
     @staticmethod
     def _infer_task_type(task: str) -> str:
@@ -970,28 +1015,26 @@ class AlmaSpark:
         confidence: float = 0.9,
     ) -> str:
         kid = self._new_id("dk")
-        self.store.append(
+        self._write(
             "domain_knowledge",
-            self._rows_df(
-                "domain_knowledge",
-                [
-                    {
-                        "id": kid,
-                        "agent": agent,
-                        "project_id": project_id,
-                        "domain": domain,
-                        "fact": fact,
-                        "source": source,
-                        "confidence": confidence,
-                        "last_verified": self._now(),
-                        "verification_status": None,
-                        "embedding": self.embedder.encode(fact),
-                        "metadata": {},
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": kid,
+                    "agent": agent,
+                    "project_id": project_id,
+                    "domain": domain,
+                    "fact": fact,
+                    "source": source,
+                    "confidence": confidence,
+                    "last_verified": self._now(),
+                    "verification_status": None,
+                    "embedding": self.embedder.encode(fact),
+                    "metadata": {},
+                }
+            ],
+            agent=agent,
+            project_id=project_id,
         )
-        self._invalidate_cache(agent, project_id)
         self._emit("KNOWLEDGE_ADDED", agent, project_id, "domain_knowledge", kid,
                    {"domain": domain})
         return kid
@@ -1002,25 +1045,22 @@ class AlmaSpark:
     ) -> str:
         pid = self._new_id("pref")
         confidence = 1.0 if source == "explicit_instruction" else 0.7
-        self.store.append(
+        self._write(
             "preferences",
-            self._rows_df(
-                "preferences",
-                [
-                    {
-                        "id": pid,
-                        "user_id": user_id,
-                        "category": category,
-                        "preference": preference,
-                        "source": source,
-                        "confidence": confidence,
-                        "timestamp": self._now(),
-                        "metadata": {},
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": pid,
+                    "user_id": user_id,
+                    "category": category,
+                    "preference": preference,
+                    "source": source,
+                    "confidence": confidence,
+                    "timestamp": self._now(),
+                    "metadata": {},
+                }
+            ],
+            user_id=user_id,
         )
-        self._invalidate_cache(user_id=user_id)
         self._emit("PREFERENCE_ADDED", user_id, None, "preferences", pid,
                    {"category": category})
         return pid
@@ -1029,23 +1069,20 @@ class AlmaSpark:
         self, memory_id: str, memory_type: str, signal: str, agent: str,
         project_id: str | None = None, query: str | None = None,
     ) -> None:
-        self.store.append(
+        self._write(
             "retrieval_feedback",
-            self._rows_df(
-                "retrieval_feedback",
-                [
-                    {
-                        "id": self._new_id("fb"),
-                        "memory_id": memory_id,
-                        "memory_type": memory_type,
-                        "query": query,
-                        "agent": agent,
-                        "project_id": project_id,
-                        "signal": signal,
-                        "timestamp": self._now(),
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": self._new_id("fb"),
+                    "memory_id": memory_id,
+                    "memory_type": memory_type,
+                    "query": query,
+                    "agent": agent,
+                    "project_id": project_id,
+                    "signal": signal,
+                    "timestamp": self._now(),
+                }
+            ],
         )
 
     def record_usage(
@@ -1078,9 +1115,7 @@ class AlmaSpark:
             for mid in retrieved_memory_ids
         ]
         if rows:
-            self.store.append(
-                "retrieval_feedback", self._rows_df("retrieval_feedback", rows)
-            )
+            self._write("retrieval_feedback", rows)
         return [r["id"] for r in rows]
 
     # ------------------------------------------------------------------
@@ -1185,7 +1220,7 @@ class AlmaSpark:
             else:
                 held["idx"].abort_forget(staged.pop())
         if n:
-            self._invalidate_cache(project_id=project_id)
+            self._wrote(table, None, project_id, None)
             self._emit("DELETED", "", project_id, table, None,
                        {"count": n, "reason": reason})
         return n
@@ -1203,64 +1238,55 @@ class AlmaSpark:
         null-safe rest filter (a plain != silently DROPPED rows whose
         project_id is NULL). Lock-covered read-modify-write; on the
         txlog backend a cross-host conflict re-runs the whole merge."""
-        for _attempt in range(10):
-            try:
-                return self._consolidate_once(table, project_id, threshold)
-            except Exception as e:
-                if type(e).__name__ != "CommitConflict":
-                    raise
-        raise RuntimeError(f"consolidate({table}): persistent commit conflicts")
-
-    def _consolidate_once(self, table: str, project_id: str, threshold: float) -> int:
-        staged: str | None = None
-        idx = None
-        with self.store._table_lock(table):
-            # handle resolved IN-LOCK (see forget: a pre-lock handle can
-            # be one rebuild stale and tombstone a superseded version)
-            if self._has_ivf_index(table):
-                idx = self._load_ivf(table)
-            # ONE read for both the project slice and the rest: a second
-            # read(table) would advance the txlog conflict anchor past
-            # commits that landed between the two reads, hiding them
-            # from overwrite()'s conflict check (lost update on the
-            # lock-free backend)
-            full = self.store.read(table)
-            df = full.filter(F.col("project_id") == project_id)
-            survivors, merged = _consolidate(df, threshold)
-            n_merged = merged.count()
-            if n_merged:
-                new_content = survivors.unionByName(merged)
-                if idx is not None:
-                    # the losing group members vanish from the table;
-                    # STAGE their vector-index tombstones before the
-                    # rewrite (files still live) but publish only after
-                    # it commits — a CommitConflict retry re-derives
-                    # the losers, so tombstones from an aborted attempt
-                    # must never exclude rows that stayed live
-                    # (ADVICE r4, engine.py:876)
-                    losers = df.join(
-                        new_content.select("id"), "id", "left_anti"
-                    ).select("id")
-                    staged = idx.stage_forget(losers)
-                try:
-                    if table in schemas.PARTITIONED_BY_PROJECT_AGENT:
-                        touched = self.store._pairs_of(df)
-                        self.store._rewrite_partitions(table, touched, new_content)
-                    else:
-                        rest = full.filter(
-                            ~F.col("project_id").eqNullSafe(project_id)
-                        )
-                        self.store.overwrite(table, rest.unionByName(new_content))
-                except BaseException:
-                    if staged is not None:
-                        idx.abort_forget(staged)
-                    raise
-                if staged is not None:
-                    idx.commit_forget(staged)  # rewrite committed
+        n_merged = self._retry_conflicts(
+            table, lambda: self._consolidate_once(table, project_id, threshold)
+        )
         if n_merged:
-            self._invalidate_cache(project_id=project_id)
             self._emit("CONSOLIDATED", "", project_id, table, None,
                        {"merged": n_merged})
+        return n_merged
+
+    def _consolidate_once(self, table: str, project_id: str, threshold: float) -> int:
+        """One merge attempt; the caller holds `table`'s lock."""
+        staged: str | None = None
+        idx = None
+        # handle resolved IN-LOCK (see forget: a pre-lock handle can
+        # be one rebuild stale and tombstone a superseded version)
+        if self._has_ivf_index(table):
+            idx = self._load_ivf(table)
+        # ONE read for both the project slice and the rest: a second
+        # read(table) would advance the txlog conflict anchor past commits
+        # that landed between the two reads, hiding them from overwrite()'s
+        # conflict check (lost update on the lock-free backend)
+        full = self.store.read(table)
+        df = full.filter(F.col("project_id") == project_id)
+        survivors, merged = _consolidate(df, threshold)
+        n_merged = merged.count()
+        if not n_merged:
+            return 0
+        new_content = survivors.unionByName(merged)
+        if idx is not None:
+            # the losing group members vanish from the table; STAGE their
+            # vector-index tombstones before the rewrite (files still live)
+            # but publish only after it commits — a CommitConflict retry
+            # re-derives the losers, so tombstones from an aborted attempt
+            # must never exclude rows that stayed live (ADVICE r4)
+            losers = df.join(new_content.select("id"), "id", "left_anti").select("id")
+            staged = idx.stage_forget(losers)
+        try:
+            if table in schemas.PARTITIONED_BY_PROJECT_AGENT:
+                touched = self.store._pairs_of(df)
+                self.store._rewrite_partitions(table, touched, new_content)
+            else:
+                rest = full.filter(~F.col("project_id").eqNullSafe(project_id))
+                self.store.overwrite(table, rest.unionByName(new_content))
+        except BaseException:
+            if staged is not None:
+                idx.abort_forget(staged)
+            raise
+        if staged is not None:
+            idx.commit_forget(staged)  # rewrite committed
+        self._wrote(table, None, project_id, None)
         return n_merged
 
     def stats(self, project_id: str | None = None) -> dict[str, int]:
@@ -1283,7 +1309,7 @@ class AlmaSpark:
             rep = self.store.compact(t, target_file_bytes=target_file_bytes)
             if rep:
                 out[t] = rep
-        self._invalidate_cache()
+                self._wrote(t, None, None, None)
         return out
 
     # ------------------------------------------------------------------
@@ -1612,7 +1638,6 @@ class AlmaSpark:
         from pyspark.sql.window import Window as W
 
         from alma_memory_spark.functions.vector import cosine_similarity
-        from alma_memory_spark.session import tiny_df
 
         if not tasks:
             return {}
@@ -1877,8 +1902,6 @@ class AlmaSpark:
             filter_by_scope,
         )
 
-        from alma_memory_spark.session import tiny_df
-
         mdf = tiny_df(
             self.spark,
             [
@@ -1967,15 +1990,11 @@ class AlmaSpark:
                 if fid:
                     committed.append({"fact": f, "id": fid})
             if heur_rows:
-                self.store.upsert(
-                    "heuristics", self._rows_df("heuristics", heur_rows)
-                )
+                self._write("heuristics", heur_rows, "upsert",
+                            agent=agent, project_id=project_id)
             if ap_rows:
-                self.store.upsert(
-                    "anti_patterns", self._rows_df("anti_patterns", ap_rows)
-                )
-            if committed:
-                self._invalidate_cache(agent, project_id)
+                self._write("anti_patterns", ap_rows, "upsert",
+                            agent=agent, project_id=project_id)
         return {
             "extracted_count": len(valid) + len(rejected),
             "valid_count": len(valid),
@@ -2025,12 +2044,7 @@ class AlmaSpark:
             "created_at": now,
             "updated_at": now,
         }
-        from alma_memory_spark.session import tiny_df
-
-        self.store.append(
-            "work_items",
-            tiny_df(self.spark, [row], schemas.WORK_ITEMS),
-        )
+        self._write("work_items", [row])
         return row
 
     def update_work_item_status(
@@ -2060,21 +2074,12 @@ class AlmaSpark:
         read-modify-write re-runs on a commit conflict (the row is
         recomputed from the fresh state — a store-level retry would
         re-apply the stale row and clobber the other host's change)."""
-        return self._rmw_work_item(
+        return self._retry_conflicts(
+            "work_items",
             lambda: self._update_work_item_locked(
                 item_id, status, notes, tests_passing, blocked_by
-            )
+            ),
         )
-
-    def _rmw_work_item(self, fn):
-        for _attempt in range(10):
-            with self.store._table_lock("work_items"):
-                try:
-                    return fn()
-                except Exception as e:
-                    if type(e).__name__ != "CommitConflict":
-                        raise
-        raise RuntimeError("work_items: persistent commit conflicts")
 
     def _update_work_item_locked(
         self, item_id, status, notes, tests_passing, blocked_by
@@ -2121,13 +2126,8 @@ class AlmaSpark:
         if notes:
             meta["status_note"] = f"{old}->{status}: {notes}"
         item["metadata"] = meta or None
-        from alma_memory_spark.session import tiny_df
-
-        self.store.upsert(
-            "work_items",
-            tiny_df(self.spark, [item], schemas.WORK_ITEMS),
-            on_conflict="raise",  # _rmw_work_item re-runs the whole RMW
-        )
+        # on_conflict="raise": _retry_conflicts re-runs the whole RMW
+        self._write("work_items", [item], "upsert", on_conflict="raise")
         return item
 
     def unblock_work_item(self, item_id: str) -> dict[str, Any] | None:
@@ -2146,16 +2146,10 @@ class AlmaSpark:
                 return None
             item = rows[0].asDict(recursive=True)
             item.update(status="pending", blocked_by=[], updated_at=self._now())
-            from alma_memory_spark.session import tiny_df
-
-            self.store.upsert(
-                "work_items",
-                tiny_df(self.spark, [item], schemas.WORK_ITEMS),
-                on_conflict="raise",
-            )
+            self._write("work_items", [item], "upsert", on_conflict="raise")
             return item
 
-        return self._rmw_work_item(rmw)
+        return self._retry_conflicts("work_items", rmw)
 
     def get_work_items(
         self,
@@ -2230,11 +2224,7 @@ class AlmaSpark:
             "current_action": current_action,
             "created_at": self._now(),
         }
-        from alma_memory_spark.session import tiny_df
-
-        self.store.append(
-            "progress_logs", tiny_df(self.spark, [row], schemas.PROGRESS_LOGS)
-        )
+        self._write("progress_logs", [row])
         return row
 
     def get_progress_history(
@@ -2355,6 +2345,16 @@ class AlmaSpark:
             workflow_id, run_id, agent, project_id, result, **kw
         )
 
+    def _retrieve_copy(self, task: str, agent: str, **kwargs: Any) -> MemorySlice:
+        """retrieve() as a private copy, slice and row dicts, for the
+        derived retrieves to annotate: a cache hit hands out the one
+        cached slice, so annotating it in place would leak into every
+        later hit (and compound on each repeat)."""
+        sl = self.retrieve(task, agent, **kwargs)
+        return replace(
+            sl, **{t: [dict(r) for r in getattr(sl, t)] for t in schemas.MEMORY_TABLES}
+        )
+
     def retrieve_with_scope(
         self,
         task: str,
@@ -2382,10 +2382,10 @@ class AlmaSpark:
             filt["run_id"] = context.get("run_id")
         if scope == "node":
             filt["node_id"] = context.get("node_id")
-        sl = self.retrieve(
+        sl = self._retrieve_copy(
             task,
             agent,
-            project_id or getattr(self, "default_project_id", None),
+            project_id=project_id or getattr(self, "default_project_id", None),
             user_id=user_id,
             top_k=top_k,
         )
@@ -2448,9 +2448,10 @@ class AlmaSpark:
                 & (F.col("memory_type") == memory_type)
             )
         )
-        self.store.overwrite(
+        self._write(
             "memory_strength",
-            kept.unionByName(self._rows_df("memory_strength", [r])),
+            kept.unionByName(tiny_df(self.spark, [r], schemas.MEMORY_STRENGTH)),
+            "overwrite",
         )
         return {"memory_id": memory_id, "access_count": r["access_count"]}
 
@@ -2477,23 +2478,20 @@ class AlmaSpark:
         """Attach an external-file reference to a memory (reference:
         ArtifactRef, alma/core.py:744-807)."""
         aid = self._new_id("art")
-        self.store.append(
+        self._write(
             "artifacts",
-            self._rows_df(
-                "artifacts",
-                [
-                    {
-                        "id": aid,
-                        "memory_type": memory_type,
-                        "memory_id": memory_id,
-                        "storage_url": storage_url,
-                        "mime_type": mime_type,
-                        "checksum": checksum,
-                        "created_at": self._now(),
-                        "metadata": {},
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": aid,
+                    "memory_type": memory_type,
+                    "memory_id": memory_id,
+                    "storage_url": storage_url,
+                    "mime_type": mime_type,
+                    "checksum": checksum,
+                    "created_at": self._now(),
+                    "metadata": {},
+                }
+            ],
         )
         return aid
 
@@ -2525,7 +2523,9 @@ class AlmaSpark:
             pred = p if pred is None else (pred & p)
         if pred is None:
             return 0
-        return self.store.delete("checkpoints", pred, reason="checkpoint_cleanup", audit=False)
+        return self._write(
+            "checkpoints", pred, "delete", reason="checkpoint_cleanup", audit=False
+        )
 
     def extract_heuristics_batch(self, project_id: str | None = None) -> int:
         """Batch heuristic extraction over the outcomes table — the
@@ -2558,8 +2558,7 @@ class AlmaSpark:
             }
             for c in cand
         ]
-        self.store.upsert("heuristics", self._rows_df("heuristics", rows))
-        self._invalidate_cache(project_id=project_id)
+        self._write("heuristics", rows, "upsert", project_id=project_id)
         return len(rows)
 
     def compress_and_learn(
@@ -2591,20 +2590,18 @@ class AlmaSpark:
     ) -> None:
         """Upsert an agent trust profile (reference: trust_scoring
         AgentTrustProfile, alma/retrieval/trust_scoring.py:99-170)."""
-        self.store.upsert(
+        self._write(
             "agent_trust",
-            self._rows_df(
-                "agent_trust",
-                [
-                    {
-                        "agent": agent,
-                        "performance_score": performance_score,
-                        "behavior_scores": behavior_scores or [0.5] * 5,
-                        "success_streak": success_streak,
-                        "last_updated": self._now(),
-                    }
-                ],
-            ),
+            [
+                {
+                    "agent": agent,
+                    "performance_score": performance_score,
+                    "behavior_scores": behavior_scores or [0.5] * 5,
+                    "success_streak": success_streak,
+                    "last_updated": self._now(),
+                }
+            ],
+            "upsert",
             key="agent",
         )
 
@@ -2639,7 +2636,7 @@ class AlmaSpark:
         non-LLM confidence fallback, verification.py:690-729)."""
         from alma_memory_spark.operators.verification import CONFIDENCE_THRESHOLD
 
-        sl = self.retrieve(task, agent, **kwargs)
+        sl = self._retrieve_copy(task, agent, **kwargs)
         for rows in (
             sl.heuristics, sl.outcomes, sl.preferences, sl.domain_knowledge,
             sl.anti_patterns,
@@ -2668,7 +2665,7 @@ class AlmaSpark:
             r["agent"]: r["trust"]
             for r in with_trust(self.store.read("agent_trust"), self._now()).collect()
         }
-        sl = self.retrieve(task, agent, **kwargs)
+        sl = self._retrieve_copy(task, agent, **kwargs)
         for rows in (sl.heuristics, sl.outcomes, sl.domain_knowledge, sl.anti_patterns):
             for r in rows:
                 t = trust.get(r.get("agent"), 0.5)
@@ -2691,24 +2688,21 @@ class AlmaSpark:
         if skip_if_unchanged and state_hash and WF.is_unchanged(cps, run_id, state_hash):
             return None
         cid = self._new_id("ckpt")
-        self.store.append(
+        self._write(
             "checkpoints",
-            self._rows_df(
-                "checkpoints",
-                [
-                    {
-                        "id": cid,
-                        "run_id": run_id,
-                        "node_id": node_id,
-                        "state": state_json,
-                        "sequence_number": sequence_number,
-                        "branch_id": branch_id,
-                        "parent_checkpoint_id": None,
-                        "state_hash": state_hash,
-                        "created_at": self._now(),
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": cid,
+                    "run_id": run_id,
+                    "node_id": node_id,
+                    "state": state_json,
+                    "sequence_number": sequence_number,
+                    "branch_id": branch_id,
+                    "parent_checkpoint_id": None,
+                    "state_hash": state_hash,
+                    "created_at": self._now(),
+                }
+            ],
         )
         return cid
 
@@ -2735,24 +2729,21 @@ class AlmaSpark:
         next_steps: list[str] | None = None,
     ) -> str:
         hid = self._new_id("hand")
-        self.store.append(
+        self._write(
             "session_handoffs",
-            self._rows_df(
-                "session_handoffs",
-                [
-                    {
-                        "id": hid,
-                        "agent": agent,
-                        "project_id": project_id,
-                        "last_action": last_action,
-                        "key_decisions": key_decisions or [],
-                        "active_files": active_files or [],
-                        "blockers": blockers or [],
-                        "next_steps": next_steps or [],
-                        "created_at": self._now(),
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": hid,
+                    "agent": agent,
+                    "project_id": project_id,
+                    "last_action": last_action,
+                    "key_decisions": key_decisions or [],
+                    "active_files": active_files or [],
+                    "blockers": blockers or [],
+                    "next_steps": next_steps or [],
+                    "created_at": self._now(),
+                }
+            ],
         )
         return hid
 
@@ -2841,30 +2832,27 @@ class AlmaSpark:
         tenant_id: str | None = None,
     ) -> str:
         wid = self._new_id("wf")
-        self.store.append(
+        self._write(
             "workflow_outcomes",
-            self._rows_df(
-                "workflow_outcomes",
-                [
-                    {
-                        "id": wid,
-                        "tenant_id": tenant_id,
-                        "workflow_id": workflow_id,
-                        "run_id": run_id,
-                        "agent": agent,
-                        "project_id": project_id,
-                        "result": result,
-                        "summary": summary,
-                        "strategies_used": strategies_used or [],
-                        "successful_patterns": successful_patterns or [],
-                        "failed_patterns": failed_patterns or [],
-                        "duration_seconds": duration_seconds,
-                        "node_count": node_count,
-                        "error_message": None,
-                        "created_at": self._now(),
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": wid,
+                    "tenant_id": tenant_id,
+                    "workflow_id": workflow_id,
+                    "run_id": run_id,
+                    "agent": agent,
+                    "project_id": project_id,
+                    "result": result,
+                    "summary": summary,
+                    "strategies_used": strategies_used or [],
+                    "successful_patterns": successful_patterns or [],
+                    "failed_patterns": failed_patterns or [],
+                    "duration_seconds": duration_seconds,
+                    "node_count": node_count,
+                    "error_message": None,
+                    "created_at": self._now(),
+                }
+            ],
         )
         return wid
 
@@ -2894,20 +2882,17 @@ class AlmaSpark:
         self, name: str, entity_type: str, properties: dict[str, str] | None = None
     ) -> str:
         eid = self._new_id("ent")
-        self.store.append(
+        self._write(
             "graph_entities",
-            self._rows_df(
-                "graph_entities",
-                [
-                    {
-                        "id": eid,
-                        "name": name,
-                        "entity_type": entity_type,
-                        "properties": properties or {},
-                        "created_at": self._now(),
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": eid,
+                    "name": name,
+                    "entity_type": entity_type,
+                    "properties": properties or {},
+                    "created_at": self._now(),
+                }
+            ],
         )
         return eid
 
@@ -2922,24 +2907,21 @@ class AlmaSpark:
         properties: dict[str, str] | None = None,
     ) -> str:
         rid = self._new_id("rel")
-        self.store.append(
+        self._write(
             "graph_relationships",
-            self._rows_df(
-                "graph_relationships",
-                [
-                    {
-                        "id": rid,
-                        "source_id": source_id,
-                        "target_id": target_id,
-                        "relation_type": relation_type,
-                        "properties": properties or {},
-                        "confidence": confidence,
-                        "created_at": self._now(),
-                        "valid_from": valid_from,
-                        "valid_to": valid_to,
-                    }
-                ],
-            ),
+            [
+                {
+                    "id": rid,
+                    "source_id": source_id,
+                    "target_id": target_id,
+                    "relation_type": relation_type,
+                    "properties": properties or {},
+                    "confidence": confidence,
+                    "created_at": self._now(),
+                    "valid_from": valid_from,
+                    "valid_to": valid_to,
+                }
+            ],
         )
         return rid
 

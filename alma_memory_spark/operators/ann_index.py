@@ -1109,7 +1109,8 @@ class IVFIndex:
         serving_sql.string_literal (exact under either parser mode),
         bools read TRUE/FALSE, integers stay integral (a double
         literal would merge bigints past 2^53) and only floats are
-        double literals."""
+        double literals. An empty value list admits no row: FALSE,
+        since `IN ()` does not parse."""
         import numbers
 
         from alma_memory_spark.operators.serving_sql import (
@@ -1127,7 +1128,7 @@ class IVFIndex:
             return double_literal(float(v))
 
         return [
-            f"l.`{col}` IN ({','.join(lit(v) for v in vals)})"
+            f"l.`{col}` IN ({','.join(lit(v) for v in vals)})" if vals else "FALSE"
             for col, vals in self._filter_values(filters)
         ]
 

@@ -325,6 +325,25 @@ def test_integer_and_bool_scope_filters_compare_exactly(spark, tmp_path):
         assert {r["id"] for r in got} == odd, flt
 
 
+def test_empty_scope_filter_list_matches_nothing(spark, tmp_path):
+    """An empty value list admits no row. `IN ()` does not parse, so
+    search() raised ParseException where search_batch returned 0 rows;
+    both SQL probes now read 0 rows with every cell probed."""
+    docs = load_table(spark, SF_DIR, "embeddings").selectExpr(
+        "vec_id", "embedding", "concat('agent', vec_id % 3) AS agent"
+    ).filter("vec_id < 200")
+    idx = IVFIndex.build(
+        spark, docs, str(tmp_path / "ivf_empty"), cent_every=7, extra_cols=["agent"]
+    )
+    every = len(idx.cells)
+    flt = {"agent": []}
+    assert idx.search(QUERY_VEC, k=10, nprobe=every, filters=flt).collect() == []
+    sub = idx.search_batch_sql_subquery(
+        [("q", QUERY_VEC)], k=10, nprobe=every, filters=flt
+    )
+    assert spark.sql(f"SELECT * FROM {sub} c").collect() == []
+
+
 def test_forget_tombstones_publish_only_after_store_commit(spark, tmp_path):
     """ADVICE r4 (engine.py:827): forget() STAGES index tombstones from
     the in-lock doomed frame but publishes them only after the store

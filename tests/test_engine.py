@@ -305,6 +305,180 @@ def test_scoped_cache_user_preferences(engine):
     assert engine.retrieve("anything", agent="alice", project_id="p", user_id="u2") is s_other
 
 
+def test_feedback_writes_invalidate_feedback_reads_only(engine):
+    """retrieval_feedback is keyed by memory_id, not scope, and only
+    use_feedback=True reads blend it: after five thumbs_down on the top
+    memory (and after record_usage) a feedback read misses and re-ranks,
+    while the plain read of the same task stays cached."""
+    for fact in (
+        "deploy process uses blue green",
+        "deploy process needs approval",
+        "deploy process runs nightly",
+    ):
+        engine.add_knowledge("helena", "proj-a", "deploy", fact)
+    scope = dict(agent="helena", project_id="proj-a")
+    fb1 = engine.retrieve("deploy process", use_feedback=True, **scope)
+    plain = engine.retrieve("deploy process", **scope)
+    top = fb1.domain_knowledge[0]["id"]
+    for _ in range(5):
+        engine.record_feedback(top, "domain_knowledge", "thumbs_down", "helena", "proj-a")
+    fb2 = engine.retrieve("deploy process", use_feedback=True, **scope)
+    assert fb2 is not fb1
+    assert fb2.domain_knowledge[0]["id"] != top
+    assert engine.retrieve("deploy process", **scope) is plain
+    engine.record_usage([top], [], "domain_knowledge", "helena", project_id="proj-a")
+    assert engine.retrieve("deploy process", use_feedback=True, **scope) is not fb2
+    assert engine.retrieve("deploy process", **scope) is plain
+
+
+def test_retrieve_inside_learn_does_not_outlive_it(engine, monkeypatch):
+    """A retrieve landing between learn's outcome append and its
+    heuristic upsert caches a slice without the new heuristic; the
+    upsert must invalidate it, so a retrieve after learn sees it."""
+    task = "form testing with required fields"
+    scope = dict(agent="helena", project_id="proj-a")
+
+    def learn(i):
+        engine.learn(
+            task=f"form testing task {i}", outcome=True,
+            strategy_used="fill required fields first then submit",
+            task_type="form_testing", **scope,
+        )
+
+    learn(0)
+    learn(1)  # the third learn forms the heuristic
+    seen = []
+    real_upsert = engine.store.upsert
+
+    def upsert_after_retrieve(table, df, **kw):
+        seen.append(engine.retrieve(task, **scope))
+        return real_upsert(table, df, **kw)
+
+    monkeypatch.setattr(engine.store, "upsert", upsert_after_retrieve)
+    learn(2)
+    monkeypatch.undo()
+    assert seen and not seen[0].heuristics
+    assert engine.retrieve(task, **scope).heuristics
+
+
+def test_derived_retrieves_annotate_a_copy(engine):
+    """retrieve_with_trust / retrieve_verified / retrieve_with_scope
+    annotate their own copy: repeats return equal scores, and the
+    cached slice a plain retrieve returns keeps its original scores
+    with none of their annotation keys."""
+    engine.add_knowledge("helena", "proj-a", "deploy", "deploys use blue green")
+    engine.add_knowledge("helena", "proj-a", "deploy", "deploy process needs approval")
+    kw = dict(project_id="proj-a", top_k=5)
+    plain = engine.retrieve("deploy process", "helena", **kw)
+    scores = [r["score"] for r in plain.domain_knowledge]
+    t1 = engine.retrieve_with_trust("deploy process", "helena", **kw)
+    t2 = engine.retrieve_with_trust("deploy process", "helena", **kw)
+    assert [r["score"] for r in t1.domain_knowledge] == [
+        r["score"] for r in t2.domain_knowledge
+    ]
+    assert t1.domain_knowledge[0]["trust"] == 0.5
+    assert engine.retrieve_verified("deploy process", "helena", **kw).domain_knowledge[0][
+        "verification_method"
+    ] == "confidence"
+    scoped = engine.retrieve_with_scope(
+        "deploy process", "helena", {"tenant_id": "t1"}, project_id="proj-a"
+    )
+    assert scoped.metadata["scope"] == "agent"
+    again = engine.retrieve("deploy process", "helena", **kw)
+    assert again is plain
+    assert [r["score"] for r in again.domain_knowledge] == scores
+    for r in again.domain_knowledge:
+        assert "trust" not in r and "verification_method" not in r
+        assert r["verification_status"] is None
+    assert again.metadata is None
+
+
+def test_writes_to_tables_retrieve_does_not_read_keep_the_slice(engine):
+    engine.add_knowledge("helena", "proj-a", "deploy", "deploys use blue green")
+    s1 = engine.retrieve("deploy process", agent="helena", project_id="proj-a")
+    engine.checkpoint("run-1", "node-1", "{}", 1)
+    engine.add_entity("deploy service", "service")
+    engine.log_progress("helena", "sess-1", project_id="proj-a")
+    engine.store_trust_pattern("helena", 0.9)
+    assert engine.retrieve("deploy process", agent="helena", project_id="proj-a") is s1
+
+
+def test_every_store_write_goes_through_the_seam():
+    """Each self.store write call in AlmaSpark sits in _write or in a
+    method that also calls self._wrote, so no write can skip the
+    slice-cache invalidation its table and scope imply."""
+    import ast
+    import inspect
+
+    from alma_memory_spark import engine as engine_module
+
+    writes = {
+        "append", "upsert", "delete", "overwrite", "_rewrite_partitions",
+        "compact", "archive",
+    }
+
+    def self_call(node, attr, via_store=False):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            return False
+        owner = node.func.value
+        if via_store:
+            if not (isinstance(owner, ast.Attribute) and owner.attr == "store"):
+                return False
+            owner = owner.value
+        return node.func.attr in attr and isinstance(owner, ast.Name) and owner.id == "self"
+
+    tree = ast.parse(inspect.getsource(engine_module))
+    cls = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "AlmaSpark"
+    )
+    found, offenders = [], []
+    for fn in cls.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+        hits = [n for n in calls if self_call(n, writes, via_store=True)]
+        found += [(fn.name, n.func.attr) for n in hits]
+        if hits and not any(self_call(n, {"_wrote"}) for n in calls):
+            offenders.append(fn.name)
+    assert not offenders
+    # the scan sees the writes that are not row-shaped
+    assert {("forget", "delete"), ("optimize", "compact"),
+            ("_consolidate_once", "_rewrite_partitions")} <= set(found)
+    for gone in ("_bump", "_invalidate_cache", "_rows_df"):
+        assert not hasattr(AlmaSpark, gone)
+
+
+def test_conflict_retry_reruns_the_whole_write(engine):
+    """consolidate and the work-item writers share one re-run loop: a
+    CommitConflict re-runs the whole read-modify-write, any other error
+    propagates at once, and ten conflicts in a row give up."""
+
+    class CommitConflict(Exception):
+        pass
+
+    calls = []
+
+    def flaky(fails, exc=CommitConflict):
+        def fn():
+            calls.append(1)
+            if len(calls) <= fails:
+                raise exc("lost the race")
+            return "done"
+
+        return fn
+
+    assert engine._retry_conflicts("work_items", flaky(2)) == "done"
+    assert len(calls) == 3
+    calls.clear()
+    with pytest.raises(ValueError):
+        engine._retry_conflicts("work_items", flaky(5, ValueError))
+    assert len(calls) == 1
+    calls.clear()
+    with pytest.raises(RuntimeError, match="persistent commit conflicts"):
+        engine._retry_conflicts("work_items", flaky(99))
+    assert len(calls) == 10
+
+
 def test_consolidate_is_partition_scoped_and_null_safe(engine, spark):
     """engine.consolidate must (a) merge the project's near-dups, (b)
     NOT rewrite other projects' partition files (partition-scoped
