@@ -177,7 +177,7 @@ class AlmaSpark:
         preference-bearing entries; (agent, project) -> that agent's
         entries there plus its cross-project ones; project only ->
         every agent's entries there; no scope -> global flush (the
-        safe fallback, e.g. compaction)."""
+        safe fallback)."""
         if table == "retrieval_feedback":
             keys: tuple = (("feedback",),)
         elif table not in schemas.MEMORY_TABLES:
@@ -1303,13 +1303,13 @@ class AlmaSpark:
         analog; see ParquetStore.compact). Returns per-table reports
         for tables that needed work. Beyond the reference (SQLite has
         no file-granularity problem); essential for the incremental
-        learn() write pattern at scale."""
+        learn() write pattern at scale. Compaction rewrites files but
+        changes no row, so no cached slice goes stale."""
         out: dict[str, dict] = {}
         for t in tables or list(schemas.MEMORY_TABLES):
             rep = self.store.compact(t, target_file_bytes=target_file_bytes)
             if rep:
                 out[t] = rep
-                self._wrote(t, None, None, None)
         return out
 
     # ------------------------------------------------------------------

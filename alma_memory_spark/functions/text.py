@@ -199,28 +199,6 @@ def minhash_signature(
     return F.array(*[perm_min(j) for j in range(k)])
 
 
-def simhash32(token_array: Column, *, hashed: bool = False) -> Column:
-    """32-bit SimHash: bit i set iff sum over tokens of (+1 if bit i of
-    h32(tok) else -1) > 0 (Charikar 2002). Pass ``hashed=True`` with a
-    pre-materialized hash column — an inline transform re-evaluates the
-    md5 per token inside all 32 bit-folds (no CSE across higher-order
-    functions)."""
-    hashes = token_array if hashed else F.transform(token_array, hash32)
-    def bit(i: int) -> Column:
-        vote = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, i) % 2 == 1, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        return F.when(vote > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
-
-    out = F.lit(0).cast("long")
-    for i in range(32):
-        out = out + bit(i)
-    return out
-
-
 def cjk_count(col: Column | str) -> Column:
     return F.length(F.regexp_replace(_c(col), "[^\\u4e00-\\u9fff]", ""))
 
@@ -403,14 +381,6 @@ def sql_hash32(expr: str) -> str:
     return (
         f"list_reduce(list_transform(string_split_regex(substr(md5({expr}),1,8),'')::VARCHAR[], "
         f"c -> (strpos('{HEX}', c) - 1)::BIGINT), (x,y) -> x*16+y)"
-    )
-
-
-def sql_shingles(expr: str, n: int = 3) -> str:
-    norm = f"regexp_replace(trim(lower({expr})), '{SQL_WS_RE}', ' ', 'g')"
-    return (
-        f"list_transform(range(1, greatest(length({norm}) - {n - 1}, 1) + 1), "
-        f"i -> substr({norm}, i, {n}))"
     )
 
 
@@ -923,21 +893,6 @@ def psl_domain_expr(lastk: list[Column], host_nw: Column) -> Column:
     return default if expr is None else expr.otherwise(default)
 
 
-def psl_ps_len(lastk: list[Column]) -> Column:
-    """Public-suffix label count under the same chain (kept for
-    diagnostics/tests; url derivation uses the merged
-    psl_domain_expr)."""
-    expr = None
-    for ps, groups in _PSL_CHAIN:
-        cond = _psl_group_cond(lastk, ps, groups)
-        expr = (
-            F.when(cond, F.lit(ps))
-            if expr is None
-            else expr.when(cond, F.lit(ps))
-        )
-    return F.lit(1) if expr is None else expr.otherwise(F.lit(1))
-
-
 #: scheme://authority splitter — the safe common subset of Java regex
 #: and RE2 (no lookaround), shared verbatim by both engines
 _URL_HOST_RE = "^[a-z][a-z0-9+.-]*://([^/?#]+)"
@@ -1131,10 +1086,6 @@ def with_url_signals(
 
 def _sql_url_list() -> str:
     return "[" + ", ".join(f"'{d}'" for d in URL_BLOCKLIST) + "]"
-
-
-def _sql_vals(vals) -> str:
-    return "[" + ", ".join(f"'{s}'" for s in sorted(vals)) + "]"
 
 
 def _sql_psl_domain(labels: str, host_nw: str) -> str:

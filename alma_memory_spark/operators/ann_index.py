@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alma_memory_spark.cache import LRU
+from alma_memory_spark.metrics import carry
 from alma_memory_spark.operators._index_version import (
     begin_version,
     commit_version,
@@ -380,7 +381,7 @@ class IVFIndex:
 
         pool = ThreadPoolExecutor(max_workers=1)
         lists_fut = pool.submit(
-            idx._write_lists, df, id_col, vec_col, mode="overwrite"
+            carry(spark, idx._write_lists), df, id_col, vec_col, mode="overwrite"
         )
         # EVERY exit path below must join the lists future before
         # leaving: a tiny-write failure that propagated without joining

@@ -568,10 +568,6 @@ def _ngram_rows(
     ).select(*keep, *[f"g.w{i}" for i in range(1, order + 1)])
 
 
-def _trigram_rows(docs: DataFrame, text_col: str, *keep) -> DataFrame:
-    return _ngram_rows(docs, text_col, 3, *keep)
-
-
 def _ngram_counts(
     train: DataFrame, text_col: str, max_order: int = 3
 ) -> DataFrame:

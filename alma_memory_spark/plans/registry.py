@@ -52,37 +52,6 @@ QUERIES: dict[str, QuerySpec] = {}
 #: once, and different gates build at the same time.
 _PLAN_MEMO = LRU(session_scoped=True)
 
-#: per-stage wall attribution for EAGER composite gates (r11, VERDICT
-#: r10 #6): gates whose expensive stages run driver-side inside fn()
-#: (engine seeding, lifecycle writes, the serving retrieves) wrap each
-#: stage in stage_timer(); bench.py merges this into BENCH_r{N}.json's
-#: "stages" map so a round-over-round drift is attributable without
-#: re-deriving which stage grew. min() across repeat runs (the bench's
-#: best-of-2) — same steady-state convention as the per-query number.
-#: Purely observational: no gate semantics change.
-STAGE_TIMINGS: dict[str, dict[str, float]] = {}
-_STAGE_LOCK = __import__("threading").Lock()
-
-
-def stage_timer(gate: str, stage: str):
-    import contextlib
-    import time as _time
-
-    @contextlib.contextmanager
-    def _cm():
-        t0 = _time.perf_counter()
-        try:
-            yield
-        finally:
-            dt = round(_time.perf_counter() - t0, 4)
-            with _STAGE_LOCK:
-                cur = STAGE_TIMINGS.setdefault(gate, {})
-                prev = cur.get(stage)
-                cur[stage] = dt if prev is None else min(prev, dt)
-
-    return _cm()
-
-
 #: Optional plan probe (r15, VERDICT r14 #8): several gates run their
 #: real pipeline against a per-call temp store and must materialize
 #: before the `finally` removes it, so the DECLARED frame is a

@@ -15,13 +15,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alma_memory_spark.plans.registry import (
-    _r6,
-    _t,
-    probe_plan,
-    register,
-    stage_timer,
-)
+from alma_memory_spark.metrics import carry, scope
+from alma_memory_spark.plans.registry import _r6, _t, probe_plan, register
 from alma_memory_spark.session import tiny_df as _tiny
 
 _CUTOFF = "2024-01-15 00:00:00"
@@ -232,7 +227,9 @@ def store_write_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
             with _TPE(max_workers=3) as wpool:
-                for f in [wpool.submit(one_writer, k) for k in range(3)]:
+                for f in [
+                    wpool.submit(carry(spark, one_writer), k) for k in range(3)
+                ]:
                     f.result()
             return seed_store.read("domain_knowledge").select(
                 F.lit("txlog").alias("stage"),
@@ -254,21 +251,18 @@ def store_write_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         ensure_package_shipped(spark)  # once, before the stage threads
 
-        def _timed(fn):
-            # per-stage wall attribution (r11, VERDICT r10 #6); stages
-            # run CONCURRENTLY so each stage's wall includes overlap
-            # contention — attribution, not isolated cost
+        def _tagged(fn):
+            # each stage's jobs carry a stage:<name> tag (bench.py
+            # splits the gate's profile by it)
             def run():
-                with stage_timer(
-                    "store_write_roundtrips", fn.__name__.removesuffix("_stage")
-                ):
+                with scope(spark, "stage:" + fn.__name__.removesuffix("_stage")):
                     return fn()
 
             return run
 
         with ThreadPoolExecutor(max_workers=5) as pool:
             futures = [
-                pool.submit(_timed(fn))
+                pool.submit(carry(spark, _tagged(fn)))
                 for fn in (
                     upsert_stage, audit_stage, migrate_stage, json_stage,
                     txlog_stage,
@@ -861,10 +855,13 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         from concurrent.futures import ThreadPoolExecutor
 
         append_pool = ThreadPoolExecutor(max_workers=2)
-        _seed_t = stage_timer("engine_retrieve_serving", "seed_appends")
-        _seed_t.__enter__()
-        w1 = append_pool.submit(eng.store.append, "domain_knowledge", rows_df)
-        w2 = append_pool.submit(eng.store.append, "retrieval_feedback", fb_df)
+        with scope(spark, "stage:seed_appends"):
+            w1 = append_pool.submit(
+                carry(spark, eng.store.append), "domain_knowledge", rows_df
+            )
+            w2 = append_pool.submit(
+                carry(spark, eng.store.append), "retrieval_feedback", fb_df
+            )
 
         # the IVF build starts the moment the domain_knowledge append
         # commits (it reads only that table and writes under its own
@@ -878,12 +875,11 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             def _build():
                 w1.result()
-                with stage_timer("engine_retrieve_serving", "ivf_build"):
+                with scope(spark, "stage:ivf_build"):
                     return eng.index_vectors("domain_knowledge", cent_every=50)
 
-            f3 = build_pool.submit(_build)
+            f3 = build_pool.submit(carry(spark, _build))
             w1.result(), w2.result()
-            _seed_t.__exit__(None, None, None)
             append_pool.shutdown(wait=True)
 
             # the cache-separation property (mode/top_k/use_feedback in
@@ -896,7 +892,7 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             # e2e-first ordering kept the most expensive cold retrieve
             # OFF the thread pool and on the gate's critical path).
             def e2e_call():
-              with stage_timer("engine_retrieve_serving", "e2e"):
+              with scope(spark, "stage:e2e"):
                 s = eng.retrieve(
                     QUERY_TEXT, agent="helena", project_id="p", top_k=20
                 )
@@ -906,7 +902,7 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
 
             def recall_call():
-              with stage_timer("engine_retrieve_serving", "recall"):
+              with scope(spark, "stage:recall"):
                 s = eng.retrieve(
                     QUERY_TEXT, agent="helena", project_id="p", top_k=15, mode="recall"
                 )
@@ -916,7 +912,7 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
 
             def feedback_call():
-              with stage_timer("engine_retrieve_serving", "feedback"):
+              with scope(spark, "stage:feedback"):
                 s = eng.retrieve(
                     QUERY_TEXT, agent="helena", project_id="p", top_k=20,
                     use_feedback=True,
@@ -934,7 +930,7 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             def ann_call():
                 rep = f3.result()
                 assert rep["indexed"], rep
-                with stage_timer("engine_retrieve_serving", "ann"):
+                with scope(spark, "stage:ann"):
                     s = eng.retrieve(
                         QUERY_TEXT, agent="helena", project_id="p", top_k=20,
                         use_ann=True, nprobe=rep["n_cells"],
@@ -945,7 +941,7 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
 
             def batch_call():
-                with stage_timer("engine_retrieve_serving", "batch"):
+                with scope(spark, "stage:batch"):
                     bt = eng.retrieve_batch(
                         [QUERY_TEXT, _BATCH_TASK_2], agent="helena",
                         project_id="p", top_k=20,
@@ -962,7 +958,7 @@ def engine_retrieve_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             # all five overlap (ann self-gates on the build)
             with ThreadPoolExecutor(max_workers=5) as pool:
                 futs = [
-                    pool.submit(c)
+                    pool.submit(carry(spark, c))
                     for c in (e2e_call, recall_call, feedback_call,
                               batch_call, ann_call)
                 ]

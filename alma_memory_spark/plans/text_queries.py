@@ -23,6 +23,7 @@ from alma_memory_spark.functions import pii as PII
 from alma_memory_spark.functions import text as X
 from alma_memory_spark.session import tiny_df as _tiny
 from alma_memory_spark.functions.vector import cosine_similarity
+from alma_memory_spark.metrics import carry
 from alma_memory_spark.plans.registry import (
     _QV_SQL,
     QUERY_VEC,
@@ -1277,11 +1278,10 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     with ThreadPoolExecutor(max_workers=3) as _pool:
-        _pd_fut = _pool.submit(_PDIDX_GATE_CACHE.get_or_build, sf_dir, _pdidx_rows)
-        _st_fut = _pool.submit(_PDIDX_GATE_CACHE.get_or_build, skey, _sentidx_rows)
-        _sub_fut = _pool.submit(
-            _PDIDX_GATE_CACHE.get_or_build, sf_dir + ":sub", _subidx_rows
-        )
+        build = _PDIDX_GATE_CACHE.get_or_build
+        _pd_fut = _pool.submit(carry(spark, build), sf_dir, _pdidx_rows)
+        _st_fut = _pool.submit(carry(spark, build), skey, _sentidx_rows)
+        _sub_fut = _pool.submit(carry(spark, build), sf_dir + ":sub", _subidx_rows)
         (pd_rows_list, pd_own_list) = _pd_fut.result()
         (st_rows_list, st_own_list) = _st_fut.result()
         sub_rows_list = _sub_fut.result()
@@ -1818,7 +1818,9 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sdroot
 
     sdpool = ThreadPoolExecutor(max_workers=1)
-    sdfut = sdpool.submit(_SDIDX_GATE_CACHE.get_or_build, sf_dir, _sdidx_root)
+    sdfut = sdpool.submit(
+        carry(spark, _SDIDX_GATE_CACHE.get_or_build), sf_dir, _sdidx_root
+    )
 
     sem = semantic_dedup_pairs(
         emb, threshold=NEARDUP_COS, cent_every=SEMDEDUP_CENT_EVERY
@@ -2065,7 +2067,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ndroot
 
     ndpool = ThreadPoolExecutor(max_workers=1)
-    ndfut = ndpool.submit(_NDIDX_GATE_CACHE.get_or_build, sf_dir, _ndidx_root)
+    ndfut = ndpool.submit(
+        carry(spark, _NDIDX_GATE_CACHE.get_or_build), sf_dir, _ndidx_root
+    )
 
     # ONE tokenize -> hash -> minhash-signature pass for the whole gate
     # (VERDICT r12 #3): 'pair' banding, the verify join's token sets,

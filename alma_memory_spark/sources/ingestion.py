@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from alma_memory_spark.metrics import carry
+
 TRANSCRIPT_SCHEMA = "source_file string, turn int, role string, text string"
 
 def _line_order(df: DataFrame) -> DataFrame:
@@ -395,7 +397,9 @@ def normalize_directory(spark: SparkSession, directory: str) -> DataFrame:
         (lambda p=p: _norm_driver_json(spark, p, fmt[p])) for p in djson
     ]
     with ThreadPoolExecutor(max_workers=min(8, len(builders))) as pool:
-        parts = [f.result() for f in [pool.submit(b) for b in builders]]
+        parts = [
+            f.result() for f in [pool.submit(carry(spark, b)) for b in builders]
+        ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

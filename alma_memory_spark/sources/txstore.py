@@ -122,10 +122,6 @@ class TxLogStore(ParquetStore):
             if f.endswith(".json") and f[:-5].isdigit()
         )
 
-    def _latest_version(self, table: str) -> int:
-        vs = self._versions(table)
-        return vs[-1] if vs else -1
-
     def _read_commit(self, table: str, v: int) -> dict:
         with open(os.path.join(self._log_dir(table), f"{v:020d}.json")) as f:
             return json.load(f)

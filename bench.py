@@ -3,6 +3,8 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ...}
+and writes BENCH_DETAIL.json next to itself: per-run walls
+("query_runs") and per-run executor profiles ("profile") of every gate.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from alma_memory_spark.metrics import scope, totals  # noqa: E402
 from alma_memory_spark.session import get_spark  # noqa: E402
 
 
@@ -154,14 +157,29 @@ def main() -> None:
     except Exception:
         pass  # warmup must never cost the round
 
-    def run_once(spec) -> float:
+    # Each run's jobs carry the tag gate:<name>:<run>; its profile is
+    # read from the status store right after the run (the store keeps
+    # only the last ~1000 jobs, so a read at the end of the sweep would
+    # lose the early gates), outside the timed region. Jobs a gate
+    # starts under a stage:<name> tag (the eager composite gates tag
+    # their stages, in whatever thread runs them) are split out under
+    # the profile's "stages".
+    profile: dict[str, list[dict]] = {}
+    read_s = 0.0  # wall spent reading profiles
+
+    def run_once(name, spec, i) -> float:
+        nonlocal read_s
+        tag = f"gate:{name}:{i}"
         t0 = time.perf_counter()
         # noop sink, NOT count(): count() lets Catalyst prune every
         # computed column from map-only plans (a projection-only
         # gate measured 0.2 s by count vs 3.3 s of real compute);
         # the noop write materializes every column of every row
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with scope(spark, tag):
+            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
+        profile.setdefault(name, []).append(totals(spark, tag))
+        read_s += time.perf_counter() - t0 - dt
         # gates cache intermediates for within-query reuse; dropping them
         # between queries keeps 50 queries' caches from accumulating into
         # GC/eviction pressure that randomly taxes later queries. The
@@ -187,9 +205,10 @@ def main() -> None:
     runs_detail: dict[str, list[float]] = {}
     import statistics
 
+    sweep_t0 = time.perf_counter()
     for name, spec in QUERIES.items():
         try:
-            walls = [run_once(spec) for _ in range(n_runs)]
+            walls = [run_once(name, spec, i) for i in range(n_runs)]
             runs_detail[name] = [round(w, 4) for w in walls]
             timings[name] = round(
                 min(walls) if n_runs <= 2 else statistics.median(walls), 4
@@ -197,62 +216,7 @@ def main() -> None:
         except Exception as e:  # one broken query must not cost the round
             errors[name] = str(e)[:200]
 
-    # Per-stage wall attribution for the composite gates (r11, VERDICT
-    # r10 #6) — answers "which stage grew" from the BENCH json alone.
-    # Two sources, merged under "stages":
-    #   - EAGER gates (engine_retrieve_serving, store_write_roundtrips)
-    #     time their stages inside the gate via registry.stage_timer
-    #     during the best-of-2 runs above (min across runs);
-    #   - LAZY union gates are re-timed once per stage by filtering the
-    #     built frame on its discriminator column — Catalyst pushes the
-    #     literal filter through the union and prunes every other
-    #     branch, so each number is that stage's subtree alone.
-    # Purely observational (the "queries"/"value" numbers are computed
-    # exactly as before); disable with SPARK_GRAFT_STAGES=0.
-    stages: dict[str, dict[str, float]] = {}
-    if os.environ.get("SPARK_GRAFT_STAGES", "1") != "0":
-        from pyspark.sql import functions as F  # noqa: E402
-
-        from alma_memory_spark.plans.registry import STAGE_TIMINGS
-
-        lazy_gates = [
-            g.strip()
-            for g in os.environ.get(
-                "SPARK_GRAFT_STAGE_GATES",
-                "text_relevance_search,minhash_lsh_pairs,neardup_pairs,"
-                "exact_dedup,table_stats,text_profile,ann_approx_topk",
-            ).split(",")
-            if g.strip()
-        ]
-        for gname in lazy_gates:
-            spec = QUERIES.get(gname)
-            if spec is None or gname in errors:
-                continue
-            try:
-                df = spec.fn(spark, sf_dir)
-                disc = next(
-                    (c for c in ("variant", "method", "stage") if c in df.columns),
-                    None,
-                )
-                if disc is None:
-                    continue
-                values = sorted(
-                    r[0] for r in df.select(disc).distinct().collect()
-                    if r[0] is not None
-                )
-                per = {}
-                for v in values:
-                    t0 = time.perf_counter()
-                    df.filter(F.col(disc) == v).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    per[str(v)] = round(time.perf_counter() - t0, 4)
-                stages[gname] = per
-                spark.catalog.clearCache()
-            except Exception as e:
-                errors.setdefault(f"stages:{gname}", str(e)[:200])
-        for gname, per in STAGE_TIMINGS.items():
-            stages.setdefault(gname, {}).update(per)
+    sweep_s = time.perf_counter() - sweep_t0
 
     # Post-sweep calibration probe (see the pre-sweep note): the
     # stdout keys are the pre/post MEAN (one era number per width for
@@ -284,14 +248,15 @@ def main() -> None:
     payload.update(calib_mean)
     if errors:
         payload["errors"] = errors
-    # The stages map + per-run spreads go to a FILE, not stdout: the
-    # r11 driver capture truncated at ~2000 chars, losing the total
-    # (the stages map pushed the line to ~3200 chars). The stdout line
-    # carries only what the harness parses; everything else lands in
-    # BENCH_DETAIL.json next to this script for the judge to read.
+    # The profiles + per-run spreads go to a FILE, not stdout: a
+    # harness capture truncated at ~2000 chars once lost the total.
+    # The stdout line carries only what the harness parses; everything
+    # else lands in BENCH_DETAIL.json next to this script.
     try:
         detail = dict(payload)
-        detail["stages"] = stages
+        detail["profile"] = profile
+        detail["profile_read_s"] = round(read_s, 4)
+        detail["sweep_s"] = round(sweep_s, 4)
         detail["query_runs"] = runs_detail
         if calib_enabled:
             detail["calibration"] = {"pre": calib_pre, "post": calib_post}

@@ -7,10 +7,11 @@ quality/LM filter -> stratified sample -> BPE pack -> shards — had
 never run end-to-end at a measured scale step. This script runs it at
 1x and Nx (default 8x) replications of sf0.1 documents, materializing
 each stage to parquet (the checkpointed-pipeline shape) and recording
-per-stage wall, output rows, and SHUFFLE read/write bytes (from the
-Spark UI REST API), so cross-operator waste — a redundant repartition
-between stages, a lost partitioning contract — shows up as a
-super-linear shuffle column instead of hiding inside per-op gates.
+per-stage wall, output rows, and SHUFFLE read/write bytes (the stage's
+tagged jobs, read by alma_memory_spark.metrics.totals), so
+cross-operator waste — a redundant repartition between stages, a lost
+partitioning contract — shows up as a super-linear shuffle column
+instead of hiding inside per-op gates.
 
 Run:  python scripts/measure_chain.py [scales]     # e.g. "1,8" (default)
 Env:  SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -25,7 +26,6 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 import duckdb
 
@@ -34,9 +34,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from alma_memory_spark.metrics import scope, totals  # noqa: E402
+from alma_memory_spark.session import ensure_package_shipped, get_spark  # noqa: E402
+
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-UI_PORT = 4057
 
 
 def replicate_docs(dst: str, copies: int) -> None:
@@ -63,20 +65,7 @@ def replicate_docs(dst: str, copies: int) -> None:
     )
 
 
-def shuffle_totals(app_id: str) -> tuple[int, int]:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages?status=complete"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = json.load(r)
-        return (
-            sum(s.get("shuffleReadBytes", 0) for s in stages),
-            sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        )
-    except Exception:
-        return (0, 0)
-
-
-def run_chain(spark: SparkSession, app_id: str, src: str, work: str) -> list[dict]:
+def run_chain(spark: SparkSession, src: str, work: str) -> list[dict]:
     from alma_memory_spark import pipeline as P
     from alma_memory_spark.embedding import DEFAULT_DIM, hash_embed
     from alma_memory_spark.operators.dedup_index import NearDupIndex
@@ -85,26 +74,30 @@ def run_chain(spark: SparkSession, app_id: str, src: str, work: str) -> list[dic
     results: list[dict] = []
     cur_path = src
 
-    def stage(name, fn, out_name, count_col="doc_id"):
-        nonlocal cur_path
-        r0, w0 = shuffle_totals(app_id)
-        t0 = time.perf_counter()
-        df_in = spark.read.parquet(cur_path)
-        out = fn(df_in)
-        out_path = os.path.join(work, out_name)
-        out.write.mode("overwrite").parquet(out_path)
-        n = spark.read.parquet(out_path).count()
-        wall = time.perf_counter() - t0
-        r1, w1 = shuffle_totals(app_id)
+    def record(name: str, tag: str, wall: float, n: int) -> None:
+        tot = totals(spark, tag)
         results.append(
             {
                 "stage": name,
                 "wall_s": round(wall, 2),
                 "rows_out": n,
-                "shuffle_read_mb": round((r1 - r0) / 1e6, 1),
-                "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
+                "shuffle_read_mb": round(tot["shuffle_read_bytes"] / 1e6, 1),
+                "shuffle_write_mb": round(tot["shuffle_write_bytes"] / 1e6, 1),
             }
         )
+
+    def stage(name, fn, out_name, count_col="doc_id"):
+        nonlocal cur_path
+        tag = f"chain:{os.path.basename(work)}:{name}"
+        t0 = time.perf_counter()
+        with scope(spark, tag):
+            df_in = spark.read.parquet(cur_path)
+            out = fn(df_in)
+            out_path = os.path.join(work, out_name)
+            out.write.mode("overwrite").parquet(out_path)
+            n = spark.read.parquet(out_path).count()
+        wall = time.perf_counter() - t0
+        record(name, tag, wall, n)
         print(f"  .. {name}: {wall:.2f}s rows={n}", flush=True)
         cur_path = out_path
         spark.catalog.clearCache()
@@ -305,22 +298,14 @@ def run_chain(spark: SparkSession, app_id: str, src: str, work: str) -> list[dic
     )
     # 12) shard emission + manifest + verify
     shards = os.path.join(work, "shards")
-    r0, w0 = shuffle_totals(app_id)
+    tag = f"chain:{os.path.basename(work)}:shards"
     t0 = time.perf_counter()
-    packed = spark.read.parquet(cur_path)
-    P.write_training_shards(packed, shards, token_col="n_bpe")
-    P.verify_shards(spark, shards, token_col="n_bpe")
+    with scope(spark, tag):
+        packed = spark.read.parquet(cur_path)
+        P.write_training_shards(packed, shards, token_col="n_bpe")
+        P.verify_shards(spark, shards, token_col="n_bpe")
     wall = time.perf_counter() - t0
-    r1, w1 = shuffle_totals(app_id)
-    results.append(
-        {
-            "stage": "shards+verify",
-            "wall_s": round(wall, 2),
-            "rows_out": spark.read.parquet(shards).count(),
-            "shuffle_read_mb": round((r1 - r0) / 1e6, 1),
-            "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
-        }
-    )
+    record("shards+verify", tag, wall, spark.read.parquet(shards).count())
     return results
 
 
@@ -328,21 +313,9 @@ def main() -> None:
     scales = [
         int(s) for s in (sys.argv[1] if len(sys.argv) > 1 else "1,8").split(",")
     ]
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.driver.memory", "16g")
-        .appName("measure_chain")
-        .getOrCreate()
-    )
+    spark = get_spark("measure_chain", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    from alma_memory_spark.session import ensure_package_shipped
-
     ensure_package_shipped(spark)
-    app_id = spark.sparkContext.applicationId
 
     root = tempfile.mkdtemp(prefix="alma_chain_")
     all_results: dict[int, list[dict]] = {}
@@ -351,9 +324,7 @@ def main() -> None:
             src = os.path.join(root, f"docs_{c}x.parquet")
             replicate_docs(src, c)
             t0 = time.perf_counter()
-            all_results[c] = run_chain(
-                spark, app_id, src, os.path.join(root, f"work_{c}x")
-            )
+            all_results[c] = run_chain(spark, src, os.path.join(root, f"work_{c}x"))
             total = time.perf_counter() - t0
             print(f"\n=== scale {c}x (chain total {total:.1f}s) ===")
             for r in all_results[c]:

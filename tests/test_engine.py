@@ -403,10 +403,26 @@ def test_writes_to_tables_retrieve_does_not_read_keep_the_slice(engine):
     assert engine.retrieve("deploy process", agent="helena", project_id="proj-a") is s1
 
 
+def test_compaction_keeps_the_slice_and_a_later_write_does_not(engine):
+    """optimize rewrites files but changes no row, so the cached slice
+    stays; a row write after it still invalidates."""
+    for i in range(4):
+        engine.add_knowledge("helena", "proj-a", "deploy", f"deploy fact {i}")
+    s1 = engine.retrieve("deploy fact", agent="helena", project_id="proj-a")
+    assert "domain_knowledge" in engine.optimize(["domain_knowledge"])
+    s2 = engine.retrieve("deploy fact", agent="helena", project_id="proj-a")
+    assert s2 is s1
+    engine.add_knowledge("helena", "proj-a", "deploy", "deploy fact 4")
+    s3 = engine.retrieve("deploy fact", agent="helena", project_id="proj-a")
+    assert s3 is not s1
+    assert len(s3.domain_knowledge) == 5
+
+
 def test_every_store_write_goes_through_the_seam():
-    """Each self.store write call in AlmaSpark sits in _write or in a
+    """Each self.store row write in AlmaSpark sits in _write or in a
     method that also calls self._wrote, so no write can skip the
-    slice-cache invalidation its table and scope imply."""
+    slice-cache invalidation its table and scope imply. Compaction is
+    not a row write (optimize changes no row)."""
     import ast
     import inspect
 
@@ -414,7 +430,7 @@ def test_every_store_write_goes_through_the_seam():
 
     writes = {
         "append", "upsert", "delete", "overwrite", "_rewrite_partitions",
-        "compact", "archive",
+        "archive",
     }
 
     def self_call(node, attr, via_store=False):
@@ -442,7 +458,7 @@ def test_every_store_write_goes_through_the_seam():
             offenders.append(fn.name)
     assert not offenders
     # the scan sees the writes that are not row-shaped
-    assert {("forget", "delete"), ("optimize", "compact"),
+    assert {("forget", "delete"),
             ("_consolidate_once", "_rewrite_partitions")} <= set(found)
     for gone in ("_bump", "_invalidate_cache", "_rows_df"):
         assert not hasattr(AlmaSpark, gone)
