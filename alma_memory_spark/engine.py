@@ -433,11 +433,10 @@ class AlmaSpark:
                 if not self.store.exists(t):
                     continue
                 view, df, stamp = self._serving_view(t)
-                if probe is not None and self._has_ivf_index(t):
-                    idx = self._load_ivf(t)
+                if probe is not None:
                     # same scope rule as every other ANN path: a scope
                     # the index cannot express keeps the exact scan
-                    want = self._ann_scope_filters(df, idx, project_id, agents)
+                    idx, want = self._ann_index_for(t, df, project_id, agents)
                     if want is not None:
                         cand_refs[t] = probe(t, idx, want)
                 branches.append(
@@ -1374,12 +1373,17 @@ class AlmaSpark:
     def _ivf_index_path(self, table: str) -> str:
         return os.path.join(self.store.root, "_indexes", "ivf", table)
 
-    def _has_ivf_index(self, table: str) -> bool:
+    @staticmethod
+    def _has_index(path: str, sub: str) -> bool:
+        """Whether a persisted index at `path` has a live version
+        holding `sub` (lists for IVF, stats for text)."""
         from alma_memory_spark.operators._index_version import resolve_vroot
 
-        return os.path.isdir(
-            os.path.join(resolve_vroot(self._ivf_index_path(table)), "lists")
-        )
+        vroot = resolve_vroot(path)
+        return vroot is not None and os.path.isdir(os.path.join(vroot, sub))
+
+    def _has_ivf_index(self, table: str) -> bool:
+        return self._has_index(self._ivf_index_path(table), "lists")
 
     def _load_ivf(self, table: str):
         """Cached IVF handle for the serving paths: the quantizer is
@@ -1389,18 +1393,14 @@ class AlmaSpark:
         which every rebuild's atomic swap touches (this process or
         another); segments and tombstones are re-listed from disk on
         every search, so the cached handle never serves stale adds or
-        deletes. Pre-versioning flat layouts key off the centroids dir
-        mtime as before."""
+        deletes."""
         from alma_memory_spark.operators.ann_index import IVFIndex
 
         path = self._ivf_index_path(table)
         try:
             mtime = os.path.getmtime(os.path.join(path, "_CURRENT"))
         except OSError:
-            try:
-                mtime = os.path.getmtime(os.path.join(path, "centroids"))
-            except OSError:
-                mtime = -1.0
+            mtime = -1.0
         hit = self._ivf_handles.get(table, valid=lambda e: e[0] == mtime)
         if hit is not None:
             return hit[1]
@@ -1520,10 +1520,10 @@ class AlmaSpark:
     @staticmethod
     def _ann_scope_filters(df: DataFrame, idx, project_id, agent) -> dict | None:
         """Scope predicates servable INSIDE the pruned index scan, or
-        None when the index lacks a needed scope column (callers then
-        fall back to the live-id semi-join guard). Shared by EVERY ANN
-        entry point — single/batch, SQL/DataFrame — so the scoping rule
-        cannot diverge (ADVICE r12 retired the two inline copies).
+        None when the index lacks a needed scope column — callers then
+        serve from their exact scan. Shared by EVERY ANN entry point —
+        single/batch, SQL/DataFrame — so the scoping rule cannot
+        diverge (ADVICE r12 retired the two inline copies).
 
         `agent` accepts a single name, None, or the agents list from
         retrieve()'s inherit_from form; a one-element list collapses to
@@ -1539,6 +1539,14 @@ class AlmaSpark:
             return want
         return None
 
+    def _ann_index_for(self, table: str, df: DataFrame, project_id, agent):
+        """(IVF handle, scope filters) when the table's index can serve
+        this scope, else (handle or None, None): the exact scan serves."""
+        if not self._has_ivf_index(table):
+            return None, None
+        idx = self._load_ivf(table)
+        return idx, self._ann_scope_filters(df, idx, project_id, agent)
+
     def search_vectors(
         self,
         task: str,
@@ -1552,10 +1560,10 @@ class AlmaSpark:
         """ANN retrieval served from the persisted IVF index when one
         exists (partition-pruned probe of nprobe cells), else exact
         cosine over the scoped scan. Scope predicates apply INSIDE the
-        pruned index scan when the index carries the scope columns
-        (index_vectors stores them — the query never touches the
-        corpus until the final <= top_k row hydration join); older
-        indexes without them fall back to the live-id semi-join.
+        pruned index scan (index_vectors stores the scope columns — the
+        query never touches the corpus until the final <= top_k row
+        hydration join); an index that cannot express the scope
+        (_ann_scope_filters) is not used, and the exact scan serves.
         Tombstones exclude ids removed by forget() or consolidation
         merges since the last rebuild.
 
@@ -1575,26 +1583,13 @@ class AlmaSpark:
             df = df.filter(F.col("project_id") == project_id)
         if "agent" in df.columns and agent is not None:
             df = df.filter(F.col("agent") == agent)
-        if self._has_ivf_index(table):
-            idx = self._load_ivf(table)
-            want = self._ann_scope_filters(df, idx, project_id, agent)
-            if refine is not None and idx.pq is not None:
-                if want is not None:
-                    hits = idx.search_pq(
-                        qvec, k=top_k, nprobe=nprobe, refine=refine,
-                        filters=want,
-                    )
-                else:
-                    hits = idx.search_pq(
-                        qvec, k=top_k, nprobe=nprobe, refine=refine,
-                        live_ids=df.select("id"),
-                    )
-            elif want is not None:
-                hits = idx.search(qvec, k=top_k, nprobe=nprobe, filters=want)
-            else:
-                hits = idx.search(
-                    qvec, k=top_k, nprobe=nprobe, live_ids=df.select("id")
-                )
+        idx, want = self._ann_index_for(table, df, project_id, agent)
+        if want is not None and refine is not None and idx.pq is not None:
+            hits = idx.search_pq(
+                qvec, k=top_k, nprobe=nprobe, refine=refine, filters=want
+            )
+        elif want is not None:
+            hits = idx.search(qvec, k=top_k, nprobe=nprobe, filters=want)
         else:
             qlit = F.lit([float(x) for x in qvec])  # one py4j call
             hits = (
@@ -1631,10 +1626,11 @@ class AlmaSpark:
         questions per job for the same reason — benchmarks/longmem.py
         one-job ranking; FAISS exposes the same batch dimension on
         Index.search). Per-task results are identical to
-        search_vectors(task): index path via IVFIndex.search_batch
-        (union-of-probes pruned scan + per-query mask + one qid
-        shuffle), exact path via a broadcast query crossJoin over the
-        scoped scan. Returns {task: rows}."""
+        search_vectors(task), with the same scope rule: index path via
+        IVFIndex.search_batch (union-of-probes pruned scan + per-query
+        mask + one qid shuffle), exact path — no index, or one that
+        cannot express the scope — via a broadcast query crossJoin over
+        the scoped scan. Returns {task: rows}."""
         from pyspark.sql.window import Window as W
 
         from alma_memory_spark.functions.vector import cosine_similarity
@@ -1650,19 +1646,11 @@ class AlmaSpark:
             df = df.filter(F.col("project_id") == project_id)
         if "agent" in df.columns and agent is not None:
             df = df.filter(F.col("agent") == agent)
-        if self._has_ivf_index(table):
-            idx = self._load_ivf(table)
-            want = self._ann_scope_filters(df, idx, project_id, agent)
-            if want is not None:
-                hits = idx.search_batch(
-                    list(zip(qids, qvecs)), k=top_k, nprobe=nprobe,
-                    filters=want,
-                )
-            else:
-                hits = idx.search_batch(
-                    list(zip(qids, qvecs)), k=top_k, nprobe=nprobe,
-                    live_ids=df.select("id"),
-                )
+        idx, want = self._ann_index_for(table, df, project_id, agent)
+        if want is not None:
+            hits = idx.search_batch(
+                list(zip(qids, qvecs)), k=top_k, nprobe=nprobe, filters=want
+            )
         else:
             qdf = tiny_df(
                 self.spark,
@@ -1713,12 +1701,15 @@ class AlmaSpark:
         same weight normalization as HybridSearchConfig.__post_init__.
 
         The keyword side serves from the PERSISTED index when
-        index_text() has run (partition-pruned postings scan; global
-        corpus stats), over-fetching 4x before the scope semi-join so a
-        scoped hit below the global top stays in the list; without an
-        index it falls back to the scan-based bm25_scores over the
-        already-scoped rows — same formula, corpus-sized read. Both
-        rankings are top-few-dozen rows, so the fuse join broadcasts."""
+        index_text() has run and the index carries every scope column
+        the call filters on (index_text stores them): the scope
+        predicates push into the partition-pruned postings scan and
+        the statistics are the scope's own, so scores equal scan-BM25
+        over the scoped rows. Otherwise — no index, or one that cannot
+        express the scope — the scan-based bm25_scores over the
+        already-scoped rows serves: same formula, corpus-sized read.
+        Both rankings are top-few-dozen rows, so the fuse join
+        broadcasts."""
         from alma_memory_spark.functions.vector import cosine_similarity
         from alma_memory_spark.operators.fusion import rrf_fuse
         from alma_memory_spark.operators.text_index import InvertedTextIndex
@@ -1758,8 +1749,30 @@ class AlmaSpark:
             # keyword-only: the fuse degenerates to the text ranking
             vec = self.spark.createDataFrame([], "id string, similarity double")
 
-        def scan_bm25() -> DataFrame:
-            return (
+        ixpath = self._text_index_path(table)
+        idx = (
+            InvertedTextIndex.load(self.spark, ixpath)
+            if self._has_index(ixpath, "stats")
+            else None
+        )
+        want = {}
+        if project_id is not None and "project_id" in df.columns:
+            want["project_id"] = project_id
+        if "agent" in df.columns:
+            want["agent"] = agent
+        if user_id is not None and "user_id" in df.columns:
+            want["user_id"] = user_id
+        if idx is not None and set(want) <= {n for n, _t in idx.extra_cols}:
+            # the live-table semi-join is the staleness guard for rows
+            # deleted since the last reindex
+            txt = (
+                idx.search_bm25(query, k=2 * fetch, filters=want)
+                .join(df.select("id"), "id", "left_semi")
+                .orderBy(F.desc("bm25_score"), F.asc("id"))
+                .limit(fetch)
+            )
+        else:
+            txt = (
                 bm25_scores(
                     df.select("id", self._text_expr(table).alias("_text")),
                     query,
@@ -1769,48 +1782,6 @@ class AlmaSpark:
                 .orderBy(F.desc("bm25_score"), F.asc("id"))
                 .limit(fetch)
             )
-
-        from alma_memory_spark.operators._index_version import resolve_vroot
-
-        ixpath = self._text_index_path(table)
-        if os.path.isdir(os.path.join(resolve_vroot(ixpath), "stats")):
-            idx = InvertedTextIndex.load(self.spark, ixpath)
-            want = {}
-            if project_id is not None and "project_id" in df.columns:
-                want["project_id"] = project_id
-            if "agent" in df.columns:
-                want["agent"] = agent
-            if user_id is not None and "user_id" in df.columns:
-                want["user_id"] = user_id
-            if set(want) <= {n for n, _t in idx.extra_cols}:
-                # EXACT scoped path: the scope predicates push into the
-                # pruned postings scan and the stats come from the
-                # per-group table — identical scores to scan-BM25 over
-                # the scoped corpus, no over-fetch, no fallback. The
-                # live-table semi-join stays as the staleness guard for
-                # rows deleted since the last reindex.
-                txt = (
-                    idx.search_bm25(query, k=2 * fetch, filters=want)
-                    .join(df.select("id"), "id", "left_semi")
-                    .orderBy(F.desc("bm25_score"), F.asc("id"))
-                    .limit(fetch)
-                )
-            else:
-                # legacy index without scope columns: global ranking +
-                # scope semi-join, with the saturation fallback — the
-                # global cut returning the full 4*fetch while the
-                # scoped semi-join comes back short is the only case a
-                # scoped hit can have been cut away.
-                glob = idx.search_bm25(query, k=4 * fetch)
-                txt = (
-                    glob.join(df.select("id"), "id", "left_semi")
-                    .orderBy(F.desc("bm25_score"), F.asc("id"))
-                    .limit(fetch)
-                )
-                if txt.count() < fetch and glob.count() >= 4 * fetch:
-                    txt = scan_bm25()
-        else:
-            txt = scan_bm25()
 
         fused = rrf_fuse(
             vec,

@@ -34,10 +34,9 @@ protocol:
   `.build-*` dirs from crashed builds are reaped once NOTHING in
   their tree has been written for a day (newest-mtime walk — a live
   long build's top-level mtime is stale while its files still land).
-- pre-versioning FLAT layouts (index files directly under <index>/)
-  keep working: resolution falls back to the index root when _CURRENT
-  is absent, and the flat files are garbage-collected once they are
-  two builds stale.
+- an index root without _CURRENT holds no servable build: load()
+  raises and asks for a rebuild (indexes are derived data, rebuilt
+  from the store), and mutations through a handle refuse to write.
 """
 
 from __future__ import annotations
@@ -79,22 +78,49 @@ def _newest_mtime(root: str) -> float:
     return newest
 
 
-def resolve_vroot(path: str) -> str:
-    """Directory holding the LIVE index files: the _CURRENT version dir,
-    or the index root itself for pre-versioning flat layouts."""
-    try:
-        with open(os.path.join(path, CURRENT_FILE)) as f:
-            return os.path.join(path, f.read().strip())
-    except OSError:
-        return path
-
-
 def _read_current(path: str) -> str | None:
     try:
         with open(os.path.join(path, CURRENT_FILE)) as f:
             return f.read().strip()
     except OSError:
         return None
+
+
+def resolve_vroot(path: str) -> str | None:
+    """Directory holding the LIVE index files: the version dir _CURRENT
+    names, or None when the root has no _CURRENT (nothing built)."""
+    name = _read_current(path)
+    return None if name is None else os.path.join(path, name)
+
+
+def load_vroot(path: str) -> str:
+    """resolve_vroot for load(): a root without _CURRENT is not a
+    versioned index (nothing built, or a pre-versioning layout)."""
+    vroot = resolve_vroot(path)
+    if vroot is None:
+        raise ValueError(
+            f"no versioned index at {path} (no {CURRENT_FILE} file) — "
+            "rebuild it"
+        )
+    return vroot
+
+
+def require_live_version(path: str, vroot: str) -> None:
+    """Mutations through a handle whose version is no longer the one
+    _CURRENT names must fail loudly: a write into a superseded (even
+    if still-retained) version dir commits data that no new load will
+    ever serve — a streaming sink holding a handle across a maintenance
+    rebuild would otherwise lose every later micro-batch silently.
+    Readers don't need this (their snapshot is the point)."""
+    cur = resolve_vroot(path)
+    if cur is None or os.path.abspath(cur) != os.path.abspath(vroot):
+        raise RuntimeError(
+            f"index handle pins version {os.path.basename(vroot)!r} of "
+            f"{path}, but the current version is "
+            f"{cur and os.path.basename(cur)!r}: a rebuild swapped since "
+            "this handle loaded, and a write here would never be served; "
+            "reload the index before writing"
+        )
 
 
 def _vnum(name: str | None) -> int:
@@ -110,13 +136,11 @@ def begin_version(path: str) -> str:
     return vdir
 
 
-def commit_version(path: str, staging: str,
-                   flat_subdirs: tuple[str, ...]) -> str:
+def commit_version(path: str, staging: str) -> str:
     """Claim a version number for the staged build (atomic rename —
     racing builds bump past each other's claims), atomically swap
     _CURRENT to it, then GC: keep the committed and previous versions,
     drop numerically OLDER ones only (never a racer's newer claim),
-    drop flat-layout leftovers once a previous VERSIONED build exists,
     and reap crashed builds' stale staging dirs. Returns the committed
     version dir's abspath."""
     prev = _read_current(path)
@@ -152,9 +176,6 @@ def commit_version(path: str, staging: str,
             full = os.path.join(path, d)
             if time.time() - _newest_mtime(full) > _STAGING_TTL_SECONDS:
                 shutil.rmtree(full, ignore_errors=True)
-    if prev is not None:
-        for d in flat_subdirs:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
     return vdir
 
 

@@ -25,13 +25,10 @@ layout serves exactly that:
 Storage doubles; the pairs table is bounded by the near-duplicate
 population (tiny vs the corpus) — the standard adjacency-list trade.
 
-Indexes persisted BEFORE this layout (stats params lack
-``pairs_layout``) keep working: reads fall back to the flat schema and
-the guard falls back to an exploded-endpoint broadcast semi-join over
-the flat scan — still O(batch-adjacent) join work with no history
-shuffle, just without the partition prune. New builds always write
-layout 2; appends follow the layout the index was built with (mixing
-layouts in one directory would corrupt partition discovery).
+Every build records ``pairs_layout`` in its stats params; an index
+whose stats lack it (or name another layout) predates this layout and
+its load() refuses it — the index is derived data, so the fix is a
+rebuild.
 """
 
 from __future__ import annotations
@@ -47,8 +44,19 @@ __all__ = [
     "pair_src_bucket",
     "read_adjacent_pairs",
     "read_pairs",
+    "require_pairs_layout",
     "write_pairs",
 ]
+
+
+def require_pairs_layout(params: dict, path: str) -> None:
+    """load()'s check of an index's stats params: its pairs must be in
+    the current layout."""
+    if params.get("pairs_layout") != PAIRS_LAYOUT:
+        raise ValueError(
+            f"index at {path} has pairs layout "
+            f"{params.get('pairs_layout')!r}, not {PAIRS_LAYOUT} — rebuild it"
+        )
 
 
 def pair_src_bucket(col, n_buckets: int):
@@ -66,14 +74,9 @@ def write_pairs(
     b_col: str,
     sim_col: str,
     n_buckets: int,
-    legacy: bool = False,
 ) -> None:
-    """Append verified pairs (a < b). Layout 2 writes both orientations
-    partitioned by the src bucket; ``legacy`` appends the flat schema
-    for indexes built before the layout existed."""
-    if legacy:
-        pairs.write.mode("append").parquet(path)
-        return
+    """Append verified pairs (a < b): both orientations, partitioned by
+    the src bucket."""
     fwd = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst"), F.col(sim_col)
     )
@@ -97,13 +100,9 @@ def read_pairs(
     b_col: str,
     sim_col: str,
     id_type: str,
-    legacy: bool = False,
 ) -> DataFrame:
     """Canonical one-row-per-pair view (a < b) of the accumulated
-    pairs — identical logical content in both layouts."""
-    flat_schema = f"{a_col} {id_type}, {b_col} {id_type}, {sim_col} double"
-    if legacy:
-        return spark.read.schema(flat_schema).parquet(path)
+    pairs."""
     return (
         spark.read.schema(_oriented_schema(id_type, sim_col))
         .parquet(path)
@@ -123,28 +122,15 @@ def read_adjacent_pairs(
     sim_col: str,
     id_type: str,
     n_buckets: int,
-    legacy: bool = False,
 ) -> DataFrame:
     """Accumulated pairs TOUCHING any id in ``ids`` (single column,
     any name) — the replay guard's right side. May return a pair twice
     when both endpoints are in the batch; callers feed a left_anti,
-    where duplicates are harmless. Layout 2 prunes the scan to the
-    batch ids' src partitions (bucket list collect is bounded by
-    n_buckets, the tbuckets precedent); legacy scans flat history but
-    still joins only O(batch-adjacent) rows via a broadcast semi-join —
-    the history is never shuffled in either layout."""
+    where duplicates are harmless. The scan prunes to the batch ids'
+    src partitions (bucket list collect is bounded by n_buckets, the
+    tbuckets precedent) and broadcast-semi-joins the ids — the history
+    is never shuffled."""
     (id_col,) = ids.columns
-    if legacy:
-        flat = read_pairs(spark, path, a_col, b_col, sim_col, id_type, legacy=True)
-        return (
-            flat.withColumn("_t", F.explode(F.array(a_col, b_col)))
-            .join(
-                F.broadcast(ids.select(F.col(id_col).alias("_t")).distinct()),
-                "_t",
-                "left_semi",
-            )
-            .drop("_t")
-        )
     srcs = ids.select(F.col(id_col).alias("src")).distinct()
     buckets = [
         r["b"]
@@ -180,16 +166,14 @@ def compact_pairs(
     sim_col: str,
     id_type: str,
     n_buckets: int,
-    legacy: bool = False,
 ) -> None:
     """Fold an accumulated pairs dir into a fresh one: deduplicated
     canonical content, ONE file per sbucket partition (each add()
     appends a file per touched partition, so a long-running streaming
-    maintainer degrades the file listing without this). A LEGACY flat
-    dir comes out migrated to the adjacency layout. Shared by every
+    maintainer degrades the file listing without this). Shared by every
     index compact() — content is identical through the canonical view
     by construction."""
     folded = read_pairs(
-        spark, src, a_col, b_col, sim_col, id_type, legacy=legacy
+        spark, src, a_col, b_col, sim_col, id_type
     ).dropDuplicates([a_col, b_col])
     write_pairs(folded, dest, a_col, b_col, sim_col, n_buckets)

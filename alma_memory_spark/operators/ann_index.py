@@ -18,12 +18,10 @@ half-written rebuild; handles pin their version at load and the
 previous version is retained for them):
     <path>/_CURRENT        names the live version dir (atomic swap)
     <path>/v<N>/centroids/ tiny parquet: (cell bigint, cvec array<double>,
-                           id_type, cent_every, extra_cols — meta rides the
-                           centroid rows; a separate meta/ dir is the legacy
-                           layout, still readable)
-    <path>/v<N>/meta/      one-row parquet: (id_type, cent_every) — id_type
-                           lets memory-table string ids index too (cells
-                           then come from xxhash64(id) instead of the id)
+                           id_type, cent_every, extra_cols, n_assign) —
+                           the meta rides the centroid rows; id_type lets
+                           memory-table string ids index too (cells then
+                           come from xxhash64(id) instead of the id)
     <path>/v<N>/lists/     parquet partitioned by cell: (id, embedding)
     <path>/v<N>/tombstones/ optional parquet: (id) — ids forgotten since
                            this version was built; search anti-joins them
@@ -76,16 +74,12 @@ from alma_memory_spark.metrics import carry
 from alma_memory_spark.operators._index_version import (
     begin_version,
     commit_version,
+    load_vroot,
+    require_live_version,
     resolve_vroot,
 )
 
 _NUMERIC_ID_TYPES = {"bigint", "int", "smallint", "tinyint", "long"}
-
-#: flat-layout leftovers GC-ed once two versioned builds exist
-_FLAT_SUBDIRS = (
-    "lists", "centroids", "meta", "segments", "tombstones",
-    "tombstones_staging",
-)
 
 
 def stride_seed_centroids(df, id_col: str, vec_col: str, cent_every: int):
@@ -141,7 +135,7 @@ class IVFIndex:
     ):
         self.spark = spark
         self.path = path
-        self.vroot = vroot or path
+        self.vroot = vroot
         self.cells = cells  # np.int64 cell ids, sorted DESC
         self.Cn = Cn  # L2-normalized centroid matrix, rows follow cells
         self.id_type = id_type
@@ -160,8 +154,7 @@ class IVFIndex:
         #: (name, type) attribute columns stored alongside each list
         #: entry — scope columns (project_id, agent) ride the lists so
         #: a scoped search filters INSIDE the pruned scan instead of
-        #: joining the corpus table (the per-query live-id semi-join
-        #: would shuffle the scoped id set at 100 TB)
+        #: joining the corpus table
         self.extra_cols = extra_cols or []
         #: name -> (staleness key, plan or view name): the lists plan
         #: and the SQL probe's temp views, shared by concurrent probes
@@ -402,7 +395,7 @@ class IVFIndex:
             raise
         finally:
             pool.shutdown(wait=False)
-        idx.vroot = commit_version(path, vdir, _FLAT_SUBDIRS)  # COMMIT POINT
+        idx.vroot = commit_version(path, vdir)  # COMMIT POINT
         return idx
 
     @staticmethod
@@ -435,8 +428,7 @@ class IVFIndex:
 
         # meta rides the centroid rows as constant columns: one tiny
         # write instead of two (each costs a full Spark job on the
-        # serving-rebuild path); load() falls back to the separate
-        # meta dir for indexes persisted by older builds
+        # serving-rebuild path)
         meta_json = _json.dumps(extras)
         tiny_df(
             spark,
@@ -549,34 +541,21 @@ class IVFIndex:
         the version _CURRENT names right now — a rebuild that swaps
         afterwards never disturbs this handle's files (the previous
         version is retained through the NEXT swap)."""
+        import json
+
         import numpy as np
 
-        vroot = resolve_vroot(path)
+        vroot = load_vroot(path)
         rows = sorted(
             spark.read.parquet(os.path.join(vroot, "centroids")).collect(),
             key=lambda r: -r["cell"],
         )
         cells = np.array([r["cell"] for r in rows], dtype=np.int64)
         Cn = np.array([r["cvec"] for r in rows], dtype=np.float64)
-        import json as _json
-
-        id_type, extras, n_assign = "bigint", [], 1
-        if rows and "id_type" in rows[0].asDict():
-            # meta rides the centroid rows (current layout)
-            id_type = rows[0]["id_type"]
-            if rows[0]["extra_cols"]:
-                extras = [tuple(e) for e in _json.loads(rows[0]["extra_cols"])]
-            # absent in pre-r9 indexes -> single membership
-            if "n_assign" in rows[0].asDict():
-                n_assign = int(rows[0]["n_assign"])
-        elif os.path.isdir(os.path.join(vroot, "meta")):
-            # legacy layout: separate one-row meta dir
-            meta = spark.read.parquet(
-                os.path.join(vroot, "meta")
-            ).collect()[0].asDict()
-            id_type = meta["id_type"]
-            if meta.get("extra_cols"):
-                extras = [tuple(e) for e in _json.loads(meta["extra_cols"])]
+        # the meta rides every centroid row (build() writes >= 1 cell)
+        id_type = rows[0]["id_type"]
+        extras = [tuple(e) for e in json.loads(rows[0]["extra_cols"])]
+        n_assign = int(rows[0]["n_assign"])
         pq = None
         if os.path.isdir(os.path.join(vroot, "pq")):
             pmeta = spark.read.parquet(
@@ -610,7 +589,7 @@ class IVFIndex:
         same as the store's partition-scoped upsert contract."""
         from alma_memory_spark.session import ensure_package_shipped
 
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         ensure_package_shipped(self.spark)
         self._write_lists(df, id_col, vec_col, mode="append")
         return self
@@ -635,7 +614,7 @@ class IVFIndex:
         from alma_memory_spark.session import ensure_package_shipped
 
         if os.path.abspath(dest_path) == os.path.abspath(self.path):
-            self._require_live_version()
+            require_live_version(self.path, self.vroot)
         ensure_package_shipped(self.spark)
         vdir = begin_version(dest_path)
         shutil.copytree(
@@ -668,28 +647,8 @@ class IVFIndex:
                 os.path.join(self._segments_root(), str(e), "_COMMIT"),
                 os.path.join(seg, "_COMMIT"),
             )
-        commit_version(dest_path, vdir, _FLAT_SUBDIRS)
+        commit_version(dest_path, vdir)
         return IVFIndex.load(self.spark, dest_path)
-
-    def _require_live_version(self) -> None:
-        """Mutations through a handle whose version is no longer the
-        CURRENT one must fail loudly: a write into a superseded (even
-        if still-retained) version dir commits data that no new load
-        will ever serve — a streaming sink holding a handle across a
-        maintenance rebuild would otherwise lose every subsequent
-        micro-batch silently. Readers don't need this (their snapshot
-        is the point); only add/add_epoch/forget mutate. The check also
-        covers flat-layout handles superseded by a first versioned
-        build, and GC-ed version dirs."""
-        cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
-            raise RuntimeError(
-                f"index handle pins version {os.path.basename(self.vroot)!r} "
-                f"of {self.path}, but the current version is "
-                f"{os.path.basename(cur)!r} — a rebuild swapped since this "
-                "handle loaded, and a write here would never be served. "
-                "Reload the index (IVFIndex.load) before writing"
-            )
 
     # ---- epoch segments (exactly-once streaming adds) -----------------
 
@@ -730,7 +689,7 @@ class IVFIndex:
 
         from alma_memory_spark.operators.text_index import InvertedTextIndex
 
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         seg = os.path.join(self._segments_root(), str(int(epoch)))
         commit_path = os.path.join(seg, "_COMMIT")
         if os.path.isfile(commit_path):
@@ -820,7 +779,7 @@ class IVFIndex:
         tombstones are harmless (the guard is an anti-join).
 
         `ids` is a list of id values or a 1-column DataFrame."""
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         if isinstance(ids, DataFrame):
             doomed = ids.toDF("id").select(F.col("id").cast(self.id_type))
             n = doomed.count()
@@ -863,7 +822,7 @@ class IVFIndex:
         import uuid
 
         cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
+        if cur is None or os.path.abspath(cur) != os.path.abspath(self.vroot):
             # a rebuild interleaved between the store commit and this
             # publish superseded our version: the rebuild acquired the
             # table lock after the delete's commit, so it built from
@@ -948,25 +907,18 @@ class IVFIndex:
             out.append((col, list(val) if many else [val]))
         return out
 
-    def _guarded_lists(
-        self,
-        cells,
-        filters: dict | None,
-        live_ids: "DataFrame | None",
-    ) -> DataFrame:
+    def _guarded_lists(self, cells, filters: dict | None) -> DataFrame:
         """The candidate scan of the DataFrame probes (search_batch,
         search_pq, SemDedupIndex): lists pruned to `cells`
-        (PartitionFilters), scope-filter pushdown, tombstone anti-join,
-        optional live-id semi-join — the guards of the SQL probes'
-        _sql_scan and _sql_filter_conds, in the same order."""
+        (PartitionFilters), scope-filter pushdown and the tombstone
+        anti-join — the guards of the SQL probes' _sql_scan and
+        _sql_filter_conds, in the same order."""
         pruned = self._lists_df().filter(F.col("cell").isin(cells))
         for col, vals in self._filter_values(filters):
             pruned = pruned.filter(F.col(col).isin(vals))
         dead = self.tombstones()
         if dead is not None:
             pruned = pruned.join(F.broadcast(dead), "id", "left_anti")
-        if live_ids is not None:
-            pruned = pruned.join(live_ids.toDF("id"), "id", "left_semi")
         return pruned
 
     def search(
@@ -974,7 +926,6 @@ class IVFIndex:
         query_vec,
         k: int = 10,
         nprobe: int = 3,
-        live_ids: DataFrame | None = None,
         filters: dict | None = None,
     ) -> DataFrame:
         """Exact cosine top-k inside the nprobe probed cells only: one
@@ -987,43 +938,27 @@ class IVFIndex:
         with no Python node. Returns (id, similarity) sorted DESC with
         id ASC tiebreak.
 
-        Staleness guards, both applied BEFORE the top-k cut:
+        Guards, both applied BEFORE the top-k cut:
         - persisted tombstones (forget()) are anti-joined out, so a
           deleted vector never surfaces between a delete and the next
           rebuild (broadcast — the set is bounded by deletes since the
           rebuild);
-        - `live_ids` (one id column), when given, is semi-joined in —
-          the same guard the hybrid text path applies against the live
-          table (engine.search_hybrid). Prefer `filters` at scale: the
-          semi-join shuffles the live id set per query.
         - `filters` ({extra_col: value}) applies equality predicates on
           the attribute columns stored in the lists (extra_cols at
           build) — they land in the pruned scan's PushedFilters, so a
-          scoped search stays an index-only read."""
-        import uuid
-
-        live_view = None
-        if live_ids is not None:
-            # a per-call name: concurrent searches on one handle must
-            # not serve each other's live sets
-            live_view = f"alma_live_{uuid.uuid4().hex[:12]}"
-            live_ids.toDF("id").createOrReplaceTempView(live_view)
-        try:
-            sub = self.search_sql_subquery(
-                query_vec, k=k, nprobe=nprobe, filters=filters,
-                live_view=live_view,
-            )
-            # the subquery already orders + limits; re-sorting the tiny
-            # k-row result keeps the ordering a DataFrame-API contract
-            # rather than relying on subquery-order preservation
-            return self.spark.sql(f"SELECT * FROM {sub} AS c").orderBy(
-                F.desc("similarity"), F.asc("id")
-            )
-        finally:
-            # spark.sql() has analysed the statement, so the frame
-            # holds the view's plan and no longer needs its name
-            if live_view is not None:
-                self.spark.catalog.dropTempView(live_view)
+          scoped search stays an index-only read.
+        Scope is expressed only through `filters`: a caller whose scope
+        needs a column the index does not carry serves from its exact
+        scan instead (engine._ann_scope_filters)."""
+        sub = self.search_sql_subquery(
+            query_vec, k=k, nprobe=nprobe, filters=filters
+        )
+        # the subquery already orders + limits; re-sorting the tiny
+        # k-row result keeps the ordering a DataFrame-API contract
+        # rather than relying on subquery-order preservation
+        return self.spark.sql(f"SELECT * FROM {sub} AS c").orderBy(
+            F.desc("similarity"), F.asc("id")
+        )
 
     def _sql_lists_view(self) -> str:
         """Register (or refresh) the memoized lists plan as a STABLE
@@ -1133,16 +1068,13 @@ class IVFIndex:
             for col, vals in self._filter_values(filters)
         ]
 
-    def _sql_scan(self, live_view: str | None = None) -> str:
+    def _sql_scan(self) -> str:
         """The guarded lists relation of the SQL probes, as FROM text
-        over the stable views: lists `l`, the tombstone anti-join and,
-        when `live_view` names a one-column (id) view, its semi-join."""
+        over the stable views: lists `l` and the tombstone anti-join."""
         tomb_view = self._sql_tombstones_view()
         scan = f"`{self._sql_lists_view()}` l"
         if tomb_view is not None:
             scan += f" LEFT ANTI JOIN `{tomb_view}` d ON l.`id` = d.`id`"
-        if live_view is not None:
-            scan += f" LEFT SEMI JOIN `{live_view}` v ON l.`id` = v.`id`"
         return scan
 
     def search_sql_subquery(
@@ -1151,7 +1083,6 @@ class IVFIndex:
         k: int = 10,
         nprobe: int = 3,
         filters: dict | None = None,
-        live_view: str | None = None,
     ) -> str:
         """search() as a parenthesized SQL SUBQUERY string —
         `(SELECT id, similarity FROM ... ORDER BY ... LIMIT k)` —
@@ -1166,10 +1097,9 @@ class IVFIndex:
         serving statement in place of a candidate-view reference —
         zero per-call py4j, zero temp-view register/drop churn.
 
-        Scope filters must name indexed extra_cols. `live_view` names
-        a registered one-column (id) view that is semi-joined in after
-        the tombstone anti-join, before the top-k cut (search()'s
-        live_ids; serving uses indexed scope filters instead)."""
+        Scope filters must name indexed extra_cols; they and the
+        tombstone anti-join apply before the top-k cut. Scope is
+        expressed only through them (see search())."""
         from alma_memory_spark.operators.serving_sql import double_literal
 
         probed, qn = self.probe_cells(query_vec, nprobe)
@@ -1180,7 +1110,7 @@ class IVFIndex:
                 f"(SELECT CAST(NULL AS {self.id_type}) AS `id`, "
                 "CAST(NULL AS DOUBLE) AS `similarity` WHERE FALSE)"
             )
-        scan = self._sql_scan(live_view)
+        scan = self._sql_scan()
         qarr = "array(" + ",".join(double_literal(float(x)) for x in qn) + ")"
         sim = self._sql_sim_text(qarr)
 
@@ -1227,8 +1157,7 @@ class IVFIndex:
 
         Same probe ties, DISTINCT-on-multi-assign and tiebreaks as
         search_batch; parity with its numpy scores is empirical at the
-        6dp round (see _sql_sim_text). live_ids is not supported
-        (serving uses indexed scope filters)."""
+        6dp round (see _sql_sim_text)."""
         from alma_memory_spark.operators.serving_sql import (
             double_literal,
             string_literal,
@@ -1295,7 +1224,6 @@ class IVFIndex:
         queries,
         k: int = 10,
         nprobe: int = 3,
-        live_ids: DataFrame | None = None,
         filters: dict | None = None,
     ) -> DataFrame:
         """Multi-query ANN in ONE job — the serving-throughput shape.
@@ -1315,8 +1243,8 @@ class IVFIndex:
         numpy kernel over Arrow batches scores each list row against
         exactly the queries that probed its cell (one BLAS matmul per
         batch, then a per-cell mask); one shuffle on qid for the
-        per-query window top-k. Tombstone / live-id / scope-filter
-        guards are the same as search()'s.
+        per-query window top-k. Tombstone / scope-filter guards are the
+        same as search()'s.
 
         The batch dimension amortizes the Python-worker hop: at batch
         32 this kernel measured 15-18 ms/task against 21-24 for a
@@ -1337,7 +1265,7 @@ class IVFIndex:
         qids, Qn, probed_per_q = self._probe_batch(queries, nprobe)
         union_cells = sorted(set().union(*probed_per_q))
 
-        pruned = self._guarded_lists(union_cells, filters, live_ids)
+        pruned = self._guarded_lists(union_cells, filters)
 
         ensure_package_shipped(self.spark)
         # per-cell boolean mask over queries: list row in cell c
@@ -1406,16 +1334,15 @@ class IVFIndex:
         probed,
         n_cand: int,
         filters: dict | None,
-        live_ids: DataFrame | None,
     ) -> DataFrame:
         """ADC candidate pass: the pruned scan reads ONLY (id, code) —
         m bytes/row instead of dim x 8 (parquet column pruning; the
         plan-contract test asserts `embedding` is absent from the
         scan's ReadSchema) — and scores each row as the sum of m
         lookup-table entries. Returns the top n_cand by approximate
-        similarity (6dp round, id ASC ties). Tombstone / scope /
-        live-id guards are the shared _guarded_lists, applied BEFORE
-        the cut, same as search()."""
+        similarity (6dp round, id ASC ties). Tombstone / scope guards
+        are the shared _guarded_lists, applied BEFORE the cut, same as
+        search()."""
         import numpy as np
         import pandas as pd
 
@@ -1423,7 +1350,7 @@ class IVFIndex:
         dsub = Cb.shape[2]
         # one m x ks table per query: LUT[s, j] = <q_s, Cb[s, j]>
         lut = np.einsum("sd,sjd->sj", qn.reshape(m, dsub), Cb)
-        pruned = self._guarded_lists(probed, filters, live_ids)
+        pruned = self._guarded_lists(probed, filters)
         lut_, m_ = lut, m
         sub_idx = np.arange(m)
 
@@ -1452,7 +1379,6 @@ class IVFIndex:
         k: int = 10,
         nprobe: int = 3,
         refine: int = 8,
-        live_ids: DataFrame | None = None,
         filters: dict | None = None,
     ) -> DataFrame:
         """PQ-served top-k: ADC candidate pass over the probed cells'
@@ -1476,9 +1402,7 @@ class IVFIndex:
             )
         ensure_package_shipped(self.spark)
         probed, qn = self.probe_cells(query_vec, nprobe)
-        cand = self._pq_candidates(
-            qn, probed, int(refine) * k, filters, live_ids
-        )
+        cand = self._pq_candidates(qn, probed, int(refine) * k, filters)
         # materialize the candidate ids (driver-bounded: <= refine*k
         # rows, POST top-k — within the collect discipline) so the
         # re-rank fetch is a STATIC pushed `id IN (...)` predicate:
@@ -1487,7 +1411,7 @@ class IVFIndex:
         # candidate — the fetch reads O(candidates) row groups, not
         # the probed cells' whole embedding column (a broadcast
         # semi-join cannot push into the scan). Candidates are already
-        # guarded (tombstones / scope / live-ids applied pre-cut).
+        # guarded (tombstones / scope applied pre-cut).
         cand_ids = [r["id"] for r in cand.collect()]
         if not cand_ids:
             return self.spark.createDataFrame(

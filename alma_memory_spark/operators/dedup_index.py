@@ -50,18 +50,18 @@ from alma_memory_spark.functions.text import hash32, minhash_signature, ws_token
 from alma_memory_spark.operators._index_version import (
     begin_version,
     commit_version,
-    resolve_vroot,
+    load_vroot,
+    require_live_version,
 )
 from alma_memory_spark.operators._pairs_store import (
     PAIRS_LAYOUT,
     compact_pairs,
     read_adjacent_pairs,
     read_pairs,
+    require_pairs_layout,
     write_pairs,
 )
 from alma_memory_spark.operators.components import near_dup_groups
-
-_FLAT_SUBDIRS = ("bands", "toks", "pairs", "stats")
 
 __all__ = ["AddStats", "NearDupIndex"]
 
@@ -105,11 +105,10 @@ class NearDupIndex:
         n_docs: int,
         vroot: str | None = None,
         band_cap: int | None = None,
-        pairs_layout: int | None = PAIRS_LAYOUT,
     ):
         self.spark = spark
         self.path = path
-        self.vroot = vroot or path
+        self.vroot = vroot
         self.id_col = id_col
         self.id_type = id_type
         self.n_buckets = n_buckets
@@ -119,9 +118,6 @@ class NearDupIndex:
         self.verify_t = verify_t
         self.n_docs = n_docs
         self.band_cap = band_cap
-        # None = legacy flat pairs layout (pre-r8 index); appends must
-        # follow the layout the index was built with
-        self.pairs_layout = pairs_layout
 
     # ---- plan fragments ----------------------------------------------
 
@@ -314,7 +310,7 @@ class NearDupIndex:
             vdir, n, capped_groups=capped_groups,
             dropped_band_rows=dropped_band_rows,
         )
-        idx.vroot = commit_version(path, vdir, _FLAT_SUBDIRS)  # COMMIT
+        idx.vroot = commit_version(path, vdir)  # COMMIT
         return idx
 
     def _write_stats(
@@ -348,7 +344,7 @@ class NearDupIndex:
                             "rows": self.rows,
                             "verify_t": self.verify_t,
                             "band_cap": self.band_cap,
-                            "pairs_layout": self.pairs_layout,
+                            "pairs_layout": PAIRS_LAYOUT,
                             "capped_groups": capped_groups,
                             "dropped_band_rows": dropped_band_rows,
                         }
@@ -391,27 +387,16 @@ class NearDupIndex:
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "NearDupIndex":
-        vroot = resolve_vroot(path)
+        vroot = load_vroot(path)
         rows = spark.read.parquet(os.path.join(vroot, "stats")).collect()
         p = json.loads(rows[0]["params"])
+        require_pairs_layout(p, path)
         return NearDupIndex(
             spark, path, p["id_col"], p["id_type"], p["n_buckets"], p["k"],
             p["bands"], p["rows"], p["verify_t"],
             n_docs=sum(r["n_docs"] for r in rows), vroot=vroot,
-            band_cap=p.get("band_cap"),
-            # absent in pre-r8 stats -> legacy flat pairs files
-            pairs_layout=p.get("pairs_layout"),
+            band_cap=p["band_cap"],
         )
-
-    def _require_live_version(self) -> None:
-        cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
-            raise RuntimeError(
-                f"near-dup index handle pins version "
-                f"{os.path.basename(self.vroot)!r} of {self.path}, but the "
-                f"current version is {os.path.basename(cur)!r} — reload "
-                "before writing (a write here would never be served)"
-            )
 
     # ---- incremental add ---------------------------------------------
 
@@ -442,7 +427,7 @@ class NearDupIndex:
                 f"bands*rows must be <= k to add (got bands={self.bands} "
                 f"rows={self.rows} k={self.k}) — rebuild with valid geometry"
             )
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         new_toks = self._toks_frame(docs, self.id_col, text_col or "text")
         new_bands = self._bands_frame(new_toks)
         new_bands = new_bands.localCheckpoint(eager=True)  # 2 consumers
@@ -546,7 +531,7 @@ class NearDupIndex:
                 self.spark, os.path.join(self.vroot, "pairs"),
                 new_toks.select("doc"),
                 "doc_a", "doc_b", "jaccard_sim", self.id_type,
-                self.n_buckets, legacy=self.pairs_layout is None,
+                self.n_buckets,
             )
             new_pairs = (
                 self._verify(cand, all_toks, all_toks)
@@ -585,7 +570,6 @@ class NearDupIndex:
             write_pairs(
                 new_pairs, os.path.join(self.vroot, "pairs"),
                 "doc_a", "doc_b", "jaccard_sim", self.n_buckets,
-                legacy=self.pairs_layout is None,
             )
         n_delta = docs.count()
         self.n_docs += n_delta
@@ -608,11 +592,9 @@ class NearDupIndex:
         folds stats into one exact row (n_docs = distinct docs), and
         commits via the same atomic swap a rebuild uses — O(index size)
         IO, zero similarity recompute, readers on the old version keep
-        their snapshot. A LEGACY flat-pairs index comes out migrated to
-        the adjacency-bucketed layout (the r8 upgrade path). Returns a
-        fresh handle on the committed version; single-writer contract
-        like add()."""
-        self._require_live_version()
+        their snapshot. Returns a fresh handle on the committed version;
+        single-writer contract like add()."""
+        require_live_version(self.path, self.vroot)
         vdir = begin_version(self.path)
         bands = (
             self.spark.read.schema(self._bands_schema())
@@ -641,7 +623,6 @@ class NearDupIndex:
             os.path.join(self.vroot, "pairs"),
             os.path.join(vdir, "pairs"),
             "doc_a", "doc_b", "jaccard_sim", self.id_type, self.n_buckets,
-            legacy=self.pairs_layout is None,
         )
         n_exact = (
             self.spark.read.schema(self._toks_schema())
@@ -654,18 +635,17 @@ class NearDupIndex:
             n_docs=n_exact, vroot=vdir, band_cap=self.band_cap,
         )
         out._write_stats(vdir, n_exact)
-        out.vroot = commit_version(self.path, vdir, _FLAT_SUBDIRS)
+        out.vroot = commit_version(self.path, vdir)
         return out
 
     # ---- reads --------------------------------------------------------
 
     def pairs(self) -> DataFrame:
         """All verified near-dup pairs accumulated so far (canonical
-        one-row-per-pair view in either pairs layout)."""
+        one-row-per-pair view)."""
         return read_pairs(
             self.spark, os.path.join(self.vroot, "pairs"),
             "doc_a", "doc_b", "jaccard_sim", self.id_type,
-            legacy=self.pairs_layout is None,
         )
 
     def _pairs_fingerprint(self) -> str:

@@ -41,6 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alma_memory_spark.functions.text import fingerprint
+from alma_memory_spark.operators._index_version import (
+    begin_version,
+    commit_version,
+    load_vroot,
+    require_live_version,
+)
 
 __all__ = [
     "ParagraphDedupIndex",
@@ -284,14 +290,12 @@ class ParagraphDedupIndex:
     the family-wide add contract. Single-writer per index, like every
     other add()."""
 
-    _SUBDIRS = ("owners", "stats")
-
     def __init__(self, spark: SparkSession, path: str, id_col: str,
                  id_type: str, sep: str, n_buckets: int, n_docs: int,
                  vroot: str | None = None, unit: str = "paragraph"):
         self.spark = spark
         self.path = path
-        self.vroot = vroot or path
+        self.vroot = vroot
         self.id_col = id_col
         self.id_type = id_type
         self.sep = sep
@@ -390,11 +394,6 @@ class ParagraphDedupIndex:
         n_buckets: int = 32,
         unit: str = "paragraph",
     ) -> "ParagraphDedupIndex":
-        from alma_memory_spark.operators._index_version import (
-            begin_version,
-            commit_version,
-        )
-
         id_type = docs.schema[id_col].dataType.simpleString()
         idx = ParagraphDedupIndex(
             spark, path, id_col, id_type, sep, n_buckets, n_docs=0,
@@ -408,35 +407,19 @@ class ParagraphDedupIndex:
         n = docs.count()
         idx.n_docs = n
         idx._write_stats(vdir, n)
-        idx.vroot = commit_version(path, vdir, ParagraphDedupIndex._SUBDIRS)
+        idx.vroot = commit_version(path, vdir)
         return idx
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "ParagraphDedupIndex":
-        from alma_memory_spark.operators._index_version import resolve_vroot
-
-        vroot = resolve_vroot(path)
+        vroot = load_vroot(path)
         rows = spark.read.parquet(os.path.join(vroot, "stats")).collect()
         p = json.loads(rows[0]["params"])
         return ParagraphDedupIndex(
             spark, path, p["id_col"], p["id_type"], p["sep"],
             p["n_buckets"], n_docs=sum(r["n_docs"] for r in rows),
-            vroot=vroot,
-            # absent in pre-r9 stats -> paragraph granularity
-            unit=p.get("unit", "paragraph"),
+            vroot=vroot, unit=p["unit"],
         )
-
-    def _require_live_version(self) -> None:
-        from alma_memory_spark.operators._index_version import resolve_vroot
-
-        cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
-            raise RuntimeError(
-                f"paragraph index handle pins version "
-                f"{os.path.basename(self.vroot)!r} of {self.path}, but the "
-                f"current version is {os.path.basename(cur)!r} — reload "
-                "before writing (a write here would never be served)"
-            )
 
     def compact(self) -> "ParagraphDedupIndex":
         """Fold per-add file accumulation into a fresh version — ONE
@@ -451,12 +434,7 @@ class ParagraphDedupIndex:
         over-count-under-replay caveat — there is no per-doc store to
         recount from, unlike NearDupIndex's toks). Returns a fresh
         handle on the committed version; single-writer like add()."""
-        from alma_memory_spark.operators._index_version import (
-            begin_version,
-            commit_version,
-        )
-
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         vdir = begin_version(self.path)
         folded = (
             self.spark.read.schema(self._owners_schema())
@@ -470,9 +448,7 @@ class ParagraphDedupIndex:
             self.n_buckets, n_docs=self.n_docs, vroot=vdir, unit=self.unit,
         )
         out._write_stats(vdir, self.n_docs)
-        out.vroot = commit_version(
-            self.path, vdir, ParagraphDedupIndex._SUBDIRS
-        )
+        out.vroot = commit_version(self.path, vdir)
         return out
 
     def owners(self) -> DataFrame:
@@ -490,7 +466,7 @@ class ParagraphDedupIndex:
         docstring for the ownership/replay contract."""
         from alma_memory_spark.session import tiny_df  # noqa: F401 (parity w/ family imports)
 
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         batch = docs.select(self.id_col, text_col)
         paras, winners = self._batch_winners(batch, text_col)
         paras = paras.localCheckpoint(eager=True)  # feeds 3 consumers

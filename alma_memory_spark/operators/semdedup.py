@@ -402,7 +402,7 @@ def _incremental_pairs_from_assigned(
             [], f"id_a {quantizer.id_type}, id_b {quantizer.id_type}, cos_sim double"
         )
     existing = (
-        quantizer._guarded_lists(new_cells, None, None)
+        quantizer._guarded_lists(new_cells, None)
         .select(
             F.col("id"),
             F.col("embedding").alias("v"),
@@ -510,11 +510,10 @@ class SemDedupIndex:
     file listings bounded."""
 
     def __init__(self, spark, path, ivf, id_col, id_type, vec_col,
-                 threshold, n_docs, vroot=None, n_buckets=32,
-                 pairs_layout=None, n_assign=1):
+                 threshold, n_docs, vroot=None, n_buckets=32, n_assign=1):
         self.spark = spark
         self.path = path
-        self.vroot = vroot or path
+        self.vroot = vroot
         self.ivf = ivf
         self.id_col = id_col
         self.id_type = id_type
@@ -522,9 +521,6 @@ class SemDedupIndex:
         self.threshold = threshold
         self.n_docs = n_docs
         self.n_buckets = n_buckets
-        # None (from a pre-r8 stats row) = legacy flat pairs files;
-        # build() always passes the current layout
-        self.pairs_layout = pairs_layout
         #: multi-probe recall knob (r9, VERDICT r8 #1): membership AND
         #: batch assignment both use the vector's top-n cells, so the
         #: persisted path catches the boundary-straddling near-dups the
@@ -553,10 +549,7 @@ class SemDedupIndex:
             begin_version,
             commit_version,
         )
-        from alma_memory_spark.operators._pairs_store import (
-            PAIRS_LAYOUT,
-            write_pairs,
-        )
+        from alma_memory_spark.operators._pairs_store import write_pairs
         from alma_memory_spark.operators.ann_index import IVFIndex
 
         id_type = df.schema[id_col].dataType.simpleString()
@@ -577,11 +570,10 @@ class SemDedupIndex:
         n = df.count()
         idx = SemDedupIndex(
             spark, path, ivf, id_col, id_type, vec_col, threshold, n,
-            vroot=vdir, n_buckets=n_buckets, pairs_layout=PAIRS_LAYOUT,
-            n_assign=n_assign,
+            vroot=vdir, n_buckets=n_buckets, n_assign=n_assign,
         )
         idx._write_stats(vdir, n)
-        idx.vroot = commit_version(path, vdir, ("ivf", "pairs", "stats"))
+        idx.vroot = commit_version(path, vdir)
         # the staging dir was renamed at commit — the inner IVF handle
         # pins dead absolute paths; reload it from the committed root
         idx.ivf = IVFIndex.load(spark, os.path.join(idx.vroot, "ivf"))
@@ -591,6 +583,7 @@ class SemDedupIndex:
         import json
         import os
 
+        from alma_memory_spark.operators._pairs_store import PAIRS_LAYOUT
         from alma_memory_spark.session import tiny_df
 
         tiny_df(
@@ -604,7 +597,7 @@ class SemDedupIndex:
                             "vec_col": self.vec_col,
                             "threshold": self.threshold,
                             "n_buckets": self.n_buckets,
-                            "pairs_layout": self.pairs_layout,
+                            "pairs_layout": PAIRS_LAYOUT,
                             "n_assign": self.n_assign,
                         }
                     ),
@@ -619,36 +612,22 @@ class SemDedupIndex:
         import json
         import os
 
-        from alma_memory_spark.operators._index_version import resolve_vroot
+        from alma_memory_spark.operators._index_version import load_vroot
+        from alma_memory_spark.operators._pairs_store import (
+            require_pairs_layout,
+        )
         from alma_memory_spark.operators.ann_index import IVFIndex
 
-        vroot = resolve_vroot(path)
+        vroot = load_vroot(path)
         rows = spark.read.parquet(os.path.join(vroot, "stats")).collect()
         p = json.loads(rows[0]["params"])
+        require_pairs_layout(p, path)
         ivf = IVFIndex.load(spark, os.path.join(vroot, "ivf"))
         return SemDedupIndex(
             spark, path, ivf, p["id_col"], p["id_type"], p["vec_col"],
             float(p["threshold"]), n_docs=sum(r["n_docs"] for r in rows),
-            vroot=vroot, n_buckets=p.get("n_buckets", 32),
-            # absent in pre-r8 stats -> legacy flat pairs files
-            pairs_layout=p.get("pairs_layout"),
-            # absent in pre-r9 stats -> single-probe
-            n_assign=p.get("n_assign", 1),
+            vroot=vroot, n_buckets=p["n_buckets"], n_assign=p["n_assign"],
         )
-
-    def _require_live_version(self) -> None:
-        import os
-
-        from alma_memory_spark.operators._index_version import resolve_vroot
-
-        cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
-            raise RuntimeError(
-                f"semdedup index handle pins version "
-                f"{os.path.basename(self.vroot)!r} of {self.path}, but the "
-                f"current version is {os.path.basename(cur)!r} — reload "
-                "before writing (a write here would never be served)"
-            )
 
     def add(self, batch: DataFrame) -> int:
         """Incremental semantic dedup of a new batch; returns the
@@ -656,12 +635,15 @@ class SemDedupIndex:
         crash-order contract."""
         import os
 
+        from alma_memory_spark.operators._index_version import (
+            require_live_version,
+        )
         from alma_memory_spark.operators._pairs_store import (
             read_adjacent_pairs,
             write_pairs,
         )
 
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         # ONE assignment pass + cells collect feeds both the pair
         # kernel and the membership replay guard (the assigned frame is
         # eagerly checkpointed inside _assign_batch)
@@ -677,7 +659,7 @@ class SemDedupIndex:
             self.spark, os.path.join(self.vroot, "pairs"),
             assigned.select("id"),
             "id_a", "id_b", "cos_sim", self.id_type,
-            self.n_buckets, legacy=self.pairs_layout is None,
+            self.n_buckets,
         )
         new_pairs = (
             _incremental_pairs_from_assigned(
@@ -691,7 +673,7 @@ class SemDedupIndex:
         # membership first, replay-guarded: only ids absent from the
         # touched cells' lists append (a redelivered batch is a no-op)
         if touched:
-            present = self.ivf._guarded_lists(touched, None, None).select(
+            present = self.ivf._guarded_lists(touched, None).select(
                 F.col("id").alias(self.id_col)
             )
             fresh = batch.join(present, self.id_col, "left_anti")
@@ -704,7 +686,6 @@ class SemDedupIndex:
             write_pairs(
                 new_pairs, os.path.join(self.vroot, "pairs"),
                 "id_a", "id_b", "cos_sim", self.n_buckets,
-                legacy=self.pairs_layout is None,
             )
         return int(n_new)
 
@@ -718,23 +699,20 @@ class SemDedupIndex:
         docstring), so unlike NearDupIndex the fold is pure file-count
         hygiene: content is identical by construction (contract-tested
         byte-for-byte through the canonical views). Stats fold to one
-        exact row (n_docs recounted from distinct list ids). A legacy
-        flat pairs dir comes out migrated to the adjacency layout.
-        Returns a fresh handle on the committed version; single-writer
-        contract like add()."""
+        exact row (n_docs recounted from distinct list ids). Returns a
+        fresh handle on the committed version; single-writer contract
+        like add()."""
         import os
 
         from alma_memory_spark.operators._index_version import (
             begin_version,
             commit_version,
+            require_live_version,
         )
-        from alma_memory_spark.operators._pairs_store import (
-            PAIRS_LAYOUT,
-            compact_pairs,
-        )
+        from alma_memory_spark.operators._pairs_store import compact_pairs
         from alma_memory_spark.operators.ann_index import IVFIndex
 
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         vdir = begin_version(self.path)
         new_ivf = self.ivf.compact_to(os.path.join(vdir, "ivf"))
         compact_pairs(
@@ -742,7 +720,6 @@ class SemDedupIndex:
             os.path.join(self.vroot, "pairs"),
             os.path.join(vdir, "pairs"),
             "id_a", "id_b", "cos_sim", self.id_type, self.n_buckets,
-            legacy=self.pairs_layout is None,
         )
         # exact doc count from the folded lists (multi-membership
         # stores n_assign rows per doc -> distinct ids)
@@ -750,11 +727,10 @@ class SemDedupIndex:
         out = SemDedupIndex(
             self.spark, self.path, new_ivf, self.id_col, self.id_type,
             self.vec_col, self.threshold, n_exact, vroot=vdir,
-            n_buckets=self.n_buckets, pairs_layout=PAIRS_LAYOUT,
-            n_assign=self.n_assign,
+            n_buckets=self.n_buckets, n_assign=self.n_assign,
         )
         out._write_stats(vdir, n_exact)
-        out.vroot = commit_version(self.path, vdir, ("ivf", "pairs", "stats"))
+        out.vroot = commit_version(self.path, vdir)
         # the staging dir was renamed at commit — reload the inner IVF
         # from the committed root (same as build())
         out.ivf = IVFIndex.load(self.spark, os.path.join(out.vroot, "ivf"))
@@ -768,7 +744,6 @@ class SemDedupIndex:
         return read_pairs(
             self.spark, os.path.join(self.vroot, "pairs"),
             "id_a", "id_b", "cos_sim", self.id_type,
-            legacy=self.pairs_layout is None,
         )
 
     def groups(self) -> DataFrame:

@@ -58,6 +58,12 @@ from pyspark.sql import functions as F
 
 from alma_memory_spark.cache import LRU, session_key
 from alma_memory_spark.functions.text import WS_RE
+from alma_memory_spark.operators._index_version import (
+    begin_version,
+    commit_version,
+    load_vroot,
+    require_live_version,
+)
 
 __all__ = [
     "TokenWindowDedupIndex",
@@ -434,14 +440,12 @@ class TokenWindowDedupIndex:
     shape — how the 'subidx' gate oracles it); out-of-order arrival
     keeps first-seen-wins. Single-writer per index, like every add()."""
 
-    _SUBDIRS = ("owners", "stats")
-
     def __init__(self, spark: SparkSession, path: str, id_col: str,
                  id_type: str, w: int, n_buckets: int, n_docs: int,
                  vroot: str | None = None, fp_hash: str = "md5"):
         self.spark = spark
         self.path = path
-        self.vroot = vroot or path
+        self.vroot = vroot
         self.id_col = id_col
         self.id_type = id_type
         #: window length in tokens, frozen at build (owners of
@@ -538,11 +542,6 @@ class TokenWindowDedupIndex:
         n_buckets: int = 32,
         fp_hash: str = "md5",
     ) -> "TokenWindowDedupIndex":
-        from alma_memory_spark.operators._index_version import (
-            begin_version,
-            commit_version,
-        )
-
         id_type = docs.schema[id_col].dataType.simpleString()
         idx = TokenWindowDedupIndex(
             spark, path, id_col, id_type, w, n_buckets, n_docs=0,
@@ -556,33 +555,19 @@ class TokenWindowDedupIndex:
         n = docs.count()
         idx.n_docs = n
         idx._write_stats(vdir, n)
-        idx.vroot = commit_version(path, vdir, TokenWindowDedupIndex._SUBDIRS)
+        idx.vroot = commit_version(path, vdir)
         return idx
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "TokenWindowDedupIndex":
-        from alma_memory_spark.operators._index_version import resolve_vroot
-
-        vroot = resolve_vroot(path)
+        vroot = load_vroot(path)
         rows = spark.read.parquet(os.path.join(vroot, "stats")).collect()
         p = json.loads(rows[0]["params"])
         return TokenWindowDedupIndex(
             spark, path, p["id_col"], p["id_type"], p["w"], p["n_buckets"],
             n_docs=sum(r["n_docs"] for r in rows), vroot=vroot,
-            fp_hash=p.get("fp_hash", "md5"),  # pre-r13 stats lack it
+            fp_hash=p["fp_hash"],
         )
-
-    def _require_live_version(self) -> None:
-        from alma_memory_spark.operators._index_version import resolve_vroot
-
-        cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
-            raise RuntimeError(
-                f"token-window index handle pins version "
-                f"{os.path.basename(self.vroot)!r} of {self.path}, but the "
-                f"current version is {os.path.basename(cur)!r} — reload "
-                "before writing (a write here would never be served)"
-            )
 
     def compact(self) -> "TokenWindowDedupIndex":
         """Fold per-add file accumulation into a fresh version — ONE
@@ -592,12 +577,7 @@ class TokenWindowDedupIndex:
         by the per-fp dedup here). Stats fold to one row carrying the
         accumulated n_docs (the family's over-count-under-replay
         caveat). Returns a fresh handle; single-writer like add()."""
-        from alma_memory_spark.operators._index_version import (
-            begin_version,
-            commit_version,
-        )
-
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         vdir = begin_version(self.path)
         folded = (
             self.spark.read.schema(self._owners_schema())
@@ -612,9 +592,7 @@ class TokenWindowDedupIndex:
             fp_hash=self.fp_hash,
         )
         out._write_stats(vdir, self.n_docs)
-        out.vroot = commit_version(
-            self.path, vdir, TokenWindowDedupIndex._SUBDIRS
-        )
+        out.vroot = commit_version(self.path, vdir)
         return out
 
     def owners(self) -> DataFrame:
@@ -631,7 +609,7 @@ class TokenWindowDedupIndex:
         (id, text_dedup, n_units, n_kept) for every batch doc and
         registers the batch's new windows as owners. See the class
         docstring for the ownership/replay contract."""
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         batch = docs.select(self.id_col, text_col)
         base = batch.select(
             F.col(self.id_col), token_units(text_col).alias("units")

@@ -75,12 +75,10 @@ from alma_memory_spark.functions.text import ws_tokens
 from alma_memory_spark.operators._index_version import (
     begin_version,
     commit_version,
-    resolve_vroot,
+    load_vroot,
+    require_live_version,
 )
 from alma_memory_spark.operators.text_search import BM25_B, BM25_K1
-
-#: flat-layout leftovers GC-ed once two versioned builds exist
-_FLAT_SUBDIRS = ("postings", "stats", "group_stats", "segments")
 
 
 def _bucket_col(term: F.Column, n_buckets: int) -> F.Column:
@@ -113,9 +111,9 @@ class InvertedTextIndex:
     ):
         self.spark = spark
         self.path = path
-        #: version dir this handle serves (== path for flat layouts);
-        #: a rebuild swaps _CURRENT but never mutates this version
-        self.vroot = vroot or path
+        #: version dir this handle serves; a rebuild swaps _CURRENT
+        #: but never mutates this version
+        self.vroot = vroot
         self.n_docs = n_docs
         self.sum_dl = sum_dl
         self.n_buckets = n_buckets
@@ -136,21 +134,6 @@ class InvertedTextIndex:
         for _e, sn, ssdl in self._committed_segments():
             self.n_docs += sn
             self.sum_dl += ssdl
-
-    def _require_live_version(self) -> None:
-        """See IVFIndex._require_live_version: a mutation through a
-        handle whose version is not CURRENT (superseded by any rebuild,
-        including a first versioned build over a flat layout) would
-        commit data no new load ever serves."""
-        cur = resolve_vroot(self.path)
-        if os.path.abspath(cur) != os.path.abspath(self.vroot):
-            raise RuntimeError(
-                f"index handle pins version {os.path.basename(self.vroot)!r} "
-                f"of {self.path}, but the current version is "
-                f"{os.path.basename(cur)!r} — a rebuild swapped since this "
-                "handle loaded, and a write here would never be served. "
-                "Reload the index (InvertedTextIndex.load) before writing"
-            )
 
     # ---- epoch segments (exactly-once streaming adds) -----------------
 
@@ -207,7 +190,7 @@ class InvertedTextIndex:
         lineage's segments) before pointing a new checkpoint at it."""
         import json
 
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         seg = os.path.join(self._segments_root(), str(int(epoch)))
         commit_path = os.path.join(seg, "_COMMIT")
         if os.path.isfile(commit_path):
@@ -388,7 +371,7 @@ class InvertedTextIndex:
             ).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(vdir, "group_stats")
             )
-        final = commit_version(path, vdir, _FLAT_SUBDIRS)  # COMMIT POINT
+        final = commit_version(path, vdir)  # COMMIT POINT
         return InvertedTextIndex(
             spark, path, n, sdl, n_buckets, id_col, id_type, extras,
             vroot=final,
@@ -431,11 +414,9 @@ class InvertedTextIndex:
     def load(spark: SparkSession, path: str) -> "InvertedTextIndex":
         import json
 
-        vroot = resolve_vroot(path)
-        r = spark.read.parquet(os.path.join(vroot, "stats")).collect()[0].asDict()
-        extras = [
-            tuple(e) for e in json.loads(r.get("extra_cols") or "[]")
-        ]
+        vroot = load_vroot(path)
+        r = spark.read.parquet(os.path.join(vroot, "stats")).collect()[0]
+        extras = [tuple(e) for e in json.loads(r["extra_cols"])]
         return InvertedTextIndex(
             spark, path, r["n_docs"], r["sum_dl"], r["n_buckets"], r["id_col"],
             r["id_type"], extras, vroot=vroot,
@@ -452,7 +433,7 @@ class InvertedTextIndex:
         immediately visible and exactly correct. Assumes doc ids are
         new (append-only corpus); replacing a doc = rebuild its rows,
         same as the store's partition-scoped upsert contract."""
-        self._require_live_version()
+        require_live_version(self.path, self.vroot)
         postings = self._postings(
             docs, self.id_col, text_col, self.n_buckets, self.extra_cols
         )

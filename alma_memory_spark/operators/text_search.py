@@ -153,37 +153,6 @@ def bm25_scores(
     )
 
 
-def hybrid_search(
-    docs: DataFrame,
-    query_vec: list[float],
-    query_text: str,
-    top_k: int = 10,
-    id_col: str = "id",
-    text_col: str = "text",
-    embedding_col: str = "embedding",
-) -> DataFrame:
-    """Vector top-k + BM25 top-k fused with RRF (the reference's hybrid
-    retrieval, alma/retrieval/hybrid.py)."""
-    from alma_memory_spark.functions.vector import cosine_similarity
-    from alma_memory_spark.operators.fusion import rrf_fuse
-
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    vec = (
-        docs.select(
-            F.col(id_col), cosine_similarity(embedding_col, qlit).alias("similarity")
-        )
-        .orderBy(F.desc("similarity"), F.asc(id_col))
-        .limit(top_k * 2)
-    )
-    txt = (
-        bm25_scores(docs, query_text, id_col, text_col)
-        .withColumnRenamed("bm25_score", "text_score")
-        .orderBy(F.desc("text_score"), F.asc(id_col))
-        .limit(top_k * 2)
-    )
-    return rrf_fuse(vec, txt, id_col=id_col).limit(top_k)
-
-
 def bm25_reference_check(
     corpus: list[str], query: str, k1: float = BM25_K1, b: float = BM25_B
 ) -> list[tuple[int, float]]:

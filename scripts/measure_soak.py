@@ -94,10 +94,7 @@ def count_files(root: str) -> int:
     the metric without touching any read path)."""
     from alma_memory_spark.operators._index_version import resolve_vroot
 
-    try:
-        live = resolve_vroot(root)
-    except Exception:
-        live = root
+    live = resolve_vroot(root) or root
     n = 0
     for _dir, _sub, files in os.walk(live):
         n += sum(1 for f in files if f.endswith(".parquet"))

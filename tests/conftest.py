@@ -72,7 +72,6 @@ _SLOW_TESTS = {
     "test_strength_decay_matches_reference_formula",  # 20.5
     "test_extended_tool_surface",  # 19.8
     "test_scoped_bm25_exact_via_group_stats",  # 18.2
-    "test_legacy_flat_pairs_layout_serves_and_adds",  # 17.8
     "test_learning_cycle_end_to_end",  # 17.7
     "test_training_data_pipeline_r7_stages_end_to_end",  # 17.5
     "test_semdedup_index_compact_folds_files_preserves_content",  # 17.1

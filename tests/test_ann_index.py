@@ -31,7 +31,7 @@ def _brute_force(emb_rows, probed, qn, k):
     return out[:k]
 
 
-def _numpy_probe(idx, query_vec, k, nprobe, filters=None, live_ids=None):
+def _numpy_probe(idx, query_vec, k, nprobe, filters=None):
     """Reference for every probe form: one query's exact cosine top-k
     over its probed cells, scored by numpy on the driver from the
     guarded lists. [(id, similarity)] at the 6dp contract, DESC with
@@ -39,7 +39,7 @@ def _numpy_probe(idx, query_vec, k, nprobe, filters=None, live_ids=None):
     kept."""
     probed, qn = idx.probe_cells(query_vec, nprobe)
     rows = (
-        idx._guarded_lists(probed, filters, live_ids)
+        idx._guarded_lists(probed, filters)
         .select("id", "embedding")
         .collect()
     )
@@ -245,8 +245,8 @@ def test_ivf_forget_tombstones_then_rebuild_clears(spark, tmp_path):
 
 
 def test_ivf_string_ids_and_live_id_guard(spark, tmp_path):
-    """String-id corpora (memory-table ids) index via xxhash cells; the
-    live_ids semi-join guards scope/liveness before the top-k cut."""
+    """String-id corpora (memory-table ids) index via xxhash cells and
+    round-trip their id type through load()."""
     emb = load_table(spark, SF_DIR, "embeddings").limit(200)
     docs = emb.selectExpr("concat('dk_', vec_id) AS id", "embedding")
     path = str(tmp_path / "ivf_str")
@@ -255,17 +255,13 @@ def test_ivf_string_ids_and_live_id_guard(spark, tmp_path):
     assert IVFIndex.load(spark, path).id_type == "string"
     top = idx.search(QUERY_VEC, k=8, nprobe=3).collect()
     assert len(top) == 8 and all(r["id"].startswith("dk_") for r in top)
-    # live-id guard: restricting to half the corpus excludes the rest
-    live = docs.filter("substring(id, 4) % 2 = 0").select("id")
-    guarded = idx.search(QUERY_VEC, k=8, nprobe=3, live_ids=live).collect()
-    assert all(int(r["id"][3:]) % 2 == 0 for r in guarded)
 
 
 def test_ivf_scope_columns_filter_inside_pruned_scan(spark, tmp_path):
     """extra_cols at build ride the lists: a scoped search applies its
     predicate INSIDE the pruned scan (PushedFilters — no corpus join),
-    returns exactly the semi-join guard's results, and unknown filter
-    columns are rejected."""
+    returns exactly the numpy oracle's rows over the same scope, and
+    unknown filter columns are rejected."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -282,12 +278,9 @@ def test_ivf_scope_columns_filter_inside_pruned_scan(spark, tmp_path):
     scoped = idx.search(QUERY_VEC, k=8, nprobe=4, filters={"agent": "agent1"})
     rows = scoped.collect()
     assert rows
-    # identical to the live-id semi-join guard over the same scope
-    live = docs.filter("agent = 'agent1'").selectExpr("vec_id AS id")
-    guard = idx.search(QUERY_VEC, k=8, nprobe=4, live_ids=live).collect()
-    assert [(r["id"], r["similarity"]) for r in rows] == [
-        (r["id"], r["similarity"]) for r in guard
-    ]
+    assert [(r["id"], r["similarity"]) for r in rows] == _numpy_probe(
+        idx, QUERY_VEC, 8, 4, filters={"agent": "agent1"}
+    )
     # the predicate reaches the scan (pushed), not a join
     plan = scoped._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
@@ -402,7 +395,9 @@ def test_versioned_rebuild_swaps_atomically_and_gcs(spark, tmp_path):
     live lists in place. A handle loaded BEFORE a rebuild keeps serving
     its own version's files (the previous version survives one swap);
     _CURRENT resolves new loads to the fresh build; versions two swaps
-    old are GC-ed; a pre-versioning FLAT layout still loads."""
+    old are GC-ed; a pre-versioning FLAT layout (no _CURRENT) refuses
+    to load and asks for a rebuild."""
+    import pytest as _pytest
     import shutil
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -433,12 +428,11 @@ def test_versioned_rebuild_swaps_atomically_and_gcs(spark, tmp_path):
     assert not os.path.isdir(os.path.join(path, "v1"))  # two swaps old: GC
     assert os.path.isdir(os.path.join(path, "v2"))
 
-    # flat-layout compatibility: demote v3 to a pre-versioning layout
+    # demote v3 to a pre-versioning flat layout: not loadable
     flat = str(tmp_path / "ivf_flat")
     shutil.copytree(v3.vroot, flat)
-    legacy = IVFIndex.load(spark, flat)
-    assert legacy.vroot == flat
-    assert legacy.search(QUERY_VEC, k=5, nprobe=3).count() == 5
+    with _pytest.raises(ValueError, match="rebuild it"):
+        IVFIndex.load(spark, flat)
 
 
 def test_search_batch_matches_per_query_search(spark, tmp_path):
@@ -529,7 +523,7 @@ def test_commit_version_gc_spares_racer_claim(tmp_path):
         s = iv.begin_version(path)
         with open(os.path.join(s, "data"), "w") as f:
             f.write(content)
-        return iv.commit_version(path, s, ())
+        return iv.commit_version(path, s)
 
     assert os.path.basename(_build("v1")) == "v1"
     # racer B: claimed v2 on disk, _CURRENT publish still in flight
@@ -841,36 +835,26 @@ def test_probe_forms_match_numpy_oracle(spark, tmp_path):
     ] == want_b
 
 
-def test_search_live_ids_runs_sql_probe_and_drops_its_view(spark, tmp_path):
-    """search(live_ids=...) is the SQL probe plus a semi-join on a
-    per-call temp view, after the tombstone anti-join and before the
-    top-k cut: no Python node in the executed plan, the numpy oracle's
-    rows, and no alma_live_* view left in the catalog."""
+def test_search_tombstones_apply_inside_sql_probe(spark, tmp_path):
+    """A forget() tombstone is anti-joined inside the SQL probe, before
+    the top-k cut: the forgotten id is gone, the other nine rows are
+    unchanged, the rows equal the numpy oracle's, and the executed plan
+    has no Python node."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "ivf_live")
+    path = str(tmp_path / "ivf_tomb")
     idx = IVFIndex.build(spark, emb, path, cent_every=50)
-    live = emb.filter("vec_id % 3 = 0").select("vec_id")
 
-    def leftover():
-        return [
-            t.name
-            for t in spark.catalog.listTables()
-            if t.name.startswith("alma_live_")
-        ]
-
-    first = idx.search(QUERY_VEC, k=10, nprobe=3, live_ids=live).collect()
-    assert len(first) == 10 and all(r["id"] % 3 == 0 for r in first)
+    first = idx.search(QUERY_VEC, k=10, nprobe=3).collect()
+    assert len(first) == 10
     idx.forget([first[0]["id"]])
 
-    res = idx.search(QUERY_VEC, k=10, nprobe=3, live_ids=live)
-    assert leftover() == []
+    res = idx.search(QUERY_VEC, k=10, nprobe=3)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan
     got = [(r["id"], r["similarity"]) for r in res.collect()]
-    assert got == _numpy_probe(idx, QUERY_VEC, 10, 3, live_ids=live)
+    assert got == _numpy_probe(idx, QUERY_VEC, 10, 3)
     assert first[0]["id"] not in {i for i, _s in got}
     assert got[:9] == [(r["id"], r["similarity"]) for r in first[1:]]
-    assert leftover() == []
 
 
 def test_sql_subquery_matches_search(spark, tmp_path):

@@ -139,61 +139,28 @@ def test_replay_guard_reads_only_batch_adjacent_pairs(spark, tmp_path):
     assert got == want
 
 
-def test_legacy_flat_pairs_layout_serves_and_adds(spark, tmp_path):
-    """A pre-r8 index (flat pairs files, stats params without
-    pairs_layout) must keep working end-to-end: load() detects the
-    legacy layout, pairs()/groups() serve it, and add() appends FLAT
-    (mixing layouts in one dir would corrupt partition discovery)
-    while still accumulating the full-rebuild pair set."""
+def test_load_refuses_index_without_pairs_layout(spark, tmp_path):
+    """An index whose stats params lack pairs_layout (written before the
+    adjacency layout existed) is not served: load() raises and asks for
+    a rebuild instead of reading its pairs in an unknown layout."""
     import json
     import shutil
 
     from alma_memory_spark.session import tiny_df
 
     docs = load_table(spark, SF_DIR, "documents")
-    idx = NearDupIndex.build(
-        spark, docs.filter("doc_id % 5 != 0"), str(tmp_path / "leg"),
-        n_buckets=8,
-    )
-    # demote to the pre-r8 layout: flatten pairs, strip pairs_layout
-    pairs_root = os.path.join(idx.vroot, "pairs")
-    flat = idx.pairs().collect()
-    stats_rows = spark.read.parquet(os.path.join(idx.vroot, "stats")).collect()
-    shutil.rmtree(pairs_root)
-    spark.createDataFrame(
-        flat, "doc_a bigint, doc_b bigint, jaccard_sim double"
-    ).write.parquet(pairs_root)
-    legacy_rows = []
-    for r in stats_rows:
-        p = json.loads(r["params"])
-        p.pop("pairs_layout", None)
-        legacy_rows.append((json.dumps(p), r["n_docs"]))
+    path = str(tmp_path / "old")
+    idx = NearDupIndex.build(spark, docs, path, n_buckets=8)
     stats_root = os.path.join(idx.vroot, "stats")
+    rows = []
+    for r in spark.read.parquet(stats_root).collect():
+        p = json.loads(r["params"])
+        p.pop("pairs_layout")
+        rows.append((json.dumps(p), r["n_docs"]))
     shutil.rmtree(stats_root)
-    tiny_df(spark, legacy_rows, "params string, n_docs long").write.parquet(
-        stats_root
-    )
-
-    legacy = NearDupIndex.load(spark, str(tmp_path / "leg"))
-    assert legacy.pairs_layout is None
-    assert _pairset(legacy.pairs()) == {
-        (r["doc_a"], r["doc_b"], r["jaccard_sim"]) for r in flat
-    }
-    legacy.add(docs.filter("doc_id % 5 = 0"))
-    full = NearDupIndex.build(spark, docs, str(tmp_path / "full"), n_buckets=8)
-    assert _pairset(legacy.pairs()) == _pairset(full.pairs())
-    # appends stayed flat: no partition dirs appeared
-    assert not any(
-        d.startswith("sbucket=") for d in os.listdir(pairs_root)
-    )
-    # and replaying the batch is still a no-op under the legacy guard
-    assert legacy.add(docs.filter("doc_id % 5 = 0")) == 0
-    # compact() is the migration path: same pairs, adjacency layout
-    compacted = legacy.compact()
-    assert compacted.pairs_layout is not None
-    assert _pairset(compacted.pairs()) == _pairset(full.pairs())
-    new_pairs_root = os.path.join(compacted.vroot, "pairs")
-    assert any(d.startswith("sbucket=") for d in os.listdir(new_pairs_root))
+    tiny_df(spark, rows, "params string, n_docs long").write.parquet(stats_root)
+    with pytest.raises(ValueError, match="rebuild it"):
+        NearDupIndex.load(spark, path)
 
 
 def test_compact_folds_replay_debris(spark, tmp_path):

@@ -19,7 +19,6 @@ from alma_memory_spark.operators.multimodal import (
 from alma_memory_spark.operators.text_search import (
     bm25_reference_check,
     bm25_scores,
-    hybrid_search,
     tfidf_scores,
 )
 from alma_memory_spark.operators.verification import (
@@ -134,13 +133,6 @@ def test_tfidf_scores_rank(spark):
     rows = out.orderBy(F.desc("tfidf_score")).collect()
     assert rows[0]["id"] == "1"
     assert all(r["tfidf_score"] > 0 for r in rows)
-
-
-def test_hybrid_search_fuses(spark):
-    q = "broadcast joins avoid shuffle"
-    out = hybrid_search(_docs(spark), hash_embed(q, 16), q, top_k=3).collect()
-    assert out[0]["id"] == "1"
-    assert out[0]["vector_rank"] == 1 and out[0]["text_rank"] == 1
 
 
 # ------------------------------------------------------------- ingestion
@@ -915,6 +907,42 @@ def test_retrieve_ann_falls_back_when_index_lacks_scope(spark, tmp_path):
     ]
     for a, e in zip(ann.domain_knowledge, exact.domain_knowledge):
         assert abs(a["score"] - e["score"]) < 1e-9  # same exact plan
+
+
+def test_search_vectors_exact_when_index_lacks_scope(spark, tmp_path):
+    """search_vectors (plain and PQ refine) and search_vectors_batch
+    against an IVF index WITHOUT scope columns serve from the exact
+    scan, as retrieve does: the rows equal the no-index rows, not a
+    probe of nprobe cells."""
+    from alma_memory_spark.engine import AlmaSpark
+    from alma_memory_spark.operators.ann_index import IVFIndex
+
+    eng = AlmaSpark(spark, str(tmp_path / "s"))
+    for i in range(30):
+        eng.add_knowledge("a1", "p1", "d", f"fallback topic {i % 3} item {i}")
+    tasks = ["fallback topic 1", "item 7"]
+    kw = dict(agent="a1", project_id="p1", top_k=10, nprobe=3)
+
+    def pairs(rows):
+        return [(r["id"], r["similarity"]) for r in rows]
+
+    def served(**extra):
+        batch = eng.search_vectors_batch(tasks, **kw)
+        return (
+            pairs(eng.search_vectors(tasks[0], **kw, **extra)),
+            {t: pairs(rows) for t, rows in batch.items()},
+        )
+
+    exact = served()
+    assert len(exact[0]) == 10
+    docs = eng.store.read("domain_knowledge").select("id", "embedding")
+    path = eng._ivf_index_path("domain_knowledge")
+    IVFIndex.build(spark, docs, path, id_col="id", cent_every=1)
+    assert eng._has_ivf_index("domain_knowledge")
+    assert served() == exact
+    IVFIndex.build(spark, docs, path, id_col="id", cent_every=1, pq_m=2)
+    assert eng._load_ivf("domain_knowledge").pq is not None
+    assert served(refine=4) == exact
 
 
 def test_streaming_into_scoped_text_index(spark, tmp_path):

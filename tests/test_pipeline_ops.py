@@ -473,12 +473,18 @@ def test_triple_cache_retain_is_thread_safe(spark, monkeypatch):
     S._TRIPLES.clear()
     keep = S._TRIPLES.max_entries
     monkeypatch.setattr(S._TRIPLES, "max_entries", YieldingKeep(keep))
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    base = len(persisted())
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # compare RDD ids, not counts: the ContextCleaner may free RDDs that
+    # earlier tests persisted while this one runs
+    before = persisted()
     n = 16
     triples = [spark.range(i + 1).persist() for i in range(n)]
     for t in triples:
         t.count()
+    own = persisted() - before
+    assert len(own) == n
     go = threading.Barrier(n)
     errs = []
 
@@ -498,7 +504,7 @@ def test_triple_cache_retain_is_thread_safe(spark, monkeypatch):
     kept = S._TRIPLES.values()
     assert len(kept) == keep
     assert all(t.storageLevel.useMemory or t.storageLevel.useDisk for t in kept)
-    assert len(persisted()) - base == keep
+    assert len(own & persisted()) == keep
     spark.catalog.clearCache()
     S._TRIPLES.clear()
 

@@ -265,7 +265,7 @@ def test_pq_candidate_scan_never_reads_vectors(spark, tmp_path):
         spark, emb, str(tmp_path / "pq"), cent_every=25, pq_m=8
     )
     probed, qn = idx.probe_cells(QUERY_VEC, nprobe=3)
-    cand = idx._pq_candidates(qn, probed, 40, None, None)
+    cand = idx._pq_candidates(qn, probed, 40, None)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans, plan

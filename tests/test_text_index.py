@@ -357,12 +357,36 @@ def test_hybrid_staleness_contract_vector_side_covers_unindexed_docs(spark, tmp_
     assert {r["id"]: r for r in res2}[fresh]["text_score"] > 0.0
 
 
+def test_hybrid_exact_when_text_index_lacks_scope(spark, tmp_path):
+    """search_hybrid over a text index built WITHOUT scope columns
+    serves its keyword side from the scoped scan: the result equals
+    the no-index result (a global ranking would score with the whole
+    corpus's statistics)."""
+    from alma_memory_spark.engine import AlmaSpark
+
+    eng = AlmaSpark(spark, str(tmp_path / "store"))
+    for i in range(8):
+        eng.add_knowledge("a1", "p", "d", f"spark joins shuffle fact {i}")
+        eng.add_knowledge("a2", "p", "d", f"spark spark streaming note {i}")
+    kw = dict(agent="a1", project_id="p", top_k=5)
+    want = eng.search_hybrid("spark joins", **kw)
+    assert want
+    table = "domain_knowledge"
+    docs = eng.store.read(table).select(
+        "id", eng._text_expr(table).alias("_text")
+    )
+    InvertedTextIndex.build(
+        spark, docs, eng._text_index_path(table), id_col="id",
+        text_col="_text", n_buckets=4,
+    )
+    assert eng.search_hybrid("spark joins", **kw) == want
+
+
 def test_hybrid_scoped_fallback_on_saturated_global_cut(spark, tmp_path):
     """Multi-agent store where the scoped agent's docs rank BELOW the
-    global top-4*fetch: the indexed text path's scope semi-join comes
-    back short while the global cut is saturated, so search_hybrid must
-    fall back to scan-BM25 over the scoped rows instead of silently
-    dropping the scoped hits (the r3 over-fetch bug)."""
+    global top-4*fetch: search_hybrid must still surface every scoped
+    hit (the r3 over-fetch bug dropped them after a global cut; the
+    scoped index path ranks inside the scope)."""
     from alma_memory_spark.engine import AlmaSpark
 
     eng = AlmaSpark(spark, str(tmp_path / "store"))
